@@ -145,10 +145,50 @@ def test_pk_change_split(spark):
     assert rows(out, "op", "pk", "sub_seq") == [("D", 3, 0), ("I", 5, 1)]
 
 
+def _safe_mode_union_form(changes):
+    """The rewrite's former shape, one filtered branch per output op:
+    the reference for the one-pass form's rows and schema."""
+    inserts = (changes.filter(F.col("op") == "I")
+               .withColumn("op", F.lit("R"))
+               .withColumn("sub_seq", F.lit(0)))
+    deletes = (changes.filter(F.col("op") == "D")
+               .withColumn("sub_seq", F.lit(0)))
+    upd = changes.filter(F.col("op") == "U")
+    upd_delete = upd.withColumn("op", F.lit("D")).withColumn("sub_seq", F.lit(0))
+    upd_replace = upd.withColumn("op", F.lit("R")).withColumn("sub_seq", F.lit(1))
+    return (inserts.unionByName(deletes)
+            .unionByName(upd_delete).unionByName(upd_replace))
+
+
 def test_safe_mode_update_becomes_delete_plus_replace(spark):
     ch = make_changes(spark, [(1, "s0", 10, "U", 5)])
     out = safe_mode.safe_mode_rewrite(ch)
     assert rows(out, "op", "sub_seq") == [("D", 0), ("R", 1)]
+
+    # full contract: I -> R, D -> D, U -> D + R; FAKE and DDL rows
+    # produce nothing; every other column passes through unchanged
+    ch = make_changes(spark, [(1, "s0", 10, "I", 1), (2, "s0", 20, "U", 1),
+                              (3, "s0", 30, "D", 1), (4, "s0", 40, "FAKE", 0),
+                              (5, "s0", 50, "DDL", 0)])
+    out = safe_mode.safe_mode_rewrite(ch)
+    assert rows(out, "commit_ts", "op", "sub_seq", "pk") == [
+        (10, "R", 0, 1), (20, "D", 0, 1), (20, "R", 1, 1), (30, "D", 0, 1)]
+    want = _safe_mode_union_form(ch)
+    assert out.schema == want.schema
+    assert out.columns[-1] == "sub_seq"
+    assert sorted(out.collect()) == sorted(want.collect())
+
+    # an input that already carries sub_seq: replaced in place, with
+    # the same column order and types as the union form
+    pre = ch.withColumn("sub_seq", F.lit(7)).select(
+        "commit_ts", "sub_seq", *[c for c in ch.columns if c != "commit_ts"])
+    out = safe_mode.safe_mode_rewrite(pre)
+    assert rows(out, "commit_ts", "op", "sub_seq") == [
+        (10, "R", 0), (20, "D", 0), (20, "R", 1), (30, "D", 0)]
+    want = _safe_mode_union_form(pre)
+    assert out.columns[:2] == ["commit_ts", "sub_seq"]
+    assert out.schema == want.schema
+    assert sorted(out.collect()) == sorted(want.collect())
 
 
 # ---- causality (pkg/loader/causality.go) -----------------------------------

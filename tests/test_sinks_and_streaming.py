@@ -1731,6 +1731,86 @@ def test_sql_apply_stream_uk_conflict_serializes_on_one_worker(spark, tmp_path):
     assert groups[40] != groups[10]
 
 
+def test_sql_apply_stream_two_table_shapes_in_one_batch(spark, tmp_path,
+                                                        monkeypatch):
+    """One micro-batch over two statement shapes (catalog wired):
+    table a is (pk, val, k) with a UNIQUE key on k, table b is
+    (pk, val). Each shape builds its own statements and causality
+    keys; a's UK collisions still serialize in commit order (safe mode
+    off, so a misordered INSERT would fail on the UK), and an event
+    with a NULL table produces no statement and no error."""
+    import sqlite3
+
+    from tidb_binlog_spark.operators.safe_mode import SafeModeWindow
+    from tidb_binlog_spark.sinks import jdbc
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    db_dir = str(tmp_path / "db")
+    setup = (
+        "CREATE TABLE IF NOT EXISTS a "
+        "(pk INTEGER PRIMARY KEY, val REAL, k TEXT)",
+        "CREATE UNIQUE INDEX IF NOT EXISTS uk_k ON a(k)",
+        "CREATE TABLE IF NOT EXISTS b (pk INTEGER PRIMARY KEY, val REAL)",
+    )
+    # (arrival_seq, commit_ts, op, tbl, pk, val, row_json)
+    events = [
+        (1, 10, "I", "a", 1, 1.0, '{"k": "KK"}'),
+        (2, 15, "I", "b", 1, 1.5, "{}"),
+        (3, 20, "D", "a", 1, 1.0, '{"k": "KK"}'),   # frees the UK value
+        (4, 25, "U", "b", 1, 5.0, "{}"),
+        (5, 30, "I", "a", 2, 2.0, '{"k": "KK"}'),   # re-claims it
+        (6, 35, "I", "b", 2, 2.5, "{}"),
+        (7, 40, "I", "a", 7, 7.0, '{"k": "ZZ"}'),
+        (8, 45, "D", "b", 2, 2.5, "{}"),
+        (9, 50, "I", None, 99, 9.0, "{}"),          # no table
+    ]
+    full = [(arr, "s0", cts, cts - 1, op, "db0", tbl, pk, 0, 1, val, rj)
+            for arr, cts, op, tbl, pk, val, rj in events]
+    spark.createDataFrame(
+        full,
+        "arrival_seq long, source_id string, commit_ts long, start_ts long, "
+        "op string, db string, tbl string, pk long, seq int, "
+        "schema_version long, val double, row_json string") \
+        .coalesce(1).write.mode("append").parquet(src)
+
+    applied = []
+    orig_apply = jdbc.apply_statements
+
+    def recording_apply(stmts, *args, **kwargs):
+        applied.extend(stmts.select("commit_ts", "sql_text",
+                                    "group_id").collect())
+        return orig_apply(stmts, *args, **kwargs)
+    monkeypatch.setattr(jdbc, "apply_statements", recording_apply)
+
+    q = pipeline.run_sql_apply_stream(
+        spark, src, db_dir, str(tmp_path / "ck"), num_workers=4,
+        setup_sql=setup, catalog=_shared_catalog(db_dir),
+        safe_window=SafeModeWindow(duration_s=0.0))
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
+    got_a = sorted(conn.execute("SELECT pk, val, k FROM a").fetchall())
+    got_b = sorted(conn.execute("SELECT pk, val FROM b").fetchall())
+    conn.close()
+    assert got_a == [(2, 2.0, "KK"), (7, 7.0, "ZZ")]
+    assert got_b == [(1, 5.0)]
+    assert jdbc.load_checkpoint(db_dir)[0] == 50
+
+    # one statement per table event, none for the NULL-table event
+    assert sorted(r["commit_ts"] for r in applied) == [
+        10, 15, 20, 25, 30, 35, 40, 45]
+    assert all(r["sql_text"] for r in applied)
+    # both widths were built: a's statements name k, b's do not
+    text = {r["commit_ts"]: r["sql_text"] for r in applied}
+    assert "`k`" in text[10] and "`k`" not in text[15]
+    # the UK key links a's txns 10/20/30 into one causality group
+    group = {r["commit_ts"]: r["group_id"] for r in applied}
+    assert group[10] == group[20] == group[30]
+    assert group[40] != group[10]
+
+
 def test_sql_apply_stream_randomized_ddl_interleave(spark, tmp_path):
     """Property-style check of the streaming DDL barrier: a seeded
     random interleaving of DML (I/U/D over a small pk pool, row

@@ -116,7 +116,7 @@ def _minhash_signatures_np(src: DataFrame, k: int,
     doc's shingles with one minimum.reduceat per batch, and format
     the winning keys back to the identical 8-hex-char strings via
     one hexlify pass. Values are bit-identical to the expr engine
-    (pinned by tests/test_dedup.py::
+    (pinned by tests/test_functions.py::
     test_minhash_np_engine_matches_expr, including the <3-token,
     empty-text and NULL-text fallbacks)."""
     import pandas as pd
@@ -301,7 +301,7 @@ SIMHASH_BITS = 64
 # pre-split into four 32-bit words `ws`; vote q reads one bit with a
 # shift+mask instead of a substring + string compare — identical
 # values to the original string form (pinned by
-# tests/test_dedup.py::test_simhash_votes_integer_form_matches_string),
+# tests/test_functions.py::test_simhash_votes_integer_form_matches_string),
 # ~2x cheaper per token at the 64-votes-per-occurrence hot path.
 _WORDS32 = ("transform(sequence(0, 3), i -> "
             "CAST(conv(substring(h, 1 + 8 * i, 8), 16, 10) AS BIGINT))")

@@ -280,9 +280,8 @@ def stamp_workers(changes: DataFrame, groups: DataFrame,
                   txn_col: str = "commit_ts") -> DataFrame:
     """Stamp a (txn_id, group_id) labeling onto the statement frame as
     (group_id, worker_id) — the join half of
-    :func:`conflict_free_partitions`, split out so the apply profile
-    can clock the CC fixpoint and the big-frame stamp separately
-    (VERDICT r12 item 1).
+    :func:`conflict_free_partitions`, split out so a traced run can
+    time the CC fixpoint and the big-frame stamp separately.
 
     worker_id is computed on the SMALL groups frame before the join
     (one row per txn, not per statement) and the join side is

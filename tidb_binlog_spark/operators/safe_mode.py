@@ -9,9 +9,10 @@ Reference:
   DELETE(old key) + INSERT(new key) before compaction
   (pkg/loader/merge.go:47-67).
 
-Spark-first: both are projections/unions — the split is a union of two
-narrow selects (no shuffle); ordering is preserved by (commit_ts, seq,
-sub_seq).
+Spark-first: both stay narrow (no shuffle). The safe-mode rewrite is one
+``explode`` of ``sub_seq`` over the input's own partitions (one row for
+I and D, two for U); the PK split is a union of two narrow selects.
+Ordering is preserved by (commit_ts, seq, sub_seq).
 """
 
 from __future__ import annotations
@@ -71,14 +72,18 @@ def safe_mode_rewrite(changes: DataFrame) -> DataFrame:
     Returned stream is directly applicable by a dumb sink in order:
     REPLACE upserts, DELETE removes — replaying the same batch twice
     converges to the same table state.
+
+    The rewrite is one pass: ``sub_seq`` explodes to [0] for I and D
+    and to [0, 1] for U, and every other op (FAKE, DDL) gets no array
+    and so no row. The output keeps the input's partitioning, column
+    order and types; ``sub_seq`` is replaced in place when present,
+    else appended.
     """
-    inserts = (changes.filter(F.col("op") == "I")
-               .withColumn("op", F.lit("R"))
-               .withColumn("sub_seq", F.lit(0)))
-    deletes = (changes.filter(F.col("op") == "D")
-               .withColumn("sub_seq", F.lit(0)))
-    upd = changes.filter(F.col("op") == "U")
-    upd_delete = upd.withColumn("op", F.lit("D")).withColumn("sub_seq", F.lit(0))
-    upd_replace = upd.withColumn("op", F.lit("R")).withColumn("sub_seq", F.lit(1))
-    return (inserts.unionByName(deletes)
-            .unionByName(upd_delete).unionByName(upd_replace))
+    op = F.col("op")
+    sub_seq = (F.when(op == "U", F.array(F.lit(0), F.lit(1)))
+                .when(op.isin("I", "D"), F.array(F.lit(0))))
+    return (changes.withColumn("sub_seq", F.explode(sub_seq))
+            .withColumn("op", F.when((op == "I") | (F.col("sub_seq") == 1),
+                                     F.lit("R"))
+                               .when(op == "U", F.lit("D"))
+                               .otherwise(op)))

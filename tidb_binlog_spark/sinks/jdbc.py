@@ -137,8 +137,7 @@ def apply_statements(stmts: DataFrame, db_dir: str,
                      inject=None,
                      checkpoint_ts: int | None = None,
                      topic: str = "default",
-                     shared_db: bool = False,
-                     shard_files: bool = False) -> None:
+                     shared_db: bool = False) -> None:
     """Execute the ``sql_text`` column per worker, partitioned by
     worker id.
 
@@ -163,16 +162,6 @@ def apply_statements(stmts: DataFrame, db_dir: str,
       concurrently. Workers sharing a Spark partition apply
       sequentially (group-by-worker first) so one partition never
       holds two open transactions against the same file.
-
-    ``shard_files`` (only with ``shared_db=True``): each worker's
-    transaction writes <db_dir>/worker_<id>.db instead of the one
-    shared file — the measurement stand-in for MySQL's concurrent
-    sessions (within a batch, causality routing makes worker key sets
-    disjoint, so N writers never contend in MySQL; SQLite's file lock
-    serializes them anyway). TIMING EXPERIMENTS ONLY: causality
-    worker ids vary per batch, so the same pk lands in different
-    files across batches and the sharded state is not a readable
-    replica. The shared single file stays the correctness topology.
 
     ``inject``: optional callable(sql_text) raised into every execute —
     the deterministic transient-failure injector used by tests.
@@ -205,10 +194,7 @@ def apply_statements(stmts: DataFrame, db_dir: str,
             for row in rows:
                 by_wid.setdefault(row[worker_col], []).append(row)
             for wid, wrows in by_wid.items():
-                path = os.path.join(
-                    db_dir,
-                    f"worker_{wid}.db" if shard_files else SHARED_DB_NAME)
-                conn = sqlite3.connect(path)
+                conn = sqlite3.connect(os.path.join(db_dir, SHARED_DB_NAME))
                 conn.execute("PRAGMA busy_timeout=30000")
                 try:
                     # setup through the retry policy too: CREATE IF

@@ -113,8 +113,9 @@ class SqlBatchApplier:
     recovery path (feed_sql_by_relay_if_needed) replays a crashed
     window through the IDENTICAL machinery: resume filter, order
     gate, config filter/route stages, DDL barriers with immediate
-    checkpoints, per-table statement widths, causality-routed
-    shared-downstream apply."""
+    checkpoints, one statement build per statement shape (catalog
+    width + sink unique keys), causality-routed shared-downstream
+    apply."""
 
     # DDL rows are collect()ed per batch to sequence barriers; DDL is
     # rare by nature, so this is bounded in any sane stream — the cap
@@ -141,42 +142,53 @@ class SqlBatchApplier:
                                   if max_ddl_per_batch is None
                                   else max_ddl_per_batch)
 
-    def _table_value_cols(self, tbl: str) -> tuple[str, ...]:
-        """Statement width for one table: the sink catalog's CURRENT
-        column list (so a mid-stream ADD/DROP COLUMN widens/narrows
-        the very next sub-batch, executor.go:336-405 refresh-on-DDL);
-        static (pk, val) when no catalog is wired."""
+    def _table_shape(self, tbl: str):
+        """Statement shape of one table: (value columns, sink unique
+        keys). The value columns are the sink catalog's CURRENT column
+        list, so a mid-stream ADD/DROP COLUMN widens/narrows the very
+        next sub-batch (executor.go:336-405 refresh-on-DDL); the unique
+        keys are the non-PRIMARY ones whose columns the statement
+        writes. Static ((pk, val), ()) when no catalog is wired or the
+        table is not created yet (setup_sql width)."""
         if self.catalog is None:
-            return ("pk", "val")
+            return ("pk", "val"), ()
         try:
-            return tuple(self.catalog.table_info("main", tbl).columns)
-        except LookupError:     # table not created yet: setup_sql width
-            return ("pk", "val")
+            info = self.catalog.table_info("main", tbl)
+        except LookupError:
+            return ("pk", "val"), ()
+        cols = tuple(info.columns)
+        uks = tuple((name, uk_cols) for name, uk_cols in info.unique_keys
+                    if name != "PRIMARY" and set(uk_cols) <= set(cols))
+        return cols, uks
 
     def _apply_dml(self, seg: DataFrame, ckpt_ts: int) -> None:
-        """Order-gated DML sub-batch -> safe-mode rewrite -> per-table
-        statement build -> causality-routed parallel apply."""
+        """Order-gated DML sub-batch -> safe-mode rewrite -> one
+        statement build per statement shape -> causality-routed
+        parallel apply."""
         from ..operators import causality
         from ..operators import safe_mode as sm
         from ..sinks import jdbc, sqlgen
-        catalog, num_workers = self.catalog, self.num_workers
         if self.window.active():
             prepared = sm.safe_mode_rewrite(seg)
         else:
             prepared = seg.withColumn("sub_seq", F.lit(0))
-        prepared = prepared.persist()
+        # a row without a table has no statement to build
+        prepared = prepared.filter(F.col("tbl").isNotNull()).persist()
         tables = [r["tbl"] for r in prepared.select("tbl").distinct().collect()]
         if not tables:
             prepared.unpersist()
             jdbc.save_checkpoint(self.db_dir, ckpt_ts)
             return
-        # per-table statement width (few tables; the per-table build is
-        # a union of narrow projections over the SAME cached sub-batch)
-        stmts = None
-        key_frames = []
+        # tables that share a shape share one projection: without a
+        # catalog, or with every table at one width, the whole
+        # sub-batch is a single pass over the cached rows
+        shapes: dict = {}
         for tbl in tables:
-            cols = self._table_value_cols(tbl)
-            part = prepared.filter(F.col("tbl") == tbl)
+            shapes.setdefault(self._table_shape(tbl), []).append(tbl)
+        stmts = txn_keys = None
+        for (cols, uks), shape_tables in shapes.items():
+            part = (prepared if len(shapes) == 1
+                    else prepared.filter(F.col("tbl").isin(shape_tables)))
             # columns beyond the typed (pk, val) ride the row image —
             # extracted as strings, quoted by the statement builder
             for c in cols:
@@ -186,99 +198,38 @@ class SqlBatchApplier:
             s = sqlgen.generate_sql(part, dialect="sqlite",
                                     value_cols=cols) \
                       .select("commit_ts", "seq", "sub_seq", "pk", "sql_text")
-            stmts = s if stmts is None else stmts.unionByName(s)
             # causality keys: every PK/UK key-string the statements
             # touch (pkg/loader/model.go:459-512) — (db, tbl, pk)
-            # always; each sink-side UNIQUE key's column values too,
-            # so txns with different PKs colliding on a UK serialize
-            # onto one worker in commit order (causality.go:31-99)
-            pk_key = F.concat_ws("\x01", F.col("db"), F.col("tbl"),
-                                 F.lit("pk"), F.col("pk").cast("string"))
+            # always; each sink-side UNIQUE key's column values too
+            # (NULL when they are all empty; causality_groups drops
+            # NULL keys), so txns with different PKs colliding on a UK
+            # serialize onto one worker in commit order
+            # (causality.go:31-99)
+            key_cols = [F.concat_ws("\x01", F.col("db"), F.col("tbl"),
+                                    F.lit("pk"), F.col("pk").cast("string"))]
+            for uk_name, uk_cols in uks:
+                key_cols.append(F.when(
+                    F.concat_ws("", *[F.col(c) for c in uk_cols]) != "",
+                    F.concat_ws("\x01", F.col("db"), F.col("tbl"),
+                                F.lit(uk_name),
+                                *[F.col(c).cast("string") for c in uk_cols])))
             keys = part.select(F.col("commit_ts").alias("txn_id"),
-                               pk_key.alias("key"))
-            if catalog is not None:
-                try:
-                    uks = catalog.table_info("main", tbl).unique_keys
-                except LookupError:
-                    uks = ()
-                for uk_name, uk_cols in uks:
-                    if uk_name == "PRIMARY" or not set(uk_cols) <= set(cols):
-                        continue
-                    uk_key = F.concat_ws(
-                        "\x01", F.col("db"), F.col("tbl"), F.lit(uk_name),
-                        *[F.col(c).cast("string") for c in uk_cols])
-                    keys = keys.unionByName(
-                        part.filter(F.concat_ws(
-                            "", *[F.col(c) for c in uk_cols]) != "")
-                        .select(F.col("commit_ts").alias("txn_id"),
-                                uk_key.alias("key")))
-            key_frames.append(keys)
-        txn_keys = key_frames[0]
-        for kf in key_frames[1:]:
-            txn_keys = txn_keys.unionByName(kf)
+                               F.explode(F.array(*key_cols)).alias("key"))
+            stmts = s if stmts is None else stmts.unionByName(s)
+            txn_keys = keys if txn_keys is None else txn_keys.unionByName(keys)
         # conflict-free dispatch replaces pmod(pk): whole txns route by
         # causality group, so cross-txn key conflicts apply in commit
         # order while disjoint groups parallelize (load.go:508-575)
         routed = causality.conflict_free_partitions(
-            stmts, txn_keys, num_workers=num_workers,
+            stmts, txn_keys, num_workers=self.num_workers,
             txn_col="commit_ts")
-        import os as _os
-        prof_path = _os.environ.get("SPARK_GRAFT_APPLY_PROFILE")
-        shard_files = bool(_os.environ.get("SPARK_GRAFT_APPLY_SHARD_FILES"))
-        if prof_path:
-            # profile mode (VERDICT r11 item 5; r12 item 1 splits the
-            # routing leg): materialize each stage so "rewrite +
-            # sqlgen", "CC fixpoint", "big-frame stamp join", and
-            # "DB-API execution" get separate wall clocks in the
-            # JSONL record. The extra persists change absolute
-            # timing — profile numbers are for decomposition, not
-            # headline rates.
-            import json as _json
-            import time as _time
-            t0 = _time.time()
-            stmts = stmts.persist()
-            n_stmts = stmts.count()
-            t_gen = _time.time() - t0           # rewrite + sqlgen
-            t0 = _time.time()
-            groups = causality.causality_groups(txn_keys).persist()
-            n_groups = groups.count()
-            t_cc = _time.time() - t0            # CC fixpoint alone
-            t0 = _time.time()
-            routed = causality.stamp_workers(
-                stmts, groups, num_workers=num_workers,
-                txn_col="commit_ts").persist()
-            routed.count()
-            t_stamp = _time.time() - t0         # big-frame stamp join
-            t0 = _time.time()
-            jdbc.apply_statements(routed, self.db_dir, num_workers,
-                                  setup_sql=self.setup_sql,
-                                  checkpoint_ts=ckpt_ts,
-                                  shared_db=True,
-                                  shard_files=shard_files)
-            t_dbapi = _time.time() - t0
-            with open(prof_path, "a") as fh:
-                fh.write(_json.dumps(
-                    {"ckpt_ts": ckpt_ts, "n_stmts": int(n_stmts),
-                     "n_txn_groups": int(n_groups),
-                     "stmt_gen_sec": round(t_gen, 3),
-                     "causality_cc_sec": round(t_cc + t_stamp, 3),
-                     "cc_fixpoint_sec": round(t_cc, 3),
-                     "stamp_sec": round(t_stamp, 3),
-                     "dbapi_exec_sec": round(t_dbapi, 3),
-                     "shard_files": shard_files}) + "\n")
-            routed.unpersist()
-            groups.unpersist()
-            stmts.unpersist()
-        else:
-            # shared_db: the downstream is ONE database (the
-            # reference's topology) — causality worker ids vary per
-            # batch, which is only sound when routing doesn't decide
-            # row placement
-            jdbc.apply_statements(routed, self.db_dir, num_workers,
-                                  setup_sql=self.setup_sql,
-                                  checkpoint_ts=ckpt_ts,
-                                  shared_db=True,
-                                  shard_files=shard_files)
+        # shared_db: the downstream is ONE database (the reference's
+        # topology) — causality worker ids vary per batch, which is
+        # only sound when routing doesn't decide row placement
+        jdbc.apply_statements(routed, self.db_dir, self.num_workers,
+                              setup_sql=self.setup_sql,
+                              checkpoint_ts=ckpt_ts,
+                              shared_db=True)
         prepared.unpersist()
 
     def apply(self, batch_df: DataFrame) -> None:
@@ -288,9 +239,7 @@ class SqlBatchApplier:
         from ..sinks import jdbc
         catalog = self.catalog
         # persist the RAW batch first: the relay WAL and the filtered
-        # main path both read it (one source scan, not two); the
-        # safe-mode rewrite is a 4-way union over the gated stream and
-        # would re-scan per branch without the cache
+        # main path both read it (one source scan, not two)
         batch_df = batch_df.persist()
         # chaos kill points (tools/stream_kill_resume.py): hard driver
         # death at the Nth apply() call in this process — BEFORE_WAL

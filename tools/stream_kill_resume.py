@@ -213,26 +213,11 @@ def main() -> None:
                         "watermark": vck.get("watermark")})
             return rec
 
-        # profile mode (VERDICT r11 item 5): ONE clean run with the
-        # per-batch phase instrumentation, over this harness's proven
-        # 100M landing (the stream_scale_check landing OOM'd a
-        # 24-32g heap three ways on this host); state equality is
-        # skipped here — the kill campaign proved it on identical
-        # machinery the same day.
-        prof = os.environ.get("KILL_RESUME_PROFILE")
-        if prof:
-            out["profile_jsonl"] = prof
-            out["phase_profile"] = run_phase(
-                1, {"SPARK_GRAFT_APPLY_PROFILE": prof})
-            out["events_per_s_profile_mode"] = round(
-                n / max(out["phase_profile"]["sec"], 1e-6))
-            print(json.dumps(out))
-            return
         if os.environ.get("KILL_RESUME_CLEAN"):
-            # headline mode (r13): ONE clean non-profile child over
-            # this harness's proven landing — the rate convention of
-            # the r11 1000x table (no profile persists) on a host
-            # where stream_scale_check's own sf100 landing OOMs.
+            # headline mode (r13): ONE clean child over this
+            # harness's proven landing — the rate convention of the
+            # r11 1000x table on a host where stream_scale_check's
+            # own sf100 landing OOMs.
             # No kills; equality still gates below.
             out["phase3_clean"] = run_phase(3, {})
             out["events_per_s_clean"] = round(

@@ -69,8 +69,7 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".scale", "sf1")
     n_segments = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    # "sql" runs only stream 1 (the r12 profile campaign drives the
-    # SQL-apply leg alone, with SPARK_GRAFT_APPLY_PROFILE set)
+    # "sql" runs only stream 1, the SQL-apply leg
     only = sys.argv[3] if len(sys.argv) > 3 else "all"
     # Aggressive periodic ContextCleaner GC: with a 48g driver heap,
     # driver GC almost never fires on its own, so shuffle files and
@@ -180,17 +179,6 @@ def main() -> None:
         q.awaitTermination(3600)
         sql_apply_raw = time.time() - t0
         out["sql_apply_sec"] = round(sql_apply_raw, 2)
-        if os.environ.get("SPARK_GRAFT_APPLY_SHARD_FILES"):
-            # lock-pricing experiment (VERDICT r12 item 1): per-worker
-            # DB files make the sharded state unreadable as a replica
-            # (worker ids vary per batch), so this mode records TIMING
-            # ONLY — the shared-file run is the correctness topology
-            out["sharded_timing_only"] = True
-            out["events_per_s_sql_apply"] = round(
-                n / max(sql_apply_raw, 1e-6))
-            release_all()
-            print(json.dumps(out))
-            return
         got_sql = None
         for t in tables:
             part = jdbc.read_applied(spark, db_dir, f"`{t}`",
