@@ -96,11 +96,14 @@ def _spark_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _assert_single_partition_plan(df: DataFrame) -> None:
-    """Assert the frame's analyzed plan pins it to ONE partition (the
-    nearest repartition-class node below any narrow ops is
-    Repartition(1)) — the precondition for treating
-    monotonically_increasing_id as an append-order rank. Plan walk
-    only: no job, no AQE finalization."""
+    """Assert the frame's analyzed plan pins it to ONE partition: the
+    nearest repartition-class node is Repartition(1), reached through
+    narrow nodes only (Project, Filter, SubqueryAlias, and a Sort
+    within partitions) — the precondition for treating
+    monotonically_increasing_id as an append-order rank. Anything else
+    above it (an Aggregate, Window, global Sort, Join, ...) may shuffle
+    the frame back out to N partitions. Plan walk only: no job, no AQE
+    finalization."""
     node = df._jdf.queryExecution().analyzed()
     while True:
         name = node.getClass().getSimpleName()
@@ -111,12 +114,14 @@ def _assert_single_partition_plan(df: DataFrame) -> None:
                     f"append-order offsets need a single-partition "
                     f"frame; plan pins {n} partitions via {name}")
             return
-        children = node.children()
-        if children.size() != 1:
+        # Sort.global is a Python keyword: reach the accessor by name
+        narrow = (name in ("Project", "Filter", "SubqueryAlias")
+                  or (name == "Sort" and not getattr(node, "global")()))
+        if not narrow:
             raise AssertionError(
                 "append-order offsets need a single-partition frame; "
-                f"no Repartition(1) found (stopped at {name})")
-        node = children.apply(0)
+                f"no Repartition(1) below narrow nodes (stopped at {name})")
+        node = node.children().apply(0)
 
 
 # ---------------------------------------------------------------------------

@@ -183,6 +183,29 @@ def test_kafka_frame_sharded_per_table_order(spark):
         assert ts == sorted(ts), (p, ts)
 
 
+def test_single_partition_plan_assertion_walks_narrow_nodes_only(spark):
+    """The append-order offset guard accepts Repartition(1) only below
+    narrow nodes: the frames kafka_frame hands it pass, while an
+    aggregate, a global sort or a wider repartition above (or instead
+    of) Repartition(1) is rejected."""
+    import pytest
+
+    import __spark_entry__ as m
+    ch = _ch(spark)
+    m._assert_single_partition_plan(kafka.kafka_frame(ch, cluster_id=42))
+    m._assert_single_partition_plan(kafka.kafka_frame(ch, wire="json"))
+    one = ch.repartition(1)
+    m._assert_single_partition_plan(
+        one.sortWithinPartitions("commit_ts").filter(F.col("pk") > 0)
+           .select("commit_ts", "op"))
+    for bad in (one.groupBy("op").agg(F.count(F.lit(1)).alias("n")),
+                one.orderBy("commit_ts"),
+                kafka.kafka_frame_sharded(ch, n_partitions=4),
+                ch):
+        with pytest.raises(AssertionError, match="single-partition"):
+            m._assert_single_partition_plan(bad)
+
+
 def test_kafka_frame_rejects_bad_wire_and_wide_protobuf(spark):
     import pytest
     ch = _ch(spark)

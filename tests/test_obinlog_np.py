@@ -172,3 +172,52 @@ def test_lockstep_sliced_batch_offsets():
         w = dict(w)
         w["arrival_seq"] = w["arrival_seq"] + 5
         assert r == w
+
+
+class _NoDataBuffer:
+    """A binary column exactly as Arrow may hand over an all-null or
+    all-empty payload column: offsets (and validity), no data buffer.
+    pyarrow's own constructors always allocate one, so the view wraps
+    a real array and drops it."""
+
+    def __init__(self, arr):
+        self._arr = arr
+
+    def buffers(self):
+        validity, offsets, _data = self._arr.buffers()
+        return [validity, offsets, None]
+
+    def __len__(self):
+        return len(self._arr)
+
+    def __getitem__(self, i):
+        return self._arr[i]
+
+    def __getattr__(self, name):
+        return getattr(self._arr, name)
+
+
+class _Batch:
+    def __init__(self, payload, arrival_seq):
+        self.schema = pa.schema([("payload", pa.binary()),
+                                 ("arrival_seq", pa.int64())])
+        self._cols = [payload, arrival_seq]
+
+    def column(self, i):
+        return self._cols[i]
+
+
+def test_lockstep_missing_data_buffer_routes_to_fallback():
+    """No data buffer (all-empty payloads) must not crash the buffer
+    math: every payload goes to the per-payload fallback, so the
+    result equals the same payloads decoded with a data buffer."""
+    payloads = pa.array([b"", b"", b""], pa.binary())
+    seq = pa.array([0, 1, 2], pa.int64())
+    want = parse_batch(
+        pa.RecordBatch.from_arrays([payloads, seq],
+                                   ["payload", "arrival_seq"]),
+        ("arrival_seq",))
+    got = parse_batch(_Batch(_NoDataBuffer(payloads), seq),
+                      ("arrival_seq",))
+    assert got.equals(want)
+    assert got.num_rows == 0        # an empty Binlog carries no DML

@@ -279,6 +279,41 @@ def test_causality_distributed_deep_chain_pointer_jump_fallback(spark):
     assert set(got.values()) == {10_000} and len(got) == 120
 
 
+def test_causality_max_edges_bound_skips_count_same_labels(
+        spark, monkeypatch):
+    """A caller-known edge bound at or below the local threshold
+    collects the edges directly (the counted gate never runs) and
+    yields the counted path's labels and the union-find oracle's; a
+    bound above the threshold still takes the counted path."""
+    import random
+    rng = random.Random(11)
+    edges = [(t, f"k{rng.randint(0, 80)}")
+             for t in range(200) for _ in range(rng.randint(1, 3))]
+    edges += [(700, "solo"), (701, None), (None, "k1")]
+    tk = spark.createDataFrame(edges, "txn_id long, key string")
+    counted = sorted(rows(causality.causality_groups(tk),
+                          "txn_id", "group_id"))
+    oracle = causality._local_components(
+        [(t, k) for t, k in set(edges) if t is not None and k is not None])
+    assert counted == sorted(zip(oracle["txn_id"], oracle["group_id"]))
+
+    gated = []
+    orig = causality._causality_groups_on_edges
+
+    def spy(*args, **kwargs):
+        gated.append(1)
+        return orig(*args, **kwargs)
+    monkeypatch.setattr(causality, "_causality_groups_on_edges", spy)
+    bound = len(edges)
+    direct = sorted(rows(causality.causality_groups(
+        tk, local_threshold=bound, max_edges=bound), "txn_id", "group_id"))
+    assert direct == counted and gated == []
+    above = sorted(rows(causality.causality_groups(
+        tk, local_threshold=bound - 1, max_edges=bound),
+        "txn_id", "group_id"))
+    assert above == counted and gated == [1]
+
+
 def test_conflict_free_partitions_keyless_txns_spread(spark):
     from tests.conftest import make_changes
     ch = make_changes(spark, [(i, "s0", 100 + i, "I", i) for i in range(8)])

@@ -1586,11 +1586,214 @@ def test_strict_mode_fails_loud_on_duplicate_insert(spark, tmp_path):
     assert got == [(7, 2.0)]
 
 
+_T_SETUP = ("CREATE TABLE IF NOT EXISTS t "
+            "(pk INTEGER PRIMARY KEY, val REAL)",)
+
+
+def _record_downstream(monkeypatch):
+    """Wrap the applier's downstream side effects. Returns the call log:
+    (call, start time, checkpoint ts or DDL text) in call order — the
+    saves apply_statements makes itself are logged too."""
+    import time
+
+    from tidb_binlog_spark.sinks import jdbc
+    log = []
+
+    def wrap(name, arg):
+        orig = getattr(jdbc, name)
+
+        def wrapper(*args, **kwargs):
+            log.append((name, time.time(), arg(args, kwargs)))
+            return orig(*args, **kwargs)
+        monkeypatch.setattr(jdbc, name, wrapper)
+    wrap("apply_statements", lambda a, k: k["checkpoint_ts"])
+    wrap("save_checkpoint", lambda a, k: a[1])
+    wrap("execute_ddl", lambda a, k: a[1])
+    return log
+
+
+def _shared_rows(db_dir, sql="SELECT pk, val FROM t ORDER BY pk"):
+    import sqlite3
+
+    from tidb_binlog_spark.sinks import jdbc
+    conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
+    try:
+        return conn.execute(sql).fetchall()
+    finally:
+        conn.close()
+
+
+def test_sql_batch_applier_wal_lands_before_any_downstream_write(
+        spark, tmp_path, monkeypatch):
+    """The relay WAL is written in the background, but it must have
+    landed before the batch's first downstream write: every statement
+    apply, DDL and checkpoint save of a batch carrying a DDL starts
+    after the WAL write ended, and the WAL holds the batch. The WAL
+    is held back until the first segment's statements are routed —
+    the point right before its apply."""
+    import threading
+    import time
+
+    from tidb_binlog_spark.operators import causality
+    from tidb_binlog_spark.sinks.relay import RelayLog
+
+    routed = threading.Event()
+    orig_route = causality.conflict_free_partitions
+
+    def routing(*args, **kwargs):
+        out = orig_route(*args, **kwargs)
+        routed.set()
+        return out
+    monkeypatch.setattr(causality, "conflict_free_partitions", routing)
+
+    wal_end = []
+    orig_append = RelayLog.append
+
+    def slow_append(self, batch):
+        routed.wait(timeout=60)
+        time.sleep(1.0)
+        orig_append(self, batch)
+        wal_end.append(time.time())
+    monkeypatch.setattr(RelayLog, "append", slow_append)
+    log = _record_downstream(monkeypatch)
+
+    add_c = "ALTER TABLE t ADD COLUMN c TEXT"
+    batch = _mixed_stream_rows(spark, [
+        (1, 10, "I", 1, 1.0, "{}"),
+        (2, 20, "DDL", 0, 0.0, add_c),
+        (3, 30, "I", 2, 2.0, "{}")])
+    db_dir = str(tmp_path / "db")
+    relay = RelayLog(str(tmp_path / "relay"))
+    pipeline.SqlBatchApplier(db_dir, setup_sql=_T_SETUP,
+                             relay=relay).apply(batch)
+
+    assert len(wal_end) == 1
+    assert [(name, arg) for name, _, arg in log] == [
+        ("apply_statements", 19), ("save_checkpoint", 19),
+        ("execute_ddl", add_c), ("save_checkpoint", 20),
+        ("apply_statements", 30), ("save_checkpoint", 30)]
+    assert all(t > wal_end[0] for _, t, _ in log)
+    assert relay.read(spark).count() == 3
+    assert _shared_rows(db_dir) == [(1, 1.0), (2, 2.0)]
+
+
+def test_sql_batch_applier_wal_error_reraises_before_downstream(
+        spark, tmp_path, monkeypatch):
+    """A failed background WAL write re-raises from apply() before
+    anything reached the downstream: no row written, cursor unmoved."""
+    import pytest
+
+    from tidb_binlog_spark.sinks import jdbc
+    from tidb_binlog_spark.sinks.relay import RelayLog
+
+    def failing_append(self, batch):
+        raise OSError("relay volume full")
+    monkeypatch.setattr(RelayLog, "append", failing_append)
+    db_dir = str(tmp_path / "db")
+    jdbc.ensure_shards(db_dir, 2, _T_SETUP, shared_db=True)
+    jdbc.save_checkpoint(db_dir, 5)
+    log = _record_downstream(monkeypatch)
+
+    batch = _mixed_stream_rows(spark, [
+        (1, 10, "I", 1, 1.0, "{}"),
+        (2, 20, "DDL", 0, 0.0, "ALTER TABLE t ADD COLUMN c TEXT"),
+        (3, 30, "I", 2, 2.0, "{}")])
+    applier = pipeline.SqlBatchApplier(
+        db_dir, setup_sql=_T_SETUP, resume_ts=5,
+        relay=RelayLog(str(tmp_path / "relay")))
+    with pytest.raises(OSError, match="relay volume full"):
+        applier.apply(batch)
+    assert log == []
+    assert _shared_rows(db_dir) == []
+    assert jdbc.load_checkpoint(db_dir)[0] == 5
+
+
+def test_sql_batch_applier_census_skips_empty_ddl_segment(
+        spark, tmp_path, monkeypatch):
+    """Two DDLs with no DML between them: the middle segment meets no
+    table's census commit-ts range, so it takes the checkpoint-only
+    path (no statement build), and the downstream rows and saved
+    checkpoint sequence are the per-segment ones: DML below each DDL
+    at ddl_ts - 1, each DDL at its own ts, the tail at the batch
+    watermark."""
+    from tidb_binlog_spark.sinks import sqlgen
+
+    builds = []
+    orig_gen = sqlgen.generate_sql
+
+    def counting_gen(*args, **kwargs):
+        builds.append(1)
+        return orig_gen(*args, **kwargs)
+    monkeypatch.setattr(sqlgen, "generate_sql", counting_gen)
+    log = _record_downstream(monkeypatch)
+
+    add_c = "ALTER TABLE t ADD COLUMN c TEXT"
+    add_d = "ALTER TABLE t ADD COLUMN d TEXT"
+    batch = _mixed_stream_rows(spark, [
+        (1, 10, "I", 1, 1.0, "{}"),
+        (2, 20, "DDL", 0, 0.0, add_c),
+        (3, 30, "DDL", 0, 0.0, add_d),
+        (4, 40, "I", 2, 2.0, "{}"),
+        (5, 45, "U", 2, 3.0, "{}")])
+    # the DML after the DDLs goes to a second table
+    batch = batch.withColumn(
+        "tbl", F.when(F.col("commit_ts") > 30, "u").otherwise(F.col("tbl")))
+    db_dir = str(tmp_path / "db")
+    setup = _T_SETUP + ("CREATE TABLE IF NOT EXISTS u "
+                        "(pk INTEGER PRIMARY KEY, val REAL)",)
+    pipeline.SqlBatchApplier(db_dir, setup_sql=setup).apply(batch)
+
+    assert len(builds) == 2
+    assert [(name, arg) for name, _, arg in log] == [
+        ("apply_statements", 19), ("save_checkpoint", 19),
+        ("execute_ddl", add_c), ("save_checkpoint", 20),
+        ("save_checkpoint", 29),
+        ("execute_ddl", add_d), ("save_checkpoint", 30),
+        ("apply_statements", 45), ("save_checkpoint", 45)]
+    assert _shared_rows(db_dir, "SELECT pk, val, c, d FROM t") \
+        == [(1, 1.0, None, None)]
+    assert _shared_rows(db_dir, "SELECT pk, val FROM u") == [(2, 3.0)]
+
+
+def test_sql_batch_applier_census_fake_only_batch_advances(
+        spark, tmp_path, monkeypatch):
+    """A heartbeat-only batch builds nothing and moves the checkpoint
+    to its max commit_ts."""
+    from tidb_binlog_spark.sinks import jdbc
+
+    log = _record_downstream(monkeypatch)
+    batch = _mixed_stream_rows(spark, [(1, 50, "FAKE", 0, 0.0, "{}"),
+                                       (2, 60, "FAKE", 0, 0.0, "{}")])
+    db_dir = str(tmp_path / "db")
+    jdbc.ensure_shards(db_dir, 2, _T_SETUP, shared_db=True)
+    pipeline.SqlBatchApplier(db_dir, setup_sql=_T_SETUP).apply(batch)
+    assert [(name, arg) for name, _, arg in log] == [("save_checkpoint", 60)]
+    assert jdbc.load_checkpoint(db_dir)[0] == 60
+    assert _shared_rows(db_dir) == []
+
+
+def test_sql_batch_applier_census_batch_below_cursor(
+        spark, tmp_path, monkeypatch):
+    """A batch entirely at or below the resume cursor writes nothing
+    downstream, yet the WAL still holds all of it."""
+    from tidb_binlog_spark.sinks.relay import RelayLog
+
+    log = _record_downstream(monkeypatch)
+    batch = _mixed_stream_rows(spark, [(1, 50, "I", 1, 1.0, "{}"),
+                                       (2, 100, "I", 2, 2.0, "{}")])
+    relay = RelayLog(str(tmp_path / "relay"))
+    pipeline.SqlBatchApplier(str(tmp_path / "db"), setup_sql=_T_SETUP,
+                             resume_ts=100, relay=relay).apply(batch)
+    assert log == []
+    assert relay.read(spark).count() == 2
+
+
 def test_sql_batch_applier_refuses_ddl_storm(spark, tmp_path):
     """VERDICT r7 item 7: the per-batch DDL collect is explicitly
     capped — a batch carrying more DDL events than max_ddl_per_batch
-    raises a clear error instead of collecting an unbounded row list
-    onto the driver. A batch at the cap still applies."""
+    (here cap + 1) raises a clear error instead of collecting an
+    unbounded row list onto the driver. A batch at the cap still
+    applies."""
     import pytest
 
     db_dir = str(tmp_path / "db")
@@ -1601,8 +1804,8 @@ def test_sql_batch_applier_refuses_ddl_storm(spark, tmp_path):
               f"ALTER TABLE t ADD COLUMN c{i} TEXT") for i in range(5)]
     batch = _mixed_stream_rows(spark, storm).persist()
     applier = pipeline.SqlBatchApplier(db_dir, setup_sql=setup,
-                                       max_ddl_per_batch=3)
-    with pytest.raises(RuntimeError, match="DDL"):
+                                       max_ddl_per_batch=4)
+    with pytest.raises(RuntimeError, match="more than 4 DDL"):
         applier.apply(batch)
     # at the cap: applies cleanly (5 DDLs <= cap 5)
     applier_ok = pipeline.SqlBatchApplier(db_dir, setup_sql=setup,

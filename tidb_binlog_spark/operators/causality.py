@@ -48,6 +48,13 @@ from pyspark.sql import types as T
 LOCAL_CC_MAX_EDGES = 500_000
 
 
+def local_cc_threshold() -> int:
+    """The deployment's local-CC edge gate (0 = local path off)."""
+    import os
+    return int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES",
+                              LOCAL_CC_MAX_EDGES))
+
+
 def _local_components_np(txn, kinv, n_keys):
     """Vectorized driver CC over the bipartite txn<->key edge list
     (r12: the 100M-event apply profile measured the DISTRIBUTED
@@ -133,7 +140,8 @@ def _local_components(rows) -> "pandas.DataFrame":
 
 
 def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
-                     local_threshold: int | None = None) -> DataFrame:
+                     local_threshold: int | None = None,
+                     max_edges: int | None = None) -> DataFrame:
     """txn_keys: (txn_id BIGINT, key STRING) one row per key a txn
     touches. Returns (txn_id, group_id) where group_id = min txn_id of
     the connected component.
@@ -145,6 +153,11 @@ def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
     component labeling; tests/test_operators.py asserts their
     equality on randomized graphs.
 
+    ``max_edges``: an upper bound on the distinct (txn_id, key) rows
+    the caller already knows (e.g. from the rows it built the keys
+    from). At or below the local threshold the edges are collected
+    straight to the driver — no persist, no count.
+
     Distributed path: each iteration's labels are localCheckpoint'ed —
     this both caches the data (the convergence check would otherwise
     re-execute the whole lineage every round) and TRUNCATES the logical
@@ -155,15 +168,16 @@ def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
     the exact corruption this operator prevents.
     """
     if local_threshold is None:
-        import os
-        local_threshold = int(os.environ.get(
-            "SPARK_GRAFT_CC_LOCAL_EDGES", LOCAL_CC_MAX_EDGES))
+        local_threshold = local_cc_threshold()
     # null txn_id rows must go too: the distributed joins would drop
     # them silently but toPandas would surface them as float64/NaN
     # labels on the local path — filter both so the paths agree.
     edges = txn_keys.select("txn_id", "key").distinct() \
                     .filter(F.col("txn_id").isNotNull()
                             & F.col("key").isNotNull())
+    if local_threshold and max_edges is not None \
+            and max_edges <= local_threshold:
+        return _local_groups(txn_keys, edges)
     edges.persist()
     try:
         return _causality_groups_on_edges(
@@ -188,27 +202,32 @@ def _cc_shuffle_partitions(n_edges: int) -> int:
     return p
 
 
+def _local_groups(txn_keys, edges):
+    """Driver path: collect the edges (Arrow batch transfer) and label
+    them with the numpy min-label fixpoint (r12) — the python
+    union-find (_local_components) stays as the parity oracle in
+    tests."""
+    import numpy as np
+    import pandas as pd
+    id_type = txn_keys.schema["txn_id"].dataType
+    epdf = edges.toPandas()
+    schema = T.StructType([T.StructField("txn_id", id_type),
+                           T.StructField("group_id", id_type)])
+    if epdf.empty:
+        return txn_keys.sparkSession.createDataFrame([], schema=schema)
+    kcodes, _ = pd.factorize(epdf["key"])
+    ut, lab = _local_components_np(
+        epdf["txn_id"].to_numpy(np.int64),
+        kcodes.astype(np.int64), int(kcodes.max()) + 1)
+    pdf = pd.DataFrame({"txn_id": ut, "group_id": lab})
+    return txn_keys.sparkSession.createDataFrame(pdf, schema=schema)
+
+
 def _causality_groups_on_edges(txn_keys, edges, max_iter,
                                local_threshold):
-    id_type = txn_keys.schema["txn_id"].dataType
-
     n_edges = edges.count()
     if local_threshold and n_edges <= local_threshold:
-        import numpy as np
-        import pandas as pd
-        epdf = edges.toPandas()            # Arrow batch transfer
-        schema = T.StructType([T.StructField("txn_id", id_type),
-                               T.StructField("group_id", id_type)])
-        if epdf.empty:
-            return txn_keys.sparkSession.createDataFrame([], schema=schema)
-        # numpy min-label fixpoint (r12) — the python union-find
-        # (_local_components) stays as the parity oracle in tests
-        kcodes, _ = pd.factorize(epdf["key"])
-        ut, lab = _local_components_np(
-            epdf["txn_id"].to_numpy(np.int64),
-            kcodes.astype(np.int64), int(kcodes.max()) + 1)
-        pdf = pd.DataFrame({"txn_id": ut, "group_id": lab})
-        return txn_keys.sparkSession.createDataFrame(pdf, schema=schema)
+        return _local_groups(txn_keys, edges)
 
     # scoped shuffle sizing for the fixpoint rounds (see
     # _cc_shuffle_partitions). The session conf is restored after the
@@ -277,7 +296,8 @@ def _cc_fixpoint(edges, max_iter):
 
 def stamp_workers(changes: DataFrame, groups: DataFrame,
                   num_workers: int = 16,
-                  txn_col: str = "commit_ts") -> DataFrame:
+                  txn_col: str = "commit_ts",
+                  max_groups: int | None = None) -> DataFrame:
     """Stamp a (txn_id, group_id) labeling onto the statement frame as
     (group_id, worker_id) — the join half of
     :func:`conflict_free_partitions`, split out so a traced run can
@@ -291,11 +311,13 @@ def stamp_workers(changes: DataFrame, groups: DataFrame,
     through a sort-merge join (r13 A/B at 10M events; numbers in
     SCALING.md). The count guarding the hint is cheap: the
     distributed fixpoint localCheckpoints its final labels and the
-    local gate builds them on the driver. Past the cap (default 8M
-    txns ~ 200MB serialized) the stamp falls back to the shuffle
-    join rather than force an oversized broadcast. Unmatched txns
-    (no key rows) fall back to singleton groups and get the same
-    hash, applied post-join on the big frame only for NULL rows."""
+    local gate builds them on the driver; ``max_groups``, a bound on
+    the labeling's rows the caller already knows, skips it when the
+    bound is within the cap. Past the cap (default 8M txns ~ 200MB
+    serialized) the stamp falls back to the shuffle join rather than
+    force an oversized broadcast. Unmatched txns (no key rows) fall
+    back to singleton groups and get the same hash, applied post-join
+    on the big frame only for NULL rows."""
     import os
     small = groups.select(
         F.col("txn_id"),
@@ -304,7 +326,8 @@ def stamp_workers(changes: DataFrame, groups: DataFrame,
                F.lit(num_workers)).alias("worker_id"))
     cap = int(os.environ.get("SPARK_GRAFT_STAMP_BROADCAST_MAX",
                              8_000_000))
-    if cap > 0 and groups.count() <= cap:
+    if cap > 0 and ((max_groups is not None and max_groups <= cap)
+                    or groups.count() <= cap):
         small = F.broadcast(small)
     out = changes.join(small,
                        changes[txn_col] == small.txn_id, "left") \
@@ -322,7 +345,8 @@ def stamp_workers(changes: DataFrame, groups: DataFrame,
 
 def conflict_free_partitions(changes: DataFrame, txn_keys: DataFrame,
                              num_workers: int = 16,
-                             txn_col: str = "commit_ts") -> DataFrame:
+                             txn_col: str = "commit_ts",
+                             max_edges: int | None = None) -> DataFrame:
     """Stamp each change with its causality group and a worker id
     (hash of group % workers) — the Spark analog of loader's
     hash-to-16-workers dispatch (pkg/loader/load.go:508-575). A
@@ -332,6 +356,11 @@ def conflict_free_partitions(changes: DataFrame, txn_keys: DataFrame,
     `txn_col` must be the SAME txn identity used to build `txn_keys`.
     Txns with no key rows are singleton groups (their own id) — a NULL
     group would hash every unmatched txn onto one worker.
+    ``max_edges`` bounds the distinct (txn_id, key) rows (see
+    :func:`causality_groups`); every labeled txn has at least one
+    edge, so it bounds the labeling's rows too.
     """
-    return stamp_workers(changes, causality_groups(txn_keys),
-                         num_workers=num_workers, txn_col=txn_col)
+    return stamp_workers(changes,
+                         causality_groups(txn_keys, max_edges=max_edges),
+                         num_workers=num_workers, txn_col=txn_col,
+                         max_groups=max_edges)

@@ -200,7 +200,12 @@ def parse_batch(batch: pa.RecordBatch, carry: tuple[str, ...]
     bufs = col.buffers()
     offsets = np.frombuffer(bufs[1], off_np,
                             count=n + 1 + col.offset)[col.offset:]
-    data = np.frombuffer(bufs[2], np.uint8)
+    # a column whose payloads are all null or empty may come without a
+    # data buffer: every offset is then 0, each payload fails the
+    # header check below and re-decodes through the per-payload
+    # fallback like any other shape the lockstep walk rejects
+    data = (np.zeros(0, np.uint8) if bufs[2] is None
+            else np.frombuffer(bufs[2], np.uint8))
     buf = np.concatenate([data, np.zeros(32, np.uint8)])
     starts = offsets[:-1].astype(np.int64)
     ends = offsets[1:].astype(np.int64)

@@ -107,6 +107,34 @@ def run_apply_stream(spark: SparkSession, source_dir: str, table_root: str,
 _CHAOS_APPLY_CALLS = 0   # chaos kill hooks (env-gated, see apply())
 
 
+class _WalWrite:
+    """One micro-batch's relay WAL write, run on a pyspark
+    InheritableThread so the batch's job group and local properties
+    carry over. ``join`` waits for it and re-raises its error (once);
+    with no relay it is a no-op."""
+
+    def __init__(self, relay, batch: DataFrame):
+        self._thread = self._error = None
+        if relay is not None:
+            from pyspark import InheritableThread
+            self._thread = InheritableThread(
+                target=self._run, args=(relay, batch), daemon=True)
+            self._thread.start()
+
+    def _run(self, relay, batch: DataFrame) -> None:
+        try:
+            relay.append(batch)
+        except BaseException as e:      # surfaced by join()
+            self._error = e
+
+    def join(self) -> None:
+        if self._thread is not None:
+            self._thread.join()
+        err, self._error = self._error, None
+        if err is not None:
+            raise err
+
+
 class SqlBatchApplier:
     """The executed-SQL micro-batch applier — the body of
     run_sql_apply_stream's foreachBatch, factored out so the relay
@@ -115,7 +143,20 @@ class SqlBatchApplier:
     gate, config filter/route stages, DDL barriers with immediate
     checkpoints, one statement build per statement shape (catalog
     width + sink unique keys), causality-routed shared-downstream
-    apply."""
+    apply.
+
+    The relay WAL write runs in the background: it only has to land
+    before the batch's first downstream side effect (relayer.WriteBinlog
+    precedes loader input; nothing orders it before merging, ordering
+    or statement translation). The order gate, the batch census,
+    statement build and causality run while the WAL is written, and
+    every statement apply, DDL, checkpoint save, cache release and
+    return goes through the WAL barrier first — a failed WAL write
+    re-raises there, before anything reached the downstream.
+
+    The driver learns everything it needs about a batch in ONE
+    collect (the census): the watermark, the DDL barriers and each
+    DML table's row count and commit-ts range."""
 
     # DDL rows are collect()ed per batch to sequence barriers; DDL is
     # rare by nature, so this is bounded in any sane stream — the cap
@@ -161,31 +202,77 @@ class SqlBatchApplier:
                     if name != "PRIMARY" and set(uk_cols) <= set(cols))
         return cols, uks
 
-    def _apply_dml(self, seg: DataFrame, ckpt_ts: int) -> None:
+    def _census(self, fresh: DataFrame, ok: DataFrame):
+        """The batch's one driver round trip. Returns (watermark,
+        DDL rows in commit_ts order, {tbl: (rows, min commit_ts, max
+        commit_ts)} over the gated DML). The watermark is the max
+        commit_ts of the resume-filtered RAW batch — FAKE heartbeats
+        and gate-rejected rows count — and None when the batch lies
+        entirely at or below the cursor."""
+        from functools import reduce
+
+        from ..operators import ddl as ddl_mod
+        parts = [fresh.agg(F.max("commit_ts").alias("commit_ts"))
+                      .withColumn("kind", F.lit("wm"))]
+        cap = self.max_ddl_per_batch
+        if self.sync_ddl:
+            # limit(cap+1) bounds what ever reaches the driver; the
+            # overflow check turns a silent OOM into a clear error.
+            parts.append(ddl_mod.prep_for_apply(
+                ok.filter(F.col("op") == "DDL")
+                  .withColumn("ddl_sql", F.col("row_json")))
+                .select("commit_ts", "db", "tbl", "ddl_sql", "should_skip")
+                .limit(cap + 1)
+                .withColumn("kind", F.lit("ddl")))
+        # a row without a table has no statement to build
+        parts.append(ok.filter((F.col("op") != "DDL")
+                               & F.col("tbl").isNotNull())
+                     .groupBy("tbl")
+                     .agg(F.count(F.lit(1)).alias("n"),
+                          F.min("commit_ts").alias("lo"),
+                          F.max("commit_ts").alias("hi"))
+                     .withColumn("kind", F.lit("dml")))
+        rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                      parts).collect()
+        wm = next(r["commit_ts"] for r in rows if r["kind"] == "wm")
+        ddl_rows = sorted((r for r in rows if r["kind"] == "ddl"),
+                          key=lambda r: r["commit_ts"])
+        if len(ddl_rows) > cap:
+            raise RuntimeError(
+                f"SqlBatchApplier: batch carries more than "
+                f"{cap} DDL events — refusing to collect a DDL "
+                f"storm onto the driver; split the stream or "
+                f"raise max_ddl_per_batch")
+        tables = {r["tbl"]: (r["n"], r["lo"], r["hi"])
+                  for r in rows if r["kind"] == "dml"}
+        return wm, ddl_rows, tables
+
+    def _apply_dml(self, seg: DataFrame, ckpt_ts: int, tables: dict,
+                   wal: _WalWrite) -> None:
         """Order-gated DML sub-batch -> safe-mode rewrite -> one
         statement build per statement shape -> causality-routed
-        parallel apply."""
+        parallel apply. ``tables`` maps each table that may have rows
+        in ``seg`` to its batch row count (from the census)."""
         from ..operators import causality
         from ..operators import safe_mode as sm
         from ..sinks import jdbc, sqlgen
+        if not tables:
+            wal.join()
+            jdbc.save_checkpoint(self.db_dir, ckpt_ts)
+            return
         if self.window.active():
             prepared = sm.safe_mode_rewrite(seg)
         else:
             prepared = seg.withColumn("sub_seq", F.lit(0))
-        # a row without a table has no statement to build
-        prepared = prepared.filter(F.col("tbl").isNotNull()).persist()
-        tables = [r["tbl"] for r in prepared.select("tbl").distinct().collect()]
-        if not tables:
-            prepared.unpersist()
-            jdbc.save_checkpoint(self.db_dir, ckpt_ts)
-            return
+        prepared = prepared.filter(F.col("tbl").isNotNull())
         # tables that share a shape share one projection: without a
         # catalog, or with every table at one width, the whole
-        # sub-batch is a single pass over the cached rows
+        # sub-batch is a single pass over the gated rows
         shapes: dict = {}
         for tbl in tables:
             shapes.setdefault(self._table_shape(tbl), []).append(tbl)
         stmts = txn_keys = None
+        max_edges = 0
         for (cols, uks), shape_tables in shapes.items():
             part = (prepared if len(shapes) == 1
                     else prepared.filter(F.col("tbl").isin(shape_tables)))
@@ -217,12 +304,21 @@ class SqlBatchApplier:
                                F.explode(F.array(*key_cols)).alias("key"))
             stmts = s if stmts is None else stmts.unionByName(s)
             txn_keys = keys if txn_keys is None else txn_keys.unionByName(keys)
+            # edge bound: the rewrite turns a U into two rows, and each
+            # row yields its PK key plus one key per UK
+            max_edges += (2 * sum(tables[t] for t in shape_tables)
+                          * (1 + len(uks)))
+        if max_edges > causality.local_cc_threshold():
+            # the distributed CC fixpoint rescopes the session-wide
+            # shuffle-partition conf: no WAL query may plan under it
+            wal.join()
         # conflict-free dispatch replaces pmod(pk): whole txns route by
         # causality group, so cross-txn key conflicts apply in commit
         # order while disjoint groups parallelize (load.go:508-575)
         routed = causality.conflict_free_partitions(
             stmts, txn_keys, num_workers=self.num_workers,
-            txn_col="commit_ts")
+            txn_col="commit_ts", max_edges=max_edges)
+        wal.join()
         # shared_db: the downstream is ONE database (the reference's
         # topology) — causality worker ids vary per batch, which is
         # only sound when routing doesn't decide row placement
@@ -230,14 +326,10 @@ class SqlBatchApplier:
                               setup_sql=self.setup_sql,
                               checkpoint_ts=ckpt_ts,
                               shared_db=True)
-        prepared.unpersist()
 
     def apply(self, batch_df: DataFrame) -> None:
         import os as _os
 
-        from ..operators import ddl as ddl_mod
-        from ..sinks import jdbc
-        catalog = self.catalog
         # persist the RAW batch first: the relay WAL and the filtered
         # main path both read it (one source scan, not two)
         batch_df = batch_df.persist()
@@ -256,21 +348,30 @@ class SqlBatchApplier:
             _CHAOS_APPLY_CALLS += 1
             if _cb and _CHAOS_APPLY_CALLS >= int(_cb):
                 _os._exit(137)
-        if self.relay is not None:
-            self.relay.append(batch_df)     # WAL before any apply
-        if _ca and _CHAOS_APPLY_CALLS >= int(_ca):
-            _os._exit(137)
-        batch_df2 = batch_df
-        batch_df = batch_df.filter(F.col("commit_ts") > self.resume_ts)
-        wm_row = batch_df.agg(F.max("commit_ts").alias("wm")).collect()[0]
-        if wm_row["wm"] is None:        # batch fully below the cursor
-            batch_df2.unpersist()
-            return
-        wm = int(wm_row["wm"])
-        # FAKE heartbeats advance the watermark (computed above) but
-        # must never reach the statement builder — generate_sql has no
-        # case for them and would emit NULL sql_text.
-        ok = (ordering.ordered_stream(batch_df)
+        # WAL in the background; the barrier (wal.join) precedes every
+        # downstream side effect, and the finally below joins it on
+        # every exit path before the cached batch is released
+        wal = _WalWrite(self.relay, batch_df)
+        try:
+            if _ca and _CHAOS_APPLY_CALLS >= int(_ca):
+                wal.join()
+                _os._exit(137)
+            self._apply_gated(batch_df, wal)
+        finally:
+            wal.join()
+            batch_df.unpersist()
+
+    def _apply_gated(self, batch_df: DataFrame, wal: _WalWrite) -> None:
+        """Resume filter, order gate and routes, the census, then the
+        DML segments between DDL barriers."""
+        from ..sinks import jdbc
+        catalog = self.catalog
+        fresh = batch_df.filter(F.col("commit_ts") > self.resume_ts)
+        # FAKE heartbeats advance the watermark (the census reads the
+        # raw batch) but must never reach the statement builder —
+        # generate_sql has no case for them and would emit NULL
+        # sql_text.
+        ok = (ordering.ordered_stream(fresh)
               .filter(F.col("op") != "FAKE"))
         if self.cfg is not None:
             from ..plans.pipeline import apply_filters_and_routes
@@ -281,53 +382,48 @@ class SqlBatchApplier:
                       .withColumn("tbl", F.col("target_tbl"))
                       .drop("target_db", "target_tbl"))
         ok = ok.persist()
-        # DDL events (op = 'DDL', statement text in row_json) split the
-        # batch into barriers: DML below the DDL applies first, then
-        # the DDL runs on every shard with the catalog evicted and the
-        # checkpoint saved IMMEDIATELY, then the next sub-batch builds
-        # statements against the POST-DDL schema
-        # (drainer/syncer.go:433-537; pkg/loader/load.go:401-496).
-        ddl_rows = []
-        if self.sync_ddl:
-            cap = self.max_ddl_per_batch
-            # limit(cap+1) bounds what ever reaches the driver; the
-            # overflow check turns a silent OOM into a clear error.
-            ddl_rows = (ddl_mod.prep_for_apply(
-                ok.filter(F.col("op") == "DDL")
-                  .withColumn("ddl_sql", F.col("row_json")))
-                .select("commit_ts", "db", "tbl", "ddl_sql",
-                        "should_skip")
-                .orderBy("commit_ts").limit(cap + 1).collect())
-            if len(ddl_rows) > cap:
-                ok.unpersist()
-                batch_df2.unpersist()
-                raise RuntimeError(
-                    f"SqlBatchApplier: batch carries more than "
-                    f"{cap} DDL events — refusing to collect a DDL "
-                    f"storm onto the driver; split the stream or "
-                    f"raise max_ddl_per_batch")
-        dml = ok.filter(F.col("op") != "DDL")
-        lo = self.resume_ts
-        for d in ddl_rows:
-            seg = dml.filter((F.col("commit_ts") > lo)
-                             & (F.col("commit_ts") < d["commit_ts"]))
-            self._apply_dml(seg, ckpt_ts=int(d["commit_ts"]) - 1)
-            if not d["should_skip"]:
-                # sqlite shards are single-database files, so the
-                # mysql-wire `USE db;` prefix (apply_sql) is moot —
-                # the raw statement applies to every shard
-                jdbc.execute_ddl(self.db_dir, d["ddl_sql"],
-                                 catalog=catalog, table=d["tbl"])
-            elif catalog is not None:
-                # skipped DDL still evicts the cached downstream info
-                # (syncer.go shouldSkip path: empty sql forces the
-                # table-info refresh)
-                catalog.evict("main", d["tbl"])
-            jdbc.save_checkpoint(self.db_dir, int(d["commit_ts"]))
-            lo = int(d["commit_ts"])
-        self._apply_dml(dml.filter(F.col("commit_ts") > lo), ckpt_ts=wm)
-        ok.unpersist()
-        batch_df2.unpersist()
+        try:
+            wm, ddl_rows, tables = self._census(fresh, ok)
+            if wm is None:              # batch fully below the cursor
+                return
+            # DDL events (op = 'DDL', statement text in row_json) split
+            # the batch into barriers: DML below the DDL applies first,
+            # then the DDL runs on every shard with the catalog evicted
+            # and the checkpoint saved IMMEDIATELY, then the next
+            # sub-batch builds statements against the POST-DDL schema
+            # (drainer/syncer.go:433-537; pkg/loader/load.go:401-496).
+            # A segment builds statements only for the tables whose
+            # census commit-ts range meets it.
+            dml = ok.filter(F.col("op") != "DDL")
+
+            def meeting(lo, hi=None):
+                return {t: n for t, (n, t_lo, t_hi) in tables.items()
+                        if t_hi > lo and (hi is None or t_lo < hi)}
+
+            lo = self.resume_ts
+            for d in ddl_rows:
+                hi = int(d["commit_ts"])
+                seg = dml.filter((F.col("commit_ts") > lo)
+                                 & (F.col("commit_ts") < hi))
+                # (_apply_dml has passed the WAL barrier)
+                self._apply_dml(seg, hi - 1, meeting(lo, hi), wal)
+                if not d["should_skip"]:
+                    # sqlite shards are single-database files, so the
+                    # mysql-wire `USE db;` prefix (apply_sql) is moot —
+                    # the raw statement applies to every shard
+                    jdbc.execute_ddl(self.db_dir, d["ddl_sql"],
+                                     catalog=catalog, table=d["tbl"])
+                elif catalog is not None:
+                    # skipped DDL still evicts the cached downstream
+                    # info (syncer.go shouldSkip path: empty sql forces
+                    # the table-info refresh)
+                    catalog.evict("main", d["tbl"])
+                jdbc.save_checkpoint(self.db_dir, hi)
+                lo = hi
+            self._apply_dml(dml.filter(F.col("commit_ts") > lo), int(wm),
+                            meeting(lo), wal)
+        finally:
+            ok.unpersist()
 
 
 def feed_sql_by_relay_if_needed(spark: SparkSession, relay, db_dir: str,
