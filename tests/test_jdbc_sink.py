@@ -1,5 +1,5 @@
 """End-to-end executed-SQL sink: change stream -> safe-mode rewrite ->
-statement generation -> per-worker SQLite execution -> downstream state
+statement generation -> per-worker execution into SQLite -> downstream state
 equals the engine's own snapshot (the sync-diff check against a real
 SQL database, reference tests/_utils/check_data).
 """
@@ -183,8 +183,9 @@ def test_refresh_retries_non_transient_error_once(spark, tmp_path):
 
 def test_colliding_worker_ids_use_separate_connections(spark, tmp_path):
     """Two distinct worker_ids hashed into one Spark partition must
-    still write their own worker_<id>.db files (the
-    connection-per-worker contract)."""
+    still commit as separate workers (the connection-per-worker
+    contract): one cursor row per worker next to the topic floor, all
+    in the one downstream database."""
     ch = make_changes(spark, [(1, "s0", 10, "I", 1, 0, 1.0),
                               (2, "s0", 20, "I", 2, 0, 2.0),
                               (3, "s0", 30, "I", 3, 0, 3.0),
@@ -197,11 +198,19 @@ def test_colliding_worker_ids_use_separate_connections(spark, tmp_path):
     jdbc.apply_statements(
         stmts, db_dir, num_workers=1,
         setup_sql=("CREATE TABLE IF NOT EXISTS `t` "
-                   "(pk INTEGER PRIMARY KEY, val REAL)",))
+                   "(pk INTEGER PRIMARY KEY, val REAL)",),
+        checkpoint_ts=40)
     import os as _os
-    files = sorted(f for f in _os.listdir(db_dir) if f.endswith(".db"))
-    assert files == ["worker_0.db", "worker_1.db", "worker_2.db",
-                     "worker_3.db"]
+    import sqlite3
+    assert [f for f in _os.listdir(db_dir) if f.endswith(".db")] == \
+        [jdbc.SHARED_DB_NAME]
+    conn = sqlite3.connect(_os.path.join(db_dir, jdbc.SHARED_DB_NAME))
+    cursors = sorted(conn.execute(
+        f"SELECT topic_name, ts FROM {jdbc.CKPT_TABLE}").fetchall())
+    conn.close()
+    assert cursors == [("default", 40), ("default@0", 40),
+                       ("default@1", 40), ("default@2", 40),
+                       ("default@3", 40)]
     applied = jdbc.read_applied(spark, db_dir, "`t`", ["pk", "val"])
     assert {r["pk"]: r["val"] for r in applied.collect()} == \
         {1: 1.0, 2: 2.0, 3: 3.0, 4: 4.0}
@@ -210,7 +219,8 @@ def test_colliding_worker_ids_use_separate_connections(spark, tmp_path):
 def test_wide_model_end_to_end_sqlite(spark, tmp_path):
     """Map row model all the way to an executed downstream: wide events
     -> generate_sql_wide (PRIMARY-key WHERE from old_values on update,
-    row image on delete) -> per-worker SQLite -> final state check."""
+    row image on delete) -> per-worker apply into SQLite -> final state
+    check."""
     schema = ("db string, tbl string, op string, commit_ts long, "
               "seq int, sub_seq int, "
               "values map<string,string>, old_values map<string,string>")
@@ -296,9 +306,8 @@ def test_execute_ddl_replay_is_tolerated(tmp_path):
     from tidb_binlog_spark.sinks import jdbc
 
     db_dir = str(tmp_path / "db")
-    jdbc.ensure_shards(db_dir, 1, (
-        "CREATE TABLE IF NOT EXISTS t (pk INTEGER PRIMARY KEY)",),
-        shared_db=True)
+    jdbc.ensure_downstream(db_dir, (
+        "CREATE TABLE IF NOT EXISTS t (pk INTEGER PRIMARY KEY)",))
     jdbc.execute_ddl(db_dir, "ALTER TABLE t ADD COLUMN c TEXT")
     # replay: same DDL again -> duplicate column, tolerated
     jdbc.execute_ddl(db_dir, "ALTER TABLE t ADD COLUMN c TEXT")

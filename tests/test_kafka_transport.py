@@ -250,7 +250,7 @@ def test_arbiter_path_end_to_end_wire_to_sqlite(spark, tmp_path):
     db_dir = str(tmp_path / "db")
     setup = ("CREATE TABLE IF NOT EXISTS t (pk INTEGER PRIMARY KEY, val REAL)",)
     jdbc.apply_statements(stmts, db_dir, 1, setup_sql=setup,
-                          checkpoint_ts=50, shared_db=True)
+                          checkpoint_ts=50)
     conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
     got = sorted(conn.execute("SELECT pk, val FROM t").fetchall())
     conn.close()
@@ -262,7 +262,7 @@ def test_arbiter_path_end_to_end_wire_to_sqlite(spark, tmp_path):
                     .withColumn("worker_id", F.lit(0)))
     db2 = str(tmp_path / "db2")
     jdbc.apply_statements(direct_stmts, db2, 1, setup_sql=setup,
-                          checkpoint_ts=50, shared_db=True)
+                          checkpoint_ts=50)
     conn = sqlite3.connect(os.path.join(db2, jdbc.SHARED_DB_NAME))
     want = sorted(conn.execute("SELECT pk, val FROM t").fetchall())
     conn.close()

@@ -215,7 +215,7 @@ def test_causality_long_chain_converges(spark):
 
 
 def test_causality_local_and_distributed_paths_agree(spark):
-    # The r10 adaptive gate (driver union-find under LOCAL_CC_MAX_EDGES,
+    # The r10 adaptive gate (driver fixpoint under LOCAL_CC_MAX_EDGES,
     # min-propagation loop above it) must produce the identical
     # min-txn_id labeling. Seeded random graph: stars + a chain + an
     # isolated txn + a null-key txn (excluded by both paths).
@@ -595,7 +595,7 @@ def test_loopback_mark_write_then_filter_roundtrip(spark, tmp_path):
             "replace(sql_text, 'retl._drainer_repl_mark', "
             "'\"retl._drainer_repl_mark\"')"))
     jdbc.apply_statements(stmts, db_dir, 1, setup_sql=setup)
-    conn = sqlite3.connect(os.path.join(db_dir, "worker_0.db"))
+    conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
     vals = dict(conn.execute(
         'SELECT id, val FROM "retl._drainer_repl_mark" WHERE channel_id=7'))
     assert vals[2] == 2 and vals[0] == 2      # bumped once each (from 1)

@@ -497,6 +497,14 @@ def test_downstream_checkpoint_atomic_with_data(spark, tmp_path):
     jdbc.finalize_checkpoint(db_dir)
     assert jdbc.load_checkpoint(db_dir) == (20, jdbc.STATUS_NORMAL)
 
+    # a directory with no downstream: no cursor, and neither read
+    # creates the database
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    assert jdbc.load_checkpoint(empty) == (-1, jdbc.STATUS_NORMAL)
+    jdbc.finalize_checkpoint(empty)
+    assert os.listdir(empty) == []
+
 
 def test_sql_apply_stream_resumes_from_downstream_checkpoint(spark, tmp_path):
     """Crash-restart over the executed-SQL path: the second run must
@@ -530,20 +538,16 @@ def test_sql_apply_stream_resumes_from_downstream_checkpoint(spark, tmp_path):
         setup_sql=setup)
     q2.awaitTermination(120)
 
-    got = {}
-    for f in sorted(os.listdir(db_dir)):
-        if f.endswith(".db"):
-            conn = sqlite3.connect(os.path.join(db_dir, f))
-            got.update({r[0]: r[1] for r in
-                        conn.execute("SELECT pk, val FROM t")})
-            conn.close()
+    conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
+    got = dict(conn.execute("SELECT pk, val FROM t").fetchall())
+    conn.close()
     assert got == {1: 7.0, 2: 2.0}
     assert jdbc.load_checkpoint(db_dir)[0] == 30
 
 
 def test_execute_ddl_retries_and_refreshes_catalog(spark, tmp_path):
-    """DDL path: 5x retry budget on transient failures, applied to all
-    shards, catalog evicted so the next build sees the new column."""
+    """DDL path: 5x retry budget on transient failures, applied to the
+    downstream, catalog evicted so the next build sees the new column."""
     import sqlite3
 
     from tidb_binlog_spark.sinks import catalog as cat_mod
@@ -558,8 +562,7 @@ def test_execute_ddl_retries_and_refreshes_catalog(spark, tmp_path):
     jdbc.apply_statements(stmts, db_dir, 2, setup_sql=setup,
                           checkpoint_ts=10)
 
-    conn0 = sqlite3.connect(os.path.join(db_dir, sorted(
-        f for f in os.listdir(db_dir) if f.endswith(".db"))[0]))
+    conn0 = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
     cat = cat_mod.SinkCatalog(
         lambda s, t: cat_mod.fetch_table_info_sqlite(conn0, s, t))
     assert "extra" not in cat.table_info("main", "t").columns
@@ -587,13 +590,9 @@ def test_execute_ddl_retries_and_refreshes_catalog(spark, tmp_path):
         jmod._execute_with_retry = orig
     assert attempts["n"] >= 3                  # retried past 2 failures
     assert "extra" in cat.table_info("main", "t").columns
-    # every shard got the DDL
-    for f in sorted(os.listdir(db_dir)):
-        if f.endswith(".db"):
-            c = sqlite3.connect(os.path.join(db_dir, f))
-            cols = [r[1] for r in c.execute("PRAGMA table_info(t)")]
-            assert "extra" in cols
-            c.close()
+    # the downstream got the DDL
+    cols = [r[1] for r in conn0.execute("PRAGMA table_info(t)")]
+    assert "extra" in cols
     conn0.close()
 
 
@@ -1690,7 +1689,7 @@ def test_sql_batch_applier_wal_error_reraises_before_downstream(
         raise OSError("relay volume full")
     monkeypatch.setattr(RelayLog, "append", failing_append)
     db_dir = str(tmp_path / "db")
-    jdbc.ensure_shards(db_dir, 2, _T_SETUP, shared_db=True)
+    jdbc.ensure_downstream(db_dir, _T_SETUP)
     jdbc.save_checkpoint(db_dir, 5)
     log = _record_downstream(monkeypatch)
 
@@ -1765,7 +1764,6 @@ def test_sql_batch_applier_census_fake_only_batch_advances(
     batch = _mixed_stream_rows(spark, [(1, 50, "FAKE", 0, 0.0, "{}"),
                                        (2, 60, "FAKE", 0, 0.0, "{}")])
     db_dir = str(tmp_path / "db")
-    jdbc.ensure_shards(db_dir, 2, _T_SETUP, shared_db=True)
     pipeline.SqlBatchApplier(db_dir, setup_sql=_T_SETUP).apply(batch)
     assert [(name, arg) for name, _, arg in log] == [("save_checkpoint", 60)]
     assert jdbc.load_checkpoint(db_dir)[0] == 60
@@ -1793,11 +1791,13 @@ def test_sql_batch_applier_refuses_ddl_storm(spark, tmp_path):
     capped — a batch carrying more DDL events than max_ddl_per_batch
     (here cap + 1) raises a clear error instead of collecting an
     unbounded row list onto the driver. A batch at the cap still
-    applies."""
+    applies, every DDL reaching the downstream."""
+    import sqlite3
+
     import pytest
+    from tidb_binlog_spark.sinks import jdbc
 
     db_dir = str(tmp_path / "db")
-    os.makedirs(db_dir)
     setup = ("CREATE TABLE IF NOT EXISTS t "
              "(pk INTEGER PRIMARY KEY, val REAL)",)
     storm = [(i, 10 + i, "DDL", 0, 0.0,
@@ -1807,10 +1807,16 @@ def test_sql_batch_applier_refuses_ddl_storm(spark, tmp_path):
                                        max_ddl_per_batch=4)
     with pytest.raises(RuntimeError, match="more than 4 DDL"):
         applier.apply(batch)
-    # at the cap: applies cleanly (5 DDLs <= cap 5)
+    # at the cap: applies cleanly (5 DDLs <= cap 5); the applier set
+    # the downstream up, as the stream does, so all five ALTERs ran
     applier_ok = pipeline.SqlBatchApplier(db_dir, setup_sql=setup,
                                           max_ddl_per_batch=5)
     applier_ok.apply(batch.persist())
+    conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
+    cols = [r[1] for r in conn.execute("PRAGMA table_info(t)")]
+    conn.close()
+    assert cols == ["pk", "val", "c0", "c1", "c2", "c3", "c4"]
+    assert jdbc.load_checkpoint(db_dir)[0] == 14
 
 
 def test_sql_apply_stream_sequences_ddl_mid_stream(spark, tmp_path):
@@ -2168,7 +2174,7 @@ def test_shared_db_worker_crash_keeps_data_and_cursor_atomic(spark, tmp_path):
 
     db_dir = str(tmp_path / "db")
     setup = ("CREATE TABLE IF NOT EXISTS t (pk INTEGER PRIMARY KEY, val REAL)",)
-    jdbc.ensure_shards(db_dir, 2, setup, shared_db=True)
+    jdbc.ensure_downstream(db_dir, setup)
     jdbc.save_checkpoint(db_dir, -1)          # the pre-batch floor
 
     # pks 1 and 2 land on DIFFERENT workers (pmod 2): the dying
@@ -2190,8 +2196,7 @@ def test_shared_db_worker_crash_keeps_data_and_cursor_atomic(spark, tmp_path):
 
     with pytest.raises(Exception):
         jdbc.apply_statements(stmts, db_dir, 2, setup_sql=setup,
-                              checkpoint_ts=20, shared_db=True,
-                              inject=inject)
+                              checkpoint_ts=20, inject=inject)
     import sqlite3
     conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
     rows = sorted(conn.execute("SELECT pk FROM t").fetchall())

@@ -17,8 +17,6 @@ for the signatures, so the DuckDB oracle matches bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -206,7 +204,7 @@ def _minhash_signatures_np(src: DataFrame, k: int,
 
 def minhash_signatures(docs: DataFrame, k: int = 12,
                        shingle_frame: DataFrame | None = None,
-                       engine: str | None = None) -> DataFrame:
+                       engine: str = "np") -> DataFrame:
     """k-permutation MinHash signature per doc.
 
     One md5 per shingle; permutation j orders shingles by an 8-hex-char
@@ -223,13 +221,10 @@ def minhash_signatures(docs: DataFrame, k: int = 12,
     and feed BOTH the signature pass and the exact-Jaccard verifier
     from it, instead of re-deriving shingles per signal.
 
-    ``engine`` picks the implementation ("np"/"expr"; default from
-    $SPARK_GRAFT_MINHASH_ENGINE, else "np" — the numpy batch fold,
-    r14; the expr form is retained as the parity oracle, exactly the
-    simhash engine arrangement). Values are identical across engines,
+    ``engine`` picks the implementation ("np"/"expr"; default "np" —
+    the numpy batch fold, r14; the expr form is retained as the parity
+    oracle, exactly the simhash engine arrangement). Values are identical across engines,
     so every consumer's oracle is unchanged."""
-    if engine is None:
-        engine = os.environ.get("SPARK_GRAFT_MINHASH_ENGINE", "np")
     if engine == "np":
         from .text import spread
         if shingle_frame is not None:
@@ -399,7 +394,7 @@ def _simhash_np(docs: DataFrame) -> DataFrame:
             .mapInPandas(fold, schema="doc_id long, simhash string"))
 
 
-def simhash(docs: DataFrame, votes: str | None = None) -> DataFrame:
+def simhash(docs: DataFrame, votes: str = "np") -> DataFrame:
     """64-bit SimHash over word unigrams: bit p is the sign of the sum
     of +-1 votes, where token t votes by bit p of its md5 fingerprint
     (two bits per hex digit — see _VOTES64_STR for the spec form).
@@ -423,14 +418,11 @@ def simhash(docs: DataFrame, votes: str | None = None) -> DataFrame:
     token and the vote fold is one reduceat instead of a per-occurrence
     64-lane lambda. At 100 TB every form is map-only and scales with
     executor count with no network at all. ``votes`` picks the engine
-    ("np"/"int"/"str"; default from $SPARK_GRAFT_SIMHASH_ENGINE, else
-    "np" — the expr forms are retained as parity oracles). The DuckDB
-    oracle (osql.DEDUP_SIMHASH) states the same per-bit sums — the
-    VALUES are identical across all engines, so the oracle is
-    unchanged."""
+    ("np"/"int"/"str"; default "np" — the expr forms are retained as
+    parity oracles). The DuckDB oracle (osql.DEDUP_SIMHASH) states the
+    same per-bit sums — the VALUES are identical across all engines,
+    so the oracle is unchanged."""
     from .text import with_tokens
-    if votes is None:
-        votes = os.environ.get("SPARK_GRAFT_SIMHASH_ENGINE", "np")
     if votes == "np":
         return _simhash_np(docs)
     toks = with_tokens(docs)

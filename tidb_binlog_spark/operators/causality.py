@@ -8,15 +8,18 @@ the group label routes the txn to a worker.
 
 Spark-first: this is connected components on the bipartite txn↔key
 graph, with an ADAPTIVE physical strategy (the same size-gated shape
-as Spark's broadcast-join threshold). Small candidate graphs — the
-common case after LSH banding or causality bucketing — are solved by a
-driver union-find in one collect; anything above LOCAL_CC_MAX_EDGES
-runs alternating min-label propagation (a fixed-point loop of two
-shuffles per iteration) — converges in O(diameter) iterations; each
-iteration is a plain groupBy/join so it scales horizontally. Both
-paths produce the identical min-txn_id labeling. The final group id
-becomes the repartition key for the parallel apply, giving the
-reference's "per-key order is sufficient" guarantee at cluster scale.
+as Spark's broadcast-join threshold). Graphs up to LOCAL_CC_MAX_EDGES
+— the common case after LSH banding or causality bucketing — are
+collected once and labeled on the driver by a vectorized numpy
+min-label fixpoint; anything larger runs alternating min-label
+propagation on the cluster (a fixed-point loop of two shuffles per
+iteration) — converges in O(diameter) iterations; each iteration is a
+plain groupBy/join so it scales horizontally. Both paths produce the
+identical min-txn_id labeling; the Python union-find
+(_local_components) is only the test oracle they are checked against.
+The final group id becomes the repartition key for the parallel
+apply, giving the reference's "per-key order is sufficient" guarantee
+at cluster scale.
 """
 
 from __future__ import annotations
@@ -25,8 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Edge-count gate below which components are solved on the driver
-# instead of by the distributed fixpoint loop. Rationale (the
+# Edge-count gate at or below which components are solved on the
+# driver instead of by the distributed fixpoint loop. Rationale (the
 # autoBroadcastJoinThreshold pattern — adapt the physical strategy to
 # the measured relation size, keep the distributed plan for anything
 # big): the candidate graph after LSH banding / causality bucketing is
@@ -34,25 +37,21 @@ from pyspark.sql import types as T
 # distributed min-propagation round costs two shuffles of FIXED
 # scheduler latency regardless of size — ~0.7 s/round x ~7 rounds
 # measured at bench scale on a 39k-edge graph (ROUNDLOG r10), i.e.
-# ~6 s to label a graph a driver union-find solves in <50 ms.
+# ~6 s to label a graph a driver pass solves in <50 ms.
 #
-# The default sits at the MEASURED crossover, not at the driver-memory
-# ceiling: the single-threaded union-find costs ~6 us/edge, so by 2M
-# edges it LOSES to the loop (12.3 s vs 4.8 s measured on a
-# conflict-pair graph; a first sf10 streaming run with a 2M gate sent
-# ~1.5M-edge micro-batches down the local path and regressed SQL-apply
-# 190 -> 339 s). 500k edges: local 3.3 s vs distributed 4.5 s — still
-# a win, and every registry/bench graph (39k-400k edges) stays local.
-# Tunable per deployment via SPARK_GRAFT_CC_LOCAL_EDGES (0 disables
-# the local path and skips the gate count entirely).
+# The gate was set at the crossover of the driver path it first
+# guarded, a Python union-find at ~6 us/edge: by 2M edges that lost
+# to the loop (12.3 s vs 4.8 s on a conflict-pair graph), at 500k it
+# still won (3.3 s vs 4.5 s). The numpy fixpoint that replaced it
+# (r12) tied the loop on ~6M-edge batches, so the gate stays at 500k
+# rather than make a 6M-row driver collect the default (SCALING.md,
+# "SQL-apply profile at 100M events"). Callers that must force a path
+# pass ``local_threshold`` (0 turns the local path off).
 LOCAL_CC_MAX_EDGES = 500_000
 
-
-def local_cc_threshold() -> int:
-    """The deployment's local-CC edge gate (0 = local path off)."""
-    import os
-    return int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES",
-                              LOCAL_CC_MAX_EDGES))
+# largest labeling (rows = txns) stamp_workers broadcasts: 8M txns is
+# ~200MB serialized; past it the stamp takes the shuffle join
+STAMP_BROADCAST_MAX_GROUPS = 8_000_000
 
 
 def _local_components_np(txn, kinv, n_keys):
@@ -147,11 +146,13 @@ def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
     the connected component.
 
     Adaptive physical strategy (r10): one cheap count on the persisted
-    edge frame picks between a driver union-find (small graphs — see
-    LOCAL_CC_MAX_EDGES) and the distributed min-propagation fixpoint
-    (everything else). Both paths compute the identical min-txn_id
-    component labeling; tests/test_operators.py asserts their
-    equality on randomized graphs.
+    edge frame picks between the driver's numpy fixpoint (small graphs
+    — see LOCAL_CC_MAX_EDGES; ``local_threshold`` overrides the gate,
+    0 turns the local path off) and the distributed min-propagation
+    fixpoint (everything else). Both paths compute the identical
+    min-txn_id component labeling; tests/test_operators.py asserts
+    their equality, and the Python union-find oracle's, on randomized
+    graphs.
 
     ``max_edges``: an upper bound on the distinct (txn_id, key) rows
     the caller already knows (e.g. from the rows it built the keys
@@ -168,7 +169,7 @@ def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
     the exact corruption this operator prevents.
     """
     if local_threshold is None:
-        local_threshold = local_cc_threshold()
+        local_threshold = LOCAL_CC_MAX_EDGES
     # null txn_id rows must go too: the distributed joins would drop
     # them silently but toPandas would surface them as float64/NaN
     # labels on the local path — filter both so the paths agree.
@@ -313,21 +314,19 @@ def stamp_workers(changes: DataFrame, groups: DataFrame,
     distributed fixpoint localCheckpoints its final labels and the
     local gate builds them on the driver; ``max_groups``, a bound on
     the labeling's rows the caller already knows, skips it when the
-    bound is within the cap. Past the cap (default 8M txns ~ 200MB
-    serialized) the stamp falls back to the shuffle join rather than
-    force an oversized broadcast. Unmatched txns (no key rows) fall
+    bound is within the cap. Past the cap (STAMP_BROADCAST_MAX_GROUPS)
+    the stamp falls back to the shuffle join rather than force an
+    oversized broadcast. Unmatched txns (no key rows) fall
     back to singleton groups and get the same hash, applied post-join
     on the big frame only for NULL rows."""
-    import os
     small = groups.select(
         F.col("txn_id"),
         F.col("group_id"),
         F.pmod(F.xxhash64(F.col("group_id")),
                F.lit(num_workers)).alias("worker_id"))
-    cap = int(os.environ.get("SPARK_GRAFT_STAMP_BROADCAST_MAX",
-                             8_000_000))
-    if cap > 0 and ((max_groups is not None and max_groups <= cap)
-                    or groups.count() <= cap):
+    cap = STAMP_BROADCAST_MAX_GROUPS
+    if (max_groups is not None and max_groups <= cap) \
+            or groups.count() <= cap:
         small = F.broadcast(small)
     out = changes.join(small,
                        changes[txn_col] == small.txn_id, "left") \

@@ -9,19 +9,21 @@ more.
 
 Spark form: statements are repartitioned by worker id and each
 partition executes its statements IN ORDER through a DB-API
-connection. The test target is SQLite (one file per worker — workers
-never share a connection, mirroring the reference's
-connection-per-worker pool); a production target swaps the connect
-callable for a MySQL/JDBC driver, nothing else changes.
+connection. The downstream is ONE database — the reference's topology
+(executor.go: N workers, one MySQL) — and its checkpoint table lives
+in it, committed with the rows (arbiter/checkpoint.go). The local
+target is the SQLite file <db_dir>/downstream.db; a production target
+swaps ``_connect`` for a MySQL/JDBC driver, nothing else changes.
 
 Ordering contract: within a partition the rows MUST already be sorted
 by (commit_ts, seq, sub_seq) — repartition + sortWithinPartitions is
 the caller's job (provided by ``apply_statements``).
 
 Hash-partitioning note: two distinct worker_ids can land in the same
-Spark partition; run_partition therefore keys its connections by the
-row's worker_id, not by the partition — the one-connection-per-worker
-contract holds regardless of the hash layout.
+Spark partition; run_partition therefore groups rows by worker_id and
+commits each worker's rows and cursor as its own transaction, one
+after another — the one-connection-per-worker contract holds
+regardless of the hash layout.
 """
 
 from __future__ import annotations
@@ -46,10 +48,25 @@ CKPT_SETUP = (f"CREATE TABLE IF NOT EXISTS {CKPT_TABLE}("
 STATUS_RUNNING = 0   # arbiter/server.go StatusRunning
 STATUS_NORMAL = 1    # graceful shutdown (server.go:220)
 
-# single-downstream layout (apply_statements shared_db=True): all
-# workers connect to this one file; per-worker cursors live under
-# "<topic>@<worker_id>" rows of CKPT_TABLE
+# the downstream database: every worker connects to this one file;
+# per-worker cursors live under "<topic>@<worker_id>" rows of
+# CKPT_TABLE, next to the plain "<topic>" floor row
 SHARED_DB_NAME = "downstream.db"
+
+
+def _connect(db_dir: str, create: bool = True):
+    """Open the downstream database. SQLite serializes concurrent
+    writers through its file lock; the busy timeout makes a writer
+    wait for a sibling's commit instead of failing. With ``create``
+    off, a downstream that was never set up gives None instead of a
+    new empty file."""
+    import sqlite3
+    path = os.path.join(db_dir, SHARED_DB_NAME)
+    if not create and not os.path.exists(path):
+        return None
+    conn = sqlite3.connect(path)
+    conn.execute("PRAGMA busy_timeout=30000")
+    return conn
 
 
 class RetryPolicy:
@@ -136,8 +153,7 @@ def apply_statements(stmts: DataFrame, db_dir: str,
                      retry: RetryPolicy | None = None,
                      inject=None,
                      checkpoint_ts: int | None = None,
-                     topic: str = "default",
-                     shared_db: bool = False) -> None:
+                     topic: str = "default") -> None:
     """Execute the ``sql_text`` column per worker, partitioned by
     worker id.
 
@@ -147,21 +163,14 @@ def apply_statements(stmts: DataFrame, db_dir: str,
     Transient failures are retried per ``retry`` (default: the
     reference's 100x policy with a 10ms local backoff).
 
-    ``shared_db`` selects the downstream topology:
-    - False (default): each worker writes its own
-      <db_dir>/worker_<id>.db — the sharded test layout. Row placement
-      then follows routing, so the router must be STABLE per row
-      across batches (pmod(pk)-style).
-    - True: every worker is a connection to ONE database
-      (<db_dir>/downstream.db) — the reference's actual topology
-      (pkg/loader/executor.go: N workers, one MySQL). Routing only
-      decides execution order/parallelism, so causality-group worker
-      ids (which vary per batch) are safe, and sink-side UNIQUE
-      constraints span all rows. SQLite serializes the writers via
-      its file lock (busy_timeout); a real MySQL executes them
-      concurrently. Workers sharing a Spark partition apply
-      sequentially (group-by-worker first) so one partition never
-      holds two open transactions against the same file.
+    Every worker is a connection to the ONE downstream database
+    (<db_dir>/downstream.db). Routing only decides execution order and
+    parallelism, so causality-group worker ids (which vary per batch)
+    are safe, and sink-side UNIQUE constraints span all rows. SQLite
+    serializes the writers via its file lock (busy_timeout); a real
+    MySQL executes them concurrently. Workers sharing a Spark
+    partition apply sequentially (group-by-worker first) so one
+    partition never holds two open transactions against the file.
 
     ``inject``: optional callable(sql_text) raised into every execute —
     the deterministic transient-failure injector used by tests.
@@ -169,8 +178,8 @@ def apply_statements(stmts: DataFrame, db_dir: str,
     ``checkpoint_ts``: the batch watermark. When set, each worker
     REPLACEs it into the downstream checkpoint table in the SAME
     transaction as its data (arbiter/checkpoint.go Save) — the commit
-    makes rows + cursor atomic, so ``load_checkpoint`` (min over
-    workers; per-worker ``topic@wid`` rows in shared mode) is always
+    makes rows + cursor atomic, so ``load_checkpoint`` (min over the
+    per-worker ``topic@wid`` rows and the ``topic`` floor) is always
     the last FULLY-applied batch after any crash. Never regresses
     (MAX against the stored ts).
     """
@@ -186,56 +195,32 @@ def apply_statements(stmts: DataFrame, db_dir: str,
                    f"status = excluded.status")
 
     def run_partition(rows) -> None:
-        import sqlite3
-        if shared_db:
-            # one txn per worker, applied sequentially: a partition
-            # must never hold two open write txns on the same file
-            by_wid: dict = {}
-            for row in rows:
-                by_wid.setdefault(row[worker_col], []).append(row)
-            for wid, wrows in by_wid.items():
-                conn = sqlite3.connect(os.path.join(db_dir, SHARED_DB_NAME))
-                conn.execute("PRAGMA busy_timeout=30000")
-                try:
-                    # setup through the retry policy too: CREATE IF
-                    # NOT EXISTS is idempotent, and when every worker
-                    # reaches its first write simultaneously (warm
-                    # cache upstream) a sibling's minutes-long batch
-                    # txn holds the file lock far past busy_timeout —
-                    # r12 caught this as a raw "database is locked"
-                    # from the unprotected setup loop at 100M events
-                    for s in setup:
-                        _execute_with_retry(conn, s, policy, None)
-                    for row in wrows:
-                        _execute_with_retry(conn, row["sql_text"],
-                                            policy, inject)
-                    if checkpoint_ts is not None:
-                        conn.execute(ckpt_upsert,
-                                     (f"{topic}@{wid}", int(checkpoint_ts),
-                                      STATUS_RUNNING))
-                    conn.commit()
-                finally:
-                    conn.close()
-            return
-        conns: dict = {}
-        try:
-            for row in rows:
-                wid = row[worker_col]
-                conn = conns.get(wid)
-                if conn is None:
-                    path = os.path.join(db_dir, f"worker_{wid}.db")
-                    conn = sqlite3.connect(path)
-                    for s in setup:
-                        conn.execute(s)
-                    conns[wid] = conn
-                _execute_with_retry(conn, row["sql_text"], policy, inject)
-            for conn in conns.values():
+        # one txn per worker, applied sequentially: a partition must
+        # never hold two open write txns on the same file
+        by_wid: dict = {}
+        for row in rows:
+            by_wid.setdefault(row[worker_col], []).append(row)
+        for wid, wrows in by_wid.items():
+            conn = _connect(db_dir)
+            try:
+                # setup through the retry policy too: CREATE IF NOT
+                # EXISTS is idempotent, and when every worker reaches
+                # its first write simultaneously (warm cache upstream)
+                # a sibling's minutes-long batch txn holds the file
+                # lock far past busy_timeout — r12 caught this as a
+                # raw "database is locked" from the unprotected setup
+                # loop at 100M events
+                for s in setup:
+                    _execute_with_retry(conn, s, policy, None)
+                for row in wrows:
+                    _execute_with_retry(conn, row["sql_text"],
+                                        policy, inject)
                 if checkpoint_ts is not None:
                     conn.execute(ckpt_upsert,
-                                 (topic, int(checkpoint_ts), STATUS_RUNNING))
+                                 (f"{topic}@{wid}", int(checkpoint_ts),
+                                  STATUS_RUNNING))
                 conn.commit()
-        finally:
-            for conn in conns.values():
+            finally:
                 conn.close()
 
     (stmts
@@ -254,32 +239,27 @@ def apply_statements(stmts: DataFrame, db_dir: str,
 
 def save_checkpoint(db_dir: str, ts: int, topic: str = "default") -> None:
     """Advance every downstream cursor to ``ts`` (never regresses —
-    MAX against the stored value): the plain topic row per shard plus,
-    in the shared layout, every per-worker ``topic@wid`` row (the
-    apply barrier has passed, so raising idle/stale workers is
-    correct). Used by the post-apply idle-worker sweep and by the
-    streaming DDL barrier, which saves the checkpoint IMMEDIATELY
-    after a DDL executes (drainer/syncer.go:234-238 savePoint)."""
-    import sqlite3
-    for fname in sorted(os.listdir(db_dir)):
-        if not fname.endswith(".db"):
-            continue
-        conn = sqlite3.connect(os.path.join(db_dir, fname))
-        try:
-            conn.execute("PRAGMA busy_timeout=30000")
-            conn.execute(CKPT_SETUP)
-            conn.execute(
-                f"INSERT INTO {CKPT_TABLE}(topic_name, ts, status) "
-                f"VALUES (?, ?, ?) ON CONFLICT(topic_name) DO "
-                f"UPDATE SET ts = MAX(ts, excluded.ts)",
-                (topic, int(ts), STATUS_RUNNING))
-            conn.execute(
-                f"UPDATE {CKPT_TABLE} SET ts = MAX(ts, ?) "
-                f"WHERE topic_name LIKE ? || '@%'",
-                (int(ts), topic))
-            conn.commit()
-        finally:
-            conn.close()
+    MAX against the stored value): the plain ``topic`` floor row and
+    every per-worker ``topic@wid`` row (the apply barrier has passed,
+    so raising idle/stale workers is correct). Used by the post-apply
+    idle-worker sweep and by the streaming DDL barrier, which saves
+    the checkpoint IMMEDIATELY after a DDL executes
+    (drainer/syncer.go:234-238 savePoint)."""
+    conn = _connect(db_dir)
+    try:
+        conn.execute(CKPT_SETUP)
+        conn.execute(
+            f"INSERT INTO {CKPT_TABLE}(topic_name, ts, status) "
+            f"VALUES (?, ?, ?) ON CONFLICT(topic_name) DO "
+            f"UPDATE SET ts = MAX(ts, excluded.ts)",
+            (topic, int(ts), STATUS_RUNNING))
+        conn.execute(
+            f"UPDATE {CKPT_TABLE} SET ts = MAX(ts, ?) "
+            f"WHERE topic_name LIKE ? || '@%'",
+            (int(ts), topic))
+        conn.commit()
+    finally:
+        conn.close()
 
 
 def _applied_fragments_for(ddl_sql: str) -> tuple[str, ...]:
@@ -312,9 +292,10 @@ def execute_ddl(db_dir: str, ddl_sql: str,
     DMLs, then runs the DDL with its own 5x retry budget
     (pkg/loader/load.go:40-45 maxDDLRetryCount, load.go:476-500
     execDDL) and refreshes the cached table info afterwards. The DDL
-    applies to every downstream file (one in the shared layout);
-    ``catalog.evict`` makes the next statement build see the new
-    schema (executor.go:336-405).
+    runs on the downstream database — a never-set-up downstream gets
+    it too (and raises if it needs a missing table) rather than being
+    skipped; ``catalog.evict`` makes the next statement build see the
+    new schema (executor.go:336-405).
 
     ``tolerate_applied``: a crash between the DDL's commit and the
     immediate checkpoint save makes the restart re-execute it; errors
@@ -335,113 +316,93 @@ def execute_ddl(db_dir: str, ddl_sql: str,
     policy = retry if retry is not None else RetryPolicy(
         max_retries=MAX_DDL_RETRY, backoff_s=0.01,
         is_transient=is_transient)
-    for fname in sorted(os.listdir(db_dir)):
-        if not fname.endswith(".db"):
-            continue
-        conn = sqlite3.connect(os.path.join(db_dir, fname))
+    conn = _connect(db_dir)
+    try:
         try:
-            try:
-                _execute_with_retry(conn, ddl_sql, policy)
-            except sqlite3.OperationalError as e:
-                msg = str(e).lower()
-                if not any(f in msg for f in frags):
-                    raise
-            conn.commit()
-        finally:
-            conn.close()
+            _execute_with_retry(conn, ddl_sql, policy)
+        except sqlite3.OperationalError as e:
+            msg = str(e).lower()
+            if not any(f in msg for f in frags):
+                raise
+        conn.commit()
+    finally:
+        conn.close()
     if catalog is not None and table is not None:
         catalog.evict(schema, table)
 
 
-def ensure_shards(db_dir: str, num_workers: int,
-                  setup_sql: tuple[str, ...] = (),
-                  shared_db: bool = False) -> None:
-    """Create the downstream file(s) up front with ``setup_sql``
+def ensure_downstream(db_dir: str, setup_sql: tuple[str, ...] = ()) -> None:
+    """Create the downstream database up front with ``setup_sql``
     applied (idempotent CREATE IF NOT EXISTS). The streaming DDL
-    barrier needs this: a DDL arriving before any DML (CREATE TABLE
-    first in the log) must reach the downstream, and
-    execute_ddl/save_checkpoint iterate the files that exist."""
-    import sqlite3
+    barrier needs this: a DDL arriving before any DML (an ALTER first
+    in the log) must find the tables the setup declares."""
     os.makedirs(db_dir, exist_ok=True)
-    names = ([SHARED_DB_NAME] if shared_db
-             else [f"worker_{i}.db" for i in range(num_workers)])
-    for name in names:
-        conn = sqlite3.connect(os.path.join(db_dir, name))
-        try:
-            for s in setup_sql:
-                conn.execute(s)
-            conn.commit()
-        finally:
-            conn.close()
+    conn = _connect(db_dir)
+    try:
+        for s in setup_sql:
+            conn.execute(s)
+        conn.commit()
+    finally:
+        conn.close()
 
 
 def load_checkpoint(db_dir: str, topic: str = "default") -> tuple[int, int]:
-    """Restart cursor: the MIN over worker DBs of their saved ts — any
-    worker that died pre-commit holds the previous batch's ts, so the
-    min is the last batch every worker completed (arbiter Load +
-    server.go:126-136 resume-from-checkpoint). Returns (ts, status);
-    (-1, STATUS_NORMAL) when no worker has a checkpoint yet."""
+    """Restart cursor: the MIN over the per-worker ``topic@wid`` rows
+    and the ``topic`` floor — any worker that died pre-commit holds
+    the previous batch's ts, so the min is the last batch every worker
+    completed (arbiter Load + server.go:126-136 resume-from-
+    checkpoint). Returns (ts, status); (-1, STATUS_NORMAL) when there
+    is no checkpoint yet. Never creates the downstream."""
     import sqlite3
-    found = []
-    if os.path.isdir(db_dir):
-        for fname in sorted(os.listdir(db_dir)):
-            if not fname.endswith(".db"):
-                continue
-            conn = sqlite3.connect(os.path.join(db_dir, fname))
-            try:
-                rows = conn.execute(
-                    f"SELECT ts, status FROM {CKPT_TABLE} "
-                    f"WHERE topic_name = ? "
-                    f"OR topic_name LIKE ? || '@%'",
-                    (topic, topic)).fetchall()
-                found.extend((int(r[0]), int(r[1])) for r in rows)
-            except sqlite3.OperationalError:
-                pass            # worker never created the table
-            finally:
-                conn.close()
-    if not found:
+    conn = _connect(db_dir, create=False)
+    if conn is None:
         return -1, STATUS_NORMAL
-    return (min(ts for ts, _ in found),
-            min(st for _, st in found))
+    try:
+        found = conn.execute(
+            f"SELECT MIN(ts), MIN(status) FROM {CKPT_TABLE} "
+            f"WHERE topic_name = ? OR topic_name LIKE ? || '@%'",
+            (topic, topic)).fetchone()
+    except sqlite3.OperationalError:
+        found = None            # checkpoint table never created
+    finally:
+        conn.close()
+    if found is None or found[0] is None:
+        return -1, STATUS_NORMAL
+    return int(found[0]), int(found[1])
 
 
 def finalize_checkpoint(db_dir: str, topic: str = "default") -> None:
     """Graceful shutdown: mark the saved checkpoints StatusNormal
     (arbiter/server.go:218-236) so the next start knows no replay /
-    safe-mode window is needed."""
+    safe-mode window is needed. Never creates the downstream."""
     import sqlite3
-    for fname in sorted(os.listdir(db_dir)):
-        if not fname.endswith(".db"):
-            continue
-        conn = sqlite3.connect(os.path.join(db_dir, fname))
-        try:
-            conn.execute(
-                f"UPDATE {CKPT_TABLE} SET status = ? WHERE topic_name = ? "
-                f"OR topic_name LIKE ? || '@%'",
-                (STATUS_NORMAL, topic, topic))
-            conn.commit()
-        except sqlite3.OperationalError:
-            pass
-        finally:
-            conn.close()
+    conn = _connect(db_dir, create=False)
+    if conn is None:
+        return
+    try:
+        conn.execute(
+            f"UPDATE {CKPT_TABLE} SET status = ? WHERE topic_name = ? "
+            f"OR topic_name LIKE ? || '@%'",
+            (STATUS_NORMAL, topic, topic))
+        conn.commit()
+    except sqlite3.OperationalError:
+        pass                    # checkpoint table never created
+    finally:
+        conn.close()
 
 
 def read_applied(spark, db_dir: str, table: str, columns: list[str]) -> DataFrame:
-    """Union the per-worker databases back into one DataFrame (the
-    downstream state, for sync-diff-style verification)."""
-    import sqlite3
-
+    """Read one downstream table back into a DataFrame (the downstream
+    state, for sync-diff-style verification)."""
     import pandas as pd
 
-    frames = []
-    for fname in sorted(os.listdir(db_dir)):
-        if not fname.endswith(".db"):
-            continue
-        conn = sqlite3.connect(os.path.join(db_dir, fname))
-        try:
-            frames.append(pd.read_sql_query(
-                f"SELECT {', '.join(columns)} FROM {table}", conn))
-        finally:
-            conn.close()
-    merged = pd.concat(frames) if frames else pd.DataFrame(columns=columns)
-    return spark.createDataFrame(merged)
+    conn = _connect(db_dir, create=False)
+    if conn is None:
+        raise FileNotFoundError(
+            f"no downstream database {SHARED_DB_NAME} in {db_dir}")
+    try:
+        frame = pd.read_sql_query(
+            f"SELECT {', '.join(columns)} FROM {table}", conn)
+    finally:
+        conn.close()
+    return spark.createDataFrame(frame)

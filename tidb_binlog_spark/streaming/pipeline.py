@@ -170,6 +170,9 @@ class SqlBatchApplier:
                  catalog=None, cfg=None, resume_ts: int = -1,
                  relay=None, max_ddl_per_batch: int | None = None):
         from ..operators import safe_mode as sm
+        from ..sinks import jdbc
+        # DDL and checkpoints need the setup tables before any DML
+        jdbc.ensure_downstream(db_dir, setup_sql)
         self.db_dir = db_dir
         self.setup_sql = setup_sql
         self.num_workers = num_workers
@@ -308,7 +311,7 @@ class SqlBatchApplier:
             # row yields its PK key plus one key per UK
             max_edges += (2 * sum(tables[t] for t in shape_tables)
                           * (1 + len(uks)))
-        if max_edges > causality.local_cc_threshold():
+        if max_edges > causality.LOCAL_CC_MAX_EDGES:
             # the distributed CC fixpoint rescopes the session-wide
             # shuffle-partition conf: no WAL query may plan under it
             wal.join()
@@ -319,13 +322,12 @@ class SqlBatchApplier:
             stmts, txn_keys, num_workers=self.num_workers,
             txn_col="commit_ts", max_edges=max_edges)
         wal.join()
-        # shared_db: the downstream is ONE database (the reference's
-        # topology) — causality worker ids vary per batch, which is
-        # only sound when routing doesn't decide row placement
+        # every worker writes the one downstream database, so the
+        # causality worker ids, which vary per batch, decide only
+        # execution order and parallelism, never where a row lives
         jdbc.apply_statements(routed, self.db_dir, self.num_workers,
                               setup_sql=self.setup_sql,
-                              checkpoint_ts=ckpt_ts,
-                              shared_db=True)
+                              checkpoint_ts=ckpt_ts)
 
     def apply(self, batch_df: DataFrame) -> None:
         import os as _os
@@ -388,7 +390,7 @@ class SqlBatchApplier:
                 return
             # DDL events (op = 'DDL', statement text in row_json) split
             # the batch into barriers: DML below the DDL applies first,
-            # then the DDL runs on every shard with the catalog evicted
+            # then the DDL runs downstream with the catalog evicted
             # and the checkpoint saved IMMEDIATELY, then the next
             # sub-batch builds statements against the POST-DDL schema
             # (drainer/syncer.go:433-537; pkg/loader/load.go:401-496).
@@ -408,9 +410,9 @@ class SqlBatchApplier:
                 # (_apply_dml has passed the WAL barrier)
                 self._apply_dml(seg, hi - 1, meeting(lo, hi), wal)
                 if not d["should_skip"]:
-                    # sqlite shards are single-database files, so the
-                    # mysql-wire `USE db;` prefix (apply_sql) is moot —
-                    # the raw statement applies to every shard
+                    # the sqlite downstream is a single-database file,
+                    # so the mysql-wire `USE db;` prefix (apply_sql) is
+                    # moot — the raw statement applies as is
                     jdbc.execute_ddl(self.db_dir, d["ddl_sql"],
                                      catalog=catalog, table=d["tbl"])
                 elif catalog is not None:
@@ -444,7 +446,6 @@ def feed_sql_by_relay_if_needed(spark: SparkSession, relay, db_dir: str,
         return {"replayed": 0,
                 "checkpoint": jdbc.load_checkpoint(db_dir)[0]}
     ck, _status = jdbc.load_checkpoint(db_dir)
-    jdbc.ensure_shards(db_dir, num_workers, setup_sql, shared_db=True)
     pending = relay.read(spark, start_ts=ck).drop("ts_bucket").persist()
     n = pending.count()
     if n:
@@ -488,16 +489,16 @@ def run_sql_apply_stream(spark: SparkSession, source_dir: str, db_dir: str,
 
     ``sync_ddl``: rows with op = 'DDL' (statement text in row_json)
     act as barriers inside each micro-batch — DML below the DDL's
-    commit_ts applies first, the DDL executes on every shard, the
+    commit_ts applies first, the DDL executes downstream, the
     checkpoint saves immediately (syncer.go:234-238), and later DML
     builds statements against the post-DDL schema.
 
-    ``catalog``: an optional sinks.catalog.SinkCatalog over the shard
-    DBs. When wired, (a) statement width per table follows the LIVE
-    downstream schema (a mid-stream ADD COLUMN widens the very next
-    sub-batch, with non-(pk,val) columns extracted from the row
-    image), and (b) the causality keys include every sink-side UNIQUE
-    key's values, so UK-colliding txns serialize in commit order.
+    ``catalog``: an optional sinks.catalog.SinkCatalog over the
+    downstream database. When wired, (a) statement width per table
+    follows the LIVE downstream schema (a mid-stream ADD COLUMN widens
+    the very next sub-batch, with non-(pk,val) columns extracted from
+    the row image), and (b) the causality keys include every sink-side
+    UNIQUE key's values, so UK-colliding txns serialize in commit order.
 
     Worker routing is causality-group dispatch (conflict_free_
     partitions, pkg/loader/causality.go:31-99), NOT pmod(pk): a whole
@@ -543,18 +544,11 @@ def run_sql_apply_stream(spark: SparkSession, source_dir: str, db_dir: str,
         relay.mark_inconsistent()
 
     resume_ts, status = jdbc.load_checkpoint(db_dir)
-    jdbc.ensure_shards(db_dir, num_workers, setup_sql, shared_db=True)
     if resume_ts < 0 <= initial_commit_ts:
         # drainer -initial-commit-ts (drainer/config.go:240): with no
         # saved checkpoint, start replication strictly after the
         # configured tso instead of from the beginning of the log
         resume_ts = initial_commit_ts
-    # FLOOR the shared-layout cursor before the first apply: without a
-    # plain topic row, a worker that crashes pre-commit on the FIRST
-    # batch leaves no cursor at all, and load_checkpoint's min over
-    # the other workers' fresh topic@wid rows would skip the crashed
-    # worker's rows forever. MAX-upsert never lowers an existing one.
-    jdbc.save_checkpoint(db_dir, resume_ts)
     if safe_window is not None:
         window = safe_window
     elif resume_ts >= 0 and status == jdbc.STATUS_NORMAL:
@@ -569,6 +563,12 @@ def run_sql_apply_stream(spark: SparkSession, source_dir: str, db_dir: str,
                               num_workers=num_workers, window=window,
                               sync_ddl=sync_ddl, catalog=catalog,
                               cfg=cfg, resume_ts=resume_ts, relay=relay)
+    # FLOOR the cursor before the first apply: without a plain topic
+    # row, a worker that crashes pre-commit on the FIRST batch leaves
+    # no cursor at all, and load_checkpoint's min over the other
+    # workers' fresh topic@wid rows would skip the crashed worker's
+    # rows forever. MAX-upsert never lowers an existing one.
+    jdbc.save_checkpoint(db_dir, resume_ts)
 
     stream = read_change_stream(spark, source_dir,
                                 max_files_per_trigger=max_files_per_trigger)
