@@ -18,14 +18,6 @@ ALLOWED = {
     "SPARK_GRAFT_CPUS",
     # tf-idf doc-major floor; tests move it to force each scoring path
     "SPARK_GRAFT_TFIDF_DOC_MAJOR_MIN",
-    # hard-kill hooks of the crash/resume tools
-    "SPARK_GRAFT_CRASH_BEFORE_WAL",
-    "SPARK_GRAFT_CRASH_AFTER_WAL",
-    "SPARK_GRAFT_CRASH_BEFORE_FOLD",
-    "SPARK_GRAFT_CRASH_AFTER_FOLD",
-    # failure hooks around the file-dump stream's checkpoint
-    "SPARK_GRAFT_DUMP_FAIL_BEFORE_CKPT",
-    "SPARK_GRAFT_DUMP_CRASH_BEFORE_CKPT",
 }
 
 

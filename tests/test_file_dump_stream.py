@@ -128,8 +128,25 @@ def test_stream_equals_batch_dump_any_split(spark, tmp_path):
         assert status == fds.STATUS_NORMAL
 
 
+def _fail_nth_checkpoint_save(monkeypatch, nth):
+    """Make the nth checkpoint save from now on raise: a crash between
+    a batch's segment write and its checkpoint."""
+    save = fds.save_dump_checkpoint
+    calls = 0
+
+    def failing_save(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        if calls == nth:
+            raise RuntimeError(
+                "chaos: crash between segment write and checkpoint")
+        save(*args, **kwargs)
+
+    monkeypatch.setattr(fds, "save_dump_checkpoint", failing_save)
+
+
 def test_stream_crash_before_checkpoint_resumes_exactly_once(
-        spark, tmp_path):
+        spark, tmp_path, monkeypatch):
     """Kill between segment write and checkpoint, at stream level: the
     restarted query (same Spark checkpoint dir) re-delivers the failed
     micro-batch, recovery truncates the orphaned segments, and the
@@ -142,15 +159,14 @@ def test_stream_crash_before_checkpoint_resumes_exactly_once(
     _landing(spark, rows, src)
     _batch_reference(spark, rows, batch_path)
 
-    fds._CHAOS_DUMP_CALLS = 0
-    os.environ["SPARK_GRAFT_DUMP_FAIL_BEFORE_CKPT"] = "2"
-    try:
-        q, applier = fds.run_file_dump_stream(
-            spark, src, dump, ckpt, max_files_per_trigger=1)
-        with pytest.raises(Exception):
-            q.awaitTermination(180)
-    finally:
-        del os.environ["SPARK_GRAFT_DUMP_FAIL_BEFORE_CKPT"]
+    # the applier's constructor saves once, so batch 2's save is the
+    # 3rd call
+    _fail_nth_checkpoint_save(monkeypatch, 3)
+    q, applier = fds.run_file_dump_stream(
+        spark, src, dump, ckpt, max_files_per_trigger=1)
+    with pytest.raises(Exception):
+        q.awaitTermination(180)
+    monkeypatch.undo()
     # crashed mid-run: batch 2's segments exist but are NOT covered by
     # the cursor
     ck_crash, status = fds.load_dump_checkpoint(dump)
@@ -168,7 +184,8 @@ def test_stream_crash_before_checkpoint_resumes_exactly_once(
     assert _ddl_set(spark, dump) == _ddl_set(spark, batch_path)
 
 
-def test_direct_applier_crash_then_resplit_replay(spark, tmp_path):
+def test_direct_applier_crash_then_resplit_replay(spark, tmp_path,
+                                                  monkeypatch):
     """The harder recovery shape: the re-delivered data arrives in a
     DIFFERENT micro-batch split (fresh Spark checkpoint dir after a
     hard driver death). The resume filter + orphan truncation still
@@ -186,13 +203,10 @@ def test_direct_applier_crash_then_resplit_replay(spark, tmp_path):
 
     applier = fds.FileDumpApplier(dump)
     applier.apply(_frame(spark, b1), 0)
-    fds._CHAOS_DUMP_CALLS = 0
-    os.environ["SPARK_GRAFT_DUMP_FAIL_BEFORE_CKPT"] = "1"
-    try:
-        with pytest.raises(RuntimeError, match="chaos"):
-            applier.apply(_frame(spark, b2), 1)
-    finally:
-        del os.environ["SPARK_GRAFT_DUMP_FAIL_BEFORE_CKPT"]
+    _fail_nth_checkpoint_save(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="chaos"):
+        applier.apply(_frame(spark, b2), 1)
+    monkeypatch.undo()
 
     # restart with a DIFFERENT split: b2+b3 arrive as ONE batch
     applier2 = fds.FileDumpApplier(dump)

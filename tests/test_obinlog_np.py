@@ -99,6 +99,21 @@ def test_lockstep_matches_generic_varied_shapes():
     got = run_parity(payloads)
     nanrow = [r for r in got if r["pk"] == 11][0]
     assert nanrow["val"] is None
+    # columns riding the uint64 / bytes value fields (enum, blob): the
+    # generic helper gives k as bytes, the output column is a string
+    row_u = ob.encode_row([
+        ob.encode_obinlog_column(9, "bigint"),
+        ob.encode_obinlog_column(2**63 + 5, "bigint", unsigned=True),
+        ob.encode_obinlog_column(b"\x01\x02", "blob")])
+    t = ob.encode_table("db2", "t3", CI,
+                        [ob.encode_mutation(ob.INSERT, row_u)], UK)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([ob.encode_secondary_binlog(800006, [t])], pa.binary()),
+         pa.array([0], pa.int64())], ["payload", "arrival_seq"])
+    assert parse_batch(batch, ("arrival_seq",)).to_pylist() == [
+        {"arrival_seq": 0, "commit_ts": 800006, "db": "db2", "tbl": "t3",
+         "op": "I", "pk": 9, "val": float(2**63 + 5), "k": "\x01\x02",
+         "old_val": None, "old_k": None}]
 
 
 def test_lockstep_mixed_fallback_keeps_payload_order():

@@ -6,12 +6,14 @@ ordering/disorder (drainer/merge_test.go), filters
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import make_changes
 from tidb_binlog_spark.operators import (causality, compaction, filters,
-                                         ordering, pc_match, router,
+                                         graph, ordering, pc_match, router,
                                          safe_mode)
+from tools.common import shuffle_partitions_for
 
 
 def rows(df, *cols):
@@ -242,9 +244,31 @@ def test_causality_distributed_path_components(spark):
     tk = spark.createDataFrame(
         [(1, "a"), (2, "a"), (2, "b"), (3, "b"), (4, "c")],
         "txn_id long, key string")
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
     got = dict(rows(causality.causality_groups(tk, local_threshold=0),
                     "txn_id", "group_id"))
     assert got == {1: 1, 2: 1, 3: 1, 4: 4}
+    # the fixpoint's scoped shuffle sizing is undone on return
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+
+
+_CC = causality._cc_shuffle_partitions
+_PR = graph._pr_shuffle_partitions
+
+
+@pytest.mark.parametrize("recipe, n, want", [
+    # causality fixpoint and the tools' per-dir rule: rows/1M, [32, 1024]
+    (_CC, 0, 32), (_CC, 32_000_000, 32), (_CC, 32_000_001, 64),
+    (_CC, 512_000_000, 512), (_CC, 512_000_001, 1024), (_CC, 2**40, 1024),
+    (shuffle_partitions_for, 0, 32),
+    (shuffle_partitions_for, 32_000_001, 64),
+    (shuffle_partitions_for, 2**40, 1024),
+    # PageRank rounds: edges/500k, [4, 1024]
+    (_PR, 0, 4), (_PR, 2_000_000, 4), (_PR, 2_000_001, 8),
+    (_PR, 256_000_000, 512), (_PR, 256_000_001, 1024), (_PR, 2**40, 1024),
+])
+def test_shuffle_partition_recipes(recipe, n, want):
+    assert recipe(n) == want
 
 
 def test_causality_distributed_empty_and_null_inputs(spark):
@@ -380,7 +404,6 @@ def test_ddl_replay_retains_last_two_versions():
     ], retain=2)
     # schema.go:211-234: only the last two versions stay resolvable
     assert sorted(reg._versions["t"]) == [3, 4]
-    import pytest
     with pytest.raises(KeyError):
         reg.columns_at("t", 1)
 

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import pow2_partitions, scoped_shuffle_partitions
+
 # Edge-count gate at or below which components are solved on the
 # driver instead of by the distributed fixpoint loop. Rationale (the
 # autoBroadcastJoinThreshold pattern — adapt the physical strategy to
@@ -197,10 +199,7 @@ def _cc_shuffle_partitions(n_edges: int) -> int:
     rows/task, per-task scheduling overhead dominates every round and
     AQE cannot help because each localCheckpoint materializes the
     full partitioning. Numbers in SCALING.md."""
-    p = 32
-    while p < 1024 and p * 1_000_000 < n_edges:
-        p *= 2
-    return p
+    return pow2_partitions(n_edges, 1_000_000, 32, 1024)
 
 
 def _local_groups(txn_keys, edges):
@@ -236,14 +235,9 @@ def _causality_groups_on_edges(txn_keys, edges, max_iter,
     # consumers never re-execute these shuffles under the restored
     # conf. Single-driver pipelines run one foreachBatch at a time,
     # which is the context this operator executes in.
-    spark = txn_keys.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(_cc_shuffle_partitions(n_edges)))
-    try:
+    with scoped_shuffle_partitions(txn_keys.sparkSession,
+                                   _cc_shuffle_partitions(n_edges)):
         return _cc_fixpoint(edges, max_iter)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _cc_fixpoint(edges, max_iter):

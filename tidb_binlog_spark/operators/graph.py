@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tidb_binlog_spark.cache import managed_persist
+from tidb_binlog_spark.session import (pow2_partitions,
+                                       scoped_shuffle_partitions)
 
 
 def rare_feature_edges(docs: DataFrame, n: int = 4,
@@ -92,10 +94,7 @@ def _pr_shuffle_partitions(n_edges: int) -> int:
     causality-scale 10-16M -> 32 (matching its measured optimum),
     capped where block count would start to quadratic-degrade
     (guide §2.2)."""
-    p = 4
-    while p < 1024 and p * 500_000 < n_edges:
-        p *= 2
-    return p
+    return pow2_partitions(n_edges, 500_000, 4, 1024)
 
 
 def pagerank(edges: DataFrame, iters: int = 3,
@@ -119,11 +118,8 @@ def pagerank(edges: DataFrame, iters: int = 3,
     """
     edges = managed_persist(edges.select("src", "dst"))
     n_edges = edges.count()   # materializes the persist once, up front
-    spark = edges.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(_pr_shuffle_partitions(n_edges)))
-    try:
+    with scoped_shuffle_partitions(edges.sparkSession,
+                                   _pr_shuffle_partitions(n_edges)):
         deg = managed_persist(
             edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")))
         base = (100 - damping_pct) * 10_000
@@ -151,7 +147,5 @@ def pagerank(edges: DataFrame, iters: int = 3,
                                     "DIV 100 AS BIGINT)")
                              .alias("rank_micro"))
                      .localCheckpoint())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return (ranks.join(deg, ranks["node"] == deg["src"])
             .select("node", "rank_micro", "outdeg"))

@@ -7,6 +7,7 @@ the few Pandas-UDF paths). Nothing here is local-mode-only.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -50,6 +51,29 @@ def get_spark(app_name: str = "tidb_binlog_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def pow2_partitions(n: int, per_part: int, lo: int, hi: int) -> int:
+    """Shuffle partitions sized to an input of ``n`` rows: the next
+    power of two of ``n / per_part``, starting at ``lo`` and capped at
+    ``hi``."""
+    p = lo
+    while p < hi and p * per_part < n:
+        p *= 2
+    return p
+
+
+@contextlib.contextmanager
+def scoped_shuffle_partitions(spark: SparkSession, n: int):
+    """Set ``spark.sql.shuffle.partitions`` to ``n`` for the block and
+    restore the previous value after it. The conf is session-wide:
+    only what is planned and run inside the block sees ``n``."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):

@@ -4,9 +4,8 @@ treatment applied to the arbiter-side translate, VERDICT r13 item 6,
 guide §4.2).
 
 The per-payload reference semantics live in
-obinlog_pb.decode_secondary_binlog (and its cursor twin
-_secondary_rows_fast); this module computes the SAME surface rows for
-a whole Arrow batch at numpy speed:
+obinlog_pb.decode_secondary_binlog; this module computes the SAME
+surface rows for a whole Arrow batch at numpy speed:
 
 - the payload column of the record batch is already ONE contiguous
   data buffer plus an offsets array (guide §4.2), so the "concat all
@@ -24,10 +23,13 @@ a whole Arrow batch at numpy speed:
   per-row tuples, no pandas object rows;
 - anything the walk does not recognize (DDL binlogs, missing/extra
   fields, null pks, non-(int,double,string) column shapes, varint
-  overflows) marks THAT PAYLOAD bad; bad payloads re-decode through
-  the retained per-payload path, which stays the parity oracle
-  (tests/test_obinlog_pb.py pins batch == loop on adversarial
-  inputs), exactly as kvcodec_np does for the KV decode.
+  overflows) marks THAT PAYLOAD bad; bad payloads re-decode one by
+  one through decode_secondary_binlog, which stays the parity oracle
+  (tests/test_obinlog_np.py pins batch == loop on adversarial
+  inputs), exactly as kvcodec_np does for the KV decode. The walk
+  rejected none of the encoder's payloads for the sf0.01 and sf0.1
+  change streams, so the generic parser runs for DDL and foreign
+  shapes only.
 
 NaN parity note: the mapInPandas path this replaces built pandas
 object rows, and Spark's pandas->Arrow conversion turns float NaN
@@ -37,8 +39,6 @@ bit-identical.
 """
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 import pyarrow as pa
@@ -131,19 +131,12 @@ def _parse_row_regions(buf, rs, re_):
 
 
 def _fallback_rows(col, pay_idx):
-    """Per-payload decode of the payloads the lockstep walk rejected:
-    the cursor fast path with the fully generic parser behind it —
-    byte-for-byte the pre-r14 behavior, including its exceptions."""
+    """Per-payload decode of the payloads the lockstep walk rejected,
+    through the fully generic parser — including its exceptions."""
     from . import obinlog_pb as ob
     rows: list = []
     for i in pay_idx:
         raw = bytes(col[int(i)].as_py())
-        try:
-            ob._secondary_rows_fast(raw, (int(i),), rows)
-            continue
-        except (KeyError, ValueError, IndexError, UnicodeDecodeError,
-                struct.error):
-            pass
         b = ob.decode_secondary_binlog(raw)
         for t in b["tables"]:
             names = [c["name"] for c in t["column_info"]]

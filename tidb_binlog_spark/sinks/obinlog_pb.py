@@ -159,7 +159,7 @@ def encode_secondary_binlog(commit_ts: int, tables: list[bytes] = (),
 
 def decode_secondary_binlog(buf: bytes) -> dict:
     f = parse_message(buf)
-    out = {"type": f.get(1, [0])[0], "commit_ts": _signed64(f[2][0]),
+    out = {"type": f.get(1, [0])[0], "commit_ts": _signed64(f.get(2, [0])[0]),
            "tables": []}
     if out["type"] == DDL:
         dd = parse_message(f[4][0])
@@ -344,188 +344,6 @@ def secondary_binlog_payloads(changes, n_buckets: int | None = None,
                                   + carry_schema))
 
 
-_OP_OF_MTP = {INSERT: "I", UPDATE: "U", DELETE: "D"}
-
-
-def _obinlog_column_fast(buf: bytes):
-    """decode_obinlog_column without the parse_message dict: collect
-    the Column fields with a direct cursor, then apply the IDENTICAL
-    field-priority chain (is_null > int64 > uint64 > double > bytes >
-    string). Raises on shapes the walk doesn't recognize — callers
-    fall back to the generic parser for that payload."""
-    from .pbcodec import _read_uvarint
-    pos, n = 0, len(buf)
-    f1 = f2 = f3 = f4 = None
-    f5 = f6 = None
-    while pos < n:
-        key, pos = _read_uvarint(buf, pos)
-        f, wire = key >> 3, key & 7
-        if wire == 0:
-            v, pos = _read_uvarint(buf, pos)
-            if f == 1:
-                f1 = v
-            elif f == 2:
-                f2 = v
-            elif f == 3:
-                f3 = v
-        elif wire == 1:
-            v = int.from_bytes(buf[pos:pos + 8], "little")
-            pos += 8
-            if f == 4:
-                f4 = v
-        elif wire == 2:
-            ln, pos = _read_uvarint(buf, pos)
-            blob = buf[pos:pos + ln]
-            pos += ln
-            if f == 5:
-                f5 = blob
-            elif f == 6:
-                f6 = blob
-        else:
-            raise ValueError(f"wire {wire}")
-    if f1:
-        return None
-    if f2 is not None:
-        return _signed64(f2)
-    if f3 is not None:
-        return f3
-    if f4 is not None:
-        return struct.unpack("<d", struct.pack("<Q", f4))[0]
-    if f5 is not None:
-        return bytes(f5)
-    if f6 is not None:
-        return f6.decode()
-    return None
-
-
-def _secondary_rows_fast(payload: bytes, pre: tuple, rows: list) -> None:
-    """Shape-specialized unmarshal of one secondary Binlog into
-    parse_secondary_binlog_stream's row tuples — the same walk
-    decode_secondary_binlog performs, but with direct varint cursors
-    instead of per-message field dicts (the generic parse allocates a
-    dict + lists for EVERY nested message: Binlog, DMLData, Table,
-    3 ColumnInfos, each Mutation, each Row, each Column, each Key —
-    ~12 parse_message calls per single-row transaction; r14, guide §4,
-    the pbcodec._dml_rows_fast treatment). Raises on any shape it
-    doesn't recognize — the caller falls back to the generic parser
-    for THAT payload (parity pinned by
-    tests/test_obinlog_pb.py::test_parse_stream_fast_matches_generic).
-    Rows stage in a local list and extend onto ``rows`` only after the
-    whole payload parses, so a mid-payload raise leaves ``rows``
-    untouched for the fallback re-parse."""
-    from .pbcodec import _read_uvarint
-    pos, n = 0, len(payload)
-    tp = 0
-    ct = None
-    dml = None
-    while pos < n:
-        key, pos = _read_uvarint(payload, pos)
-        f, wire = key >> 3, key & 7
-        if wire == 0:
-            v, pos = _read_uvarint(payload, pos)
-            if f == 1:
-                tp = v
-            elif f == 2:
-                ct = _signed64(v)
-        elif wire == 2:
-            ln, pos = _read_uvarint(payload, pos)
-            if f == 3:
-                dml = payload[pos:pos + ln]
-            pos += ln
-        else:
-            raise ValueError(f"wire {wire}")
-    if tp == DDL or dml is None:
-        return
-    staged: list = []
-    pos, n = 0, len(dml)
-    while pos < n:
-        key, pos = _read_uvarint(dml, pos)
-        if key != (1 << 3) | 2:
-            raise ValueError("unexpected DMLData field")
-        tln, pos = _read_uvarint(dml, pos)
-        traw = dml[pos:pos + tln]
-        pos += tln
-        # Table: 1 schema, 2 table, 3 repeated ColumnInfo,
-        # 4 repeated Mutation, 5 repeated Key (skipped: unused)
-        tpos, tn = 0, len(traw)
-        schema = table = None
-        names: list = []
-        muts: list = []
-        while tpos < tn:
-            tkey, tpos = _read_uvarint(traw, tpos)
-            tf, twire = tkey >> 3, tkey & 7
-            if twire != 2:
-                raise ValueError(f"wire {twire}")
-            ln, tpos = _read_uvarint(traw, tpos)
-            blob = traw[tpos:tpos + ln]
-            tpos += ln
-            if tf == 1:
-                schema = blob.decode()
-            elif tf == 2:
-                table = blob.decode()
-            elif tf == 3:
-                # ColumnInfo: 1 name (2 mysql_type / 3 is_pk unused)
-                cpos, cn = 0, len(blob)
-                name = None
-                while cpos < cn:
-                    ckey, cpos = _read_uvarint(blob, cpos)
-                    cf, cwire = ckey >> 3, ckey & 7
-                    if cwire == 0:
-                        _, cpos = _read_uvarint(blob, cpos)
-                        continue
-                    if cwire != 2:
-                        raise ValueError(f"wire {cwire}")
-                    cln, cpos = _read_uvarint(blob, cpos)
-                    if cf == 1:
-                        name = blob[cpos:cpos + cln].decode()
-                    cpos += cln
-                names.append(name)
-            elif tf == 4:
-                muts.append(blob)
-        for m in muts:
-            # TableMutation: 1 type, 2 row, 3 change_row
-            mpos, mn = 0, len(m)
-            mtp = 0
-            row_raw = change_raw = None
-            while mpos < mn:
-                mkey, mpos = _read_uvarint(m, mpos)
-                mf, mwire = mkey >> 3, mkey & 7
-                if mwire == 0:
-                    v, mpos = _read_uvarint(m, mpos)
-                    if mf == 1:
-                        mtp = v
-                elif mwire == 2:
-                    ln, mpos = _read_uvarint(m, mpos)
-                    if mf == 2:
-                        row_raw = m[mpos:mpos + ln]
-                    elif mf == 3:
-                        change_raw = m[mpos:mpos + ln]
-                    mpos += ln
-                else:
-                    raise ValueError(f"wire {mwire}")
-
-            def _row_cols(raw):
-                # Row: repeated 1 Column
-                cols = []
-                rpos, rn = 0, len(raw)
-                while rpos < rn:
-                    rkey, rpos = _read_uvarint(raw, rpos)
-                    if rkey != (1 << 3) | 2:
-                        raise ValueError("unexpected Row field")
-                    cln, rpos = _read_uvarint(raw, rpos)
-                    cols.append(_obinlog_column_fast(raw[rpos:rpos + cln]))
-                    rpos += cln
-                return cols
-
-            vals = dict(zip(names, _row_cols(row_raw)))
-            old = dict(zip(names, _row_cols(change_raw))) \
-                if change_raw is not None else {}
-            staged.append((*pre, ct, schema, table, _OP_OF_MTP[mtp],
-                           vals["pk"], vals["val"], vals["k"],
-                           old.get("val"), old.get("k")))
-    rows.extend(staged)
-
-
 def parse_secondary_binlog_stream(payloads,
                                   carry: tuple[str, ...] = ()
                                   ) -> "DataFrame":  # noqa: F821
@@ -538,9 +356,9 @@ def parse_secondary_binlog_stream(payloads,
     guide §4.2) over ``mapInArrow`` — the payload column's contiguous
     Arrow buffer is parsed without materializing per-payload bytes
     objects or per-row tuples; payloads the lockstep walk rejects
-    (DDL, unusual column shapes, corrupt framing) re-decode through
-    the retained per-payload cursor/generic path, the parity oracle
-    (tests/test_obinlog_pb.py, tests/test_obinlog_np.py)."""
+    (DDL, unusual column shapes, corrupt framing) re-decode one by
+    one through decode_secondary_binlog, the parity oracle
+    (tests/test_obinlog_np.py)."""
     def decode(batches):
         from .obinlog_np import parse_batch
         for batch in batches:

@@ -139,9 +139,6 @@ def mark_dump_graceful(path: str) -> None:
     save_dump_checkpoint(path, ck, STATUS_NORMAL)
 
 
-_CHAOS_DUMP_CALLS = 0
-
-
 class FileDumpApplier:
     """The foreachBatch body of :func:`run_file_dump_stream`, factored
     out (exactly like pipeline.SqlBatchApplier) so tests and the
@@ -199,17 +196,6 @@ class FileDumpApplier:
             pbcodec.write_pb_segments(
                 kafka.with_row_image(dml), self.path,
                 suffix=f"-b{batch_id}", ddls=ddl)
-
-            global _CHAOS_DUMP_CALLS
-            _CHAOS_DUMP_CALLS += 1
-            if os.environ.get("SPARK_GRAFT_DUMP_FAIL_BEFORE_CKPT") \
-                    == str(_CHAOS_DUMP_CALLS):
-                raise RuntimeError(
-                    "chaos: crash between segment write and checkpoint")
-            if os.environ.get("SPARK_GRAFT_DUMP_CRASH_BEFORE_CKPT") \
-                    == str(_CHAOS_DUMP_CALLS):
-                os._exit(137)   # hard driver death for the campaign
-
             self.resume_ts = int(mx)
             save_dump_checkpoint(self.path, self.resume_ts,
                                  STATUS_RUNNING)

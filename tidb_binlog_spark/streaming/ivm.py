@@ -65,9 +65,6 @@ from ..operators.incremental_agg import (coherent_changelog,
                                          top_values_from_multiset,
                                          value_multiset)
 
-# chaos apply_batch-call counter (see apply_batch's kill points)
-_CHAOS_BATCH_CALLS = 0
-
 
 def classify_with_cursor(spark: SparkSession, batch_df: DataFrame,
                          applied_max: dict) -> DataFrame:
@@ -186,23 +183,6 @@ class _StreamView:
 
     # -- one micro-batch ----------------------------------------------------
     def apply_batch(self, batch_df: DataFrame, batch_id: int = 0) -> None:
-        # chaos kill points (tools/stream_kill_resume.py, VERDICT r12
-        # item 5): hard driver death (os._exit skips every finally/
-        # atexit) at the Nth apply_batch call in this process —
-        # BEFORE_FOLD dies between micro-batches (previous batch's
-        # version + checkpoint fully committed, this one touched
-        # nothing); AFTER_FOLD dies INSIDE one, after every
-        # version-N+1 directory (state/aux/pkstate/pending) is written
-        # but before the atomic view checkpoint moves — the torn-
-        # version window the overwrite-idempotent fold must absorb on
-        # replay. Env-gated: zero cost in production.
-        _cb = os.environ.get("SPARK_GRAFT_CRASH_BEFORE_FOLD")
-        _ca = os.environ.get("SPARK_GRAFT_CRASH_AFTER_FOLD")
-        if _cb or _ca:
-            global _CHAOS_BATCH_CALLS
-            _CHAOS_BATCH_CALLS += 1
-            if _cb and _CHAOS_BATCH_CALLS >= int(_cb):
-                os._exit(137)
         ck = self._checkpoint()
         # exactly-once under crash replay: the fold is ADDITIVE, so a
         # replayed micro-batch must be a no-op. Spark re-delivers a
@@ -272,8 +252,6 @@ class _StreamView:
             self._fold(self._state(), emit, new_version)
             park.write.mode("overwrite").parquet(
                 self._vdir("pending", new_version))
-            if _ca and _CHAOS_BATCH_CALLS >= int(_ca):
-                os._exit(137)       # torn window: dirs v+1, ckpt v
 
             stats = dict(ck.get("audit", {}))
             for k, v in dead_counts.items():

@@ -104,9 +104,6 @@ def run_apply_stream(spark: SparkSession, source_dir: str, table_root: str,
     return writer.start()
 
 
-_CHAOS_APPLY_CALLS = 0   # chaos kill hooks (env-gated, see apply())
-
-
 class _WalWrite:
     """One micro-batch's relay WAL write, run on a pyspark
     InheritableThread so the batch's job group and local properties
@@ -330,34 +327,14 @@ class SqlBatchApplier:
                               checkpoint_ts=ckpt_ts)
 
     def apply(self, batch_df: DataFrame) -> None:
-        import os as _os
-
         # persist the RAW batch first: the relay WAL and the filtered
         # main path both read it (one source scan, not two)
         batch_df = batch_df.persist()
-        # chaos kill points (tools/stream_kill_resume.py): hard driver
-        # death at the Nth apply() call in this process — BEFORE_WAL
-        # dies between micro-batches (previous batch fully committed,
-        # this one nowhere); AFTER_WAL dies inside one (WAL written,
-        # nothing applied, no checkpoint moved). Call-count, not a ts
-        # threshold: multi-source interleave puts high commit_ts into
-        # early batches, so a ts threshold can fire before anything
-        # committed. Env-gated: zero cost in production.
-        _cb = _os.environ.get("SPARK_GRAFT_CRASH_BEFORE_WAL")
-        _ca = _os.environ.get("SPARK_GRAFT_CRASH_AFTER_WAL")
-        if _cb or _ca:
-            global _CHAOS_APPLY_CALLS
-            _CHAOS_APPLY_CALLS += 1
-            if _cb and _CHAOS_APPLY_CALLS >= int(_cb):
-                _os._exit(137)
         # WAL in the background; the barrier (wal.join) precedes every
         # downstream side effect, and the finally below joins it on
         # every exit path before the cached batch is released
         wal = _WalWrite(self.relay, batch_df)
         try:
-            if _ca and _CHAOS_APPLY_CALLS >= int(_ca):
-                wal.join()
-                _os._exit(137)
             self._apply_gated(batch_df, wal)
         finally:
             wal.join()

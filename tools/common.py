@@ -4,6 +4,8 @@ tools/stream_scale_check.py — and could drift)."""
 
 from __future__ import annotations
 
+from tidb_binlog_spark.session import pow2_partitions
+
 
 def shuffle_partitions_for(rows: int) -> int:
     """Deployment-sizing rule (VERDICT r10 item 7): shuffle partitions
@@ -14,7 +16,4 @@ def shuffle_partitions_for(rows: int) -> int:
     AQE initialPartitionNum was measured and REJECTED (costs
     multi-stage rows up to 3x), so the sizing is applied per scale
     dir — exactly what a deployment sizes per job."""
-    p = 32
-    while p < 1024 and p * 1_000_000 < rows:
-        p *= 2
-    return p
+    return pow2_partitions(rows, 1_000_000, 32, 1024)

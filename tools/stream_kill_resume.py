@@ -6,11 +6,11 @@ hard-kills (os._exit(137), the SIGKILL analog that skips every
 finally/atexit) the streaming DRIVER at two points and proves the
 resumed state equals the batch recompute:
 
-  phase 1  BETWEEN micro-batches — SPARK_GRAFT_CRASH_BEFORE_WAL: the
+  phase 1  BETWEEN micro-batches (kill ``before:k``): the
            previous batch is fully committed (rows + downstream
            checkpoint, sinks/jdbc.CKPT_TABLE), the next one touched
            nothing, not even the relay WAL;
-  phase 2  INSIDE a micro-batch — SPARK_GRAFT_CRASH_AFTER_WAL: the
+  phase 2  INSIDE a micro-batch (kill ``after:k``): the
            batch is in the relay WAL but nothing is applied and no
            checkpoint moved (the drainer's crash-with-WAL window,
            drainer/relay.go); phase 2's own start first REPLAYS
@@ -18,6 +18,10 @@ resumed state equals the batch recompute:
            (feed_sql_by_relay_if_needed, relay.go feedByRelayLogIfNeed);
   phase 3  clean restart -> runs to completion, graceful
            mark_consistent.
+
+The child process installs each kill itself (``_install_kill``) by
+wrapping engine methods before its stream starts; the engine has no
+crash hooks of its own.
 
 Every restart uses a FRESH Spark checkpoint dir: recovery must come
 from the DOWNSTREAM checkpoint table + relay feed alone (reference
@@ -66,9 +70,59 @@ STREAM_COLS = ["arrival_seq", "source_id", "commit_ts", "start_ts",
                "val", "row_json"]
 
 
-def _child(work: str, phase: int) -> int:
+def _install_kill(stream: str, kill: str) -> None:
+    """Hard-kill this driver with os._exit(137) at batch call k of
+    this process. ``kill`` is ``before:k`` (on entering the call) or
+    ``after:k`` (inside it: sql right after its relay WAL write, which
+    every downstream write waits for; ivm/scd2 once every v+1 dir is
+    written, before the view checkpoint leaves v). Calls are counted,
+    not commit_ts thresholds: multi-source interleave puts high
+    commit_ts into early batches, so a ts threshold can fire before
+    anything committed."""
+    from tidb_binlog_spark.sinks.relay import RelayLog
+    from tidb_binlog_spark.streaming.ivm import _StreamView
+    from tidb_binlog_spark.streaming.pipeline import SqlBatchApplier
+
+    when, k = kill.split(":")
+    k = int(k)
+    calls = 0
+    cls, name = ((SqlBatchApplier, "apply") if stream == "sql"
+                 else (_StreamView, "apply_batch"))
+    batch = getattr(cls, name)
+
+    def counted(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        if when == "before" and calls >= k:
+            os._exit(137)
+        return batch(*args, **kwargs)
+
+    setattr(cls, name, counted)
+    if when != "after":
+        return
+    if stream == "sql":
+        append = RelayLog.append
+
+        def append_then_die(self, df):
+            append(self, df)
+            if calls >= k:
+                os._exit(137)
+
+        RelayLog.append = append_then_die
+    else:
+        save = _StreamView._save_checkpoint
+
+        def die_before_save(self, ck):
+            if calls >= k:
+                os._exit(137)
+            save(self, ck)
+
+        _StreamView._save_checkpoint = die_before_save
+
+
+def _child(work: str, phase: int, kill: str | None) -> int:
     """one stream attempt in THIS process (invoked as a subprocess so
-    the kill hooks can take the whole driver down)."""
+    the kill can take the whole driver down)."""
     from pyspark.sql import functions as F
 
     from tidb_binlog_spark.operators import safe_mode as sm
@@ -87,6 +141,8 @@ def _child(work: str, phase: int) -> int:
                           "spark.cleaner.periodicGC.interval": "45s"})
     spark.conf.set("spark.sql.shuffle.partitions",
                    str(shuffle_partitions_for(meta["n_events"])))
+    if kill:
+        _install_kill(stream, kill)
     if stream == "ivm":
         q = run_ivm_stream(
             spark, os.path.join(work, "src"),
@@ -122,7 +178,8 @@ def _child(work: str, phase: int) -> int:
 
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1].startswith("--child"):
-        sys.exit(_child(sys.argv[2], int(sys.argv[3])))
+        sys.exit(_child(sys.argv[2], int(sys.argv[3]),
+                        sys.argv[4] if len(sys.argv) > 4 else None))
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
@@ -187,16 +244,15 @@ def main() -> None:
                        "sources": sources, "stream": stream,
                        "files_per_segment": files_per_segment}, fh)
 
-        def run_phase(phase: int, env_extra: dict) -> dict:
+        def run_phase(phase: int, kill: str | None = None) -> dict:
             env = dict(os.environ)
             env["SPARK_DRIVER_MEM"] = os.environ.get(
                 "SPARK_DRIVER_MEM", "24g")
-            env.update(env_extra)
             t0 = time.time()
             rc = subprocess.call(
                 [sys.executable, os.path.abspath(__file__),
-                 "--child", work, str(phase)], env=env,
-                cwd=repo)
+                 "--child", work, str(phase), *([kill] if kill else [])],
+                env=env, cwd=repo)
             rec = {"rc": rc, "sec": round(time.time() - t0, 2)}
             if stream == "sql":
                 ck, status = jdbc.load_checkpoint(os.path.join(work, "db"))
@@ -219,12 +275,12 @@ def main() -> None:
             # r11 1000x table on a host where stream_scale_check's
             # own sf100 landing OOMs.
             # No kills; equality still gates below.
-            out["phase3_clean"] = run_phase(3, {})
+            out["phase3_clean"] = run_phase(3)
             out["events_per_s_clean"] = round(
                 n / max(out["phase3_clean"]["sec"], 1e-6))
             out["kills_effective"] = out["phase3_clean"]["rc"] == 0
         else:
-            # kill thresholds are apply()-call indices: phase 1 dies
+            # kill thresholds are batch-call indices: phase 1 dies
             # entering its (~30%)th batch with the previous ones fully
             # committed; phase 2 replays the crashed window (call #1)
             # then dies inside a later batch — after the relay WAL
@@ -233,18 +289,10 @@ def main() -> None:
             # torn-version window).
             k1 = max(2, n_segments * 3 // 10)
             k2 = max(3, n_segments * 4 // 10)
-            env_before = ("SPARK_GRAFT_CRASH_BEFORE_WAL"
-                          if stream == "sql"
-                          else "SPARK_GRAFT_CRASH_BEFORE_FOLD")
-            env_after = ("SPARK_GRAFT_CRASH_AFTER_WAL"
-                         if stream == "sql"
-                         else "SPARK_GRAFT_CRASH_AFTER_FOLD")
             out["kill_batch_indices"] = {"phase1": k1, "phase2": k2}
-            out["phase1_kill_between"] = run_phase(
-                1, {env_before: str(k1)})
-            out["phase2_kill_inside"] = run_phase(
-                2, {env_after: str(k2)})
-            out["phase3_clean"] = run_phase(3, {})
+            out["phase1_kill_between"] = run_phase(1, f"before:{k1}")
+            out["phase2_kill_inside"] = run_phase(2, f"after:{k2}")
+            out["phase3_clean"] = run_phase(3)
             out["kills_effective"] = (
                 out["phase1_kill_between"]["rc"] == 137
                 and out["phase2_kill_inside"]["rc"] == 137
