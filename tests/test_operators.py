@@ -465,6 +465,24 @@ def _wide_rows(spark, rows):
     return spark.createDataFrame(full, schema)
 
 
+def test_compact_last_image_picks_the_rewritten_update_r_half(spark):
+    """safe_mode_rewrite turns each U into D (sub_seq 0) and R
+    (sub_seq 1) with the same (commit_ts, seq, arrival_seq): the last
+    image must be the R half, for every key — in the window compaction
+    and in the batch path's merge alike."""
+    from tidb_binlog_spark.operators import safe_mode
+    ch = safe_mode.safe_mode_rewrite(make_changes(
+        spark, [(i, "s0", 10 + i, "U", i, 0, float(i)) for i in range(40)]))
+    # odd keys meet their R half first, so no input order can stand in
+    # for sub_seq
+    ch = ch.orderBy("pk", F.when(F.col("pk") % 2 == 1, -F.col("sub_seq"))
+                           .otherwise(F.col("sub_seq"))).coalesce(1)
+    for got in (compaction.compact_last_image(ch),
+                compaction.merge_by_pk(ch, ("pk", "val"))):
+        assert sorted((r["pk"], r["op"]) for r in got.collect()) == [
+            (i, "R") for i in range(40)]
+
+
 def test_compact_wide_first_old_last_new(spark):
     from tidb_binlog_spark.operators import compaction
     ch = _wide_rows(spark, [

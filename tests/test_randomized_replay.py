@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from tests.conftest import make_changes
 from tidb_binlog_spark.operators import compaction, ordering
 from tidb_binlog_spark.plans.pipeline import ReplicationConfig, build_pipeline
@@ -167,3 +169,138 @@ def test_random_bloom_membership_never_false_negative(spark):
             assert r["seen_exact"] == (t in seen_set)
             assert r["false_positive"] == (
                 r["maybe_seen"] and not r["seen_exact"])
+
+
+# -- both apply paths against the single path's statements -------------
+
+_PATH_SETUP = (
+    # a: PK-only, so the SQL applier takes the batch path
+    "CREATE TABLE IF NOT EXISTS a (pk INTEGER PRIMARY KEY, val REAL, s TEXT)",
+    # b: a sink UNIQUE key, so it keeps the single, causality-routed path
+    "CREATE TABLE IF NOT EXISTS b (pk INTEGER PRIMARY KEY, val REAL, k TEXT)",
+    "CREATE UNIQUE INDEX IF NOT EXISTS uk_bk ON b(k)",
+)
+
+
+def _model_step(state, tbl, pk, op, image, safe):
+    """One event as the single path executes it: safe mode applies
+    I as REPLACE and U as DELETE + REPLACE; strict mode applies INSERT
+    (generated only for a missing key), UPDATE (a missing row stays
+    missing) and DELETE."""
+    rows = state[tbl]
+    if op == "D":
+        rows.pop(pk, None)
+    elif safe or op == "I" or pk in rows:
+        rows[pk] = image
+
+
+def _image(tbl, pk, val, s):
+    return (val, s) if tbl == "a" else (val, f"k{pk}")
+
+
+def _path_rows(spark, events):
+    import json
+    full = []
+    for arrival, cts, tbl, pk, op, val, s in events:
+        rj = json.dumps({"s": s} if s is not None else {}) \
+            if tbl == "a" else json.dumps({"k": f"k{pk}"})
+        full.append((arrival, "s0", cts, cts - 1, op, "db0", tbl, pk, 0, 1,
+                     val, rj))
+    from tidb_binlog_spark.streaming.pipeline import CHANGE_SCHEMA
+    return spark.createDataFrame(full, CHANGE_SCHEMA)
+
+
+def _downstream(db_dir):
+    import os
+    import sqlite3
+
+    from tidb_binlog_spark.sinks import jdbc
+    conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
+    try:
+        return {t: {pk: (v, x) for pk, v, x in conn.execute(
+                    f"SELECT pk, val, {c} FROM {t}")}
+                for t, c in (("a", "s"), ("b", "k"))}
+    finally:
+        conn.close()
+
+
+def _catalog(db_dir):
+    import os
+    import sqlite3
+
+    from tidb_binlog_spark.sinks import catalog as cat_mod
+    from tidb_binlog_spark.sinks import jdbc
+
+    def fetch(schema, table):
+        conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
+        try:
+            return cat_mod.fetch_table_info_sqlite(conn, schema, table)
+        finally:
+            conn.close()
+    return cat_mod.SinkCatalog(fetch)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2, 3])
+def test_apply_paths_match_single_path_model(spark, tmp_path, monkeypatch,
+                                             seed):
+    """Seeded property test of the SQL applier's two paths. A random
+    initial downstream, random per-key I/U/D histories (D->I, U on a
+    missing row, I on a live row in safe mode) over a PK-only table
+    (batch path) next to a UK table (single path), cut into random
+    micro-batches, safe mode on for even seeds and off for odd ones.
+    The downstream must equal a driver-side model that executes the
+    single path's statements one by one; in strict mode an INSERT on a
+    live key must still raise. The batch path's chunk size is drawn
+    too, so a key's DELETE and INSERT can share a chunk of several."""
+    import functools
+    import os
+    import sqlite3
+
+    from tidb_binlog_spark.operators.safe_mode import SafeModeWindow
+    from tidb_binlog_spark.sinks import jdbc, sqlgen
+    from tidb_binlog_spark.streaming.pipeline import SqlBatchApplier
+
+    rng = random.Random(5150 + seed)
+    safe = seed % 2 == 0
+    monkeypatch.setattr(sqlgen, "batch_statements", functools.partial(
+        sqlgen.batch_statements, batch_size=rng.choice([2, 3, 128])))
+    db_dir = str(tmp_path / "db")
+    jdbc.ensure_downstream(db_dir, _PATH_SETUP)
+    state = {"a": {}, "b": {}}
+    conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
+    for tbl in ("a", "b"):
+        for pk in rng.sample(range(10), 4):
+            img = _image(tbl, pk, round(rng.uniform(0, 9), 1), f"i{pk}")
+            conn.execute(f"INSERT INTO {tbl} VALUES (?, ?, ?)", (pk, *img))
+            state[tbl][pk] = img
+    conn.commit()
+    conn.close()
+
+    events, cts = [], 100
+    for i in range(60):
+        tbl, pk = rng.choice("ab"), rng.randrange(10)
+        op = rng.choice("IUD")
+        if op == "I" and pk in state[tbl] and not safe:
+            op = rng.choice("UD")       # strict: the duplicate is below
+        val = None if rng.random() < 0.1 else round(rng.uniform(0, 99), 2)
+        s = rng.choice([None, f"v{i}", f"it's {i}"])
+        cts += rng.randint(1, 3)
+        events.append((i, cts, tbl, pk, op, val, s))
+        _model_step(state, tbl, pk, op, _image(tbl, pk, val, s), safe)
+
+    window = SafeModeWindow(configured=True) if safe \
+        else SafeModeWindow(duration_s=0.0)
+    applier = SqlBatchApplier(db_dir, setup_sql=_PATH_SETUP, num_workers=3,
+                              window=window, catalog=_catalog(db_dir))
+    cuts = sorted(rng.sample(range(1, len(events)), rng.randint(0, 3)))
+    for lo, hi in zip([0, *cuts], [*cuts, len(events)]):
+        applier.apply(_path_rows(spark, events[lo:hi]))
+    assert _downstream(db_dir) == state, f"seed {seed} (safe={safe})"
+    assert jdbc.load_checkpoint(db_dir)[0] == cts, f"seed {seed}"
+
+    if not safe:
+        live = sorted(state["a"])
+        assert live, f"seed {seed}: no live batch-path key to duplicate"
+        dup = [(100, cts + 1, "a", rng.choice(live), "I", 1.0, None)]
+        with pytest.raises(Exception, match="(?i)unique|integrity"):
+            applier.apply(_path_rows(spark, dup))

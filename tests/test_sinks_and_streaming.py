@@ -155,6 +155,58 @@ def test_sql_generation_escapes_strings_and_identifiers(spark):
                    "VALUES (1, 'it''s a \\\\ test')")
 
 
+def test_bulk_delete_replace_renders_null_and_quoted_strings(spark):
+    """A NULL value renders as NULL (the tuple keeps its arity) and a
+    string value is quoted with its quote and backslash escaped."""
+    comp = spark.createDataFrame(
+        [("d", "t", "R", 7, None, "it's"), ("d", "t", "R", 8, 1.5, None)],
+        "db string, tbl string, op string, pk long, val double, s string")
+    got = sqlgen.bulk_delete_replace(
+        comp, value_cols=("pk", "val", "s")).collect()
+    assert [(r["values_list"], r["n_rows"]) for r in got] == [
+        ("(7, NULL, 'it''s'), (8, 1.5, NULL)", 2)]
+    back = spark.createDataFrame(
+        [("d", "t", "R", 9, "a\\b")],
+        "db string, tbl string, op string, pk long, s string")
+    got = sqlgen.bulk_delete_replace(back, value_cols=("pk", "s"))
+    assert got.collect()[0]["values_list"] == "(9, 'a\\\\b')"
+
+
+def test_batch_statements_apply_like_the_single_path(spark, tmp_path):
+    """The batch path's statements over a merged frame, executed on
+    SQLite, leave each key where its events one by one would: D->I is
+    a DELETE then an INSERT in one chunk, U on a missing row stays
+    missing, D then U deletes, and NULLs and quoted strings survive."""
+    import sqlite3
+
+    rows = [  # (arrival_seq, commit_ts, op, pk, val, s)
+        (1, 10, "D", 1, 0.0, None), (2, 11, "I", 1, 1.0, "o'k"),
+        (3, 12, "U", 2, 2.0, "x"),          # pk 2 absent: stays absent
+        (4, 13, "U", 3, None, None),        # pk 3 live: NULLs written
+        (5, 14, "D", 4, 0.0, None), (6, 15, "U", 4, 4.0, None),
+        (7, 16, "I", 5, 5.0, "n"), (8, 17, "U", 5, 5.5, "m"),
+    ]
+    ch = spark.createDataFrame(
+        [(a, "s0", c, c - 1, op, "d", "t", pk, 0, 1, v, s, 0)
+         for a, c, op, pk, v, s in rows],
+        "arrival_seq long, source_id string, commit_ts long, start_ts long, "
+        "op string, db string, tbl string, pk long, seq int, "
+        "schema_version long, val double, s string, sub_seq int")
+    cols = ("pk", "val", "s")
+    stmts = sqlgen.batch_statements(compaction.merge_by_pk(ch, cols),
+                                    value_cols=cols, batch_size=2)
+    conn = sqlite3.connect(str(tmp_path / "t.db"))
+    conn.execute("CREATE TABLE t (pk INTEGER PRIMARY KEY, val REAL, s TEXT)")
+    conn.executemany("INSERT INTO t VALUES (?, ?, ?)",
+                     [(1, 9.0, "old"), (3, 3.0, "y"), (4, 4.0, "z")])
+    for r in sorted(stmts.collect(),
+                    key=lambda r: (r["batch_no"], r["sub_seq"])):
+        conn.execute(r["sql_text"])
+    assert sorted(conn.execute("SELECT * FROM t").fetchall()) == [
+        (1, 1.0, "o'k"), (3, None, None), (5, 5.5, "m")]
+    conn.close()
+
+
 def test_checkpoint_only_advances_on_replay(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
     b1 = make_changes(spark, [(1, "s0", 50, "I", 1)])
@@ -1628,22 +1680,23 @@ def test_sql_batch_applier_wal_lands_before_any_downstream_write(
     landed before the batch's first downstream write: every statement
     apply, DDL and checkpoint save of a batch carrying a DDL starts
     after the WAL write ended, and the WAL holds the batch. The WAL
-    is held back until the first segment's statements are routed —
-    the point right before its apply."""
+    is held back until the first segment's statements are built (t
+    has no UNIQUE key, so they are the batch path's) — the point right
+    before its apply."""
     import threading
     import time
 
-    from tidb_binlog_spark.operators import causality
+    from tidb_binlog_spark.sinks import sqlgen
     from tidb_binlog_spark.sinks.relay import RelayLog
 
     routed = threading.Event()
-    orig_route = causality.conflict_free_partitions
+    orig_build = sqlgen.batch_statements
 
-    def routing(*args, **kwargs):
-        out = orig_route(*args, **kwargs)
+    def building(*args, **kwargs):
+        out = orig_build(*args, **kwargs)
         routed.set()
         return out
-    monkeypatch.setattr(causality, "conflict_free_partitions", routing)
+    monkeypatch.setattr(sqlgen, "batch_statements", building)
 
     wal_end = []
     orig_append = RelayLog.append
@@ -1717,13 +1770,14 @@ def test_sql_batch_applier_census_skips_empty_ddl_segment(
     watermark."""
     from tidb_binlog_spark.sinks import sqlgen
 
+    # a build is either path's statement builder: t and u have no
+    # UNIQUE key, so both take the batch path
     builds = []
-    orig_gen = sqlgen.generate_sql
-
-    def counting_gen(*args, **kwargs):
-        builds.append(1)
-        return orig_gen(*args, **kwargs)
-    monkeypatch.setattr(sqlgen, "generate_sql", counting_gen)
+    for name in ("generate_sql", "batch_statements"):
+        def counting(*args, _orig=getattr(sqlgen, name), **kwargs):
+            builds.append(1)
+            return _orig(*args, **kwargs)
+        monkeypatch.setattr(sqlgen, name, counting)
     log = _record_downstream(monkeypatch)
 
     add_c = "ALTER TABLE t ADD COLUMN c TEXT"
@@ -1944,10 +1998,11 @@ def test_sql_apply_stream_two_table_shapes_in_one_batch(spark, tmp_path,
                                                         monkeypatch):
     """One micro-batch over two statement shapes (catalog wired):
     table a is (pk, val, k) with a UNIQUE key on k, table b is
-    (pk, val). Each shape builds its own statements and causality
-    keys; a's UK collisions still serialize in commit order (safe mode
-    off, so a misordered INSERT would fail on the UK), and an event
-    with a NULL table produces no statement and no error."""
+    (pk, val). a takes the single path (statements and causality keys
+    per event) and its UK collisions still serialize in commit order
+    (safe mode off, so a misordered INSERT would fail on the UK); b
+    takes the batch path (merged by pk, no causality). An event with a
+    NULL table produces no statement and no error."""
     import sqlite3
 
     from tidb_binlog_spark.operators.safe_mode import SafeModeWindow
@@ -2007,13 +2062,23 @@ def test_sql_apply_stream_two_table_shapes_in_one_batch(spark, tmp_path,
     assert got_b == [(1, 5.0)]
     assert jdbc.load_checkpoint(db_dir)[0] == 50
 
-    # one statement per table event, none for the NULL-table event
-    assert sorted(r["commit_ts"] for r in applied) == [
-        10, 15, 20, 25, 30, 35, 40, 45]
+    a_rows = [r for r in applied if "`a`" in r["sql_text"]]
+    b_rows = [r for r in applied if "`b`" in r["sql_text"]]
+    assert len(a_rows) + len(b_rows) == len(applied)
+    # a (UK shape, single path): one statement per event, none for the
+    # NULL-table event
+    assert sorted(r["commit_ts"] for r in a_rows) == [10, 20, 30, 40]
     assert all(r["sql_text"] for r in applied)
     # both widths were built: a's statements name k, b's do not
-    text = {r["commit_ts"]: r["sql_text"] for r in applied}
-    assert "`k`" in text[10] and "`k`" not in text[15]
+    text = {r["commit_ts"]: r["sql_text"] for r in a_rows}
+    assert "`k`" in text[10]
+    assert not any("`k`" in r["sql_text"] for r in b_rows)
+    # b (PK-only, batch path): its four events merge by pk into one
+    # DELETE and one multi-row INSERT, with no causality group
+    assert sorted(r["sql_text"] for r in b_rows) == [
+        "DELETE FROM `b` WHERE `pk` IN (2)",
+        "INSERT INTO `b`(`pk`, `val`) VALUES (1, 5.0)"]
+    assert all(r["group_id"] is None for r in b_rows)
     # the UK key links a's txns 10/20/30 into one causality group
     group = {r["commit_ts"]: r["group_id"] for r in applied}
     assert group[10] == group[20] == group[30]

@@ -9,10 +9,11 @@ sequence for one PK collapses to a single final operation:
     delete + insert  -> insert
 
 Spark-first design: this is a single wide aggregation per (db, tbl, pk)
-— no driver loop, no UDF. We use ``max_by``-style window ranking on the
-global order key (commit_ts, seq), which Catalyst executes as one
-shuffle + sort within partitions; at 100 TB the shuffle is keyed on the
-PK so it scales horizontally and AQE handles skewed keys.
+— no driver loop, no UDF. ``compact_last_image`` ranks with a window
+on the event order (commit_ts, seq, sub_seq, arrival_seq);
+``merge_by_pk`` (the SQL applier's batch path) is a partial-aggregating
+``max_by`` over the same order. Either is one shuffle keyed on the PK,
+so it scales horizontally and AQE handles skewed keys.
 """
 
 from __future__ import annotations
@@ -23,20 +24,75 @@ from pyspark.sql import functions as F
 KEY = ["db", "tbl", "pk"]
 
 
+def _event_order(changes: DataFrame) -> list[str]:
+    """The total event order: (commit_ts, seq, sub_seq, arrival_seq),
+    with ``sub_seq`` only when the frame carries it. The halves a
+    rewrite or PK split makes of one event (safe_mode_rewrite's D + R,
+    split_pk_change's D + I) share every other column, so without
+    ``sub_seq`` the pick between them would be arbitrary."""
+    return [c for c in ("commit_ts", "seq", "sub_seq", "arrival_seq")
+            if c != "sub_seq" or "sub_seq" in changes.columns]
+
+
 def compact_last_image(changes: DataFrame) -> DataFrame:
     """Last-writer-wins image per PK: one row per key holding the final
     op and the final row image. Downstream appliers turn this into one
     statement per key (the whole point of the reference's merge: cut
     write amplification before hitting the sink).
     """
-    w = Window.partitionBy(*KEY).orderBy(*[c.desc() for c in [
-        F.col("commit_ts"), F.col("seq"), F.col("arrival_seq")]])
+    w = Window.partitionBy(*KEY).orderBy(
+        *[F.col(c).desc() for c in _event_order(changes)])
     return (
         changes
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
+
+
+def merge_by_pk(changes: DataFrame, image_cols: tuple[str, ...]) -> DataFrame:
+    """The loader's batch-path merge (pkg/loader/merge.go:22-129): one
+    row per (db, tbl, pk) with the op that leaves the key where the
+    batch's events, applied one statement at a time, would leave it.
+
+    Returns KEY, ``op``, ``pre_delete``, ``commit_ts`` (of the last
+    event) and the last event's ``image_cols``. ``op`` is:
+
+    - 'D' when the last event is a D, or when only U's follow the
+      key's last D (they would update a deleted row);
+    - 'R' when the last event is an R (after safe_mode_rewrite the ops
+      are only D and R);
+    - 'I' when an I follows the key's last D (or there is no D), with
+      ``pre_delete`` set when the batch holds an earlier D — the
+      DELETE must run first so the INSERT finds the key free, while an
+      INSERT on a live key with no D before it still fails;
+    - 'U' otherwise (U's only), so an update of a missing row stays a
+      no-op.
+
+    One partial-aggregating groupBy: the last image is a ``max_by``
+    over the event order (see _event_order), and the last D and last I
+    are maxima of the same order struct — no window over the batch.
+    """
+    order = F.struct(*_event_order(changes))
+
+    def last(kind: str):
+        return F.max(F.when(F.col("op") == kind, order))
+
+    image = [c for c in image_cols if c not in KEY]
+    agg = changes.groupBy(*KEY).agg(
+        F.max_by(F.struct("op", "commit_ts", *image), order).alias("_last"),
+        last("D").alias("_last_d"), last("I").alias("_last_i"))
+    last_op, last_d, last_i = (F.col("_last.op"), F.col("_last_d"),
+                               F.col("_last_i"))
+    op = (F.when(last_op.isin("D", "R"), last_op)
+           .when(last_i.isNotNull()
+                 & (last_d.isNull() | (last_i > last_d)), F.lit("I"))
+           .when(last_d.isNotNull(), F.lit("D"))
+           .otherwise(F.lit("U")))
+    return agg.select(
+        *KEY, op.alias("op"),
+        ((op == "I") & last_d.isNotNull()).alias("pre_delete"),
+        *[F.col(f"_last.{c}").alias(c) for c in ["commit_ts", *image]])
 
 
 def merged_op(changes: DataFrame) -> DataFrame:

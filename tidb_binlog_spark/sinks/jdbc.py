@@ -19,6 +19,13 @@ Ordering contract: within a partition the rows MUST already be sorted
 by (commit_ts, seq, sub_seq) — repartition + sortWithinPartitions is
 the caller's job (provided by ``apply_statements``).
 
+The streaming SQL applier hands this sink both of its apply paths in
+one call. Single-path rows are one statement per event, with a
+causality group as worker. Batch-path rows are multi-row statements per
+chunk of merged keys, with (table, chunk) as worker and ``sub_seq`` 0
+for the chunk's DELETE and 1 for its INSERT / REPLACE / UPDATE, so the
+DELETE runs first.
+
 Hash-partitioning note: two distinct worker_ids can land in the same
 Spark partition; run_partition therefore groups rows by worker_id and
 commits each worker's rows and cursor as its own transaction, one

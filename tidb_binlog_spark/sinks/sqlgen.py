@@ -47,6 +47,40 @@ def _escape_str_lit(col: Column) -> Column:
     return F.concat(F.lit("'"), escaped, F.lit("'"))
 
 
+def sql_literal(col: Column, is_string: bool,
+                dialect: str = "mysql") -> Column:
+    """Render one value as a SQL literal. NULL renders as the literal
+    NULL (concat/concat_ws silently drop SQL NULLs, which would shift
+    a VALUES arity); string values are quoted and escaped per dialect
+    (single-quote doubling everywhere; backslash doubling for mysql)."""
+    v = col.cast("string")
+    if is_string:
+        if dialect == "mysql":
+            v = _escape_str_lit(v)
+        else:   # oracle/sqlite: '' doubling only, no backslash escapes
+            v = F.concat(F.lit("'"), F.replace(v, F.lit("'"), F.lit("''")),
+                         F.lit("'"))
+    return F.coalesce(v, F.lit("NULL"))
+
+
+def _string_cols(df: DataFrame, cols) -> set[str]:
+    """The string-typed columns among ``cols``: their values render as
+    quoted literals."""
+    return {f.name for f in df.schema.fields
+            if f.name in set(cols) and f.dataType.simpleString() == "string"}
+
+
+def _target(dialect: str) -> tuple[Column, object]:
+    """(target table expression, identifier quoting) per dialect."""
+    if dialect == "oracle":
+        return (F.concat(F.upper(F.col("db")), F.lit("."),
+                         F.upper(F.col("tbl"))), str.upper)
+    if dialect == "sqlite":     # no schemas in SQLite: table name only
+        return (F.concat(F.lit("`"), _escape_ident(F.col("tbl")),
+                         F.lit("`")), _q)
+    return _qualified(), _q
+
+
 def generate_sql(changes: DataFrame,
                  pk_cols: tuple[str, ...] = ("pk",),
                  value_cols: tuple[str, ...] = ("pk", "val"),
@@ -73,36 +107,12 @@ def generate_sql(changes: DataFrame,
     escaped string literals; None infers them from the DataFrame schema
     (string-typed columns among value_cols/pk_cols).
     """
-    if string_cols is None:
-        string_cols = tuple(
-            f.name for f in changes.schema.fields
-            if f.name in set(value_cols) | set(pk_cols)
-            and f.dataType.simpleString() == "string")
-    str_set = set(string_cols)
-    if dialect == "oracle":
-        tbl = F.concat(F.upper(F.col("db")), F.lit("."), F.upper(F.col("tbl")))
-        quote = str.upper
-    elif dialect == "sqlite":   # no schemas in SQLite: table name only
-        tbl = F.concat(F.lit("`"), _escape_ident(F.col("tbl")), F.lit("`"))
-        quote = _q
-    else:
-        tbl = _qualified()
-        quote = _q
+    str_set = (set(string_cols) if string_cols is not None
+               else _string_cols(changes, (*value_cols, *pk_cols)))
+    tbl, quote = _target(dialect)
+
     def lit_val(c: str) -> Column:
-        # NULL renders as the literal NULL (concat/concat_ws silently
-        # drop SQL NULLs, which would shift the VALUES arity); string
-        # values are quoted + escaped per dialect (single-quote doubling
-        # everywhere; backslash doubling for mysql).
-        v = F.col(c).cast("string")
-        if c in str_set:
-            if dialect == "mysql":
-                rendered = _escape_str_lit(v)
-            else:  # oracle/sqlite: '' doubling only, no backslash escapes
-                rendered = F.concat(F.lit("'"),
-                                    F.replace(v, F.lit("'"), F.lit("''")),
-                                    F.lit("'"))
-            return F.coalesce(rendered, F.lit("NULL"))
-        return F.coalesce(v, F.lit("NULL"))
+        return sql_literal(F.col(c), c in str_set, dialect)
 
     col_list = F.lit(", ".join(quote(c) for c in value_cols))
     values = F.concat_ws(", ", *[lit_val(c) for c in value_cols])
@@ -182,26 +192,12 @@ def generate_sql_wide(changes: DataFrame, info: TableInfo,
     """
     def render(col_expr: Column) -> Column:
         # map values are strings; render quoted + escaped per dialect
-        if dialect == "mysql":
-            return F.coalesce(_escape_str_lit(col_expr), F.lit("NULL"))
-        return F.coalesce(
-            F.concat(F.lit("'"),
-                     F.replace(col_expr, F.lit("'"), F.lit("''")),
-                     F.lit("'")),
-            F.lit("NULL"))
+        return sql_literal(col_expr, True, dialect)
 
-    if dialect == "oracle":
-        tbl = F.concat(F.upper(F.col("db")), F.lit("."), F.upper(F.col("tbl")))
-        quote = str.upper
-        limit_sfx = F.lit(" AND rownum <= 1")
-    elif dialect == "sqlite":   # executable test target: no schemas, no
-        tbl = F.concat(F.lit("`"), _escape_ident(F.col("tbl")), F.lit("`"))
-        quote = _q              # UPDATE/DELETE LIMIT in stock builds
-        limit_sfx = F.lit("")
-    else:
-        tbl = _qualified()
-        quote = _q
-        limit_sfx = F.lit(" LIMIT 1")
+    tbl, quote = _target(dialect)
+    # executable sqlite target: no UPDATE/DELETE LIMIT in stock builds
+    limit_sfx = F.lit({"oracle": " AND rownum <= 1",
+                       "sqlite": ""}.get(dialect, " LIMIT 1"))
 
     def v(c: str) -> Column:
         return F.try_element_at("values", F.lit(c))
@@ -275,10 +271,15 @@ def bulk_delete_replace(compacted: DataFrame,
     table's whole compacted set. The two-phase path persists its input
     (both phases read it) and costs one extra tiny broadcast job —
     worth it only when a table's compacted set outgrows a task.
+
+    Values render through :func:`sql_literal` (NULL as ``NULL``,
+    strings quoted and escaped as mysql literals).
     """
+    str_set = _string_cols(compacted, value_cols)
     values_tuple = F.concat(
         F.lit("("),
-        F.concat_ws(", ", *[F.col(c).cast("string") for c in value_cols]),
+        F.concat_ws(", ", *[sql_literal(F.col(c), c in str_set)
+                            for c in value_cols]),
         F.lit(")"))
     if pk_bucket_width is None:
         w = Window.partitionBy("db", "tbl", "op").orderBy("pk")
@@ -312,3 +313,97 @@ def bulk_delete_replace(compacted: DataFrame,
             .agg(F.concat_ws(", ", F.array_sort(F.collect_list(values_tuple)))
                  .alias("values_list"),
                  F.count(F.lit(1)).alias("n_rows")))
+
+
+# keys per multi-row statement of the batch path (the reference's
+# loader batches 128 rows per bulk statement, executor.go:273-334)
+BATCH_KEYS = 128
+
+
+def batch_statements(merged: DataFrame,
+                     value_cols: tuple[str, ...] = ("pk", "val"),
+                     batch_size: int = BATCH_KEYS) -> DataFrame:
+    """Multi-row statements for the loader's batch path over
+    ``compaction.merge_by_pk`` output (one row per key: op, pre_delete,
+    the final image). A table's merged keys are numbered in pk order
+    and cut into chunks of ``batch_size``; each chunk gives at most
+    four statements, tagged ``sub_seq`` 0 for its DELETE and 1 for the
+    rest, so a chunk applied in (commit_ts, seq, sub_seq) order deletes
+    before it writes:
+
+      D keys and pre_delete keys -> DELETE FROM t WHERE pk IN (...)
+      I keys -> INSERT INTO t(cols) VALUES (...), (...)
+      R keys -> REPLACE INTO t(cols) VALUES (...), (...)
+      U keys -> UPDATE t SET c = CASE pk WHEN k THEN v ... END, ...
+                WHERE pk IN (...)
+
+    A multi-row INSERT is one statement, so a key that is already live
+    fails it as the single INSERT would. Returns (db, tbl, batch_no,
+    commit_ts, seq, sub_seq, sql_text); commit_ts is the chunk's last.
+    The shapes are the sqlite dialect's, the SQL applier's target;
+    mysql's differ only by the schema-qualified table.
+    """
+    str_set = _string_cols(merged, value_cols)
+    tbl, quote = _target("sqlite")
+    set_cols = [c for c in value_cols if c != "pk"]
+    lits = {c: sql_literal(F.col(c), c in str_set, "sqlite")
+            for c in {"pk", *value_cols}}
+    key = F.struct(
+        F.col("op").alias("op"),
+        ((F.col("op") == "D") | F.col("pre_delete")).alias("del"),
+        lits["pk"].alias("pk"),
+        F.concat(F.lit("("), F.concat_ws(", ", *[lits[c] for c in value_cols]),
+                 F.lit(")")).alias("row"),
+        *[F.concat(F.lit(" WHEN "), lits["pk"], F.lit(" THEN "), lits[c])
+          .alias(f"v{i}") for i, c in enumerate(set_cols)])
+    w = Window.partitionBy("db", "tbl").orderBy("pk")
+    chunks = (merged
+              .withColumn("batch_no", F.floor((F.row_number().over(w) - 1)
+                                              / batch_size).cast("int"))
+              .groupBy("db", "tbl", "batch_no")
+              .agg(F.max("commit_ts").alias("commit_ts"),
+                   F.collect_list(key).alias("ks")))
+
+    def joined(pred, field: str, sep: str = ", ") -> tuple[Column, Column]:
+        sel = F.filter("ks", pred)
+        return (F.size(sel) > 0,
+                F.array_join(F.transform(sel, lambda k: k[field]), sep))
+
+    pk_q, cols = quote("pk"), ", ".join(quote(c) for c in value_cols)
+
+    def multi_row(verb: str, op: str) -> Column:
+        some, rows = joined(lambda k: k["op"] == op, "row")
+        return F.when(some, F.concat(F.lit(f"{verb} INTO "), tbl,
+                                     F.lit(f"({cols}) VALUES "), rows))
+
+    some_del, del_keys = joined(lambda k: k["del"], "pk")
+    delete = F.when(some_del, F.concat(
+        F.lit("DELETE FROM "), tbl, F.lit(f" WHERE {pk_q} IN ("), del_keys,
+        F.lit(")")))
+
+    def is_u(k):
+        return k["op"] == "U"
+
+    some_u, upd_keys = joined(is_u, "pk")
+    # a pk-only table has nothing to update
+    update = F.lit(None).cast("string") if not set_cols else F.when(
+        some_u, F.concat(
+            F.lit("UPDATE "), tbl, F.lit(" SET "),
+            F.concat_ws(", ", *[
+                F.concat(F.lit(f"{quote(c)} = CASE {pk_q}"),
+                         joined(is_u, f"v{i}", "")[1], F.lit(" END"))
+                for i, c in enumerate(set_cols)]),
+            F.lit(f" WHERE {pk_q} IN ("), upd_keys, F.lit(")")))
+    stmts = F.array(*[F.struct(F.lit(sub).alias("sub_seq"),
+                               text.alias("sql_text"))
+                      for sub, text in ((0, delete),
+                                        (1, multi_row("INSERT", "I")),
+                                        (1, multi_row("REPLACE", "R")),
+                                        (1, update))])
+    return (chunks
+            .select("db", "tbl", "batch_no", "commit_ts",
+                    F.lit(0).alias("seq"),
+                    F.explode(F.filter(stmts, lambda s: s["sql_text"]
+                                       .isNotNull())).alias("s"))
+            .select("db", "tbl", "batch_no", "commit_ts", "seq",
+                    "s.sub_seq", "s.sql_text"))

@@ -139,8 +139,17 @@ class SqlBatchApplier:
     window through the IDENTICAL machinery: resume filter, order
     gate, config filter/route stages, DDL barriers with immediate
     checkpoints, one statement build per statement shape (catalog
-    width + sink unique keys), causality-routed shared-downstream
-    apply.
+    width + sink unique keys), shared-downstream apply.
+
+    A shape's statements take one of two paths (see _apply_dml). With
+    no sink unique key, the batch path merges the events by primary
+    key and applies multi-row statements per chunk of keys, with no
+    causality step: DELETE for a key that ends deleted; in safe mode
+    REPLACE for the rest; in strict mode INSERT (after the key's DELETE
+    when the batch holds an earlier D) or UPDATE of the final image.
+    With a unique key, the single path applies one statement per event
+    (INSERT / UPDATE / DELETE, or REPLACE / DELETE + REPLACE in safe
+    mode), routed by causality group.
 
     The relay WAL write runs in the background: it only has to land
     before the batch's first downstream side effect (relayer.WriteBinlog
@@ -250,9 +259,19 @@ class SqlBatchApplier:
     def _apply_dml(self, seg: DataFrame, ckpt_ts: int, tables: dict,
                    wal: _WalWrite) -> None:
         """Order-gated DML sub-batch -> safe-mode rewrite -> one
-        statement build per statement shape -> causality-routed
-        parallel apply. ``tables`` maps each table that may have rows
-        in ``seg`` to its batch row count (from the census)."""
+        statement build per statement shape -> parallel apply.
+        ``tables`` maps each table that may have rows in ``seg`` to its
+        batch row count (from the census).
+
+        Shapes split two ways, as the loader's execDMLs does
+        (executor.go:273-334): a shape with no sink unique key takes
+        the batch path — merge by primary key, then multi-row
+        statements per chunk of keys, spread over workers by (table,
+        chunk) with no causality step, since merged keys are disjoint.
+        Every other shape takes the single path: one statement per
+        event, causality-routed. Both land in one apply_statements
+        call, so each worker still commits its rows and its cursor in
+        one transaction."""
         from ..operators import causality
         from ..operators import safe_mode as sm
         from ..sinks import jdbc, sqlgen
@@ -271,7 +290,7 @@ class SqlBatchApplier:
         shapes: dict = {}
         for tbl in tables:
             shapes.setdefault(self._table_shape(tbl), []).append(tbl)
-        stmts = txn_keys = None
+        stmts = txn_keys = batch = None
         max_edges = 0
         for (cols, uks), shape_tables in shapes.items():
             part = (prepared if len(shapes) == 1
@@ -282,6 +301,11 @@ class SqlBatchApplier:
                 if c not in ("pk", "val"):
                     part = part.withColumn(
                         c, F.get_json_object(F.col("row_json"), f"$.{c}"))
+            if not uks:
+                b = sqlgen.batch_statements(
+                    compaction.merge_by_pk(part, cols), value_cols=cols)
+                batch = b if batch is None else batch.unionByName(b)
+                continue
             s = sqlgen.generate_sql(part, dialect="sqlite",
                                     value_cols=cols) \
                       .select("commit_ts", "seq", "sub_seq", "pk", "sql_text")
@@ -308,20 +332,34 @@ class SqlBatchApplier:
             # row yields its PK key plus one key per UK
             max_edges += (2 * sum(tables[t] for t in shape_tables)
                           * (1 + len(uks)))
-        if max_edges > causality.LOCAL_CC_MAX_EDGES:
-            # the distributed CC fixpoint rescopes the session-wide
-            # shuffle-partition conf: no WAL query may plan under it
-            wal.join()
-        # conflict-free dispatch replaces pmod(pk): whole txns route by
-        # causality group, so cross-txn key conflicts apply in commit
-        # order while disjoint groups parallelize (load.go:508-575)
-        routed = causality.conflict_free_partitions(
-            stmts, txn_keys, num_workers=self.num_workers,
-            txn_col="commit_ts", max_edges=max_edges)
+        routed = None
+        if stmts is not None:
+            if max_edges > causality.LOCAL_CC_MAX_EDGES:
+                # the distributed CC fixpoint rescopes the session-wide
+                # shuffle-partition conf: no WAL query may plan under it
+                wal.join()
+            # conflict-free dispatch replaces pmod(pk): whole txns route
+            # by causality group, so cross-txn key conflicts apply in
+            # commit order while disjoint groups parallelize
+            # (load.go:508-575)
+            routed = causality.conflict_free_partitions(
+                stmts, txn_keys, num_workers=self.num_workers,
+                txn_col="commit_ts", max_edges=max_edges)
+        if batch is not None:
+            # a chunk's DELETE and its writes share one worker, so they
+            # apply in sub_seq order; they carry no causality group
+            batch = (batch
+                     .withColumn("worker_id", F.pmod(
+                         F.xxhash64("db", "tbl", "batch_no"),
+                         F.lit(self.num_workers)))
+                     .drop("db", "tbl", "batch_no"))
+            routed = (batch if routed is None
+                      else routed.unionByName(batch,
+                                              allowMissingColumns=True))
         wal.join()
         # every worker writes the one downstream database, so the
-        # causality worker ids, which vary per batch, decide only
-        # execution order and parallelism, never where a row lives
+        # worker ids, which vary per batch, decide only execution order
+        # and parallelism, never where a row lives
         jdbc.apply_statements(routed, self.db_dir, self.num_workers,
                               setup_sql=self.setup_sql,
                               checkpoint_ts=ckpt_ts)
@@ -474,14 +512,22 @@ def run_sql_apply_stream(spark: SparkSession, source_dir: str, db_dir: str,
     downstream database. When wired, (a) statement width per table
     follows the LIVE downstream schema (a mid-stream ADD COLUMN widens
     the very next sub-batch, with non-(pk,val) columns extracted from
-    the row image), and (b) the causality keys include every sink-side
-    UNIQUE key's values, so UK-colliding txns serialize in commit order.
+    the row image), and (b) a table with a sink-side UNIQUE key takes
+    the single path, whose causality keys include every UK's values,
+    so UK-colliding txns serialize in commit order.
 
-    Worker routing is causality-group dispatch (conflict_free_
-    partitions, pkg/loader/causality.go:31-99), NOT pmod(pk): a whole
-    txn lands on one worker, and txns linked by any shared PK/UK
-    key-string share a group — per-group commit order with cross-group
-    parallelism, the loader's exact guarantee.
+    Two apply paths, split per table as the loader's execDMLs does
+    (pkg/loader/executor.go:273-334). Tables with no sink UNIQUE key
+    (every table when no catalog is wired) take the batch path: events
+    merge by primary key (compaction.merge_by_pk) into multi-row
+    DELETE / INSERT / UPDATE statements, or DELETE / REPLACE in safe
+    mode, per chunk of up to 128 keys (sqlgen.batch_statements),
+    spread over workers by (table, chunk). The other tables take the
+    single path: one statement per event, dispatched by causality
+    group (conflict_free_partitions, pkg/loader/causality.go:31-99),
+    NOT pmod(pk): a whole txn lands on one worker, and txns linked by
+    any shared PK/UK key-string share a group — per-group commit order
+    with cross-group parallelism, the loader's exact guarantee.
 
     ``cfg``: an optional plans.pipeline.ReplicationConfig (the
     drainer.toml surface). When set it drives the declarative stages
