@@ -183,7 +183,8 @@ def test_hierarchical_offsets_matches_brute_across_levels(spark):
 
 
 def test_classify_disorder_bucketed_matches_single_window(spark):
-    """Two-phase per-source running max == the single-window result."""
+    """Two-phase per-source running max == the single-window result,
+    with the carry derived in the plan and with it supplied."""
     import random
     rng = random.Random(7)
     rows = []
@@ -195,7 +196,9 @@ def test_classify_disorder_bucketed_matches_single_window(spark):
         rows.append((i, src, cts, rng.choice("IUD"), i % 7))
     ch = make_changes(spark, rows)
     from tidb_binlog_spark.operators import ordering as ordmod
-    bucketed = ordmod.classify_disorder(ch, arrival_bucket=32)
+    carry = ordmod.carry_from_maxima(
+        ordmod.bucket_maxima(ch, arrival_bucket=32).collect())
+    assert carry                        # 400 rows span 13 buckets
     # oracle: the one-window form
     from pyspark.sql import Window
     w_arr = (Window.partitionBy("source_id").orderBy("arrival_seq")
@@ -210,8 +213,13 @@ def test_classify_disorder_bucketed_matches_single_window(spark):
                                  "disorder")
                            .otherwise("ok")))
     want = {r["arrival_seq"]: r["order_status"] for r in single.collect()}
-    got = {r["arrival_seq"]: r["order_status"] for r in bucketed.collect()}
-    assert got == want
+    # the in-plan carry, and the one a census computed beforehand
+    for supplied in (None, carry):
+        bucketed = ordmod.classify_disorder(ch, arrival_bucket=32,
+                                            carry=supplied)
+        got = {r["arrival_seq"]: r["order_status"]
+               for r in bucketed.collect()}
+        assert got == want
 
 
 def test_disorder_plan_has_no_unpartitioned_window(spark):
@@ -221,9 +229,15 @@ def test_disorder_plan_has_no_unpartitioned_window(spark):
     from tidb_binlog_spark.operators import ordering as ordmod
     ch = make_changes(spark, [(i, f"s{i % 3}", i * 10, "I", i % 5)
                               for i in range(50)])
-    plan = _plan(ordmod.classify_disorder(ch))
-    assert "Window [" in plan
-    _assert_windows_partitioned(plan)
+    carry = ordmod.carry_from_maxima(
+        ordmod.bucket_maxima(ch, arrival_bucket=16).collect())
+    for supplied in (None, carry):
+        plan = _plan(ordmod.classify_disorder(ch, arrival_bucket=16,
+                                              carry=supplied))
+        assert "Window [" in plan
+        _assert_windows_partitioned(plan)
+        # a supplied carry is a literal lookup, not a join
+        assert ("BroadcastHashJoin" in plan) == (supplied is None)
 
 
 def test_simhash_chunk_keyspace_is_16_bit(spark):

@@ -1663,6 +1663,20 @@ def _record_downstream(monkeypatch):
     return log
 
 
+def _count_collects(monkeypatch):
+    """Count driver collects (DataFrame.collect calls). Returns the
+    list the wrapper appends to."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+    calls = []
+    orig = ClassicDF.collect
+
+    def counting(self):
+        calls.append(1)
+        return orig(self)
+    monkeypatch.setattr(ClassicDF, "collect", counting)
+    return calls
+
+
 def _shared_rows(db_dir, sql="SELECT pk, val FROM t ORDER BY pk"):
     import sqlite3
 
@@ -1767,7 +1781,8 @@ def test_sql_batch_applier_census_skips_empty_ddl_segment(
     path (no statement build), and the downstream rows and saved
     checkpoint sequence are the per-segment ones: DML below each DDL
     at ddl_ts - 1, each DDL at its own ts, the tail at the batch
-    watermark."""
+    watermark. The batch makes two driver collects: the census and the
+    DDL rows."""
     from tidb_binlog_spark.sinks import sqlgen
 
     # a build is either path's statement builder: t and u have no
@@ -1794,8 +1809,11 @@ def test_sql_batch_applier_census_skips_empty_ddl_segment(
     db_dir = str(tmp_path / "db")
     setup = _T_SETUP + ("CREATE TABLE IF NOT EXISTS u "
                         "(pk INTEGER PRIMARY KEY, val REAL)",)
+    collects = _count_collects(monkeypatch)
     pipeline.SqlBatchApplier(db_dir, setup_sql=setup).apply(batch)
 
+    # the census, then the gated DDL rows
+    assert len(collects) == 2
     assert len(builds) == 2
     assert [(name, arg) for name, _, arg in log] == [
         ("apply_statements", 19), ("save_checkpoint", 19),
@@ -1838,6 +1856,205 @@ def test_sql_batch_applier_census_batch_below_cursor(
                              resume_ts=100, relay=relay).apply(batch)
     assert log == []
     assert relay.read(spark).count() == 2
+
+
+def test_sql_batch_applier_ddl_free_batch_collects_once(
+        spark, tmp_path, monkeypatch):
+    """A DDL-free batch makes exactly one driver collect, the census:
+    its order gate runs inside the apply job. The gate still drops the
+    late row (30 after 40 from the same source) and the duplicate."""
+    from tidb_binlog_spark.sinks import jdbc
+
+    batch = _mixed_stream_rows(spark, [
+        (1, 10, "I", 1, 1.0, "{}"),
+        (2, 40, "I", 2, 2.0, "{}"),
+        (3, 30, "I", 3, 3.0, "{}"),
+        (4, 10, "U", 1, 9.0, "{}"),
+        (5, 50, "U", 1, 5.0, "{}")])
+    db_dir = str(tmp_path / "db")
+    collects = _count_collects(monkeypatch)
+    pipeline.SqlBatchApplier(db_dir, setup_sql=_T_SETUP).apply(batch)
+    assert len(collects) == 1
+    assert _shared_rows(db_dir) == [(1, 5.0), (2, 2.0)]
+    assert jdbc.load_checkpoint(db_dir)[0] == 50
+
+
+def test_sql_batch_applier_duplicate_ddl_never_executes(
+        spark, tmp_path, monkeypatch):
+    """A DDL row whose commit_ts duplicates an earlier row (another
+    source's) is counted by the raw census, so its batch collects the
+    gated DDL rows too (two collects), but the gate drops it: it never
+    reaches execute_ddl and splits no segment."""
+    log = _record_downstream(monkeypatch)
+    batch = _mixed_stream_rows(spark, [
+        (1, 10, "I", 1, 1.0, "{}"),
+        (2, 10, "DDL", 0, 0.0, "ALTER TABLE t ADD COLUMN c TEXT"),
+        (3, 20, "I", 2, 2.0, "{}")])
+    batch = batch.withColumn(
+        "source_id",
+        F.when(F.col("op") == "DDL", "s1").otherwise(F.col("source_id")))
+    db_dir = str(tmp_path / "db")
+    collects = _count_collects(monkeypatch)
+    pipeline.SqlBatchApplier(db_dir, setup_sql=_T_SETUP).apply(batch)
+    assert len(collects) == 2
+    assert [(name, arg) for name, _, arg in log] == [
+        ("apply_statements", 20), ("save_checkpoint", 20)]
+    assert _shared_rows(db_dir) == [(1, 1.0), (2, 2.0)]
+
+
+def test_sql_batch_applier_late_event_in_later_batch(spark, tmp_path):
+    """A late row in a LATER micro-batch, at or below the checkpoint
+    the previous batch saved, is dropped exactly as after a restart:
+    the applier's cursor moves to each applied batch's watermark, so
+    the U at 15 never overwrites the image at 20."""
+    from tidb_binlog_spark.sinks import jdbc
+
+    b1 = _mixed_stream_rows(spark, [(1, 10, "I", 1, 1.0, "{}"),
+                                    (2, 20, "U", 1, 2.0, "{}")])
+    b2 = (_mixed_stream_rows(spark, [(3, 15, "U", 1, 9.0, "{}")])
+          .withColumn("source_id", F.lit("s1")))
+    db_dir = str(tmp_path / "db")
+    applier = pipeline.SqlBatchApplier(db_dir, setup_sql=_T_SETUP)
+    applier.apply(b1)
+    applier.apply(b2)
+    assert _shared_rows(db_dir) == [(1, 2.0)]
+    assert jdbc.load_checkpoint(db_dir)[0] == 20
+    assert applier.resume_ts == 20
+
+
+def _single_window_model(rows):
+    """The gate as one pass in arrival order: a row is a duplicate when
+    an earlier-arriving row has its commit_ts, disorder when its
+    source already showed a commit_ts >= its own; the ok rows apply
+    in commit_ts order. Returns {pk: val} after the last image."""
+    seen, src_max, ok = set(), {}, []
+    for a, src, cts, op, pk, val in sorted(rows):
+        dup = cts in seen
+        seen.add(cts)
+        late = src in src_max and cts <= src_max[src]
+        src_max[src] = max(src_max.get(src, cts), cts)
+        if not dup and not late:
+            ok.append((cts, op, pk, val))
+    state = {}
+    for _cts, op, pk, val in sorted(ok):
+        if op == "D":
+            state.pop(pk, None)
+        else:
+            state[pk] = val
+    return state
+
+
+def test_sql_batch_applier_carry_across_arrival_bucket(spark, tmp_path):
+    """The census hands the gate each source's max commit_ts of its
+    earlier arrival buckets. s0's row at 150 arrives in the second
+    bucket (arrival_seq >= 2**20), below the 200 s0 showed in the
+    first: disorder, so pk 2 never lands. s1's row at 100 duplicates
+    s0's. The downstream equals the single-window model."""
+    edge = 1 << 20
+    rows = [(edge - 2, "s0", 100, "I", 1, 1.0),
+            (edge - 1, "s0", 200, "U", 1, 2.0),
+            (edge, "s0", 150, "I", 2, 7.0),
+            (edge + 1, "s1", 100, "I", 3, 3.0),
+            (edge + 2, "s0", 300, "U", 1, 4.0),
+            (edge + 3, "s1", 310, "I", 4, 5.0)]
+    batch = spark.createDataFrame(
+        [(a, src, cts, cts - 1, op, "db0", "t", pk, 0, 1, val, "{}")
+         for a, src, cts, op, pk, val in rows],
+        "arrival_seq long, source_id string, commit_ts long, start_ts long, "
+        "op string, db string, tbl string, pk long, seq int, "
+        "schema_version long, val double, row_json string")
+    db_dir = str(tmp_path / "db")
+    pipeline.SqlBatchApplier(db_dir, setup_sql=_T_SETUP).apply(batch)
+    want = _single_window_model(rows)
+    assert want == {1: 4.0, 4: 5.0}
+    assert _shared_rows(db_dir) == sorted(want.items())
+
+
+def test_sql_batch_applier_census_applies_config_rows_and_routes(
+        spark, tmp_path):
+    """The census counts the rows the config's row-wise filters keep,
+    under the routed table name, while the watermark and the bucket
+    maxima cover the whole raw batch (FAKE and filtered rows too)."""
+    from tidb_binlog_spark.plans.pipeline import ReplicationConfig
+
+    rows = [  # (arrival, cts, op, db, tbl)
+        (1, 10, "I", "db0", "t"),
+        (2, 20, "I", "tmp_x", "t"),       # ignored schema
+        (3, 30, "I", "db9", "t9"),        # routed -> t
+        (4, 40, "I", "db0", "t"),         # ignored commit ts
+        (5, 50, "D", "db0", "u"),         # event-kind rule drops D on u
+        (6, 55, "DDL", "db0", "t"),       # sync-ddl off in the config
+        (7, 60, "FAKE", None, None)]
+    batch = spark.createDataFrame(
+        [(a, "s0", c, c - 1, op, db, tb, 1, 0, 1, 1.0, "{}")
+         for a, c, op, db, tb in rows],
+        "arrival_seq long, source_id string, commit_ts long, start_ts long, "
+        "op string, db string, tbl string, pk long, seq int, "
+        "schema_version long, val double, row_json string")
+    cfg = ReplicationConfig(
+        ignore_schemas=("tmp_x",), route_rules=[("db9", "t9", "db0", "t")],
+        ignore_commit_ts=[40], event_rules=[("db0", "u", ["D"])],
+        sync_ddl=False)
+    applier = pipeline.SqlBatchApplier(str(tmp_path / "db"),
+                                       setup_sql=_T_SETUP, cfg=cfg)
+    wm, carry, n_ddl, tables = applier._census(batch)
+    assert (wm, carry, n_ddl) == (60, {}, 0)
+    assert tables == {"t": (2, 10, 30)}
+
+
+def _routed_rows(spark, rows):
+    """(arrival, cts, op, tbl, pk, val, row_json) rows of db0 from s0."""
+    return spark.createDataFrame(
+        [(a, "s0", c, c - 1, op, "db0", tb, pk, 0, 1, float(v), rj)
+         for a, c, op, tb, pk, v, rj in rows],
+        "arrival_seq long, source_id string, commit_ts long, start_ts long, "
+        "op string, db string, tbl string, pk long, seq int, "
+        "schema_version long, val double, row_json string")
+
+
+def test_sql_batch_applier_allowlist_matches_source_not_routed_name(
+        spark, tmp_path, monkeypatch):
+    """Allow the shards, merge them into one table: the allowlist
+    matches the SOURCE names t_1/t_2 but not the routed name t. The
+    census judges the filters on the source names, as the gated path
+    does, so every shard row and the shard's DDL land downstream."""
+    from tidb_binlog_spark.plans.pipeline import ReplicationConfig
+    from tidb_binlog_spark.sinks import jdbc
+
+    log = _record_downstream(monkeypatch)
+    batch = _routed_rows(spark, [
+        (1, 10, "I", "t_1", 1, 1.0, "{}"),
+        (2, 20, "I", "t_2", 2, 2.0, "{}"),
+        (3, 25, "DDL", "t_1", 0, 0.0, "ALTER TABLE t ADD COLUMN c TEXT"),
+        (4, 30, "U", "t_1", 1, 3.0, "{}")])
+    cfg = ReplicationConfig(do_tables=[("db0", "~t_.*")],
+                            route_rules=[("db0", "t_*", "db0", "t")])
+    db_dir = str(tmp_path / "db")
+    applier = pipeline.SqlBatchApplier(db_dir, setup_sql=_T_SETUP, cfg=cfg)
+    wm, _, n_ddl, tables = applier._census(batch)
+    assert (wm, n_ddl, tables) == (30, 1, {"t": (3, 10, 30)})
+    applier.apply(batch)
+    assert _shared_rows(db_dir) == [(1, 3.0), (2, 2.0)]
+    assert [arg for name, _, arg in log if name == "execute_ddl"] == [
+        "ALTER TABLE t ADD COLUMN c TEXT"]
+    assert jdbc.load_checkpoint(db_dir)[0] == 30
+
+
+def test_sql_batch_applier_blocklist_matches_routed_name_not_source(
+        spark, tmp_path):
+    """The other way round: the blocklist names t, the shard t_1 routes
+    to t. Only the source table t is blocked; t_1's rows land as t."""
+    from tidb_binlog_spark.plans.pipeline import ReplicationConfig
+
+    batch = _routed_rows(spark, [(1, 10, "I", "t", 1, 1.0, "{}"),
+                                 (2, 20, "I", "t_1", 2, 2.0, "{}")])
+    cfg = ReplicationConfig(ignore_tables=[("db0", "t")],
+                            route_rules=[("db0", "t_*", "db0", "t")])
+    db_dir = str(tmp_path / "db")
+    applier = pipeline.SqlBatchApplier(db_dir, setup_sql=_T_SETUP, cfg=cfg)
+    assert applier._census(batch)[3] == {"t": (1, 20, 20)}
+    applier.apply(batch)
+    assert _shared_rows(db_dir) == [(2, 2.0)]
 
 
 def test_sql_batch_applier_refuses_ddl_storm(spark, tmp_path):

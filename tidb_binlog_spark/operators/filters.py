@@ -7,7 +7,9 @@ Reference:
 - binlog event filter (v2 rules): per (schema-pattern, table-pattern)
   rules dropping individual event kinds: drainer/syncer.go:596-705,
   rule assembly drainer/util.go:277-381;
-- ignore-txn-commit-ts: drainer/syncer.go:366-369,707-714.
+- ignore-txn-commit-ts: drainer/syncer.go:366-369,707-714 (a
+  ``commit_ts`` isin, built with the others in
+  plans.pipeline.row_mapping).
 
 Spark-first: rules compile to ONE boolean Column (pure Catalyst
 expressions — rlike / lower / isin), so the predicate participates in
@@ -74,6 +76,18 @@ def filter_allow_block(changes: DataFrame,
     return changes.filter(allow_block_predicate(do_rules, ignore_rules))
 
 
+def event_kinds_predicate(rules: Sequence[tuple[str, str, Sequence[str]]],
+                          case_sensitive: bool = False) -> Column:
+    """Keep predicate of the event-kind rules (see filter_event_kinds)."""
+    drop = F.lit(False)
+    for db_pat, tbl_pat, ops in rules:
+        m = _pattern_to_col(F.col("db"), db_pat, case_sensitive) & \
+            _pattern_to_col(F.col("tbl"), tbl_pat, case_sensitive) & \
+            F.col("op").isin([o.upper() for o in ops])
+        drop = drop | m
+    return ~drop
+
+
 def filter_event_kinds(changes: DataFrame,
                        rules: Sequence[tuple[str, str, Sequence[str]]],
                        case_sensitive: bool = False) -> DataFrame:
@@ -82,21 +96,7 @@ def filter_event_kinds(changes: DataFrame,
     Sequence arrays in place, drainer/syncer.go:596-673 — row-level
     filtering is the DataFrame-native equivalent). ``case_sensitive``
     switches the v2 rule matching mode (config.go:128)."""
-    drop = F.lit(False)
-    for db_pat, tbl_pat, ops in rules:
-        m = _pattern_to_col(F.col("db"), db_pat, case_sensitive) & \
-            _pattern_to_col(F.col("tbl"), tbl_pat, case_sensitive) & \
-            F.col("op").isin([o.upper() for o in ops])
-        drop = drop | m
-    return changes.filter(~drop)
-
-
-def filter_ignore_commit_ts(changes: DataFrame,
-                            ts_list: Sequence[int]) -> DataFrame:
-    """Drop whole transactions by commit_ts (drainer/syncer.go:707-714)."""
-    if not ts_list:
-        return changes
-    return changes.filter(~F.col("commit_ts").isin(list(ts_list)))
+    return changes.filter(event_kinds_predicate(rules, case_sensitive))
 
 
 def drop_truncated_tables(changes: DataFrame,

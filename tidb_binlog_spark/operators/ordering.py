@@ -17,11 +17,17 @@ thread; we instead express order as data (window over arrival order per
 source for monotonicity accounting, global sort only where the sink
 truly needs total order). At 100 TB the total order is applied per
 partition of the causal key, never as a single global sort.
+
+The per-source running max spans arrival buckets through a carry: the
+max commit_ts of each source's earlier buckets. ``classify_disorder``
+derives it in its own plan, or takes it precomputed from a caller that
+already aggregates the batch (``bucket_maxima`` -> ``carry_from_maxima``,
+the SQL applier's census), which keeps the gate to its two windows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -86,8 +92,52 @@ def distributed_rank(df: DataFrame, order_cols: list[str],
             .drop("_pid", "_within", "_off"))
 
 
+# Width of the arrival-order buckets the per-source running max is
+# split over (phase 1 of classify_disorder's two-phase max).
+ARRIVAL_BUCKET = 1 << 20
+
+
+def arrival_bucket_of(arrival_bucket: int = ARRIVAL_BUCKET) -> Column:
+    """The arrival bucket ``_b`` of a row."""
+    return F.floor(F.col("arrival_seq") / arrival_bucket)
+
+
+def bucket_maxima(changes: DataFrame,
+                  arrival_bucket: int = ARRIVAL_BUCKET) -> DataFrame:
+    """One row per (source_id, arrival bucket ``_b``): its max
+    commit_ts ``_bmax``. The input of classify_disorder's carry (the
+    SQL applier's census computes the same rows as one grouping set of
+    its aggregate)."""
+    return (changes
+            .select("source_id", "arrival_seq", "commit_ts")
+            .withColumn("_b", arrival_bucket_of(arrival_bucket))
+            .groupBy("source_id", "_b")
+            .agg(F.max("commit_ts").alias("_bmax")))
+
+
+def carry_from_maxima(rows) -> dict:
+    """The carry of collected ``bucket_maxima`` rows: {(source_id,
+    bucket): max commit_ts of the source's EARLIER buckets}, only for
+    buckets that have an earlier one. A batch whose every source sits
+    in one bucket has an empty carry."""
+    carry, run = {}, {}
+    for src, b, bmax in sorted((r["source_id"], r["_b"], r["_bmax"])
+                               for r in rows):
+        if src in run:
+            carry[(src, b)] = run[src]
+            run[src] = max(run[src], bmax)
+        else:
+            run[src] = bmax
+    return carry
+
+
+def _carry_key(src, b):
+    return F.concat_ws("\x01", src, b.cast("string"))
+
+
 def classify_disorder(changes: DataFrame,
-                      arrival_bucket: int = 1 << 20) -> DataFrame:
+                      arrival_bucket: int = ARRIVAL_BUCKET,
+                      carry: dict | None = None) -> DataFrame:
     """Tag each event, per source in arrival order, as ok / disorder /
     duplicate (duplicate = commit_ts seen before globally).
 
@@ -96,13 +146,17 @@ def classify_disorder(changes: DataFrame,
     single-merger bottleneck, drainer/merge.go:236):
       1. within (source, arrival-range bucket): running prefix max —
          windows partitioned by (source, bucket), parallel;
-      2. per-bucket maxima (one tiny row per bucket) carry the running
-         max across buckets, broadcast back.
+      2. the running max of the earlier buckets' maxima (the carry).
     max(carry_in, within_bucket_prev) == the global per-source prefix
     max, exactly. The duplicate check is windowed by commit_ts (already
     key-partitioned, scales).
+
+    ``carry`` is phase 2 computed beforehand: ``carry_from_maxima`` of
+    this frame's ``bucket_maxima`` at the same ``arrival_bucket``. It is
+    applied as a literal lookup, so the plan holds only the two
+    windows. Without it the plan derives the carry itself: the bucket
+    maxima, a window over them per source and a broadcast join back.
     """
-    b = F.floor(F.col("arrival_seq") / arrival_bucket)
     w_in = (Window.partitionBy("source_id", "_b").orderBy("arrival_seq")
             .rowsBetween(Window.unboundedPreceding, -1))
     # cursor pseudo-rows (arrival_seq < 0, injected by the streaming
@@ -113,26 +167,32 @@ def classify_disorder(changes: DataFrame,
     # quarantine that row as a duplicate. Seeds rank among themselves.
     w_dup = Window.partitionBy("commit_ts", F.col("arrival_seq") < 0) \
         .orderBy("arrival_seq", "source_id")
-    bucketed = changes.withColumn("_b", b)
-    # the carry aggregate re-reads only 3 columns of the source lineage
-    # (column pruning reaches the scan); persisting the full stream here
-    # costs more than the pruned re-scan at every tested scale. Callers
-    # that cannot afford ANY second source pass (streaming micro-batches
-    # with input metrics) persist the batch before calling.
-    bucket_max = (changes
-                  .select("source_id", "arrival_seq", "commit_ts")
-                  .withColumn("_b", b)
-                  .groupBy("source_id", "_b")
-                  .agg(F.max("commit_ts").alias("_bmax")))
-    w_carry = (Window.partitionBy("source_id").orderBy("_b")
-               .rowsBetween(Window.unboundedPreceding, -1))
-    carry = (bucket_max
-             .withColumn("carry_in", F.max("_bmax").over(w_carry))
-             .select("source_id", "_b", "carry_in"))
+    bucketed = changes.withColumn("_b", arrival_bucket_of(arrival_bucket))
+    if carry is None:
+        # the carry aggregate re-reads only 3 columns of the source
+        # lineage (column pruning reaches the scan); persisting the
+        # full stream here costs more than the pruned re-scan at every
+        # tested scale. Callers that cannot afford ANY second source
+        # pass (streaming micro-batches with input metrics) persist the
+        # batch before calling.
+        w_carry = (Window.partitionBy("source_id").orderBy("_b")
+                   .rowsBetween(Window.unboundedPreceding, -1))
+        carry_df = (bucket_maxima(changes, arrival_bucket)
+                    .withColumn("carry_in", F.max("_bmax").over(w_carry))
+                    .select("source_id", "_b", "carry_in"))
+        bucketed = bucketed.join(F.broadcast(carry_df), ["source_id", "_b"])
+    elif carry:
+        lookup = F.create_map(*[
+            x for (src, cb), cmax in carry.items()
+            for x in (_carry_key(F.lit(src), F.lit(cb)),
+                      F.lit(cmax).cast("long"))])
+        bucketed = bucketed.withColumn(
+            "carry_in", lookup[_carry_key(F.col("source_id"), F.col("_b"))])
+    else:
+        bucketed = bucketed.withColumn("carry_in", F.lit(None).cast("long"))
     return (
         bucketed
         .withColumn("prev_in_bucket", F.max("commit_ts").over(w_in))
-        .join(F.broadcast(carry), ["source_id", "_b"])
         .withColumn("prev_max_ts",
                     F.greatest("carry_in", "prev_in_bucket"))
         .withColumn("dup_rank", F.row_number().over(w_dup))
@@ -147,12 +207,15 @@ def classify_disorder(changes: DataFrame,
     )
 
 
-def ordered_stream(changes: DataFrame) -> DataFrame:
+def ordered_stream(changes: DataFrame,
+                   carry: dict | None = None) -> DataFrame:
     """The emit-able stream: duplicates skipped, disorder quarantined
     (routed to a metric/dead-letter stream, not applied out of order).
     Returns only rows that participate in the ordered apply.
+    ``carry`` as in classify_disorder.
     """
-    return classify_disorder(changes).filter(F.col("order_status") == "ok")
+    return (classify_disorder(changes, carry=carry)
+            .filter(F.col("order_status") == "ok"))
 
 
 def source_watermarks(changes: DataFrame) -> DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,9 +31,11 @@ def wildcard_to_regex(pattern: str) -> str:
     return out + "$"
 
 
-def route_tables(changes: DataFrame,
-                 rules: Sequence[tuple[str, str, str, str]],
-                 db_col: str = "db", tbl_col: str = "tbl") -> DataFrame:
+def route_columns(rules: Sequence[tuple[str, str, str, str]],
+                  db_col: str = "db",
+                  tbl_col: str = "tbl") -> tuple[Column, Column]:
+    """The routed (target_db, target_tbl) of a row, as two columns over
+    its source names."""
     target_db = F.col(db_col)
     target_tbl = F.col(tbl_col)
     # build CASE from the last rule backwards so the FIRST rule wins.
@@ -42,6 +44,13 @@ def route_tables(changes: DataFrame,
             F.col(tbl_col).rlike(wildcard_to_regex(tbl_pat))
         target_db = F.when(m, F.lit(to_db)).otherwise(target_db)
         target_tbl = F.when(m, F.lit(to_tbl)).otherwise(target_tbl)
+    return target_db, target_tbl
+
+
+def route_tables(changes: DataFrame,
+                 rules: Sequence[tuple[str, str, str, str]],
+                 db_col: str = "db", tbl_col: str = "tbl") -> DataFrame:
+    target_db, target_tbl = route_columns(rules, db_col, tbl_col)
     return (changes
             .withColumn("target_db", target_db)
             .withColumn("target_tbl", target_tbl))

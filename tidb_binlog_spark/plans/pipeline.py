@@ -10,13 +10,14 @@ the optimizer advantage a hand-wired stage chain (the reference's
 channel-connected goroutines) cannot get.
 
 Stage order mirrors drainer/syncer.go:335-539:
-  order gate -> ignore-ts -> loopback -> allow/block -> event rules
+  order gate -> loopback -> ignore-ts -> allow/block -> event rules
   -> route -> pk-change split -> (safe mode) -> compact -> apply
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -70,31 +71,53 @@ class ReplicationConfig:
             raise ValueError("empty schema name in ignore-schemas config")
 
 
-def apply_filters_and_routes(df: DataFrame,
-                             cfg: ReplicationConfig) -> DataFrame:
-    """The config-driven filter/route stages shared by the batch plan
-    (build_pipeline) and the streaming SQL runner
-    (streaming.pipeline.run_sql_apply_stream(cfg=...)): ignore-ts,
-    loopback, allow/block, sync-ddl drop, event-kind rules, table
-    routing — everything between the order gate and the
-    compact/apply stage."""
+def row_mapping(df: DataFrame, cfg: ReplicationConfig):
+    """How the config maps a row to the sink: (keep, target_db,
+    target_tbl), all evaluated on the row's SOURCE db/tbl. ``keep`` is
+    the row-wise filters as one predicate, or None when there are none:
+    ignore-ts, allow/block, sync-ddl drop, event-kind rules. That is
+    every filter of apply_filters_and_routes but the loopback filter,
+    which drops whole txns. The targets are the routed names (the
+    source names when no rule matches)."""
+    keep = []
     if cfg.ignore_commit_ts:
-        df = filters.filter_ignore_commit_ts(df, cfg.ignore_commit_ts)
-    if cfg.loopback_mark:
-        df = batching.loopback_filter(df, *cfg.loopback_mark)
+        keep.append(~F.col("commit_ts").isin(list(cfg.ignore_commit_ts)))
     do_rules = list(cfg.do_tables or []) + \
         [(d, "") for d in (cfg.do_dbs or [])]
     ignore_rules = list(cfg.ignore_tables or []) + \
         [(s, "") for s in cfg.ignore_schemas]
     if do_rules or ignore_rules:
-        df = filters.filter_allow_block(df, do_rules or None, ignore_rules)
+        keep.append(filters.allow_block_predicate(do_rules or None,
+                                                  ignore_rules))
     if not cfg.sync_ddl and "op" in df.columns:
-        df = df.filter(F.col("op") != "DDL")
+        keep.append(F.col("op") != "DDL")
     if cfg.event_rules:
-        df = filters.filter_event_kinds(df, cfg.event_rules,
-                                        cfg.case_sensitive)
+        keep.append(filters.event_kinds_predicate(cfg.event_rules,
+                                                  cfg.case_sensitive))
+    target_db, target_tbl = router.route_columns(cfg.route_rules or [])
+    return (reduce(lambda a, b: a & b, keep) if keep else None,
+            target_db, target_tbl)
+
+
+def apply_filters_and_routes(df: DataFrame,
+                             cfg: ReplicationConfig) -> DataFrame:
+    """The config-driven filter/route stages shared by the batch plan
+    (build_pipeline) and the streaming SQL runner
+    (streaming.pipeline.run_sql_apply_stream(cfg=...)): loopback,
+    ignore-ts, allow/block, sync-ddl drop, event-kind rules, table
+    routing — everything between the order gate and the
+    compact/apply stage. The filters and routes are row_mapping's."""
+    if cfg.loopback_mark:
+        # the loopback filter drops whole txns, so it runs before a
+        # row-wise filter could drop their mark row; it commutes with
+        # ignore-ts, which drops whole txns too
+        df = batching.loopback_filter(df, *cfg.loopback_mark)
+    keep, target_db, target_tbl = row_mapping(df, cfg)
+    if keep is not None:
+        df = df.filter(keep)
     if cfg.route_rules:
-        df = router.route_tables(df, cfg.route_rules)
+        df = (df.withColumn("target_db", target_db)
+              .withColumn("target_tbl", target_tbl))
     return df
 
 

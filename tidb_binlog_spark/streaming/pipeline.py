@@ -154,15 +154,20 @@ class SqlBatchApplier:
     The relay WAL write runs in the background: it only has to land
     before the batch's first downstream side effect (relayer.WriteBinlog
     precedes loader input; nothing orders it before merging, ordering
-    or statement translation). The order gate, the batch census,
-    statement build and causality run while the WAL is written, and
-    every statement apply, DDL, checkpoint save, cache release and
-    return goes through the WAL barrier first — a failed WAL write
-    re-raises there, before anything reached the downstream.
+    or statement translation). The batch census, statement build and
+    causality run while the WAL is written, and every statement apply,
+    DDL, checkpoint save, cache release and return goes through the
+    WAL barrier first — a failed WAL write re-raises there, before
+    anything reached the downstream.
 
-    The driver learns everything it needs about a batch in ONE
-    collect (the census): the watermark, the DDL barriers and each
-    DML table's row count and commit-ts range."""
+    The driver learns what it needs about a DDL-free batch in ONE
+    collect (the census, over the raw batch): the watermark, the order
+    gate's carry, the DDL count and each DML table's row count and
+    commit-ts range. The order gate then runs as stages of the apply
+    job. A batch whose census counts a DDL row makes a second collect,
+    the gated DDL barriers. After a batch applies, the resume cursor
+    moves to its watermark, so every batch filters as a restart
+    would."""
 
     # DDL rows are collect()ed per batch to sequence barriers; DDL is
     # rare by nature, so this is bounded in any sane stream — the cap
@@ -211,57 +216,88 @@ class SqlBatchApplier:
                     if name != "PRIMARY" and set(uk_cols) <= set(cols))
         return cols, uks
 
-    def _census(self, fresh: DataFrame, ok: DataFrame):
-        """The batch's one driver round trip. Returns (watermark,
-        DDL rows in commit_ts order, {tbl: (rows, min commit_ts, max
-        commit_ts)} over the gated DML). The watermark is the max
-        commit_ts of the resume-filtered RAW batch — FAKE heartbeats
-        and gate-rejected rows count — and None when the batch lies
-        entirely at or below the cursor."""
-        from functools import reduce
+    def _census(self, fresh: DataFrame):
+        """The batch's one driver round trip, over the resume-filtered
+        RAW batch, before any order gate exists. Returns (watermark,
+        gate carry, DDL row count, {tbl: (rows, min commit_ts, max
+        commit_ts)}).
 
+        The watermark is the raw batch's max commit_ts — FAKE
+        heartbeats and rows the gate will reject count — and None when
+        the batch lies entirely at or below the cursor. The carry is
+        ordering.carry_from_maxima of the per-(source, arrival bucket)
+        maxima, so the gate derives none in its plan. The DDL count
+        (0 unless sync_ddl) and the per-table figures count the rows
+        that pass the config's row-wise filters, judged on their source
+        db/tbl, under their routed table name (plans.pipeline.row_mapping,
+        as the gated path), but before the gate; the loopback filter,
+        which drops whole txns, is left out. Gating and loopback only
+        drop rows, so these are upper bounds of the gated rows: a table
+        listed may have no gated row, and its range may be wider than
+        its gated rows'. meeting() and the causality max_edges only
+        need bounds.
+
+        The two small aggregates, per (source, bucket) and per table,
+        are the grouping sets of one aggregate: the batch is scanned
+        once, where a union of aggregates scans it once per branch."""
+        keep = F.col("op") != "FAKE"
+        target_tbl = F.col("tbl")
+        if self.cfg is not None:
+            from ..plans.pipeline import row_mapping
+            pred, _, target_tbl = row_mapping(fresh, self.cfg)
+            if pred is not None:
+                keep = keep & pred
+        # a row without a table has no statement to build
+        dml = keep & (F.col("op") != "DDL") & target_tbl.isNotNull()
+        ddl = keep & (F.col("op") == "DDL") & F.lit(self.sync_ddl)
+        cts = F.col("commit_ts")
+        rows = (fresh
+                .withColumn("_b", ordering.arrival_bucket_of())
+                .withColumn("_tbl", target_tbl)
+                .groupingSets([["source_id", "_b"], ["_tbl"]],
+                              "source_id", "_b", "_tbl")
+                .agg(F.grouping("_tbl").alias("per_bucket"),
+                     F.max(cts).alias("_bmax"),
+                     F.count(F.when(dml, 1)).alias("n"),
+                     F.min(F.when(dml, cts)).alias("lo"),
+                     F.max(F.when(dml, cts)).alias("hi"),
+                     F.count(F.when(ddl, 1)).alias("n_ddl"))
+                .collect())
+        maxima = [r for r in rows if r["per_bucket"]]
+        per_tbl = [r for r in rows if not r["per_bucket"]]
+        wm = max((r["_bmax"] for r in maxima), default=None)
+        tables = {r["_tbl"]: (r["n"], r["lo"], r["hi"])
+                  for r in per_tbl if r["n"]}
+        return (wm, ordering.carry_from_maxima(maxima),
+                sum(r["n_ddl"] for r in per_tbl), tables)
+
+    def _ddl_rows(self, ok: DataFrame) -> list:
+        """The gated DDL rows in commit_ts order — the batch's second
+        round trip, made only when the census counted a DDL row."""
         from ..operators import ddl as ddl_mod
-        parts = [fresh.agg(F.max("commit_ts").alias("commit_ts"))
-                      .withColumn("kind", F.lit("wm"))]
         cap = self.max_ddl_per_batch
-        if self.sync_ddl:
-            # limit(cap+1) bounds what ever reaches the driver; the
-            # overflow check turns a silent OOM into a clear error.
-            parts.append(ddl_mod.prep_for_apply(
-                ok.filter(F.col("op") == "DDL")
-                  .withColumn("ddl_sql", F.col("row_json")))
+        # limit(cap+1) bounds what ever reaches the driver; the
+        # overflow check turns a silent OOM into a clear error.
+        rows = (ddl_mod.prep_for_apply(
+                    ok.filter(F.col("op") == "DDL")
+                      .withColumn("ddl_sql", F.col("row_json")))
                 .select("commit_ts", "db", "tbl", "ddl_sql", "should_skip")
                 .limit(cap + 1)
-                .withColumn("kind", F.lit("ddl")))
-        # a row without a table has no statement to build
-        parts.append(ok.filter((F.col("op") != "DDL")
-                               & F.col("tbl").isNotNull())
-                     .groupBy("tbl")
-                     .agg(F.count(F.lit(1)).alias("n"),
-                          F.min("commit_ts").alias("lo"),
-                          F.max("commit_ts").alias("hi"))
-                     .withColumn("kind", F.lit("dml")))
-        rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                      parts).collect()
-        wm = next(r["commit_ts"] for r in rows if r["kind"] == "wm")
-        ddl_rows = sorted((r for r in rows if r["kind"] == "ddl"),
-                          key=lambda r: r["commit_ts"])
-        if len(ddl_rows) > cap:
+                .collect())
+        if len(rows) > cap:
             raise RuntimeError(
                 f"SqlBatchApplier: batch carries more than "
                 f"{cap} DDL events — refusing to collect a DDL "
                 f"storm onto the driver; split the stream or "
                 f"raise max_ddl_per_batch")
-        tables = {r["tbl"]: (r["n"], r["lo"], r["hi"])
-                  for r in rows if r["kind"] == "dml"}
-        return wm, ddl_rows, tables
+        return sorted(rows, key=lambda r: r["commit_ts"])
 
     def _apply_dml(self, seg: DataFrame, ckpt_ts: int, tables: dict,
                    wal: _WalWrite) -> None:
         """Order-gated DML sub-batch -> safe-mode rewrite -> one
         statement build per statement shape -> parallel apply.
-        ``tables`` maps each table that may have rows in ``seg`` to its
-        batch row count (from the census).
+        ``tables`` maps each table that may have rows in ``seg`` to an
+        upper bound of its batch row count (from the census).
 
         Shapes split two ways, as the loader's execDMLs does
         (executor.go:273-334): a shape with no sink unique key takes
@@ -379,16 +415,26 @@ class SqlBatchApplier:
             batch_df.unpersist()
 
     def _apply_gated(self, batch_df: DataFrame, wal: _WalWrite) -> None:
-        """Resume filter, order gate and routes, the census, then the
-        DML segments between DDL barriers."""
+        """Resume filter, the census, the order gate with the census's
+        carry and the routes, then the DML segments between DDL
+        barriers; last, the cursor moves to the batch watermark.
+
+        The gated frame is persisted and its DDL rows collected only
+        when the census counted a DDL row: a DDL-free batch makes one
+        collect, and its gate runs as stages of the apply job. A table
+        on the single path reads the gated rows twice (causality, then
+        apply), so it persists them too."""
         from ..sinks import jdbc
         catalog = self.catalog
         fresh = batch_df.filter(F.col("commit_ts") > self.resume_ts)
+        wm, carry, n_ddl, tables = self._census(fresh)
+        if wm is None:                  # batch fully below the cursor
+            return
         # FAKE heartbeats advance the watermark (the census reads the
         # raw batch) but must never reach the statement builder —
         # generate_sql has no case for them and would emit NULL
         # sql_text.
-        ok = (ordering.ordered_stream(fresh)
+        ok = (ordering.ordered_stream(fresh, carry=carry)
               .filter(F.col("op") != "FAKE"))
         if self.cfg is not None:
             from ..plans.pipeline import apply_filters_and_routes
@@ -398,11 +444,10 @@ class SqlBatchApplier:
                 ok = (ok.withColumn("db", F.col("target_db"))
                       .withColumn("tbl", F.col("target_tbl"))
                       .drop("target_db", "target_tbl"))
-        ok = ok.persist()
+        if n_ddl or any(self._table_shape(t)[1] for t in tables):
+            ok = ok.persist()
         try:
-            wm, ddl_rows, tables = self._census(fresh, ok)
-            if wm is None:              # batch fully below the cursor
-                return
+            ddl_rows = self._ddl_rows(ok) if n_ddl else []
             # DDL events (op = 'DDL', statement text in row_json) split
             # the batch into barriers: DML below the DDL applies first,
             # then the DDL runs downstream with the catalog evicted
@@ -441,6 +486,10 @@ class SqlBatchApplier:
                             meeting(lo), wal)
         finally:
             ok.unpersist()
+        # the next batch filters at the saved checkpoint, as a restart
+        # would: a late row at or below it must not overwrite a newer
+        # image
+        self.resume_ts = int(wm)
 
 
 def feed_sql_by_relay_if_needed(spark: SparkSession, relay, db_dir: str,
