@@ -41,77 +41,72 @@ def test_simhash_identical_and_pairs(spark):
     assert len(pairs) == 1 and pairs[0]["hamming"] == 0
 
 
-def test_simhash_votes_integer_form_matches_string(spark):
-    """r12 rewrite: the integer bit votes (shift+mask over pre-split
-    32-bit digest words) must produce the exact simhash the original
-    string-compare form defines, on unicode/empty/degenerate docs."""
-    d = docs_df(spark, [
-        "one two three four five six seven eight nine ten",
-        "日本語 トーク ン 化 と md5 votes",
-        "a", "a a a a a a a a", "x y z " * 40,
-        "MiXeD CaSe ToKeNs AnD punct-uation, here!"])
-    a = {r["doc_id"]: r["simhash"]
-         for r in dedup.simhash(d, votes="int").collect()}
-    b = {r["doc_id"]: r["simhash"]
-         for r in dedup.simhash(d, votes="str").collect()}
-    assert a == b
+def _duckdb_docs(rows, select: str) -> dict:
+    """Run the DuckDB oracle's ``select`` over a ``documents``
+    (doc_id, text) table holding ``rows``; {doc_id: value}."""
+    import duckdb
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    return dict(con.execute(select).fetchall())
 
 
 def test_simhash_np_engine_matches_expr(spark):
-    """r13 rewrite: the numpy mapInPandas batch fold (md5 once per
-    DISTINCT token, (V,64) bit-vote matrix, reduceat group-sum) must
-    be bit-identical to both expr engines — including NULL text
-    (expr: split(NULL) propagates to an EMPTY simhash string), empty
-    text, repeated tokens (occurrence counts weight the votes), and
-    multi-space runs."""
-    d = spark.createDataFrame(
-        [(0, "one two three four five six seven eight nine ten"),
-         (1, "日本語 トーク ン 化 と md5 votes"),
-         (2, None), (3, ""), (4, "  pad  ded   "),
-         (5, "a a a a a a a b"), (6, "b a"), (7, "x y z " * 40)],
-        "doc_id long, text string")
-    a = {r["doc_id"]: r["simhash"]
-         for r in dedup.simhash(d, votes="int").collect()}
-    b = {r["doc_id"]: r["simhash"]
-         for r in dedup.simhash(d, votes="np").collect()}
-    s = {r["doc_id"]: r["simhash"]
-         for r in dedup.simhash(d, votes="str").collect()}
-    assert a == b == s
-    assert a[2] == "" and a[3] == "0" * 64
+    """The numpy batch fold (md5 once per DISTINCT token, (V,64)
+    bit-vote matrix, reduceat group-sum) equals the DuckDB oracle's
+    SimHash expression (osql._SIMHASH over osql.TOKS) — on unicode,
+    empty text, repeated tokens (occurrence counts weight the votes)
+    and multi-space runs. NULL text is the one doc where they differ:
+    the engine gives an EMPTY simhash string, the oracle 64 zeros."""
+    from tidb_binlog_spark.functions import oracle_sql as osql
+    rows = [(0, "one two three four five six seven eight nine ten"),
+            (1, "日本語 トーク ン 化 と md5 votes"),
+            (2, None), (3, ""), (4, "  pad  ded   "),
+            (5, "a a a a a a a b"), (6, "b a"), (7, "x y z " * 40)]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r["doc_id"]: r["simhash"] for r in dedup.simhash(d).collect()}
+    want = _duckdb_docs(rows, osql.DEDUP_SIMHASH)
+    assert got[2] == "" and want[2] == "0" * 64
+    assert got[3] == "0" * 64
+    del got[2], want[2]
+    assert got == want
 
 
 def test_minhash_np_engine_matches_expr(spark):
-    """r14 rewrite: the numpy signature fold (md5 once per DISTINCT
-    shingle, uint32 lane keys from digest nibbles, minimum.reduceat)
-    must be bit-identical to the expr engine — including the <3-token
-    fallback (shingles = [text]), empty text, NULL text (expr:
-    array_min over [NULL] -> NULL lanes), duplicate shingles (min
-    over multiset == min over set), unicode, and the shingle_frame
-    path with array_distinct'd inputs."""
-    d = spark.createDataFrame(
-        [(0, "one two three four five six seven eight nine ten"),
-         (1, "日本語 トーク ン 化 と md5 シングル 化 と md5"),
-         (2, None), (3, ""), (4, "only two"),
-         (5, "a b c a b c a b c a b c"), (6, "x y z " * 40),
-         (7, "  pad  ded   tokens here  ")],
-        "doc_id long, text string")
-    a = {r["doc_id"]: r["sig"]
-         for r in dedup.minhash_signatures(d, engine="expr").collect()}
-    b = {r["doc_id"]: r["sig"]
-         for r in dedup.minhash_signatures(d, engine="np").collect()}
-    assert a == b
-    assert b[2] == [None] * 12          # NULL text -> NULL lanes
-    assert all(len(s) == 8 for s in b[0])
-    # shingle_frame path: both engines over pre-materialized arrays
+    """The numpy signature fold (md5 once per DISTINCT shingle, uint32
+    lane keys from digest nibbles, minimum.reduceat) equals the DuckDB
+    oracle's signature expression (osql._SIG over osql.SHINGLES) —
+    including the <3-token fallback (shingles = [text]), empty text,
+    NULL text (NULL lanes), duplicate shingles (min over multiset ==
+    min over set), unicode, and the shingle_frame path with
+    array_distinct'd inputs."""
+    from tidb_binlog_spark.functions import oracle_sql as osql
+    rows = [(0, "one two three four five six seven eight nine ten"),
+            (1, "日本語 トーク ン 化 と md5 シングル 化 と md5"),
+            (2, None), (3, ""), (4, "only two"),
+            (5, "a b c a b c a b c a b c"), (6, "x y z " * 40),
+            (7, "  pad  ded   tokens here  ")]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _duckdb_docs(rows, f"""
+        WITH toks AS (SELECT doc_id, text, {osql.TOKS} AS toks
+                      FROM documents),
+        sh AS (SELECT doc_id, {osql.SHINGLES} AS shingles FROM toks),
+        bh AS (SELECT doc_id,
+                      list_transform(shingles, s -> md5(s)) AS base_hashes
+               FROM sh)
+        SELECT doc_id, {osql._SIG} AS sig FROM bh""")
+    got = {r["doc_id"]: r["sig"]
+           for r in dedup.minhash_signatures(d).collect()}
+    assert got == want
+    assert got[2] == [None] * 12        # NULL text -> NULL lanes
+    assert all(len(s) == 8 for s in got[0])
+    # shingle_frame path over pre-materialized, de-duplicated arrays
     shf = dedup.with_shingles(d.select("doc_id", "text")) \
         .select("doc_id", F.array_distinct("shingles").alias("shingles"))
-    a2 = {r["doc_id"]: r["sig"]
-          for r in dedup.minhash_signatures(
-              d, shingle_frame=shf, engine="expr").collect()}
-    b2 = {r["doc_id"]: r["sig"]
-          for r in dedup.minhash_signatures(
-              d, shingle_frame=shf, engine="np").collect()}
-    assert a2 == b2 == a                # dedup of shingles is a no-op
+    got2 = {r["doc_id"]: r["sig"]
+            for r in dedup.minhash_signatures(
+                d, shingle_frame=shf).collect()}
+    assert got2 == want                 # dedup of shingles is a no-op
 
 
 def test_bucket_cap_default_is_exact_and_cap_is_loud(spark):

@@ -241,27 +241,60 @@ def test_fixture_encode_falls_back_on_wide_col_ids():
             wide, int(seq[i]), int(pk[i]), float(val[i]), str(ks[i]))
 
 
-def test_stream_engines_agree(spark):
-    """Spark-level twin: decode_insert_stream(engine=numpy) ==
-    engine=rows on a mixed-format stream."""
+def _ref_decode(mode, info, row):
+    """Per-row reference for one decoded stream row (None: no row)."""
+    if mode == "update":
+        old, new = kv.decode_update_row(info, row)
+        if not old and not new:
+            return None
+        return tuple([kv._surface_value(old[c.col_id], c.kind)
+                      for c in info.columns]
+                     + [kv._surface_value(new[c.col_id], c.kind)
+                        for c in info.columns])
+    datums = (kv.decode_insert_row if mode == "insert"
+              else kv.decode_delete_row)(info, row)
+    return tuple(kv._surface_value(datums[c.col_id], c.kind)
+                 for c in info.columns)
+
+
+@pytest.mark.parametrize("mode, info, row_fixture", [
+    ("insert", kv.KVTableInfo(columns=INFO.columns[:6], pk_handle_id=1),
+     kn._row_insert_fixture),
+    ("update", kv.KVTableInfo(columns=INFO.columns[:3], pk_handle_id=1),
+     kn._row_update_fixture),
+    ("delete", kv.KVTableInfo(columns=INFO.columns[:3]),
+     kn._row_delete_fixture),
+], ids=["insert", "update", "delete"])
+def test_stream_engines_agree(spark, mode, info, row_fixture):
+    """Spark-level parity: encode_<mode>_stream emits the per-row
+    fixture's bytes, and decode_<mode>_stream equals the per-row
+    decoders on the mixed-format stream. The update stream also gets
+    an EMPTY row value, which the reference skips (no output row)."""
     from pyspark.sql import functions as F
-    kv_info = kv.KVTableInfo(columns=INFO.columns[:6], pk_handle_id=1)
+    encode = getattr(kv, f"encode_{mode}_stream")
+    decode = getattr(kv, f"decode_{mode}_stream")
     ch = spark.range(2000).select(
         F.col("id").alias("arrival_seq"),
         (F.col("id") * 7 + 1).alias("pk"),
         (F.col("id") * 1.5).alias("val"),
         F.concat(F.lit("k"), (F.col("id") % 97).cast("string"))
         .alias("k"))
-    raw = kv.encode_insert_stream(ch, kv_info)
-    a = kv.decode_insert_stream(raw, kv_info, engine="numpy") \
-        .orderBy("arrival_seq").collect()
-    b = kv.decode_insert_stream(raw, kv_info, engine="rows") \
-        .orderBy("arrival_seq").collect()
-    assert a == b
-    raw_rows = kv.encode_insert_stream(ch, kv_info, engine="rows")
-    c = kv.decode_insert_stream(raw_rows, kv_info, engine="numpy") \
-        .orderBy("arrival_seq").collect()
-    assert a == c
+    raw = encode(ch, info)
+    if mode == "update":
+        raw = raw.unionByName(spark.createDataFrame(
+            [(2000, bytearray())], "arrival_seq long, row_bytes binary"))
+    raw_rows = raw.orderBy("arrival_seq").collect()
+    src = ch.orderBy("arrival_seq").collect()
+    assert [bytes(r["row_bytes"]) for r in raw_rows[:2000]] == [
+        row_fixture(info, r["arrival_seq"], r["pk"], r["val"], r["k"])
+        for r in src]
+    want = [(r["arrival_seq"],) + ref for r in raw_rows
+            if (ref := _ref_decode(mode, info, bytes(r["row_bytes"])))
+            is not None]
+    got = [tuple(r) for r in
+           decode(raw, info).orderBy("arrival_seq").collect()]
+    assert len(want) == 2000
+    assert got == want
 
 
 def test_v2_large_format_decode_parity():

@@ -22,29 +22,24 @@ def rows(df, *cols):
 
 # ---- compaction (pkg/loader/merge.go rule table) ---------------------------
 
-def test_merge_insert_update_is_insert(spark):
-    ch = make_changes(spark, [(1, "s0", 10, "I", 1), (2, "s0", 20, "U", 1)])
-    out = compaction.merged_op(ch).collect()[0]
-    assert out["merged_op"] == "I"
-    assert out["final_val"] == 1.0
-
-
-def test_merge_update_delete_is_delete(spark):
-    ch = make_changes(spark, [(1, "s0", 10, "U", 1), (2, "s0", 20, "D", 1)])
-    assert compaction.merged_op(ch).collect()[0]["merged_op"] == "D"
-
-
-def test_merge_delete_insert_is_insert(spark):
-    ch = make_changes(spark, [(1, "s0", 10, "D", 1), (2, "s0", 20, "I", 1)])
-    assert compaction.merged_op(ch).collect()[0]["merged_op"] == "I"
-
-
-def test_merge_update_update_keeps_first_old_last_new(spark):
-    ch = make_changes(spark, [(1, "s0", 10, "U", 1, 0, 5.0),
-                              (2, "s0", 20, "U", 1, 0, 9.0)])
-    out = compaction.merged_op(ch).collect()[0]
-    assert out["merged_op"] == "U"
-    assert out["first_val"] == 5.0 and out["final_val"] == 9.0
+@pytest.mark.parametrize("events, want", [
+    # insert + update -> insert with the last new image, no old image
+    ([(1, 10, "I", 1, {"v": "1"}, None),
+      (2, 20, "U", 1, {"v": "2"}, {"v": "1"})], ("I", "2", None)),
+    # update + delete -> delete
+    ([(1, 10, "U", 1, {"v": "2"}, {"v": "1"}),
+      (2, 20, "D", 1, {"v": "2"}, None)], ("D", "2", None)),
+    # delete + insert -> insert
+    ([(1, 10, "D", 1, {"v": "1"}, None),
+      (2, 20, "I", 1, {"v": "3"}, None)], ("I", "3", None)),
+    # update + update -> update (first old image, last new image)
+    ([(1, 10, "U", 1, {"v": "5"}, {"v": "4"}),
+      (2, 20, "U", 1, {"v": "9"}, {"v": "5"})], ("U", "9", "4")),
+], ids=["I+U->I", "U+D->D", "D+I->I", "U+U->U"])
+def test_compact_wide_merge_rule(spark, events, want):
+    out = compaction.compact_wide(_wide_rows(spark, events)).collect()
+    assert [(r["merged_op"], r["final_val"], r["first_old_val"])
+            for r in out] == [want]
 
 
 def test_apply_snapshot_drops_deleted_keys(spark):

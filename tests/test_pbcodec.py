@@ -416,3 +416,29 @@ def test_scan_records_reports_first_corruption_in_offset_order():
     with pytest.raises(ValueError, match=f"magic mismatch at offset "
                                          f"{off_magic}"):
         pb.scan_records(bytes(blob))
+
+
+def test_scan_records_names_the_offset_of_a_torn_record():
+    """A dump cut inside a record's header, payload or CRC raises
+    ValueError naming that record's offset, from both readers; a bad
+    CRC at an earlier offset still wins over the tear."""
+    import pytest
+
+    payloads = [pb.encode_binlog(10 + i, [pb.encode_event(
+        "d", "t", pb.INSERT,
+        [pb.encode_column("pk", 8, "bigint", i, "long")])])
+        for i in range(2)]
+    blob = b"".join(pb.frame_record(p) for p in payloads)
+    second = 16 + len(payloads[0])
+    cuts = {5: 0, second - 8: 0, second - 1: 0, second + 5: second,
+            second + 13: second, len(blob) - 1: second}
+    for cut, off in cuts.items():
+        for read in (lambda b: list(pb.iter_records(b)), pb.scan_records):
+            with pytest.raises(ValueError,
+                               match=f"^truncated record at offset {off}$"):
+                read(blob[:cut])
+    bad = bytearray(blob[:len(blob) - 1])
+    bad[14] ^= 0xFF                 # first record's payload -> CRC mismatch
+    for read in (lambda b: list(pb.iter_records(b)), pb.scan_records):
+        with pytest.raises(ValueError, match="^crc mismatch at offset 0$"):
+            read(bytes(bad))

@@ -55,33 +55,6 @@ def test_random_replay_through_full_pipeline(spark):
     assert got == _simulate(rows)
 
 
-def test_merged_op_rules_randomized(spark):
-    """merged_op against a direct implementation of the merge.go rule
-    table, over random per-PK op sequences."""
-    rng = random.Random(7)
-    rows, cts = [], 0
-    for i in range(200):
-        cts += 1
-        rows.append((i, "s0", cts, rng.choice(["I", "U", "D"]), rng.randrange(8)))
-    ch = make_changes(spark, rows)
-    got = {r["pk"]: r["merged_op"]
-           for r in compaction.merged_op(ordering.ordered_stream(ch)).collect()}
-
-    seqs: dict[int, list[str]] = {}
-    for _, _, cts_, op, pk in sorted(rows, key=lambda r: r[2]):
-        seqs.setdefault(pk, []).append(op)
-    for pk, seq in seqs.items():
-        last_d = max((i for i, o in enumerate(seq) if o == "D"), default=None)
-        last_i = max((i for i, o in enumerate(seq) if o == "I"), default=None)
-        if seq[-1] == "D":
-            want = "D"
-        elif last_i is not None and (last_d is None or last_i > last_d):
-            want = "I"
-        else:
-            want = "U"
-        assert got[pk] == want, f"pk {pk}: {seq} -> {got[pk]} != {want}"
-
-
 def test_compact_wide_stitching_randomized(spark):
     """compact_wide's whole-map stitch rules (merge.go:69-127 over
     Values/OldValues) against a direct simulation: final image = last

@@ -1,7 +1,7 @@
 """Plan contracts: the properties SCALING.md claims, asserted on the
 actual physical plans — pushdown reaches the scan, small dims
-broadcast, the CDC hot path contains no Python, salting preserves
-results, and TOML config round-trips.
+broadcast, the CDC hot path contains no Python, and TOML config
+round-trips.
 """
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ import random
 from pyspark.sql import functions as F
 
 from tests.conftest import make_changes
-from tidb_binlog_spark.operators import compaction, ordering, skew
 from tidb_binlog_spark.plans import config as cfgmod
 from tidb_binlog_spark.session import load_tables
 
@@ -46,22 +45,6 @@ def test_cdc_pipeline_is_pure_jvm(spark):
     for q in ["cdc_snapshot_apply", "cdc_full_pipeline", "sink_sql_generation"]:
         plan = _plan(m.queries()[q](spark, SF))
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, q
-
-
-def test_salted_agg_equals_plain(spark):
-    rng = random.Random(3)
-    # i // 2 + 1 produces tied commit_ts pairs — the tie must break
-    # identically in salted partials and the plain aggregation
-    rows = [(i, "s0", i // 2 + 1, rng.choice("IUD"), rng.randrange(4))
-            for i in range(200)]
-    ch = make_changes(spark, rows)
-    salted = skew.salted_last_image_count(ch)
-    plain = ch.groupBy("db", "tbl", "pk").agg(
-        F.count(F.lit(1)).alias("n_ops"),
-        F.max("commit_ts").alias("last_ts"),
-        F.max(F.struct("commit_ts", "arrival_seq", "op")).getField("op")
-         .alias("last_op"))
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
 
 
 def test_toml_config_roundtrip(spark, tmp_path):
@@ -297,32 +280,6 @@ def test_contamination_broadcasts_benchmark(spark):
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     plan = _plan(curation.contamination(corpus, bench))
     assert "BroadcastHashJoin" in plan
-
-
-def test_bulk_batches_two_phase_matches_global_rank(spark):
-    """bulk_delete_replace's per-table batch numbering must equal the
-    single-window global rank while computing it over pk buckets."""
-    from tidb_binlog_spark.sinks import sqlgen
-    rows = [("d0", "t0" if i % 3 else "t1", "R" if i % 4 else "D",
-             i * 3, float(i)) for i in range(400)]
-    comp = spark.createDataFrame(
-        rows, "db string, tbl string, op string, pk long, val double")
-    got = sqlgen.bulk_delete_replace(comp, batch_size=16,
-                                     pk_bucket_width=128)
-    from pyspark.sql import Window
-    w = Window.partitionBy("db", "tbl", "op").orderBy("pk")
-    ranked = comp.withColumn(
-        "batch_no", F.floor((F.row_number().over(w) - 1) / 16).cast("int"))
-    vt = F.concat(F.lit("("), F.concat_ws(
-        ", ", F.col("pk").cast("string"), F.col("val").cast("string")),
-        F.lit(")"))
-    want = (ranked.groupBy("db", "tbl", "op", "batch_no")
-            .agg(F.concat_ws(", ", F.array_sort(F.collect_list(vt)))
-                 .alias("values_list"),
-                 F.count(F.lit(1)).alias("n_rows")))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    # multiple pk buckets actually participated
-    assert comp.select(F.floor(F.col("pk") / 128)).distinct().count() > 1
 
 
 def test_spread_noop_on_multi_split_input(spark):
@@ -752,38 +709,6 @@ def test_tfidf_doc_major_np_matches_expr(spark, monkeypatch):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        "65536")
-
-
-def test_replicated_skew_join_equals_plain_join(spark):
-    """replicated_skew_join: identical rows to the plain equi-join
-    (inner and left) while spreading a hot key over n_salts
-    sub-partitions."""
-    from tidb_binlog_spark.operators import skew
-
-    big = spark.createDataFrame(
-        [(1, i) for i in range(500)] + [(2, 1000), (3, 2000)],
-        "k int, payload int")           # k=1 is the hot key
-    small = spark.createDataFrame(
-        [(1, "one"), (2, "two"), (9, "nine")], "k int, name string")
-
-    plain = big.join(small, "k").select("k", "payload", "name")
-    salted = skew.replicated_skew_join(big, small, "k", n_salts=8) \
-                 .select("k", "payload", "name")
-    assert sorted(map(tuple, salted.collect())) == \
-           sorted(map(tuple, plain.collect()))
-
-    plain_l = big.join(small, "k", "left").select("k", "payload", "name")
-    salted_l = skew.replicated_skew_join(big, small, "k", n_salts=8,
-                                         how="left") \
-                   .select("k", "payload", "name")
-    assert sorted(map(tuple, salted_l.collect()),
-                  key=lambda t: (t[0], t[1], str(t[2]))) == \
-           sorted(map(tuple, plain_l.collect()),
-                  key=lambda t: (t[0], t[1], str(t[2])))
-    # the hot key's rows really carry n_salts distinct sub-keys
-    n_sub = (skew.with_salt(big.filter("k = 1"), 8)
-             .select("_salt").distinct().count())
-    assert n_sub == 8
 
 
 def test_r6_snapshot_pushdown(spark):

@@ -6,10 +6,11 @@ Scale design:
 - MinHash/LSH turns the O(n^2) pair problem into per-(band, bucket)
   self-joins — the shuffle is keyed on the band hash, so skew is
   bounded by bucket size, not corpus size;
-- SimHash pairs join on 8-bit chunk equality (pigeonhole: hamming<=3
-  over 32 bits guarantees one equal chunk);
-- everything is Catalyst expressions (md5 / transform / aggregate):
-  no Python in the hot path, whole-stage codegen end to end.
+- SimHash pairs join on 16-bit chunk equality (pigeonhole: hamming<=3
+  over 64 bits guarantees one equal chunk);
+- the SimHash and MinHash signature passes are map-only numpy batch
+  folds (md5 once per distinct token/shingle of an Arrow batch); the
+  rest is Catalyst expressions.
 
 Determinism: md5 hex strings as the hash primitive and *string* mins
 for the signatures, so the DuckDB oracle matches bit-for-bit.
@@ -100,11 +101,8 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 def _minhash_signatures_np(src: DataFrame, k: int,
                            has_shingles: bool) -> DataFrame:
-    """numpy batch engine for :func:`minhash_signatures` (the
-    _simhash_np treatment applied to the signature pass, r14, guide
-    §4.2 — at the 100x dir the expr form's 12 substring+array_min
-    passes over the per-shingle digests were 27-31 s of the 25 s
-    minhash row): one Arrow batch -> shingles (Python twin of
+    """The signature pass of :func:`minhash_signatures` as a numpy
+    batch fold: one Arrow batch -> shingles (Python twin of
     text.TOKENS + SHINGLES when fed raw text), factorize to the
     batch's DISTINCT shingles, md5 once per distinct, turn each
     digest into k uint32 lane keys with byte/nibble arithmetic
@@ -113,7 +111,7 @@ def _minhash_signatures_np(src: DataFrame, k: int,
     lowercase hex EQUALS numeric order of that uint32), fold each
     doc's shingles with one minimum.reduceat per batch, and format
     the winning keys back to the identical 8-hex-char strings via
-    one hexlify pass. Values are bit-identical to the expr engine
+    one hexlify pass. Values equal the DuckDB oracle's osql._SIG
     (pinned by tests/test_functions.py::
     test_minhash_np_engine_matches_expr, including the <3-token,
     empty-text and NULL-text fallbacks)."""
@@ -203,8 +201,7 @@ def _minhash_signatures_np(src: DataFrame, k: int,
 
 
 def minhash_signatures(docs: DataFrame, k: int = 12,
-                       shingle_frame: DataFrame | None = None,
-                       engine: str = "np") -> DataFrame:
+                       shingle_frame: DataFrame | None = None) -> DataFrame:
     """k-permutation MinHash signature per doc.
 
     One md5 per shingle; permutation j orders shingles by an 8-hex-char
@@ -212,8 +209,8 @@ def minhash_signatures(docs: DataFrame, k: int = 12,
     orderings for the price of a single digest pass (12x fewer md5
     calls than hashing per permutation; at 100 TB the signature pass is
     the dominant linear cost). The signature element is the
-    *lexicographic min* slice — an order statistic identical in any
-    engine.
+    *lexicographic min* slice — an order statistic, so the DuckDB
+    oracle (osql._SIG over osql.SHINGLES) states the same values.
 
     Pass ``shingle_frame`` (a (doc_id, shingles) frame, typically
     persisted) when shingles are already materialized — multi-signal
@@ -221,30 +218,13 @@ def minhash_signatures(docs: DataFrame, k: int = 12,
     and feed BOTH the signature pass and the exact-Jaccard verifier
     from it, instead of re-deriving shingles per signal.
 
-    ``engine`` picks the implementation ("np"/"expr"; default "np" —
-    the numpy batch fold, r14; the expr form is retained as the parity
-    oracle, exactly the simhash engine arrangement). Values are identical across engines,
-    so every consumer's oracle is unchanged."""
-    if engine == "np":
-        from .text import spread
-        if shingle_frame is not None:
-            src, has = shingle_frame.select("doc_id", "shingles"), True
-        else:
-            src, has = spread(docs).select("doc_id", "text"), False
-        return _minhash_signatures_np(src, k, has)
-    # one digest per shingle inline (shingle vocab is nearly as large
-    # as the corpus, so a distinct+join would shuffle more than it
-    # saves — unlike simhash's word vocab); k orderings via substring
-    # slices of that digest.
-    base = "transform(shingles, s -> md5(s))"
-    sig = (f"transform(sequence(0, {k - 1}), "
-           f"j -> array_min(transform(base_hashes, "
-           f"h -> substring(h, 1 + (j * 5) % 24, 8))))")
-    sh = shingle_frame if shingle_frame is not None else with_shingles(docs)
-    return (sh
-            .withColumn("base_hashes", F.expr(base))
-            .withColumn("sig", F.expr(sig))
-            .select("doc_id", "sig"))
+    Runs as the numpy batch fold :func:`_minhash_signatures_np`."""
+    from .text import spread
+    if shingle_frame is not None:
+        src, has = shingle_frame.select("doc_id", "shingles"), True
+    else:
+        src, has = spread(docs).select("doc_id", "text"), False
+    return _minhash_signatures_np(src, k, has)
 
 
 def minhash_lsh_pairs(docs: DataFrame, k: int = 12, bands: int = 4,
@@ -288,47 +268,19 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 12, bands: int = 4,
 SIMHASH_BITS = 64
 
 
-
-
-# +-1 votes for all 64 bits of token digest — two bits per hex digit:
-# bits 1..32 are each digit's top bit (>= '8'), bits 33..64 each
-# digit's second bit (digit & 4). Integer form (r12): the digest is
-# pre-split into four 32-bit words `ws`; vote q reads one bit with a
-# shift+mask instead of a substring + string compare — identical
-# values to the original string form (pinned by
-# tests/test_functions.py::test_simhash_votes_integer_form_matches_string),
-# ~2x cheaper per token at the 64-votes-per-occurrence hot path.
-_WORDS32 = ("transform(sequence(0, 3), i -> "
-            "CAST(conv(substring(h, 1 + 8 * i, 8), 16, 10) AS BIGINT))")
-_VOTES64_INT = (
-    "transform(sequence(0, 63), q -> "
-    "CAST(2 * (shiftright(element_at(ws, CAST((q % 32) DIV 8 AS INT) + 1), "
-    "CAST((7 - (q % 32) % 8) * 4 + IF(q < 32, 3, 2) AS INT)) & 1) - 1 "
-    "AS INT))")
-
-# the original string-compare form, kept as the readable spec of the
-# vote definition (and the A/B baseline for the integer rewrite)
-_VOTES64_STR = (
-    "transform(sequence(1, 64), p -> IF(p <= 32, "
-    "IF(substring(h, p, 1) >= '8', 1, -1), "
-    "IF(substring(h, p - 32, 1) IN "
-    "('4','5','6','7','c','d','e','f'), 1, -1)))")
-
-
 def _simhash_np(docs: DataFrame) -> DataFrame:
-    """numpy batch engine for :func:`simhash` (the kvcodec_np pattern
-    applied to the vote fold, VERDICT r12 item 3): one Arrow batch ->
-    tokenize (same space-split as text.TOKENS), factorize to the
-    batch's DISTINCT vocabulary, md5 once per distinct token (the SQL
-    fold hashes every OCCURRENCE), turn the 16-byte digests into a
-    (vocab, 64) +-1 bit-vote matrix with nibble shifts, and fold each
-    doc's occurrence counts through it with one reduceat group-sum.
-    Values are bit-identical to the expr engines (pinned by
+    """The vote fold of :func:`simhash` as a numpy batch fold: one
+    Arrow batch -> tokenize (same space-split as text.TOKENS),
+    factorize to the batch's DISTINCT vocabulary, md5 once per
+    distinct token, turn the 16-byte digests into a (vocab, 64) +-1
+    bit-vote matrix with nibble shifts, and fold each doc's occurrence
+    counts through it with one reduceat group-sum. Values equal the
+    DuckDB oracle's osql._SIMHASH except on NULL text (pinned by
     tests/test_functions.py::test_simhash_np_engine_matches_expr).
 
-    Scale shape: map-only like the expr form (zero shuffle); per-batch
-    memory is bounded by chunking the vote columns (16 at a time), so
-    a dense batch never materializes pairs x 64 int64."""
+    Scale shape: map-only (zero shuffle); per-batch memory is bounded
+    by chunking the vote columns (16 at a time), so a dense batch
+    never materializes pairs x 64 int64."""
     import pandas as pd
 
     from .text import spread
@@ -382,8 +334,8 @@ def _simhash_np(docs: DataFrame) -> DataFrame:
             chars = np.where(sums > 0, "1", "0").astype("U1")
             bits = np.ascontiguousarray(chars) \
                 .view(f"U{SIMHASH_BITS}").ravel().astype(object)
-            # NULL text: the expr engines' split(NULL) propagates to an
-            # empty simhash string — match that, not all-zero bits
+            # NULL text surfaces as an empty simhash string, not as
+            # all-zero bits (the oracle's value for it)
             null_text = np.fromiter(
                 (not isinstance(x, str) for x in pdf["text"]), bool, D)
             bits[null_text] = ""
@@ -394,56 +346,23 @@ def _simhash_np(docs: DataFrame) -> DataFrame:
             .mapInPandas(fold, schema="doc_id long, simhash string"))
 
 
-def simhash(docs: DataFrame, votes: str = "np") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """64-bit SimHash over word unigrams: bit p is the sign of the sum
-    of +-1 votes, where token t votes by bit p of its md5 fingerprint
-    (two bits per hex digit — see _VOTES64_STR for the spec form).
-    Emitted as a '0'/'1' string so engines agree exactly.
+    of +-1 votes, where token t votes by bit p of its md5 fingerprint,
+    two bits per hex digit: bits 1..32 are each digit's top bit
+    (digit >= '8'), bits 33..64 each digit's second bit (digit & 4).
+    Emitted as a '0'/'1' string, the form the DuckDB oracle
+    (osql.DEDUP_SIMHASH) states.
 
     64 bits (not 32) so the banded candidate keys in simhash_pairs have
     a 16-bit (65536-way) keyspace per chunk — at corpus scale a 256-way
     key would collapse into O(n^2/256) candidate pairs.
 
-    Shape: ZERO-SHUFFLE map-only projection — hash the doc's tokens
-    once into an array, then ONE fold over it accumulates all 64
-    per-bit sums in an array accumulator (zip_with add). Evolution,
-    each step bit-identical and measured at sf0.1 warm:
-    explode+vocab-join+64-col groupBy (2.0s, shuffles) -> 64 separate
-    array folds (1.1s, zero shuffle) -> single-pass fold over string
-    votes (0.4s) -> integer bit votes over pre-split 32-bit words
-    (r12: the sweep's worst amortizer at 56x/100x was this fold's 64
-    substrings per token occurrence) -> numpy batch fold (r13 default,
-    :func:`_simhash_np`): sf10 7.3s vs 30.6s for the int expr form,
-    sweep ratio 37.1x -> 10.5x, because md5 runs once per DISTINCT
-    token and the vote fold is one reduceat instead of a per-occurrence
-    64-lane lambda. At 100 TB every form is map-only and scales with
-    executor count with no network at all. ``votes`` picks the engine
-    ("np"/"int"/"str"; default "np" — the expr forms are retained as
-    parity oracles). The DuckDB oracle (osql.DEDUP_SIMHASH) states the
-    same per-bit sums — the VALUES are identical across all engines,
-    so the oracle is unchanged."""
-    from .text import with_tokens
-    if votes == "np":
-        return _simhash_np(docs)
-    toks = with_tokens(docs)
-    if votes == "int":
-        hashes = toks.select(
-            "doc_id",
-            F.expr("transform(toks, t -> "
-                   f"{_WORDS32.replace('(h,', '(md5(t),')})").alias("hws"))
-        sums = hashes.select("doc_id", F.expr(
-            f"aggregate(hws, array_repeat(0, {SIMHASH_BITS}), "
-            f"(acc, ws) -> zip_with(acc, {_VOTES64_INT}, (a, v) -> a + v))"
-        ).alias("s"))
-    else:
-        hashes = toks.select(
-            "doc_id", F.expr("transform(toks, t -> md5(t))").alias("hs"))
-        sums = hashes.select("doc_id", F.expr(
-            f"aggregate(hs, array_repeat(0, {SIMHASH_BITS}), "
-            f"(acc, h) -> zip_with(acc, {_VOTES64_STR}, (a, v) -> a + v))"
-        ).alias("s"))
-    bits = F.expr("concat_ws('', transform(s, x -> IF(x > 0, '1', '0')))")
-    return sums.select("doc_id", bits.alias("simhash"))
+    Shape: ZERO-SHUFFLE map-only numpy batch fold
+    (:func:`_simhash_np`): md5 runs once per DISTINCT token of a batch
+    and the vote fold is one reduceat, so at 100 TB it scales with
+    executor count with no network at all."""
+    return _simhash_np(docs)
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 6,

@@ -926,70 +926,51 @@ def _surface_value(v, kind: str):
     return v
 
 
-def _one_image_stream(raw, info: KVTableInfo, key_cols, row_decode,
-                      engine: str = "numpy"):
+def _one_image_stream(raw, info: KVTableInfo, key_cols, mode: str):
     """Shared mapInPandas wrapper for the single-image decodes
-    (insert: handle prefix + body; delete: body only): one typed
-    column per schema column, key_cols carried through, one Python
-    invocation per Arrow batch.
-
-    engine="numpy" (default) runs the kvcodec_np lockstep batch
-    decoder — same surface values at numpy speed; engine="rows" keeps
-    the per-row loop, retained as the parity oracle exactly like the
-    pbcodec writer's row path (tests pin the two equal)."""
+    (``mode`` "insert": handle prefix + body; "delete": body only):
+    one typed column per schema column, key_cols carried through, one
+    kvcodec_np lockstep batch decode per Arrow batch. The batch decoder
+    hands rows it cannot decode in lockstep to the per-row codecs."""
     import pandas as pd
 
-    names = [c.name for c in info.columns]
     schema = ", ".join([f"{k} long" for k in key_cols]
                        + [f"{c.name} {_spark_type(c.kind)}"
                           for c in info.columns])
-    mode = ("insert" if row_decode is decode_insert_row else "delete")
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if engine == "numpy":
-            from . import kvcodec_np
-            batch_fn = (kvcodec_np.decode_batch_insert if mode == "insert"
-                        else kvcodec_np.decode_batch_delete)
+        from . import kvcodec_np
+        batch_fn = (kvcodec_np.decode_batch_insert if mode == "insert"
+                    else kvcodec_np.decode_batch_delete)
         for pdf in batches:
             cols: dict[str, list] = {k: pdf[k].tolist() for k in key_cols}
-            if engine == "numpy":
-                values, _ = batch_fn(info, list(pdf["row_bytes"]))
-                for c in info.columns:
-                    cols[c.name] = values[c.col_id].tolist()
-            else:
-                out: dict[str, list] = {n: [] for n in names}
-                for raw_row in pdf["row_bytes"]:
-                    datums = row_decode(info, bytes(raw_row))
-                    for c in info.columns:
-                        out[c.name].append(
-                            _surface_value(datums[c.col_id], c.kind))
-                cols.update(out)
+            values, _ = batch_fn(info, list(pdf["row_bytes"]))
+            for c in info.columns:
+                cols[c.name] = values[c.col_id].tolist()
             yield pd.DataFrame(cols)
 
     return raw.mapInPandas(decode, schema=schema)
 
 
 def decode_insert_stream(raw, info: KVTableInfo,
-                         key_cols: tuple[str, ...] = ("arrival_seq",),
-                         engine: str = "numpy"):
+                         key_cols: tuple[str, ...] = ("arrival_seq",)):
     """DataFrame with a BINARY ``row_bytes`` column -> one typed column
     per schema column (named c.name), carrying ``key_cols`` through."""
-    return _one_image_stream(raw, info, key_cols, decode_insert_row, engine)
+    return _one_image_stream(raw, info, key_cols, "insert")
 
 
 def decode_delete_stream(raw, info: KVTableInfo,
-                         key_cols: tuple[str, ...] = ("arrival_seq",),
-                         engine: str = "numpy"):
+                         key_cols: tuple[str, ...] = ("arrival_seq",)):
     """Delete-row decode over a BINARY ``row_bytes`` column: full old
     row, no handle prefix (deleteRowToRow)."""
-    return _one_image_stream(raw, info, key_cols, decode_delete_row, engine)
+    return _one_image_stream(raw, info, key_cols, "delete")
 
 
 def decode_update_stream(raw, info: KVTableInfo,
-                         key_cols: tuple[str, ...] = ("arrival_seq",),
-                         engine: str = "numpy"):
+                         key_cols: tuple[str, ...] = ("arrival_seq",)):
     """Update-row decode: emits old_<name> / new_<name> per column.
-    engine as in :func:`_one_image_stream`."""
+    A NIL/empty row value gives no row: DecodeOldAndNewRow returns nil
+    maps for it and the reference skips the mutation."""
     import pandas as pd
 
     schema = ", ".join(
@@ -998,41 +979,18 @@ def decode_update_stream(raw, info: KVTableInfo,
         + [f"new_{c.name} {_spark_type(c.kind)}" for c in info.columns])
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if engine == "numpy":
-            from . import kvcodec_np
-            import numpy as np
-            for pdf in batches:
-                keep, old_vals, new_vals = kvcodec_np.decode_batch_update(
-                    info, list(pdf["row_bytes"]))
-                kept = np.nonzero(keep)[0]
-                cols = {k: pdf[k].to_numpy()[kept].tolist()
-                        for k in key_cols}
-                for c in info.columns:
-                    cols[f"old_{c.name}"] = old_vals[c.col_id][kept].tolist()
-                    cols[f"new_{c.name}"] = new_vals[c.col_id][kept].tolist()
-                yield pd.DataFrame(cols)
-            return
+        import numpy as np
+
+        from . import kvcodec_np
         for pdf in batches:
-            keys: dict[str, list] = {k: [] for k in key_cols}
-            out: dict[str, list] = {}
+            keep, old_vals, new_vals = kvcodec_np.decode_batch_update(
+                info, list(pdf["row_bytes"]))
+            kept = np.nonzero(keep)[0]
+            cols = {k: pdf[k].to_numpy()[kept].tolist() for k in key_cols}
             for c in info.columns:
-                out[f"old_{c.name}"] = []
-                out[f"new_{c.name}"] = []
-            for idx, raw_row in enumerate(pdf["row_bytes"]):
-                old, new = decode_update_row(info, bytes(raw_row))
-                if not old and not new:
-                    # NIL/empty row value: DecodeOldAndNewRow returns
-                    # nil maps and the reference skips the mutation —
-                    # emit nothing rather than KeyError the stage
-                    continue
-                for k in key_cols:
-                    keys[k].append(pdf[k].iloc[idx])
-                for c in info.columns:
-                    for pfx, img in (("old_", old), ("new_", new)):
-                        out[f"{pfx}{c.name}"].append(
-                            _surface_value(img[c.col_id], c.kind))
-            keys.update(out)
-            yield pd.DataFrame(keys)
+                cols[f"old_{c.name}"] = old_vals[c.col_id][kept].tolist()
+                cols[f"new_{c.name}"] = new_vals[c.col_id][kept].tolist()
+            yield pd.DataFrame(cols)
 
     return raw.mapInPandas(decode, schema=schema)
 
@@ -1088,8 +1046,24 @@ def record_key_columns(df, key_col: str = "key"):
               .withColumn("handle", comp_long(12)))
 
 
-def encode_insert_stream(ch, info: KVTableInfo,
-                         engine: str = "numpy"):
+def _fixture_stream(ch, info: KVTableInfo, batch_fn):
+    """mapInPandas wrapper for the fixture generators: one
+    kvcodec_np batch encode per Arrow batch of (arrival_seq, pk, val,
+    k) rows."""
+    import pandas as pd
+
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = batch_fn(info, pdf["arrival_seq"].to_numpy(),
+                           pdf["pk"].to_numpy(), pdf["val"].to_numpy(),
+                           pdf["k"])
+            yield pd.DataFrame({"arrival_seq": pdf["arrival_seq"],
+                                "row_bytes": out})
+
+    return ch.mapInPandas(encode, schema="arrival_seq long, row_bytes binary")
+
+
+def encode_insert_stream(ch, info: KVTableInfo):
     """Fixture generator: change-stream rows -> pump-format insert row
     bytes (handle = pk). Deterministic column omission/NULLs so decode
     exercises back-fill:
@@ -1108,123 +1082,29 @@ def encode_insert_stream(ch, info: KVTableInfo,
     - a decimal column (if any) carries pk * 100.01 exactly (2-frac
       MySQL binary decimal); a duration column carries
       (arrival_seq % 86400) seconds as comparable int64 nanos.
+
+    The per-row statement of these rules is
+    ``kvcodec_np._row_insert_fixture``.
     """
-    import pandas as pd
-    from decimal import Decimal as _D
-
-    str_col = next(c for c in info.columns if c.kind == "string")
-    val_col = next(c for c in info.columns if c.kind == "double")
-    u_col = next((c for c in info.columns if c.kind == "ulong"), None)
-    dec_col = next((c for c in info.columns if c.kind == "decimal"), None)
-    dur_col = next((c for c in info.columns if c.kind == "duration"), None)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if engine == "numpy":
-            from . import kvcodec_np
-            for pdf in batches:
-                out = kvcodec_np.encode_batch_insert_fixture(
-                    info, pdf["arrival_seq"].to_numpy(),
-                    pdf["pk"].to_numpy(), pdf["val"].to_numpy(),
-                    pdf["k"])
-                yield pd.DataFrame({"arrival_seq": pdf["arrival_seq"],
-                                    "row_bytes": out})
-            return
-        for pdf in batches:
-            rows = []
-            for seq, pk, val, k in zip(pdf["arrival_seq"], pdf["pk"],
-                                       pdf["val"], pdf["k"]):
-                seq, pk = int(seq), int(pk)
-                values: dict[int, object] = {}
-                values[val_col.col_id] = None if seq % 13 == 0 else float(val)
-                if seq % 11 != 0:
-                    values[str_col.col_id] = str(k)
-                if u_col is not None:
-                    values[u_col.col_id] = _U64 - pk if pk % 2 == 1 else pk
-                if dec_col is not None:
-                    values[dec_col.col_id] = _D(pk * 10001).scaleb(-2)
-                if dur_col is not None:
-                    values[dur_col.col_id] = (seq % 86400) * 1_000_000_000
-                fmt = 2 if seq % 3 == 0 else 1
-                rows.append((seq, encode_insert_row(info, pk, values,
-                                                    row_format=fmt)))
-            yield pd.DataFrame(rows, columns=["arrival_seq", "row_bytes"])
-
-    return ch.mapInPandas(encode, schema="arrival_seq long, row_bytes binary")
+    from . import kvcodec_np
+    return _fixture_stream(ch, info, kvcodec_np.encode_batch_insert_fixture)
 
 
-def encode_delete_stream(ch, info: KVTableInfo,
-                         engine: str = "numpy"):
+def encode_delete_stream(ch, info: KVTableInfo):
     """Fixture generator for delete rows: the FULL OLD IMAGE with no
     handle prefix (deleteRowToRow input shape). Same deterministic
     rules as the insert fixture so one oracle covers both paths:
-    v2 every third row, %11 omits the string column, %13 NULLs val."""
-    import pandas as pd
-
-    pk_col = next(c for c in info.columns if c.kind == "long")
-    str_col = next(c for c in info.columns if c.kind == "string")
-    val_col = next(c for c in info.columns if c.kind == "double")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if engine == "numpy":
-            from . import kvcodec_np
-            for pdf in batches:
-                out = kvcodec_np.encode_batch_delete_fixture(
-                    info, pdf["arrival_seq"].to_numpy(),
-                    pdf["pk"].to_numpy(), pdf["val"].to_numpy(),
-                    pdf["k"])
-                yield pd.DataFrame({"arrival_seq": pdf["arrival_seq"],
-                                    "row_bytes": out})
-            return
-        for pdf in batches:
-            rows = []
-            for seq, pk, val, k in zip(pdf["arrival_seq"], pdf["pk"],
-                                       pdf["val"], pdf["k"]):
-                seq, pk = int(seq), int(pk)
-                values: dict[int, object] = {pk_col.col_id: pk}
-                values[val_col.col_id] = None if seq % 13 == 0 else float(val)
-                if seq % 11 != 0:
-                    values[str_col.col_id] = str(k)
-                fmt = 2 if seq % 3 == 0 else 1
-                rows.append((seq, _encode_row_body(info, values, fmt)))
-            yield pd.DataFrame(rows, columns=["arrival_seq", "row_bytes"])
-
-    return ch.mapInPandas(encode, schema="arrival_seq long, row_bytes binary")
+    v2 every third row, %11 omits the string column, %13 NULLs val
+    (per row: ``kvcodec_np._row_delete_fixture``)."""
+    from . import kvcodec_np
+    return _fixture_stream(ch, info, kvcodec_np.encode_batch_delete_fixture)
 
 
-def encode_update_stream(ch, info: KVTableInfo,
-                         engine: str = "numpy"):
+def encode_update_stream(ch, info: KVTableInfo):
     """Fixture generator for update rows: old image = (pk, val-1,
     'old_'+k), new image = (pk, val, k); arrival_seq % 11 == 0 omits
     the string column from BOTH images (default back-fill in both,
-    DecodeOldAndNewRow's missing-col branch)."""
-    import pandas as pd
-
-    pk_col = next(c for c in info.columns if c.col_id == info.pk_handle_id)
-    str_col = next(c for c in info.columns if c.kind == "string")
-    val_col = next(c for c in info.columns if c.kind == "double")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if engine == "numpy":
-            from . import kvcodec_np
-            for pdf in batches:
-                out = kvcodec_np.encode_batch_update_fixture(
-                    info, pdf["arrival_seq"].to_numpy(),
-                    pdf["pk"].to_numpy(), pdf["val"].to_numpy(),
-                    pdf["k"])
-                yield pd.DataFrame({"arrival_seq": pdf["arrival_seq"],
-                                    "row_bytes": out})
-            return
-        for pdf in batches:
-            rows = []
-            for seq, pk, val, k in zip(pdf["arrival_seq"], pdf["pk"],
-                                       pdf["val"], pdf["k"]):
-                seq, pk = int(seq), int(pk)
-                old = {pk_col.col_id: pk, val_col.col_id: float(val) - 1.0}
-                new = {pk_col.col_id: pk, val_col.col_id: float(val)}
-                if seq % 11 != 0:
-                    old[str_col.col_id] = "old_" + str(k)
-                    new[str_col.col_id] = str(k)
-                rows.append((seq, encode_update_row(info, old, new)))
-            yield pd.DataFrame(rows, columns=["arrival_seq", "row_bytes"])
-
-    return ch.mapInPandas(encode, schema="arrival_seq long, row_bytes binary")
+    DecodeOldAndNewRow's missing-col branch; per row:
+    ``kvcodec_np._row_update_fixture``)."""
+    from . import kvcodec_np
+    return _fixture_stream(ch, info, kvcodec_np.encode_batch_update_fixture)

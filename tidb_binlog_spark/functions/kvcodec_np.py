@@ -877,11 +877,11 @@ def _merge_fallback(info, row_list, fb, values, row_decode):
 
 
 # ---------------------------------------------------------------------------
-# fixture encode, batched: numpy twins of kvcodec.encode_*_stream's
-# per-row loops (same deterministic rules, byte-identical output,
-# pinned by tests). The _SegBuf flat-buffer assembler comes from
-# sinks/pbcodec — the same machinery that vectorized the pb-dump
-# writer in r11.
+# fixture encode, batched: the encoders behind kvcodec.encode_*_stream,
+# numpy twins of the per-row _row_*_fixture rules below (same
+# deterministic rules, byte-identical output, pinned by tests). The
+# _SegBuf flat-buffer assembler comes from sinks/pbcodec — the same
+# machinery that vectorized the pb-dump writer in r11.
 # ---------------------------------------------------------------------------
 
 def _zigzag_vec(iv):
@@ -1017,8 +1017,8 @@ def _pool_strings(strs):
 
 
 def encode_batch_insert_fixture(info: KVTableInfo, seq, pk, val, k):
-    """Batch twin of kvcodec.encode_insert_stream's row loop: same
-    deterministic omission/NULL/v2 rules, byte-identical rows."""
+    """Batch twin of :func:`_row_insert_fixture`: same deterministic
+    omission/NULL/v2 rules, byte-identical rows."""
     from ..sinks.pbcodec import _SegBuf, _uvarint_matrix
 
     seq = np.asarray(seq, np.int64)
@@ -1089,7 +1089,8 @@ def encode_batch_insert_fixture(info: KVTableInfo, seq, pk, val, k):
 
 
 def _row_insert_fixture(info, seq, pk, val, kv_):
-    """the stream's original per-row rules (parity fallback)."""
+    """The insert fixture's per-row rules (parity reference and
+    fallback)."""
     from decimal import Decimal as _D
     str_col = next(c for c in info.columns if c.kind == "string")
     val_col = next(c for c in info.columns if c.kind == "double")
@@ -1244,8 +1245,8 @@ def _fixture_guard(info, n):
 
 
 def encode_batch_delete_fixture(info: KVTableInfo, seq, pk, val, k):
-    """Batch twin of kvcodec.encode_delete_stream's row loop: full
-    old image, no handle prefix, v2 every third row."""
+    """Batch twin of :func:`_row_delete_fixture`: full old image, no
+    handle prefix, v2 every third row."""
     from ..sinks.pbcodec import _SegBuf, _uvarint_matrix
 
     seq = np.asarray(seq, np.int64)
@@ -1372,7 +1373,7 @@ def _encode_v2_body_delete(sb, subset, pk, val, val_null, k_pres,
 
 
 def encode_batch_update_fixture(info: KVTableInfo, seq, pk, val, k):
-    """Batch twin of kvcodec.encode_update_stream's row loop: flat
+    """Batch twin of :func:`_row_update_fixture`: flat
     old-format [colID, value] pairs, old image (pk, val-1, 'old_'+k)
     then new image (pk, val, k); %11 omits k from both."""
     from ..sinks.pbcodec import _SegBuf, _uvarint_matrix

@@ -842,28 +842,6 @@ def stratum_smallest_k(d: DataFrame, k: int,
             .drop("_b", "_r1"))
 
 
-def kmv_sketch(docs: DataFrame, k: int = 256,
-               by: str = "source") -> DataFrame:
-    """The raw KMV sketch rows: per stratum, the k smallest distinct
-    48-bit shingle hashes (rank included). This is the mergeable
-    state kmv_distinct summarizes — union two days' sketches and
-    re-truncate to k and you get EXACTLY the sketch of the union
-    (each part's k-minimum set contains every global k-minimum
-    element), so daily sketches fold without touching the corpora."""
-    from pyspark.sql import Window
-    from .dedup import with_shingles
-    sh = (with_shingles(docs.select("doc_id", by, "text"))
-          .select(F.col(by).alias("stratum"),
-                  F.explode("shingles").alias("shingle")))
-    d = (sh.select(
-            "stratum",
-            F.expr("CAST(conv(substring(md5(shingle), 1, 12), 16, 10) "
-                   "AS BIGINT)").alias("h"))
-         .distinct())
-    return stratum_smallest_k(d, k,
-                              two_phase=_scan_bytes(docs) > (64 << 20))
-
-
 def kmv_merge_check(docs: DataFrame, k: int = 64,
                     split_mod: int = 2,
                     by: str = "source") -> DataFrame:

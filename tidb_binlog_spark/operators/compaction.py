@@ -95,59 +95,13 @@ def merge_by_pk(changes: DataFrame, image_cols: tuple[str, ...]) -> DataFrame:
         *[F.col(f"_last.{c}").alias(c) for c in ["commit_ts", *image]])
 
 
-def merged_op(changes: DataFrame) -> DataFrame:
-    """Classify the *merged* operation per PK following merge.go's rule
-    table, given the full in-batch history:
-
-    - last op D                -> 'D'
-    - an I at or after the last D (or an I with no D) -> 'I'
-    - otherwise                -> 'U'
-
-    This reproduces insert+update->insert, delete+insert->insert,
-    update+update->update, update+delete->delete as one aggregation.
-
-    NOTE ``first_val`` is the first event's NEW image (a scalar
-    convenience for single-value streams); the reference's
-    update+update rule keeps the first update's OLD image for the
-    WHERE clause — that semantics lives in ``compact_wide`` (the
-    values/old_values map model), whose first_old_val is the one to
-    use for WHERE generation.
-
-    The order key is a per-key row_number over the full
-    (commit_ts, seq, arrival_seq) tuple — an arithmetic packing like
-    commit_ts*K+seq would invert order once seq >= K (the reference
-    allows arbitrarily long transactions).
-    """
-    w = Window.partitionBy(*KEY).orderBy("commit_ts", "seq", "arrival_seq")
-    agg = (
-        changes.select(*KEY, "op", "val", "commit_ts", "seq", "arrival_seq")
-        .withColumn("ord", F.row_number().over(w).cast("long"))
-        .groupBy(*KEY)
-        .agg(
-            F.max("ord").alias("last_ord"),
-            F.max(F.when(F.col("op") == "D", F.col("ord"))).alias("last_d"),
-            F.max(F.when(F.col("op") == "I", F.col("ord"))).alias("last_i"),
-            F.max_by("val", "ord").alias("final_val"),
-            F.min_by("val", "ord").alias("first_val"),
-            F.count(F.lit(1)).alias("n_ops"),
-        )
-    )
-    return agg.select(
-        *KEY,
-        F.when(F.col("last_d") == F.col("last_ord"), F.lit("D"))
-         .when(F.col("last_i").isNotNull()
-               & (F.col("last_d").isNull() | (F.col("last_i") > F.col("last_d"))),
-               F.lit("I"))
-         .otherwise(F.lit("U")).alias("merged_op"),
-        "final_val", "first_val", "n_ops",
-    )
-
-
 def compact_wide(changes: DataFrame) -> DataFrame:
     """Map-model compaction (pkg/loader/merge.go:84-118 over
     DML.Values/OldValues, model.go:50-64):
 
-    - merged op per the merge rule table (same as ``merged_op``);
+    - merged op per the merge rule table: 'D' when the last op is a
+      D, 'I' when an I follows the last D (or there is no D), 'U'
+      otherwise;
     - final image = the LAST event's ``values`` map (insert+update ->
       insert keeps the last new image; update+update keeps the last
       new image; delete keeps the delete's row image);
@@ -162,9 +116,8 @@ def compact_wide(changes: DataFrame) -> DataFrame:
     engine-portable output (map rendering differs across engines) and
     the shape a per-column statement builder consumes anyway.
 
-    Scale shape: one window + one aggregation keyed on the PK (same
-    shuffle as merged_op), then a per-(key, column) explode — no
-    per-row Python, no driver loops.
+    Scale shape: one window + one aggregation keyed on the PK, then a
+    per-(key, column) explode — no per-row Python, no driver loops.
     """
     w = Window.partitionBy(*KEY).orderBy("commit_ts", "seq", "arrival_seq")
     w_all = Window.partitionBy(*KEY)

@@ -1,96 +1,18 @@
-"""Skew mitigation: salted two-phase aggregation for hot keys.
+"""Skew report for hot primary keys.
 
 The reference bounds skew implicitly (per-PK compaction runs in one
-loader thread per causality group). At 100 TB a hot PK / hot causal
-group becomes a straggler task. AQE's skew-join handling covers joins;
-for *aggregations* the standard fix is salting: shuffle on (key, salt),
-partially aggregate, then merge the partials per key.
-
-Provided here for the aggregation shapes the engine actually uses
-(counts/min/max/max_by-style merges); results are exactly equal to the
-unsalted aggregation, verified by tests.
+loader thread per causality group). At 100 TB a hot PK becomes a
+straggler task. Spark's partial aggregation already combines a hot
+key's rows map-side, and AQE splits skewed joins (it runs inside
+``foreachBatch`` too), so the engine ships no salting operator; what
+is left is the report that says which keys are hot and how far a
+salt would spread them.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def with_salt(df: DataFrame, n_salts: int = 16,
-              salt_col: str = "_salt") -> DataFrame:
-    """Deterministic salt: spreads each key's rows over n_salts
-    sub-keys without RNG (replay-stable) by hashing a per-row column
-    set that's unique-ish (here: all columns)."""
-    return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)))
-
-
-def salted_agg(df: DataFrame, keys: Sequence[str],
-               partial_aggs: Sequence[Column],
-               final_aggs: Sequence[Column],
-               n_salts: int = 16) -> DataFrame:
-    """Two-phase aggregation: groupBy(keys + salt) with partial_aggs,
-    then groupBy(keys) with final_aggs over the partial columns.
-
-    Caller supplies decomposable aggregates (count -> sum of counts,
-    max -> max of maxes, ...).
-    """
-    salted = with_salt(df, n_salts)
-    partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
-    return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def salted_last_image_count(changes: DataFrame,
-                            n_salts: int = 16) -> DataFrame:
-    """Example instantiation: per-key op counts + latest commit_ts with
-    skew-safe shuffling — the accounting half of compaction for a hot
-    key. (The full last-image row still needs the per-key window; for
-    pathological keys that window runs on the already-reduced partials
-    of max_by, which salting keeps balanced.)"""
-    # the "latest op" merge carries (commit_ts, arrival_seq) so ties on
-    # commit_ts (the fixture stream contains them) break the same way
-    # in every partial — struct max is lexicographic and deterministic.
-    last_struct = F.struct("commit_ts", "arrival_seq", "op")
-    partial = [
-        F.count(F.lit(1)).alias("_n"),
-        F.max("commit_ts").alias("_max_ts"),
-        F.max(last_struct).alias("_last"),
-    ]
-    final = [
-        F.sum("_n").cast("long").alias("n_ops"),
-        F.max("_max_ts").alias("last_ts"),
-        F.max("_last").getField("op").alias("last_op"),
-    ]
-    return salted_agg(changes, ["db", "tbl", "pk"], partial, final, n_salts)
-
-
-def replicated_skew_join(big: DataFrame, small: DataFrame,
-                         key: str, n_salts: int = 16,
-                         how: str = "inner") -> DataFrame:
-    """Skew-safe equi-join: the big side salts its key from a per-row
-    hash; the small side REPLICATES n_salts ways; the join runs on
-    (key, salt) so one hot key spreads over n_salts tasks instead of
-    one straggler. Result == the plain join, row for row (verified by
-    test). AQE's runtime skew handling covers most cases — this is
-    the explicit form for plans where AQE is unavailable (streaming
-    foreachBatch) or the skew is known up front; the small side costs
-    n_salts x its size, so keep it broadcast-scale.
-
-    ``how`` supports inner/left (left rows with no match keep exactly
-    one copy: the NULL-extended row appears once per (key, salt) only
-    on the salt the row carries)."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"replicated_skew_join supports inner/left, "
-                         f"got {how!r}")
-    salted = with_salt(big, n_salts)
-    rep = (small.withColumn(
-               "_salt", F.explode(F.array(*[F.lit(i)
-                                            for i in range(n_salts)]))))
-    out = salted.join(rep, [key, "_salt"], how)
-    return out.drop("_salt")
 
 
 def salt_advisor(changes: DataFrame,
@@ -102,8 +24,7 @@ def salt_advisor(changes: DataFrame,
     ``n_salts = min(max_salts, ceil(n_writes / target))`` and report
     the projected per-task row bound after salting
     (``ceil(n_writes / n_salts)``) — the number an operator compares
-    against the straggler budget before re-running with
-    ``salted_agg``.
+    against the straggler budget when sizing a salted job of their own.
 
     All arithmetic is exact integer (ceil via ``(n + d - 1) DIV d``).
     Scale shape: one map-side-combinable key aggregate; the output is

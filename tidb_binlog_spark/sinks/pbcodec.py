@@ -262,16 +262,21 @@ def frame_record(payload: bytes) -> bytes:
 
 
 def iter_records(data: bytes) -> Iterator[bytes]:
-    """Yield payloads; raises on magic or CRC mismatch (the reference
-    seeks past corruption — binlogger.go:504-540 — but a fresh dump
-    must be clean, so corruption here is an error). Retained as the
-    parity oracle for :func:`scan_records`."""
+    """Yield payloads; raises on a magic or CRC mismatch, or on a
+    record cut short by the end of the file (the reference seeks past
+    corruption — binlogger.go:504-540 — but a fresh dump must be
+    clean, so corruption here is an error). Retained as the parity
+    oracle for :func:`scan_records`."""
     pos = 0
     while pos < len(data):
+        if pos + 12 > len(data):
+            raise ValueError(f"truncated record at offset {pos}")
         (magic,) = struct.unpack_from("<I", data, pos)
         if magic != MAGIC:
             raise ValueError(f"magic mismatch at offset {pos}")
         (length,) = struct.unpack_from("<Q", data, pos + 4)
+        if pos + 16 + length > len(data):
+            raise ValueError(f"truncated record at offset {pos}")
         payload = data[pos + 12:pos + 12 + length]
         (crc,) = struct.unpack_from("<I", data, pos + 12 + length)
         if crc != crc32c(payload):
@@ -291,17 +296,24 @@ def scan_records(data: bytes) -> list[bytes]:
     pos, n = 0, len(data)
     u32, u64 = struct.Struct("<I"), struct.Struct("<Q")
     starts, lens, stored, offs = [], [], [], []
-    magic_err = None          # (offset) of the first bad magic, if any
+    walk_err = None           # the first bad magic or torn record, if any
     while pos < n:
+        # Don't raise on a bad magic or a record cut short yet: an
+        # EARLIER record may have a bad CRC, and iter_records
+        # (first-corrupt-record semantics) would report that one.
+        # Verify the records walked so far and raise whichever
+        # corruption has the lower offset.
+        if pos + 12 > n:
+            walk_err = f"truncated record at offset {pos}"
+            break
         (magic,) = u32.unpack_from(data, pos)
         if magic != MAGIC:
-            # Don't raise yet: an EARLIER record may have a bad CRC,
-            # and iter_records (first-corrupt-record semantics) would
-            # report that one. Verify the records walked so far and
-            # raise whichever corruption has the lower offset.
-            magic_err = pos
+            walk_err = f"magic mismatch at offset {pos}"
             break
         (length,) = u64.unpack_from(data, pos + 4)
+        if pos + 16 + length > n:
+            walk_err = f"truncated record at offset {pos}"
+            break
         starts.append(pos + 12)
         lens.append(length)
         stored.append(u32.unpack_from(data, pos + 12 + length)[0])
@@ -313,8 +325,8 @@ def scan_records(data: bytes) -> list[bytes]:
     bad = np.nonzero(got != want)[0]
     if len(bad):
         raise ValueError(f"crc mismatch at offset {offs[int(bad[0])]}")
-    if magic_err is not None:
-        raise ValueError(f"magic mismatch at offset {magic_err}")
+    if walk_err is not None:
+        raise ValueError(walk_err)
     return payloads
 
 

@@ -253,24 +253,15 @@ def generate_sql_wide(changes: DataFrame, info: TableInfo,
 
 def bulk_delete_replace(compacted: DataFrame,
                         value_cols: tuple[str, ...] = ("pk", "val"),
-                        batch_size: int = 128,
-                        pk_bucket_width: int | None = None) -> DataFrame:
+                        batch_size: int = 128) -> DataFrame:
     """Multi-row statement batching per (db, tbl, op): deletes first,
     then replaces, exactly the executor's bulkDelete/bulkReplace order
     (pkg/loader/executor.go:273-334). Emits one row per batched
     statement with its position, so the apply order is total.
 
-    Batch numbering is a per-(db, tbl, op) row_number. The default
-    single window parallelizes across tables — the reference batches
-    per table too, so this matches its unit of parallelism. For a
-    corpus dominated by ONE hot table, pass ``pk_bucket_width`` to
-    switch to a two-phase rank over pk-range buckets (within-bucket
-    rank + broadcast running offsets): the composition equals the
-    global per-table rank exactly, so batch boundaries stay
-    replay-deterministic, and no single task ever holds the hot
-    table's whole compacted set. The two-phase path persists its input
-    (both phases read it) and costs one extra tiny broadcast job —
-    worth it only when a table's compacted set outgrows a task.
+    Batch numbering is a per-(db, tbl, op) row_number. The single
+    window parallelizes across tables — the reference batches per
+    table too, so this matches its unit of parallelism.
 
     Values render through :func:`sql_literal` (NULL as ``NULL``,
     strings quoted and escaped as mysql literals).
@@ -281,34 +272,10 @@ def bulk_delete_replace(compacted: DataFrame,
         F.concat_ws(", ", *[sql_literal(F.col(c), c in str_set)
                             for c in value_cols]),
         F.lit(")"))
-    if pk_bucket_width is None:
-        w = Window.partitionBy("db", "tbl", "op").orderBy("pk")
-        ranked = compacted.withColumn(
-            "batch_no",
-            F.floor((F.row_number().over(w) - 1) / batch_size).cast("int"))
-    else:
-        from ..cache import managed_persist
-        compacted = managed_persist(compacted)
-        b = F.floor(F.col("pk") / pk_bucket_width)
-        bucketed = compacted.withColumn("_b", b)
-        w_in = Window.partitionBy("db", "tbl", "op", "_b").orderBy("pk")
-        counts = (compacted.select("db", "tbl", "op", "pk")
-                  .withColumn("_b", b)
-                  .groupBy("db", "tbl", "op", "_b")
-                  .agg(F.count(F.lit(1)).alias("_n")))
-        w_carry = (Window.partitionBy("db", "tbl", "op").orderBy("_b")
-                   .rowsBetween(Window.unboundedPreceding, -1))
-        offsets = (counts
-                   .withColumn("_off", F.coalesce(F.sum("_n").over(w_carry),
-                                                  F.lit(0)))
-                   .select("db", "tbl", "op", "_b", "_off"))
-        ranked = (bucketed
-                  .withColumn("_rn", F.row_number().over(w_in))
-                  .join(F.broadcast(offsets), ["db", "tbl", "op", "_b"])
-                  .withColumn("batch_no",
-                              F.floor((F.col("_off") + F.col("_rn") - 1)
-                                      / batch_size).cast("int"))
-                  .drop("_b", "_rn", "_off"))
+    w = Window.partitionBy("db", "tbl", "op").orderBy("pk")
+    ranked = compacted.withColumn(
+        "batch_no",
+        F.floor((F.row_number().over(w) - 1) / batch_size).cast("int"))
     return (ranked.groupBy("db", "tbl", "op", "batch_no")
             .agg(F.concat_ws(", ", F.array_sort(F.collect_list(values_tuple)))
                  .alias("values_list"),
