@@ -3,7 +3,9 @@
 Every ``SPARK_GRAFT_*`` name the package mentions is a setting a
 deployment can change without touching code, so each one must be
 listed here. A new knob fails this test until it is added below, with
-its reason in review.
+its reason in review. Gates and limits are module constants, not
+knobs: a test forces a side by patching the constant
+(tests/test_gates_both_sides.py).
 """
 
 from __future__ import annotations
@@ -16,8 +18,6 @@ PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "tidb_binlog_spark"
 ALLOWED = {
     # local[N] core count of the session the engine builds
     "SPARK_GRAFT_CPUS",
-    # tf-idf doc-major floor; tests move it to force each scoring path
-    "SPARK_GRAFT_TFIDF_DOC_MAJOR_MIN",
 }
 
 

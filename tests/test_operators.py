@@ -211,7 +211,7 @@ def test_causality_long_chain_converges(spark):
     assert set(got.values()) == {0}
 
 
-def test_causality_local_and_distributed_paths_agree(spark):
+def test_causality_local_and_distributed_paths_agree(spark, monkeypatch):
     # The r10 adaptive gate (driver fixpoint under LOCAL_CC_MAX_EDGES,
     # min-propagation loop above it) must produce the identical
     # min-txn_id labeling. Seeded random graph: stars + a chain + an
@@ -226,22 +226,23 @@ def test_causality_local_and_distributed_paths_agree(spark):
     tk = spark.createDataFrame(edges, "txn_id long, key string")
     local = sorted(rows(causality.causality_groups(tk),
                         "txn_id", "group_id"))
-    dist = sorted(rows(causality.causality_groups(tk, local_threshold=0),
+    monkeypatch.setattr(causality, "LOCAL_CC_MAX_EDGES", -1)
+    dist = sorted(rows(causality.causality_groups(tk),
                        "txn_id", "group_id"))
     assert local == dist
     labeled = {t for t, _ in local}
     assert 900 in labeled and 901 not in labeled
 
 
-def test_causality_distributed_path_components(spark):
+def test_causality_distributed_path_components(spark, monkeypatch):
     # keep explicit coverage of the distributed loop now that small
     # graphs default to the driver union-find
     tk = spark.createDataFrame(
         [(1, "a"), (2, "a"), (2, "b"), (3, "b"), (4, "c")],
         "txn_id long, key string")
     parts = spark.conf.get("spark.sql.shuffle.partitions")
-    got = dict(rows(causality.causality_groups(tk, local_threshold=0),
-                    "txn_id", "group_id"))
+    monkeypatch.setattr(causality, "LOCAL_CC_MAX_EDGES", -1)
+    got = dict(rows(causality.causality_groups(tk), "txn_id", "group_id"))
     assert got == {1: 1, 2: 1, 3: 1, 4: 4}
     # the fixpoint's scoped shuffle sizing is undone on return
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
@@ -266,35 +267,37 @@ def test_shuffle_partition_recipes(recipe, n, want):
     assert recipe(n) == want
 
 
-def test_causality_distributed_empty_and_null_inputs(spark):
+def test_causality_distributed_empty_and_null_inputs(spark, monkeypatch):
     # Empty micro-batch / all-null keys on the distributed path
-    # (local_threshold=0) must return an empty frame, not burn
-    # max_iter rounds and raise; null txn_ids must drop on BOTH paths
+    # (LOCAL_CC_MAX_EDGES=-1) must return an empty frame, not burn
+    # CC_MAX_ITER rounds and raise; null txn_ids must drop on BOTH paths
     # (toPandas would otherwise surface them as NaN labels locally).
     empty = spark.createDataFrame([], "txn_id long, key string")
-    assert causality.causality_groups(empty, local_threshold=0).count() == 0
+    monkeypatch.setattr(causality, "LOCAL_CC_MAX_EDGES", -1)
+    assert causality.causality_groups(empty).count() == 0
     nulls = spark.createDataFrame(
         [(None, "k1"), (1, None), (1, "k2"), (2, "k2"), (None, None)],
         "txn_id long, key string")
-    for thr in (0, 10):
-        got = dict(rows(causality.causality_groups(nulls,
-                                                   local_threshold=thr),
+    for thr in (-1, 10):
+        monkeypatch.setattr(causality, "LOCAL_CC_MAX_EDGES", thr)
+        got = dict(rows(causality.causality_groups(nulls),
                         "txn_id", "group_id"))
         assert got == {1: 1, 2: 1}
 
 
-def test_causality_distributed_deep_chain_pointer_jump_fallback(spark):
+def test_causality_distributed_deep_chain_pointer_jump_fallback(
+        spark, monkeypatch):
     # A component whose diameter exceeds the plain-propagation budget
     # (120-txn chain, one hop per round) must still converge: from
     # iteration 16 onward the loop adds label-of-label shortcutting,
-    # giving O(log d) rounds instead of raising at max_iter.
+    # giving O(log d) rounds instead of raising at CC_MAX_ITER.
     edges = []
     for i in range(120):
         edges.append((10_000 + i, f"c{i}"))
         edges.append((10_000 + i, f"c{i + 1}"))
     tk = spark.createDataFrame(edges, "txn_id long, key string")
-    got = dict(rows(causality.causality_groups(tk, local_threshold=0),
-                    "txn_id", "group_id"))
+    monkeypatch.setattr(causality, "LOCAL_CC_MAX_EDGES", -1)
+    got = dict(rows(causality.causality_groups(tk), "txn_id", "group_id"))
     assert set(got.values()) == {10_000} and len(got) == 120
 
 
@@ -324,12 +327,13 @@ def test_causality_max_edges_bound_skips_count_same_labels(
         return orig(*args, **kwargs)
     monkeypatch.setattr(causality, "_causality_groups_on_edges", spy)
     bound = len(edges)
+    monkeypatch.setattr(causality, "LOCAL_CC_MAX_EDGES", bound)
     direct = sorted(rows(causality.causality_groups(
-        tk, local_threshold=bound, max_edges=bound), "txn_id", "group_id"))
+        tk, max_edges=bound), "txn_id", "group_id"))
     assert direct == counted and gated == []
+    monkeypatch.setattr(causality, "LOCAL_CC_MAX_EDGES", bound - 1)
     above = sorted(rows(causality.causality_groups(
-        tk, local_threshold=bound - 1, max_edges=bound),
-        "txn_id", "group_id"))
+        tk, max_edges=bound), "txn_id", "group_id"))
     assert above == counted and gated == [1]
 
 

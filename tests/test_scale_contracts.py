@@ -698,10 +698,10 @@ def test_tfidf_doc_major_np_matches_expr(spark, monkeypatch):
                 + [f"rare{i % 17}"]))
              for i in range(120)],
             "doc_id long, text string")
-        monkeypatch.setenv("SPARK_GRAFT_TFIDF_DOC_MAJOR_MIN", str(10**9))
+        monkeypatch.setattr(scoring, "TFIDF_DOC_MAJOR_MIN_DOCS", 10**9)
         expr_rows = sorted(map(tuple, scoring.tfidf_topk(
             docs, query_mod=8, k=3, max_df_frac=0.9).collect()))
-        monkeypatch.setenv("SPARK_GRAFT_TFIDF_DOC_MAJOR_MIN", "0")
+        monkeypatch.setattr(scoring, "TFIDF_DOC_MAJOR_MIN_DOCS", 0)
         np_rows = sorted(map(tuple, scoring.tfidf_topk(
             docs, query_mod=8, k=3, max_df_frac=0.9).collect()))
         assert np_rows == expr_rows

@@ -275,8 +275,9 @@ def _simhash_np(docs: DataFrame) -> DataFrame:
     distinct token, turn the 16-byte digests into a (vocab, 64) +-1
     bit-vote matrix with nibble shifts, and fold each doc's occurrence
     counts through it with one reduceat group-sum. Values equal the
-    DuckDB oracle's osql._SIMHASH except on NULL text (pinned by
-    tests/test_functions.py::test_simhash_np_engine_matches_expr).
+    DuckDB oracle's osql._SIMHASH; NULL text, like empty text, has no
+    token and hashes to 64 zeros
+    (tests/test_functions.py::test_simhash_np_engine_matches_expr).
 
     Scale shape: map-only (zero shuffle); per-batch memory is bounded
     by chunking the vote columns (16 at a time), so a dense batch
@@ -334,11 +335,6 @@ def _simhash_np(docs: DataFrame) -> DataFrame:
             chars = np.where(sums > 0, "1", "0").astype("U1")
             bits = np.ascontiguousarray(chars) \
                 .view(f"U{SIMHASH_BITS}").ravel().astype(object)
-            # NULL text surfaces as an empty simhash string, not as
-            # all-zero bits (the oracle's value for it)
-            null_text = np.fromiter(
-                (not isinstance(x, str) for x in pdf["text"]), bool, D)
-            bits[null_text] = ""
             yield pd.DataFrame({"doc_id": pdf["doc_id"],
                                 "simhash": bits})
 

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import ADVISORY_PARTITION_BYTES
+
 DECODE_META_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("n_bytes", T.LongType()),
@@ -42,7 +44,8 @@ def as_binary_payload(docs: DataFrame) -> DataFrame:
 
 
 def size_bucketed(payloads: DataFrame,
-                  target_partition_bytes: int = 64 << 20) -> DataFrame:
+                  target_partition_bytes: int = ADVISORY_PARTITION_BYTES
+                  ) -> DataFrame:
     """Repartition payloads so each task holds blobs of one size class and
     roughly ``target_partition_bytes`` of them — a 4 KB thumbnail and a
     4 GB video never share a task's Arrow batch budget, and one huge

@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import session
 from .text import with_tokens
 
 # default keyword query for the BM25 surface (terms from the corpus
@@ -368,6 +369,12 @@ def inverted_index(docs: DataFrame, min_df: int = 5,
             .filter(F.col("df") >= min_df))
 
 
+# tfidf_topk scores doc-major in numpy from this many docs up, while
+# the query index it broadcasts has at most this many rows
+TFIDF_DOC_MAJOR_MIN_DOCS = 50_000
+TFIDF_QUERY_BROADCAST_MAX_ROWS = 4_000_000
+
+
 def tfidf_topk(docs: DataFrame, query_mod: int = 50, k: int = 5,
                max_df_frac: float = 0.85) -> DataFrame:
     """Sparse lexical similarity search: for each query document
@@ -412,7 +419,7 @@ def tfidf_topk(docs: DataFrame, query_mod: int = 50, k: int = 5,
     # groupBy and the q x w join require, so those exchanges vanish
     # (HashPartitioning(term) satisfies both). GATED to the small
     # regime where AQE under-parallelizes (estimated index bytes
-    # under cores x the 64 MB advisory partition size): past the gate
+    # under cores x the advisory partition size): past the gate
     # the planner's own exchanges are already well-partitioned, the
     # extra term-hash shuffle measured a regression at the 100x sweep
     # (hot-term skew has no AQE relief inside a pinned repartition),
@@ -421,7 +428,7 @@ def tfidf_topk(docs: DataFrame, query_mod: int = 50, k: int = 5,
     # identical; ~100 distinct terms/doc x 48 B/row is the sizing
     # constant.
     p_terms = docs.sparkSession.sparkContext.defaultParallelism
-    if n_docs * 100 * 48 < p_terms * (64 << 20):
+    if n_docs * 100 * 48 < p_terms * session.ADVISORY_PARTITION_BYTES:
         terms = terms.repartition(p_terms, "term")
     terms = managed_persist(terms)
     idf = (terms.groupBy("term")
@@ -458,12 +465,9 @@ def tfidf_topk(docs: DataFrame, query_mod: int = 50, k: int = 5,
     # dir it wins 101->37 / 89->25 / 116->19 s — and ABOVE a query
     # index that would not broadcast safely (or 31-bit id packing) it
     # falls back to the distributed join/aggregate form, unchanged
-    # from r13. The floor is env-overridable so the oracle gate can
-    # check BOTH sides (the relay-gate discipline):
-    # SPARK_GRAFT_TFIDF_DOC_MAJOR_MIN=0 forces the numpy path.
-    doc_major_min = int(os.environ.get(
-        "SPARK_GRAFT_TFIDF_DOC_MAJOR_MIN", "50000"))
-    if n_docs >= doc_major_min and q.count() <= 4_000_000:
+    # from r13.
+    if n_docs >= TFIDF_DOC_MAJOR_MIN_DOCS \
+            and q.count() <= TFIDF_QUERY_BROADCAST_MAX_ROWS:
         pairs = _tfidf_pairs_doc_major(w, q, k)
     else:
         pairs = (q.join(w, "term")
@@ -743,8 +747,8 @@ def kmv_distinct(docs: DataFrame, k: int = 256,
     # (measured 5.3 s -> the explode dominated, twice)
     from ..cache import managed_persist
     d = managed_persist(hashed.distinct())
-    sketch = (stratum_smallest_k(d, k,
-                                 two_phase=_scan_bytes(docs) > (64 << 20))
+    big = _scan_bytes(docs) > session.ADVISORY_PARTITION_BYTES
+    sketch = (stratum_smallest_k(d, k, two_phase=big)
               .groupBy("stratum")
               .agg(F.max("h").alias("kth_hash"),
                    F.count(F.lit(1)).alias("k_used")))
@@ -805,20 +809,17 @@ def _scan_bytes(df: DataFrame) -> int:
     return total
 
 
-def stratum_smallest_k(d: DataFrame, k: int,
-                       stratum_cols: tuple[str, ...] = ("stratum",),
-                       n_buckets: int = 1024,
-                       two_phase: bool = True) -> DataFrame:
+def stratum_smallest_k(d: DataFrame, k: int, two_phase: bool) -> DataFrame:
     """EXACT k smallest distinct 48-bit hashes per stratum, ranked —
     without ever funneling a stratum's whole hash set through one
     window task (r14, guide §2.5; the classify_disorder two-phase
     treatment applied to per-group top-k: strata are LOW-cardinality
     — a handful of sources — so Window.partitionBy(stratum) sorted
     millions of rows per task at the 100x dir). Phase 1 ranks within
-    (stratum, h-range bucket) — parallel, ~n_buckets smaller sorts —
+    (stratum, h-range bucket) — parallel, ~1024 smaller sorts —
     and keeps <= k per bucket, a superset of the global k smallest
     (every global top-k element is top-k of its own bucket); phase 2
-    ranks the <= n_buckets*k survivors exactly. h must be unique per
+    ranks the <= 1024*k survivors exactly. h must be unique per
     stratum (callers pass DISTINCT frames), so both row_numbers are
     deterministic and the final rank equals the single-window rank.
 
@@ -826,14 +827,14 @@ def stratum_smallest_k(d: DataFrame, k: int,
     the extra phase-1 window/exchange is pure overhead (kmv_merge
     measured 2.2 -> 3.8 s at sf0.1 ungated vs 21.7 -> 20.8 s gated-on
     at the 100x dir), so callers gate on their input bytes
-    (``_scan_bytes``)."""
+    (``_scan_bytes`` > ``session.ADVISORY_PARTITION_BYTES``)."""
     from pyspark.sql import Window
-    w2 = Window.partitionBy(*stratum_cols).orderBy("h")
+    w2 = Window.partitionBy("stratum").orderBy("h")
     if not two_phase:
         return (d.withColumn("rank", F.row_number().over(w2))
                 .filter(F.col("rank") <= k))
-    b = (F.col("h") / F.lit((1 << 48) // n_buckets)).cast("long")
-    w1 = Window.partitionBy(*stratum_cols, "_b").orderBy("h")
+    b = (F.col("h") / F.lit((1 << 48) // 1024)).cast("long")
+    w1 = Window.partitionBy("stratum", "_b").orderBy("h")
     return (d.withColumn("_b", b)
             .withColumn("_r1", F.row_number().over(w1))
             .filter(F.col("_r1") <= k)
@@ -874,7 +875,7 @@ def kmv_merge_check(docs: DataFrame, k: int = 64,
                        "16, 10) AS BIGINT)").alias("h"))
         .distinct())
 
-    big = _scan_bytes(docs) > (64 << 20)
+    big = _scan_bytes(docs) > session.ADVISORY_PARTITION_BYTES
 
     def _rank_topk(d: DataFrame) -> DataFrame:
         # two-phase exact rank: no one-task-per-stratum sort (§2.5)

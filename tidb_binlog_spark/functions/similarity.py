@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import session
 from ..cache import managed_persist
 
 # sequential fold dot product / norms over array<float> cast to double.
@@ -989,7 +990,8 @@ def semantic_dedup_exact(embeddings: DataFrame, k: int | None = None,
     sc = embeddings.sparkSession.sparkContext
     p_pin = sc.defaultParallelism
     reps = reps.select(id_col, "qvec")
-    pin_small = n is not None and n * 1024 < p_pin * (64 << 20)
+    pin_small = (n is not None
+                 and n * 1024 < p_pin * session.ADVISORY_PARTITION_BYTES)
     if pin_small:
         reps = reps.repartition(p_pin, id_col)
     reps = managed_persist(reps)

@@ -47,9 +47,12 @@ from ..session import pow2_partitions, scoped_shuffle_partitions
 # still won (3.3 s vs 4.5 s). The numpy fixpoint that replaced it
 # (r12) tied the loop on ~6M-edge batches, so the gate stays at 500k
 # rather than make a 6M-row driver collect the default (SCALING.md,
-# "SQL-apply profile at 100M events"). Callers that must force a path
-# pass ``local_threshold`` (0 turns the local path off).
+# "SQL-apply profile at 100M events"). SqlBatchApplier's early
+# wal.join() reads the same constant; tests patch it to force a path.
 LOCAL_CC_MAX_EDGES = 500_000
+
+# distributed fixpoint rounds before causality_groups raises
+CC_MAX_ITER = 50
 
 # largest labeling (rows = txns) stamp_workers broadcasts: 8M txns is
 # ~200MB serialized; past it the stamp takes the shuffle join
@@ -140,25 +143,23 @@ def _local_components(rows) -> "pandas.DataFrame":
          "group_id": [group_min[roots[t]] for t in txns]})
 
 
-def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
-                     local_threshold: int | None = None,
+def causality_groups(txn_keys: DataFrame,
                      max_edges: int | None = None) -> DataFrame:
     """txn_keys: (txn_id BIGINT, key STRING) one row per key a txn
     touches. Returns (txn_id, group_id) where group_id = min txn_id of
     the connected component.
 
     Adaptive physical strategy (r10): one cheap count on the persisted
-    edge frame picks between the driver's numpy fixpoint (small graphs
-    — see LOCAL_CC_MAX_EDGES; ``local_threshold`` overrides the gate,
-    0 turns the local path off) and the distributed min-propagation
+    edge frame picks between the driver's numpy fixpoint (at most
+    LOCAL_CC_MAX_EDGES edges) and the distributed min-propagation
     fixpoint (everything else). Both paths compute the identical
     min-txn_id component labeling; tests/test_operators.py asserts
     their equality, and the Python union-find oracle's, on randomized
-    graphs.
+    graphs; tests/test_gates_both_sides.py runs the oracle on both.
 
     ``max_edges``: an upper bound on the distinct (txn_id, key) rows
     the caller already knows (e.g. from the rows it built the keys
-    from). At or below the local threshold the edges are collected
+    from). At or below LOCAL_CC_MAX_EDGES the edges are collected
     straight to the driver — no persist, no count.
 
     Distributed path: each iteration's labels are localCheckpoint'ed —
@@ -166,25 +167,21 @@ def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
     re-execute the whole lineage every round) and TRUNCATES the logical
     plan; without it the plan nests one join deeper per iteration and
     deep components OOM the driver on plan construction alone. The loop
-    RAISES if the fixpoint isn't reached within max_iter — a silently
+    RAISES if the fixpoint isn't reached within CC_MAX_ITER — a silently
     split component would let order-dependent txns apply in parallel,
     the exact corruption this operator prevents.
     """
-    if local_threshold is None:
-        local_threshold = LOCAL_CC_MAX_EDGES
     # null txn_id rows must go too: the distributed joins would drop
     # them silently but toPandas would surface them as float64/NaN
     # labels on the local path — filter both so the paths agree.
     edges = txn_keys.select("txn_id", "key").distinct() \
                     .filter(F.col("txn_id").isNotNull()
                             & F.col("key").isNotNull())
-    if local_threshold and max_edges is not None \
-            and max_edges <= local_threshold:
+    if max_edges is not None and max_edges <= LOCAL_CC_MAX_EDGES:
         return _local_groups(txn_keys, edges)
     edges.persist()
     try:
-        return _causality_groups_on_edges(
-            txn_keys, edges, max_iter, local_threshold)
+        return _causality_groups_on_edges(txn_keys, edges)
     finally:
         edges.unpersist()
 
@@ -223,10 +220,9 @@ def _local_groups(txn_keys, edges):
     return txn_keys.sparkSession.createDataFrame(pdf, schema=schema)
 
 
-def _causality_groups_on_edges(txn_keys, edges, max_iter,
-                               local_threshold):
+def _causality_groups_on_edges(txn_keys, edges):
     n_edges = edges.count()
-    if local_threshold and n_edges <= local_threshold:
+    if n_edges <= LOCAL_CC_MAX_EDGES:
         return _local_groups(txn_keys, edges)
 
     # scoped shuffle sizing for the fixpoint rounds (see
@@ -237,10 +233,10 @@ def _causality_groups_on_edges(txn_keys, edges, max_iter,
     # which is the context this operator executes in.
     with scoped_shuffle_partitions(txn_keys.sparkSession,
                                    _cc_shuffle_partitions(n_edges)):
-        return _cc_fixpoint(edges, max_iter)
+        return _cc_fixpoint(edges)
 
 
-def _cc_fixpoint(edges, max_iter):
+def _cc_fixpoint(edges):
     labels = edges.select("txn_id").distinct() \
                   .withColumn("label", F.col("txn_id")).localCheckpoint()
 
@@ -254,12 +250,12 @@ def _cc_fixpoint(edges, max_iter):
     # default; pointer jumping kicks in ONLY as the deep-component
     # fallback below (plain rounds advance a label one txn-hop per
     # round, so a chain of diameter d needs ~d rounds and would RAISE
-    # past max_iter; with jumping, labels shortcut through their
+    # past CC_MAX_ITER; with jumping, labels shortcut through their
     # current root, giving O(log d) rounds — the convergence safety
     # net, paid only when the graph is actually deep).
     jump_after = 16
     prev_sum, converged = None, False
-    for it in range(max_iter):
+    for it in range(CC_MAX_ITER):
         lk = (edges.join(labels, "txn_id")
                    .groupBy("key").agg(F.min("label").alias("key_label")))
         new_labels = (edges.join(lk, "key")
@@ -284,8 +280,8 @@ def _cc_fixpoint(edges, max_iter):
         prev_sum = s
     if not converged:
         raise RuntimeError(
-            f"causality_groups did not converge in {max_iter} iterations; "
-            f"raise max_iter (component diameter exceeds it)")
+            f"causality_groups did not converge in {CC_MAX_ITER} rounds; "
+            f"raise CC_MAX_ITER (component diameter exceeds it)")
     return labels.withColumnRenamed("label", "group_id")
 
 

@@ -14,6 +14,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Spark's default advisoryPartitionSizeInBytes: the size gates compare
+# their measured input with it (read at call time, so tests patch it)
+ADVISORY_PARTITION_BYTES = 64 << 20
+
 
 def get_spark(app_name: str = "tidb_binlog_spark",
               shuffle_partitions: int | None = None,

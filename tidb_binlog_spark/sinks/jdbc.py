@@ -155,7 +155,6 @@ def _execute_with_retry(conn, sql_text: str, policy: RetryPolicy,
 
 def apply_statements(stmts: DataFrame, db_dir: str,
                      num_workers: int = 4,
-                     worker_col: str = "worker_id",
                      setup_sql: tuple[str, ...] = (),
                      retry: RetryPolicy | None = None,
                      inject=None,
@@ -206,7 +205,7 @@ def apply_statements(stmts: DataFrame, db_dir: str,
         # never hold two open write txns on the same file
         by_wid: dict = {}
         for row in rows:
-            by_wid.setdefault(row[worker_col], []).append(row)
+            by_wid.setdefault(row["worker_id"], []).append(row)
         for wid, wrows in by_wid.items():
             conn = _connect(db_dir)
             try:
@@ -231,7 +230,7 @@ def apply_statements(stmts: DataFrame, db_dir: str,
                 conn.close()
 
     (stmts
-     .repartition(num_workers, F.col(worker_col))
+     .repartition(num_workers, F.col("worker_id"))
      .sortWithinPartitions("commit_ts", "seq", "sub_seq")
      .foreachPartition(run_partition))
 
@@ -292,9 +291,7 @@ def _applied_fragments_for(ddl_sql: str) -> tuple[str, ...]:
 
 def execute_ddl(db_dir: str, ddl_sql: str,
                 retry: RetryPolicy | None = None,
-                catalog=None, schema: str = "main",
-                table: str | None = None,
-                tolerate_applied: bool = True) -> None:
+                catalog=None, table: str | None = None) -> None:
     """DDL through the executed-SQL sink: the reference flushes pending
     DMLs, then runs the DDL with its own 5x retry budget
     (pkg/loader/load.go:40-45 maxDDLRetryCount, load.go:476-500
@@ -304,16 +301,16 @@ def execute_ddl(db_dir: str, ddl_sql: str,
     skipped; ``catalog.evict`` makes the next statement build see the
     new schema (executor.go:336-405).
 
-    ``tolerate_applied``: a crash between the DDL's commit and the
-    immediate checkpoint save makes the restart re-execute it; errors
-    that can only be THIS DDL's own prior effect (scoped per DDL kind
-    by _applied_fragments_for — e.g. 'duplicate column name' for an
-    ADD COLUMN) are swallowed so the replay converges instead of
-    wedging the stream; anything else ('no such table' on an ADD)
-    still raises. Matching errors are classified non-transient so the
+    A crash between the DDL's commit and the immediate checkpoint save
+    makes the restart re-execute it; errors that can only be THIS
+    DDL's own prior effect (scoped per DDL kind by
+    _applied_fragments_for — e.g. 'duplicate column name' for an ADD
+    COLUMN) are swallowed so the replay converges instead of wedging
+    the stream; anything else ('no such table' on an ADD) still
+    raises. Matching errors are classified non-transient so the
     replay is a true no-op, not 5 retries with backoff first."""
     import sqlite3
-    frags = _applied_fragments_for(ddl_sql) if tolerate_applied else ()
+    frags = _applied_fragments_for(ddl_sql)
 
     def is_transient(exc: Exception) -> bool:
         if any(f in str(exc).lower() for f in frags):
@@ -335,7 +332,7 @@ def execute_ddl(db_dir: str, ddl_sql: str,
     finally:
         conn.close()
     if catalog is not None and table is not None:
-        catalog.evict(schema, table)
+        catalog.evict("main", table)
 
 
 def ensure_downstream(db_dir: str, setup_sql: tuple[str, ...] = ()) -> None:

@@ -84,8 +84,7 @@ def _target(dialect: str) -> tuple[Column, object]:
 def generate_sql(changes: DataFrame,
                  pk_cols: tuple[str, ...] = ("pk",),
                  value_cols: tuple[str, ...] = ("pk", "val"),
-                 dialect: str = "mysql",
-                 string_cols: tuple[str, ...] | None = None) -> DataFrame:
+                 dialect: str = "mysql") -> DataFrame:
     """One downstream statement per change event.
 
     mysql dialect (pkg/loader/model.go:187-353):
@@ -103,12 +102,10 @@ def generate_sql(changes: DataFrame,
     mysql shapes minus the UPDATE/DELETE LIMIT bound (not compiled into
     stock SQLite; the PK WHERE makes it redundant anyway).
 
-    ``string_cols`` names the columns whose values must render as quoted
-    escaped string literals; None infers them from the DataFrame schema
-    (string-typed columns among value_cols/pk_cols).
+    The string-typed columns among value_cols/pk_cols render as quoted
+    escaped string literals.
     """
-    str_set = (set(string_cols) if string_cols is not None
-               else _string_cols(changes, (*value_cols, *pk_cols)))
+    str_set = _string_cols(changes, (*value_cols, *pk_cols))
     tbl, quote = _target(dialect)
 
     def lit_val(c: str) -> Column:

@@ -149,10 +149,9 @@ class FileDumpApplier:
     ``apply`` writes one micro-batch's segments then advances the
     cursor; ``mark_graceful`` records a clean stop."""
 
-    def __init__(self, path: str, ordered_gate: bool = True):
+    def __init__(self, path: str):
         os.makedirs(path, exist_ok=True)
         self.path = path
-        self.ordered_gate = ordered_gate
         self.recovered = recover_pb_dump(path)
         self.resume_ts, _status = load_dump_checkpoint(path)
         save_dump_checkpoint(path, self.resume_ts, STATUS_RUNNING)
@@ -167,19 +166,18 @@ class FileDumpApplier:
             # batch (crash between segments and checkpoint) re-writes
             # only what recovery just truncated
             live = batch_df.filter(F.col("commit_ts") > self.resume_ts)
-            if self.ordered_gate:
-                # TXN-granularity order gate: the dup/disorder unit is
-                # the BINLOG (one per commit_ts), not the exploded row
-                # — a redelivered txn drops whole, a multi-row txn
-                # stays whole (classify_disorder's commit_ts dup
-                # partition would keep only row 1 of each txn)
-                txns = (live.groupBy("source_id", "commit_ts")
-                        .agg(F.min("arrival_seq").alias("arrival_seq")))
-                ok_ts = (ordering.classify_disorder(txns)
-                         .filter(F.col("order_status") == "ok")
-                         .select("source_id", "commit_ts"))
-                live = live.join(ok_ts, ["source_id", "commit_ts"],
-                                 "left_semi")
+            # TXN-granularity order gate: the dup/disorder unit is the
+            # BINLOG (one per commit_ts), not the exploded row — a
+            # redelivered txn drops whole, a multi-row txn stays whole
+            # (classify_disorder's commit_ts dup partition would keep
+            # only row 1 of each txn)
+            txns = (live.groupBy("source_id", "commit_ts")
+                    .agg(F.min("arrival_seq").alias("arrival_seq")))
+            ok_ts = (ordering.classify_disorder(txns)
+                     .filter(F.col("order_status") == "ok")
+                     .select("source_id", "commit_ts"))
+            live = live.join(ok_ts, ["source_id", "commit_ts"],
+                             "left_semi")
             # FAKE heartbeats advance the cursor but are never written
             # (drainer filters fake binlogs before the sinks and uses
             # them only to move the savepoint forward)

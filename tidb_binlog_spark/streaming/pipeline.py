@@ -179,7 +179,7 @@ class SqlBatchApplier:
     def __init__(self, db_dir: str, setup_sql: tuple[str, ...] = (),
                  num_workers: int = 2, window=None, sync_ddl: bool = True,
                  catalog=None, cfg=None, resume_ts: int = -1,
-                 relay=None, max_ddl_per_batch: int | None = None):
+                 relay=None):
         from ..operators import safe_mode as sm
         from ..sinks import jdbc
         # DDL and checkpoints need the setup tables before any DML
@@ -193,9 +193,6 @@ class SqlBatchApplier:
         self.cfg = cfg
         self.resume_ts = resume_ts
         self.relay = relay
-        self.max_ddl_per_batch = (self.MAX_DDL_PER_BATCH
-                                  if max_ddl_per_batch is None
-                                  else max_ddl_per_batch)
 
     def _table_shape(self, tbl: str):
         """Statement shape of one table: (value columns, sink unique
@@ -275,7 +272,7 @@ class SqlBatchApplier:
         """The gated DDL rows in commit_ts order — the batch's second
         round trip, made only when the census counted a DDL row."""
         from ..operators import ddl as ddl_mod
-        cap = self.max_ddl_per_batch
+        cap = self.MAX_DDL_PER_BATCH
         # limit(cap+1) bounds what ever reaches the driver; the
         # overflow check turns a silent OOM into a clear error.
         rows = (ddl_mod.prep_for_apply(
@@ -289,7 +286,7 @@ class SqlBatchApplier:
                 f"SqlBatchApplier: batch carries more than "
                 f"{cap} DDL events — refusing to collect a DDL "
                 f"storm onto the driver; split the stream or "
-                f"raise max_ddl_per_batch")
+                f"raise SqlBatchApplier.MAX_DDL_PER_BATCH")
         return sorted(rows, key=lambda r: r["commit_ts"])
 
     def _apply_dml(self, seg: DataFrame, ckpt_ts: int, tables: dict,
