@@ -335,9 +335,10 @@ def test_curation_packing_budget(spark):
     assert got2 == got
 
 
-def test_size_bucketed_homogeneous_partitions(spark):
+def test_size_bucketed_homogeneous_partitions(spark, monkeypatch):
     """size_bucketed: no partition mixes size classes, and a dominant
     class fans out over multiple partitions instead of one straggler."""
+    from tidb_binlog_spark import session
     from tidb_binlog_spark.functions import multimodal as mm
     import pyspark.sql.functions as F
 
@@ -349,7 +350,8 @@ def test_size_bucketed_homogeneous_partitions(spark):
     payloads = docs.select(
         "doc_id", F.encode("text", "UTF-8").alias("payload"))
     target = 8192
-    out = mm.size_bucketed(payloads, target_partition_bytes=target)
+    monkeypatch.setattr(session, "ADVISORY_PARTITION_BYTES", target)
+    out = mm.size_bucketed(payloads)
     per_part = (out.withColumn("pid", F.spark_partition_id())
                 .groupBy("pid")
                 .agg(F.sum(F.length("payload")).alias("bytes"))

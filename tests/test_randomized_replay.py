@@ -225,7 +225,6 @@ def test_apply_paths_match_single_path_model(spark, tmp_path, monkeypatch,
     single path's statements one by one; in strict mode an INSERT on a
     live key must still raise. The batch path's chunk size is drawn
     too, so a key's DELETE and INSERT can share a chunk of several."""
-    import functools
     import os
     import sqlite3
 
@@ -235,8 +234,7 @@ def test_apply_paths_match_single_path_model(spark, tmp_path, monkeypatch,
 
     rng = random.Random(5150 + seed)
     safe = seed % 2 == 0
-    monkeypatch.setattr(sqlgen, "batch_statements", functools.partial(
-        sqlgen.batch_statements, batch_size=rng.choice([2, 3, 128])))
+    monkeypatch.setattr(sqlgen, "BATCH_KEYS", rng.choice([2, 3, 128]))
     db_dir = str(tmp_path / "db")
     jdbc.ensure_downstream(db_dir, _PATH_SETUP)
     state = {"a": {}, "b": {}}

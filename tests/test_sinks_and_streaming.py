@@ -194,15 +194,16 @@ def test_batch_statements_apply_like_the_single_path(spark, tmp_path):
         "op string, db string, tbl string, pk long, seq int, "
         "schema_version long, val double, s string, sub_seq int")
     cols = ("pk", "val", "s")
-    stmts = sqlgen.batch_statements(compaction.merge_by_pk(ch, cols),
-                                    value_cols=cols, batch_size=2)
+    keys = sorted(compaction.merge_by_pk(ch, cols).collect(),
+                  key=lambda r: r["pk"])
     conn = sqlite3.connect(str(tmp_path / "t.db"))
     conn.execute("CREATE TABLE t (pk INTEGER PRIMARY KEY, val REAL, s TEXT)")
     conn.executemany("INSERT INTO t VALUES (?, ?, ?)",
                      [(1, 9.0, "old"), (3, 3.0, "y"), (4, 4.0, "z")])
-    for r in sorted(stmts.collect(),
-                    key=lambda r: (r["batch_no"], r["sub_seq"])):
-        conn.execute(r["sql_text"])
+    for i in range(0, len(keys), 2):        # chunks of two keys
+        for text, params in sqlgen.chunk_statements("t", cols,
+                                                    keys[i:i + 2]):
+            conn.execute(text, params)
     assert sorted(conn.execute("SELECT * FROM t").fetchall()) == [
         (1, 1.0, "o'k"), (3, None, None), (5, 5.5, "m")]
     conn.close()
@@ -1695,23 +1696,22 @@ def test_sql_batch_applier_wal_lands_before_any_downstream_write(
     landed before the batch's first downstream write: every statement
     apply, DDL and checkpoint save of a batch carrying a DDL starts
     after the WAL write ended, and the WAL holds the batch. The WAL
-    is held back until the first segment's statements are built (t
-    has no UNIQUE key, so they are the batch path's) — the point right
-    before its apply."""
+    is held back until the first segment's keys are merged (t has no
+    UNIQUE key, so it takes the batch path) — the point right before
+    its apply."""
     import threading
     import time
 
-    from tidb_binlog_spark.sinks import sqlgen
     from tidb_binlog_spark.sinks.relay import RelayLog
 
     routed = threading.Event()
-    orig_build = sqlgen.batch_statements
+    orig_build = compaction.merge_by_pk
 
     def building(*args, **kwargs):
         out = orig_build(*args, **kwargs)
         routed.set()
         return out
-    monkeypatch.setattr(sqlgen, "batch_statements", building)
+    monkeypatch.setattr(compaction, "merge_by_pk", building)
 
     wal_end = []
     orig_append = RelayLog.append
@@ -1786,14 +1786,16 @@ def test_sql_batch_applier_census_skips_empty_ddl_segment(
     DDL rows."""
     from tidb_binlog_spark.sinks import sqlgen
 
-    # a build is either path's statement builder: t and u have no
+    # a build is either path's driver-side step, the single path's
+    # statement builder or the batch path's merge: t and u have no
     # UNIQUE key, so both take the batch path
     builds = []
-    for name in ("generate_sql", "batch_statements"):
-        def counting(*args, _orig=getattr(sqlgen, name), **kwargs):
+    for owner, name in ((sqlgen, "generate_sql"),
+                        (compaction, "merge_by_pk")):
+        def counting(*args, _orig=getattr(owner, name), **kwargs):
             builds.append(1)
             return _orig(*args, **kwargs)
-        monkeypatch.setattr(sqlgen, name, counting)
+        monkeypatch.setattr(owner, name, counting)
     log = _record_downstream(monkeypatch)
 
     add_c = "ALTER TABLE t ADD COLUMN c TEXT"
@@ -2285,8 +2287,9 @@ def test_sql_apply_stream_two_table_shapes_in_one_batch(spark, tmp_path,
     orig_apply = jdbc.apply_statements
 
     def recording_apply(stmts, *args, **kwargs):
-        applied.extend(stmts.select("commit_ts", "sql_text",
-                                    "group_id").collect())
+        applied.extend(stmts.select(
+            "commit_ts", "sql_text", "group_id", "tbl", "op", "pre_delete",
+            "pk", "val", "value_cols").collect())
         return orig_apply(stmts, *args, **kwargs)
     monkeypatch.setattr(jdbc, "apply_statements", recording_apply)
 
@@ -2305,22 +2308,26 @@ def test_sql_apply_stream_two_table_shapes_in_one_batch(spark, tmp_path,
     assert got_b == [(1, 5.0)]
     assert jdbc.load_checkpoint(db_dir)[0] == 50
 
-    a_rows = [r for r in applied if "`a`" in r["sql_text"]]
-    b_rows = [r for r in applied if "`b`" in r["sql_text"]]
-    assert len(a_rows) + len(b_rows) == len(applied)
+    # the batch path hands the sink workers merged keys, not statements
+    a_rows = [r for r in applied if r["value_cols"] is None]
+    b_rows = [r for r in applied if r["value_cols"] is not None]
+    assert all("`a`" in r["sql_text"] for r in a_rows)
+    assert {r["tbl"] for r in b_rows} == {"b"}
     # a (UK shape, single path): one statement per event, none for the
     # NULL-table event
     assert sorted(r["commit_ts"] for r in a_rows) == [10, 20, 30, 40]
-    assert all(r["sql_text"] for r in applied)
+    assert all(r["sql_text"] for r in a_rows)
     # both widths were built: a's statements name k, b's do not
     text = {r["commit_ts"]: r["sql_text"] for r in a_rows}
     assert "`k`" in text[10]
-    assert not any("`k`" in r["sql_text"] for r in b_rows)
-    # b (PK-only, batch path): its four events merge by pk into one
-    # DELETE and one multi-row INSERT, with no causality group
-    assert sorted(r["sql_text"] for r in b_rows) == [
-        "DELETE FROM `b` WHERE `pk` IN (2)",
-        "INSERT INTO `b`(`pk`, `val`) VALUES (1, 5.0)"]
+    # b (PK-only, batch path): its four events merge by pk into two
+    # keys, which the sink worker applies as one DELETE and one
+    # multi-row INSERT, with no causality group
+    assert sqlgen.chunk_statements(
+        "b", tuple(b_rows[0]["value_cols"]),
+        sorted(b_rows, key=lambda r: r["pk"])) == [
+        ("DELETE FROM `b` WHERE `pk` IN (?)", [2]),
+        ("INSERT INTO `b`(`pk`, `val`) VALUES (?, ?)", [1, 5.0])]
     assert all(r["group_id"] is None for r in b_rows)
     # the UK key links a's txns 10/20/30 into one causality group
     group = {r["commit_ts"]: r["group_id"] for r in applied}
@@ -2731,3 +2738,98 @@ def test_streaming_windowed_counts_match_batch_topk(spark, tmp_path):
                              F.col("ts") - F.pmod(F.col("ts"), F.lit(W)))
                  .groupBy("window_start", "event_type").count())
     assert streamed == batch and len(streamed) > 0
+
+
+def test_batch_path_binds_values_exactly(spark, tmp_path):
+    """The batch path's statements take their values as ``?``
+    parameters in the sink worker: a string with a quote and a
+    backslash, NULL, and the smallest and largest doubles land exactly
+    through INSERT and UPDATE (strict mode) and REPLACE (safe mode)."""
+    import json
+    import sqlite3
+
+    from tidb_binlog_spark.operators.safe_mode import SafeModeWindow
+    from tidb_binlog_spark.sinks import jdbc
+
+    odd = "it's a \\ test \\'"
+    tiny, huge = 5e-324, 1.7976931348623157e308
+    setup = ("CREATE TABLE IF NOT EXISTS t "
+             "(pk INTEGER PRIMARY KEY, val REAL, s TEXT)",)
+    db_dir = str(tmp_path / "db")
+    jdbc.ensure_downstream(db_dir, setup)
+    conn = sqlite3.connect(os.path.join(db_dir, jdbc.SHARED_DB_NAME))
+    conn.executemany("INSERT INTO t VALUES (?, ?, ?)",
+                     [(3, 0.0, "x"), (4, 0.0, "y")])
+    conn.commit()
+    conn.close()
+
+    def rows(events):   # (commit_ts, op, pk, val, s)
+        return spark.createDataFrame(
+            [(i, "s0", cts, cts - 1, op, "db0", "t", pk, 0, 1, val,
+              json.dumps({} if s is None else {"s": s}))
+             for i, (cts, op, pk, val, s) in enumerate(events)],
+            pipeline.CHANGE_SCHEMA)
+
+    pipeline.SqlBatchApplier(
+        db_dir, setup_sql=setup, window=SafeModeWindow(duration_s=0.0),
+        catalog=_shared_catalog(db_dir)).apply(rows([
+            (10, "I", 1, tiny, odd), (11, "I", 2, huge, None),
+            (12, "U", 3, huge, odd), (13, "U", 4, None, None)]))
+    pipeline.SqlBatchApplier(
+        db_dir, setup_sql=setup, window=SafeModeWindow(configured=True),
+        catalog=_shared_catalog(db_dir), resume_ts=13).apply(rows([
+            (20, "I", 5, tiny, odd), (21, "U", 2, None, None)]))
+    assert _shared_rows(db_dir, "SELECT pk, val, s FROM t ORDER BY pk") == [
+        (1, tiny, odd), (2, None, None), (3, huge, odd), (4, None, None),
+        (5, tiny, odd)]
+
+
+def test_batch_path_cuts_chunks_at_the_variable_limit(tmp_path):
+    """A chunk holds fewer than BATCH_KEYS keys when its UPDATE ...
+    CASE would bind more parameters than the connection allows: 128
+    keys of a 40-column table bind 128 * 79 parameters, so under a
+    limit of 1,000 they go 12 to a chunk, and every key lands."""
+    import sqlite3
+
+    from pyspark.sql import Row
+
+    from tidb_binlog_spark.sinks import jdbc
+
+    cols = ("pk", *[f"c{i}" for i in range(39)])
+    conn = sqlite3.connect(str(tmp_path / "w.db"))
+    conn.execute("CREATE TABLE w (pk INTEGER PRIMARY KEY, "
+                 + ", ".join(f"{c} TEXT" for c in cols[1:]) + ")")
+    conn.executemany("INSERT INTO w(pk) VALUES (?)",
+                     [(k,) for k in range(128)])
+    conn.setlimit(sqlite3.SQLITE_LIMIT_VARIABLE_NUMBER, 1000)
+    key = Row("op", "pre_delete", "value_cols", *cols)
+    keys = [key("U", False, list(cols), k, *[f"v{k}.{i}" for i in range(39)])
+            for k in range(128)]
+    executed = []
+    conn.set_trace_callback(executed.append)
+    jdbc._apply_merged(conn, "w", keys, sqlgen.BATCH_KEYS,
+                       jdbc.RetryPolicy(max_retries=0))
+    conn.set_trace_callback(None)
+    assert sum(s.startswith("UPDATE") for s in executed) == 11   # 128 / 12
+    assert conn.execute("SELECT COUNT(*) FROM w WHERE c0 = 'v' || pk || '.0' "
+                        "AND c38 = 'v' || pk || '.38'").fetchone() == (128,)
+    conn.close()
+
+
+def test_reading_a_batch_of_files_lists_them_on_the_driver(spark, tmp_path):
+    """A micro-batch's file list resolves on the driver: reading 40
+    change files, more than Spark's default parallel-listing threshold
+    of 32 paths, submits no Spark job."""
+    import shutil
+
+    one_dir = str(tmp_path / "one")
+    make_changes(spark, [(1, "s0", 10, "I", 1)]).coalesce(1) \
+        .write.parquet(one_dir)
+    one = next(os.path.join(one_dir, f) for f in os.listdir(one_dir)
+               if f.endswith(".parquet"))
+    paths = [shutil.copy(one, str(tmp_path / f"seg{i}.parquet"))
+             for i in range(40)]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    spark.read.schema(pipeline.CHANGE_SCHEMA).parquet(*paths)
+    assert set(tracker.getJobIdsForGroup()) == before

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import ADVISORY_PARTITION_BYTES
+from .. import session
 
 DECODE_META_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -43,13 +43,12 @@ def as_binary_payload(docs: DataFrame) -> DataFrame:
     return spread(docs).select("doc_id", F.encode("text", "UTF-8").alias("payload"))
 
 
-def size_bucketed(payloads: DataFrame,
-                  target_partition_bytes: int = ADVISORY_PARTITION_BYTES
-                  ) -> DataFrame:
+def size_bucketed(payloads: DataFrame) -> DataFrame:
     """Repartition payloads so each task holds blobs of one size class and
-    roughly ``target_partition_bytes`` of them — a 4 KB thumbnail and a
-    4 GB video never share a task's Arrow batch budget, and one huge
-    size class fans out over many partitions instead of one straggler.
+    roughly ``session.ADVISORY_PARTITION_BYTES`` (read at call time) of
+    them — a 4 KB thumbnail and a 4 GB video never share a task's Arrow
+    batch budget, and one huge size class fans out over many partitions
+    instead of one straggler.
 
     Two-phase: (1) a tiny per-class aggregate (size class =
     floor(log2(n_bytes))) totals the bytes per class; (2) the driver
@@ -64,7 +63,8 @@ def size_bucketed(payloads: DataFrame,
     totals = {r["_cls"]: r["total"]
               for r in sized.groupBy("_cls")
                             .agg(F.sum("_sz").alias("total")).collect()}
-    salts = {cls: max(1, -(-int(total) // target_partition_bytes))
+    target = session.ADVISORY_PARTITION_BYTES
+    salts = {cls: max(1, -(-int(total) // target))
              for cls, total in totals.items()}
     salt_expr = F.lit(1)
     for cls, n in salts.items():

@@ -48,6 +48,10 @@ def get_spark(app_name: str = "tidb_binlog_spark",
         # the third-decade sec/Mrow from creeping up (SCALE_PROOF_3D).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
+        # list a micro-batch's files on the driver, not in a job of one
+        # task per path past 32 paths: the stream source listed them
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -21,10 +21,10 @@ the caller's job (provided by ``apply_statements``).
 
 The streaming SQL applier hands this sink both of its apply paths in
 one call. Single-path rows are one statement per event, with a
-causality group as worker. Batch-path rows are multi-row statements per
-chunk of merged keys, with (table, chunk) as worker and ``sub_seq`` 0
-for the chunk's DELETE and 1 for its INSERT / REPLACE / UPDATE, so the
-DELETE runs first.
+causality group as worker. Batch-path rows are merged keys routed by
+key; each worker applies a table's keys in pk order as the multi-row
+statements of ``sqlgen.chunk_statements``, with ``?`` parameters, in
+chunks of up to ``sqlgen.BATCH_KEYS`` keys (see _apply_merged).
 
 Hash-partitioning note: two distinct worker_ids can land in the same
 Spark partition; run_partition therefore groups rows by worker_id and
@@ -40,6 +40,8 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import sqlgen
 
 # reference retry policy (pkg/loader/load.go:40-45)
 MAX_DML_RETRY = 100
@@ -111,14 +113,14 @@ def default_is_transient(exc: Exception) -> bool:
 
 
 def _execute_with_retry(conn, sql_text: str, policy: RetryPolicy,
-                        inject=None) -> None:
+                        inject=None, params=()) -> None:
     refreshed = False
     attempt = 0
     while True:
         try:
             if inject is not None:
                 inject(sql_text)   # test hook: raises to simulate a flake
-            conn.execute(sql_text)
+            conn.execute(sql_text, params)
             return
         except Exception as exc:
             # the refresh hook fires once per statement, mirroring the
@@ -153,6 +155,21 @@ def _execute_with_retry(conn, sql_text: str, policy: RetryPolicy,
             time.sleep(policy.backoff_s)
 
 
+def _apply_merged(conn, tbl: str, keys: list, batch_keys: int,
+                  policy: RetryPolicy, inject=None) -> None:
+    """One table's merged keys in pk order, in chunks of ``batch_keys``
+    keys, or fewer where a chunk's UPDATE (2 * len(cols) - 1 parameters
+    per key) would pass the connection's variable limit."""
+    import sqlite3
+    cols = tuple(keys[0]["value_cols"])
+    limit = conn.getlimit(sqlite3.SQLITE_LIMIT_VARIABLE_NUMBER)
+    n = max(1, min(batch_keys, limit // (2 * len(cols) - 1)))
+    keys = sorted(keys, key=lambda k: (k["pk"] is not None, k["pk"]))
+    for i in range(0, len(keys), n):
+        for text, params in sqlgen.chunk_statements(tbl, cols, keys[i:i + n]):
+            _execute_with_retry(conn, text, policy, inject, params)
+
+
 def apply_statements(stmts: DataFrame, db_dir: str,
                      num_workers: int = 4,
                      setup_sql: tuple[str, ...] = (),
@@ -166,6 +183,8 @@ def apply_statements(stmts: DataFrame, db_dir: str,
     stmts: columns (worker_id, commit_ts, seq, sub_seq, sql_text).
     Per-worker order is (commit_ts, seq, sub_seq) — exactly the
     per-causality-group order guarantee of the reference's dispatch.
+    Rows with a ``value_cols`` array are the batch path's merged keys
+    (tbl, op, pre_delete, image), applied after them (_apply_merged).
     Transient failures are retried per ``retry`` (default: the
     reference's 100x policy with a 10ms local backoff).
 
@@ -200,6 +219,10 @@ def apply_statements(stmts: DataFrame, db_dir: str,
                    f"UPDATE SET ts = MAX(ts, excluded.ts), "
                    f"status = excluded.status")
 
+    # read here: the sink workers do not see a patched module constant
+    batch_keys = sqlgen.BATCH_KEYS
+    has_keys = "value_cols" in stmts.columns
+
     def run_partition(rows) -> None:
         # one txn per worker, applied sequentially: a partition must
         # never hold two open write txns on the same file
@@ -218,9 +241,16 @@ def apply_statements(stmts: DataFrame, db_dir: str,
                 # loop at 100M events
                 for s in setup:
                     _execute_with_retry(conn, s, policy, None)
+                merged: dict = {}
                 for row in wrows:
-                    _execute_with_retry(conn, row["sql_text"],
-                                        policy, inject)
+                    if has_keys and row["value_cols"] is not None:
+                        merged.setdefault(row["tbl"], []).append(row)
+                    else:
+                        _execute_with_retry(conn, row["sql_text"],
+                                            policy, inject)
+                for tbl, keys in merged.items():
+                    _apply_merged(conn, tbl, keys, batch_keys, policy,
+                                  inject)
                 if checkpoint_ts is not None:
                     conn.execute(ckpt_upsert,
                                  (f"{topic}@{wid}", int(checkpoint_ts),

@@ -8,9 +8,10 @@ NULL-safe WHERE clause; identifiers are backtick-quoted
 
 Spark-first: statement text is generated as a *column* (pure concat
 expressions) so a foreachBatch JDBC writer can iterate a partition and
-execute; nothing is collected to the driver. Safe-mode variants map
-I->REPLACE and U->DELETE+REPLACE (executor.go:407-443) — compose with
-operators/safe_mode.py upstream of this projection.
+execute; nothing is collected to the driver. The batch path's
+``chunk_statements`` is plain Python, run in the sink worker. Safe-mode
+variants map I->REPLACE and U->DELETE+REPLACE (executor.go:407-443) —
+compose with operators/safe_mode.py upstream of this projection.
 """
 
 from __future__ import annotations
@@ -284,90 +285,50 @@ def bulk_delete_replace(compacted: DataFrame,
 BATCH_KEYS = 128
 
 
-def batch_statements(merged: DataFrame,
-                     value_cols: tuple[str, ...] = ("pk", "val"),
-                     batch_size: int = BATCH_KEYS) -> DataFrame:
-    """Multi-row statements for the loader's batch path over
-    ``compaction.merge_by_pk`` output (one row per key: op, pre_delete,
-    the final image). A table's merged keys are numbered in pk order
-    and cut into chunks of ``batch_size``; each chunk gives at most
-    four statements, tagged ``sub_seq`` 0 for its DELETE and 1 for the
-    rest, so a chunk applied in (commit_ts, seq, sub_seq) order deletes
-    before it writes:
+def _marks(n: int) -> str:
+    return ", ".join(["?"] * n)
 
-      D keys and pre_delete keys -> DELETE FROM t WHERE pk IN (...)
-      I keys -> INSERT INTO t(cols) VALUES (...), (...)
-      R keys -> REPLACE INTO t(cols) VALUES (...), (...)
-      U keys -> UPDATE t SET c = CASE pk WHEN k THEN v ... END, ...
-                WHERE pk IN (...)
 
-    A multi-row INSERT is one statement, so a key that is already live
-    fails it as the single INSERT would. Returns (db, tbl, batch_no,
-    commit_ts, seq, sub_seq, sql_text); commit_ts is the chunk's last.
-    The shapes are the sqlite dialect's, the SQL applier's target;
-    mysql's differ only by the schema-qualified table.
+def chunk_statements(tbl: str, cols: tuple[str, ...],
+                     keys) -> list[tuple[str, list]]:
+    """The batch path's statements for one chunk of one table's merged
+    keys (``compaction.merge_by_pk`` rows: op, pre_delete and the final
+    image), in apply order, as (text, params) with ``?`` placeholders,
+    as the loader's executor builds them (executor.go:273-334):
+
+      D keys and pre_delete keys -> DELETE FROM t WHERE pk IN (?, ...)
+      I keys -> INSERT INTO t(cols) VALUES (?, ...), (?, ...)
+      R keys -> REPLACE INTO t(cols) VALUES (?, ...), (?, ...)
+      U keys -> UPDATE t SET c = CASE pk WHEN ? THEN ? ... END, ...
+                WHERE pk IN (?, ...)
+
+    The DELETE comes first, so a key deleted and re-inserted in the
+    batch finds its slot free; a key that is already live fails the
+    multi-row INSERT as it would the single one. The shapes are the
+    sqlite dialect's; mysql's differ only by the schema-qualified table.
     """
-    str_set = _string_cols(merged, value_cols)
-    tbl, quote = _target("sqlite")
-    set_cols = [c for c in value_cols if c != "pk"]
-    lits = {c: sql_literal(F.col(c), c in str_set, "sqlite")
-            for c in {"pk", *value_cols}}
-    key = F.struct(
-        F.col("op").alias("op"),
-        ((F.col("op") == "D") | F.col("pre_delete")).alias("del"),
-        lits["pk"].alias("pk"),
-        F.concat(F.lit("("), F.concat_ws(", ", *[lits[c] for c in value_cols]),
-                 F.lit(")")).alias("row"),
-        *[F.concat(F.lit(" WHEN "), lits["pk"], F.lit(" THEN "), lits[c])
-          .alias(f"v{i}") for i, c in enumerate(set_cols)])
-    w = Window.partitionBy("db", "tbl").orderBy("pk")
-    chunks = (merged
-              .withColumn("batch_no", F.floor((F.row_number().over(w) - 1)
-                                              / batch_size).cast("int"))
-              .groupBy("db", "tbl", "batch_no")
-              .agg(F.max("commit_ts").alias("commit_ts"),
-                   F.collect_list(key).alias("ks")))
-
-    def joined(pred, field: str, sep: str = ", ") -> tuple[Column, Column]:
-        sel = F.filter("ks", pred)
-        return (F.size(sel) > 0,
-                F.array_join(F.transform(sel, lambda k: k[field]), sep))
-
-    pk_q, cols = quote("pk"), ", ".join(quote(c) for c in value_cols)
-
-    def multi_row(verb: str, op: str) -> Column:
-        some, rows = joined(lambda k: k["op"] == op, "row")
-        return F.when(some, F.concat(F.lit(f"{verb} INTO "), tbl,
-                                     F.lit(f"({cols}) VALUES "), rows))
-
-    some_del, del_keys = joined(lambda k: k["del"], "pk")
-    delete = F.when(some_del, F.concat(
-        F.lit("DELETE FROM "), tbl, F.lit(f" WHERE {pk_q} IN ("), del_keys,
-        F.lit(")")))
-
-    def is_u(k):
-        return k["op"] == "U"
-
-    some_u, upd_keys = joined(is_u, "pk")
-    # a pk-only table has nothing to update
-    update = F.lit(None).cast("string") if not set_cols else F.when(
-        some_u, F.concat(
-            F.lit("UPDATE "), tbl, F.lit(" SET "),
-            F.concat_ws(", ", *[
-                F.concat(F.lit(f"{quote(c)} = CASE {pk_q}"),
-                         joined(is_u, f"v{i}", "")[1], F.lit(" END"))
-                for i, c in enumerate(set_cols)]),
-            F.lit(f" WHERE {pk_q} IN ("), upd_keys, F.lit(")")))
-    stmts = F.array(*[F.struct(F.lit(sub).alias("sub_seq"),
-                               text.alias("sql_text"))
-                      for sub, text in ((0, delete),
-                                        (1, multi_row("INSERT", "I")),
-                                        (1, multi_row("REPLACE", "R")),
-                                        (1, update))])
-    return (chunks
-            .select("db", "tbl", "batch_no", "commit_ts",
-                    F.lit(0).alias("seq"),
-                    F.explode(F.filter(stmts, lambda s: s["sql_text"]
-                                       .isNotNull())).alias("s"))
-            .select("db", "tbl", "batch_no", "commit_ts", "seq",
-                    "s.sub_seq", "s.sql_text"))
+    t, pk_q = _q(tbl), _q("pk")
+    set_cols = [c for c in cols if c != "pk"]
+    out = []
+    dels = [k["pk"] for k in keys if k["op"] == "D" or k["pre_delete"]]
+    if dels:
+        out.append((f"DELETE FROM {t} WHERE {pk_q} IN ({_marks(len(dels))})",
+                    dels))
+    row = f"({_marks(len(cols))})"
+    col_list = ", ".join(_q(c) for c in cols)
+    for verb, op in (("INSERT", "I"), ("REPLACE", "R")):
+        rows = [k for k in keys if k["op"] == op]
+        if rows:
+            out.append((f"{verb} INTO {t}({col_list}) VALUES "
+                        + ", ".join([row] * len(rows)),
+                        [k[c] for k in rows for c in cols]))
+    upd = [k for k in keys if k["op"] == "U"]
+    if upd and set_cols:        # a pk-only table has nothing to update
+        cases = " WHEN ? THEN ?" * len(upd)
+        sets = ", ".join(f"{_q(c)} = CASE {pk_q}{cases} END"
+                         for c in set_cols)
+        out.append((f"UPDATE {t} SET {sets} "
+                    f"WHERE {pk_q} IN ({_marks(len(upd))})",
+                    [v for c in set_cols for k in upd for v in (k["pk"], k[c])]
+                    + [k["pk"] for k in upd]))
+    return out

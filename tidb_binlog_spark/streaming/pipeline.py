@@ -143,10 +143,10 @@ class SqlBatchApplier:
 
     A shape's statements take one of two paths (see _apply_dml). With
     no sink unique key, the batch path merges the events by primary
-    key and applies multi-row statements per chunk of keys, with no
-    causality step: DELETE for a key that ends deleted; in safe mode
-    REPLACE for the rest; in strict mode INSERT (after the key's DELETE
-    when the batch holds an earlier D) or UPDATE of the final image.
+    key; the sink workers apply multi-row statements per chunk of keys,
+    no causality step: DELETE for a key that ends deleted; in safe
+    mode REPLACE for the rest; in strict mode INSERT (after the key's
+    DELETE when the batch holds an earlier D) or UPDATE of the image.
     With a unique key, the single path applies one statement per event
     (INSERT / UPDATE / DELETE, or REPLACE / DELETE + REPLACE in safe
     mode), routed by causality group.
@@ -298,13 +298,13 @@ class SqlBatchApplier:
 
         Shapes split two ways, as the loader's execDMLs does
         (executor.go:273-334): a shape with no sink unique key takes
-        the batch path — merge by primary key, then multi-row
-        statements per chunk of keys, spread over workers by (table,
-        chunk) with no causality step, since merged keys are disjoint.
-        Every other shape takes the single path: one statement per
-        event, causality-routed. Both land in one apply_statements
-        call, so each worker still commits its rows and its cursor in
-        one transaction."""
+        the batch path — merge by primary key, each merged key routed
+        by (db, tbl, pk) with no causality step, since merged keys are
+        disjoint; the sink worker builds the multi-row statements
+        (sqlgen.chunk_statements). Every other shape takes the single
+        path: one statement per event, causality-routed. Both land in
+        one apply_statements call, so each worker still commits its
+        rows and its cursor in one transaction."""
         from ..operators import causality
         from ..operators import safe_mode as sm
         from ..sinks import jdbc, sqlgen
@@ -329,15 +329,16 @@ class SqlBatchApplier:
             part = (prepared if len(shapes) == 1
                     else prepared.filter(F.col("tbl").isin(shape_tables)))
             # columns beyond the typed (pk, val) ride the row image —
-            # extracted as strings, quoted by the statement builder
+            # extracted as strings for either path's statement builder
             for c in cols:
                 if c not in ("pk", "val"):
                     part = part.withColumn(
                         c, F.get_json_object(F.col("row_json"), f"$.{c}"))
             if not uks:
-                b = sqlgen.batch_statements(
-                    compaction.merge_by_pk(part, cols), value_cols=cols)
-                batch = b if batch is None else batch.unionByName(b)
+                b = (compaction.merge_by_pk(part, cols)
+                     .withColumn("value_cols", F.array(*map(F.lit, cols))))
+                batch = b if batch is None else batch.unionByName(
+                    b, allowMissingColumns=True)
                 continue
             s = sqlgen.generate_sql(part, dialect="sqlite",
                                     value_cols=cols) \
@@ -379,13 +380,15 @@ class SqlBatchApplier:
                 stmts, txn_keys, num_workers=self.num_workers,
                 txn_col="commit_ts", max_edges=max_edges)
         if batch is not None:
-            # a chunk's DELETE and its writes share one worker, so they
-            # apply in sub_seq order; they carry no causality group
+            # merged keys are disjoint, so each routes by its own key with
+            # no causality group; the worker builds the statements
             batch = (batch
                      .withColumn("worker_id", F.pmod(
-                         F.xxhash64("db", "tbl", "batch_no"),
+                         F.xxhash64("db", "tbl", "pk"),
                          F.lit(self.num_workers)))
-                     .drop("db", "tbl", "batch_no"))
+                     .withColumn("seq", F.lit(0))
+                     .withColumn("sub_seq", F.lit(0))
+                     .drop("db"))
             routed = (batch if routed is None
                       else routed.unionByName(batch,
                                               allowMissingColumns=True))
@@ -565,10 +568,10 @@ def run_sql_apply_stream(spark: SparkSession, source_dir: str, db_dir: str,
     Two apply paths, split per table as the loader's execDMLs does
     (pkg/loader/executor.go:273-334). Tables with no sink UNIQUE key
     (every table when no catalog is wired) take the batch path: events
-    merge by primary key (compaction.merge_by_pk) into multi-row
-    DELETE / INSERT / UPDATE statements, or DELETE / REPLACE in safe
-    mode, per chunk of up to 128 keys (sqlgen.batch_statements),
-    spread over workers by (table, chunk). The other tables take the
+    merge by primary key (compaction.merge_by_pk), and each sink worker
+    applies its share of the keys as multi-row DELETE / INSERT / UPDATE
+    statements, or DELETE / REPLACE in safe mode, per chunk of up to
+    128 keys (sqlgen.chunk_statements). The other tables take the
     single path: one statement per event, dispatched by causality
     group (conflict_free_partitions, pkg/loader/causality.go:31-99),
     NOT pmod(pk): a whole txn lands on one worker, and txns linked by
