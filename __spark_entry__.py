@@ -2969,10 +2969,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def q_ann_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer k-means over micro-quantized embeddings (k=10,
-    2 Lloyd rounds, floor-mean updates): the verification-grade twin
-    of similarity.kmeans_centroids that upgrades the coarse-quantizer
-    evidence from pytest-only to hash-checked. Per iteration the
-    corpus is scanned, never reshuffled (broadcast centroids +
+    2 Lloyd rounds, floor-mean updates), hash-checked. Per iteration
+    the corpus is scanned, never reshuffled (broadcast centroids +
     (k x dims) aggregate back)."""
     from pyspark.sql import Window
     q = _embs(spark, sf_dir).select(

@@ -1,79 +1,6 @@
-"""Declarative curation plan: config-built pipeline equals the
-hand-composed stages, TOML round-trips, and bad configs are loud."""
+"""Temperature (alpha) sampling of the curation mix stage."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from tidb_binlog_spark.functions import curation, dedup, text
-from tidb_binlog_spark.plans.curation import (CurationConfig,
-                                              build_curation,
-                                              load_curation_config,
-                                              parse_curation_config)
-
-
-def _docs(spark):
-    from tidb_binlog_spark.session import load_tables
-    load_tables(spark, "/root/testdata/sf0.001", "documents")
-    return spark.table("documents")
-
-
-def test_config_pipeline_matches_hand_composition(spark):
-    docs = _docs(spark)
-    cfg = CurationConfig(min_tokens=5, exact_dedup=True,
-                         line_dedup=True, near_dedup="minhash")
-    got = build_curation(docs, cfg)
-
-    q = text.quality_score(docs).select("doc_id", "n_tokens")
-    gated = (docs.join(q, "doc_id")
-             .filter(F.col("n_tokens") >= 5).select(*docs.columns))
-    ex = dedup.exact_dedup(gated)
-    canon = gated.join(
-        ex.filter(F.col("doc_id") == F.col("canonical_id"))
-          .select("doc_id"), "doc_id")
-    carried = [c for c in canon.columns if c != "text"]
-    cleaned = (curation.line_dedup(canon)
-               .select("doc_id", F.col("clean_text").alias("text"))
-               .join(canon.select(*carried), "doc_id"))
-    losers = (dedup.minhash_lsh_pairs(cleaned)
-              .select(F.col("doc_b").alias("doc_id")).distinct())
-    want = cleaned.join(losers, "doc_id", "left_anti")
-
-    a = got.select("doc_id", "text", "source")
-    b = want.select("doc_id", "text", "source")
-    assert a.exceptAll(b).union(b.exceptAll(a)).count() == 0
-
-
-def test_config_optional_stages_annotate(spark):
-    docs = _docs(spark)
-    cfg = CurationConfig(near_dedup=None, line_dedup=False,
-                         shuffle_seed="s", pack_budget=256)
-    out = build_curation(docs, cfg)
-    assert {"shuffle_pos", "bin_id", "n_tokens"} <= set(out.columns)
-    n = out.count()
-    assert n > 0
-    # shuffle order is a permutation
-    assert out.select("shuffle_pos").distinct().count() == n
-
-
-def test_config_validation_and_toml(tmp_path):
-    with pytest.raises(ValueError, match="near_dedup"):
-        CurationConfig(near_dedup="lsh")
-    with pytest.raises(ValueError, match="unknown curation config"):
-        parse_curation_config({"min_tokenz": 3})
-    p = tmp_path / "recipe.toml"
-    p.write_text('min_tokens = 7\nnear_dedup = "simhash"\n'
-                 'langs = ["en", "es"]\npack_budget = 1024\n')
-    cfg = load_curation_config(str(p))
-    assert cfg.min_tokens == 7 and cfg.near_dedup == "simhash"
-    assert cfg.langs == ("en", "es") and cfg.pack_budget == 1024
-
-
-def test_decontaminate_requires_bench(spark):
-    docs = _docs(spark)
-    with pytest.raises(ValueError, match="bench"):
-        build_curation(docs, CurationConfig(decontaminate=True))
 
 
 def test_temperature_mix_upweights_small_strata(spark):
@@ -102,36 +29,3 @@ def test_temperature_mix_upweights_small_strata(spark):
     # replay-stable: identical second run
     again = temperature_mix(docs, budget=200, alpha=0.5).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, out))
-
-
-def test_curation_config_temperature_mix_stage(spark):
-    """mix_temperature_budget drives the alpha-sampling stage inside
-    build_curation (equivalent to hand-composing temperature_mix on
-    the post-dedup corpus); mixing modes are mutually exclusive."""
-    import pytest
-    from tidb_binlog_spark.functions.curation import temperature_mix
-    from tidb_binlog_spark.plans.curation import (CurationConfig,
-                                                  build_curation,
-                                                  parse_curation_config)
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta " * 3
-          + f"uniq{i} " * 2, "big" if i < 90 else "small")
-         for i in range(100)],
-        "doc_id long, text string, source string")
-    cfg = CurationConfig(min_tokens=2, exact_dedup=False,
-                         line_dedup=False, near_dedup=None,
-                         mix_temperature_budget=40,
-                         mix_temperature_alpha=0.5)
-    out = build_curation(docs, cfg)
-    picked = temperature_mix(docs.select("doc_id", "source"),
-                             budget=40, alpha=0.5,
-                             stratum_col="source")
-    assert sorted(r["doc_id"] for r in out.collect()) == \
-           sorted(r["doc_id"] for r in picked.collect())
-    with pytest.raises(ValueError):
-        CurationConfig(mix_weights={"a": 1.0},
-                       mix_temperature_budget=10)
-    cfg2 = parse_curation_config(
-        {"mix_temperature_budget": 40, "mix_temperature_alpha": 0.5})
-    assert cfg2.mix_temperature_budget == 40

@@ -183,14 +183,14 @@ def test_event_filter_case_sensitivity(spark):
                               .otherwise("db0"))
 
     # insensitive (default): both rows match the rule and drop
-    out = flt.filter_event_kinds(ch, [("db0", "~.*", ["D"])])
+    out = ch.filter(flt.event_kinds_predicate([("db0", "~.*", ["D"])]))
     assert out.count() == 0
     # sensitive: only the exact-case row drops
-    out = flt.filter_event_kinds(ch, [("db0", "~.*", ["D"])],
-                                 case_sensitive=True)
+    out = ch.filter(flt.event_kinds_predicate([("db0", "~.*", ["D"])],
+                                              case_sensitive=True))
     assert [r["pk"] for r in out.collect()] == [1]
     # allow/block stays insensitive even in sensitive deployments
-    kept = flt.filter_allow_block(ch, ignore_rules=[("db0", "")])
+    kept = ch.filter(flt.allow_block_predicate(None, [("db0", "")]))
     assert kept.count() == 0
 
 

@@ -245,11 +245,13 @@ def test_schema_backfill_defaults(spark):
 def test_checksum_detects_difference(spark):
     a = spark.createDataFrame([(1, "x"), (2, "y")], "id long, v string")
     b = spark.createDataFrame([(1, "x"), (2, "z")], "id long, v string")
-    ca = checksum.table_checksum(a, ["id", "v"]).collect()[0]
-    cb = checksum.table_checksum(b, ["id", "v"]).collect()[0]
-    same = checksum.table_checksum(a, ["id", "v"]).collect()[0]
-    assert ca["table_digest"] == same["table_digest"]
-    assert ca["table_digest"] != cb["table_digest"]
+
+    def digest(df):
+        return sorted((r["bucket"], r["n_rows"], r["digest"]) for r in
+                      checksum.bucket_checksum(df, ["id", "v"]).collect())
+
+    assert digest(a) == digest(a)
+    assert digest(a) != digest(b)
 
 
 def test_multimodal_decode_and_frames(spark):
@@ -426,33 +428,6 @@ def test_url_domains_rollup(spark):
     assert got == {"example.com": (3, 2), "other.org": (1, 1)}
 
 
-def test_multimodal_resize_stub(spark):
-    d = docs_df(spark, ["x" * 1000, "y" * 10])
-    got = {r["doc_id"]: r for r in
-           multimodal.resize_stub(d, max_side=256).collect()}
-    # 1000 bytes -> 361x41 dims; scale = 361/256; stride = 1
-    assert (got[0]["src_width"], got[0]["src_height"]) == (361, 41)
-    assert got[0]["dst_width"] == int(361 / (361 / 256))
-    assert got[0]["dst_height"] == max(1, int(41 / (361 / 256)))
-    # small asset: no downscale, digest == md5 of the full payload
-    import hashlib
-    assert (got[1]["dst_width"], got[1]["dst_height"]) == \
-        (got[1]["src_width"], got[1]["src_height"])
-    assert got[1]["resized_md5"] == hashlib.md5(b"y" * 10).hexdigest()
-
-
-def test_multimodal_audio_features_stub(spark):
-    d = docs_df(spark, ["ab" * 800])   # 1600 'samples' at 16 kHz
-    got = multimodal.audio_features_stub(d).collect()[0]
-    assert got["n_samples"] == 1600
-    assert got["duration_ms"] == 100
-    import numpy as np
-    pcm = np.frombuffer(b"ab" * 800, dtype=np.int8).astype(float)
-    assert abs(got["rms"] - float(np.sqrt(np.mean(pcm ** 2)))) < 1e-9
-    assert got["peak"] == int(np.max(np.abs(pcm)))
-    assert got["zero_crossings"] == 0   # all-positive ASCII bytes
-
-
 def test_chunk_documents_window_invariants(spark):
     """Chunk windows tile the token stream: stride-spaced offsets,
     full windows except the tail, reconstruction of the token count,
@@ -502,37 +477,38 @@ def test_kmeans_recovers_separated_clusters(spark):
     partition the blobs exactly, centroids land on the blob means,
     and the result is deterministic across replays."""
     from tidb_binlog_spark.functions.similarity import (
-        kmeans_assign, kmeans_centroids)
+        kmeans_integer, kmeans_integer_fit)
     pts = []
-    for b, base in enumerate([0.0, 10.0, 20.0]):
+    for b, base in enumerate([0, 100, 200]):
         for i in range(20):
-            pts.append((b * 20 + i, [base + (i % 5) * 0.1,
-                                     base - (i % 3) * 0.1]))
-    docs = spark.createDataFrame(pts, "vec_id long, embedding array<double>")
-    cents = kmeans_centroids(docs, k=3, iters=4)
-    got = kmeans_assign(docs, cents).select("vec_id", "centroid_id").collect()
+            pts.append((b * 20 + i, [base + (i % 5), base - (i % 3)]))
+    docs = spark.createDataFrame(pts, "vec_id long, qvec array<long>")
+    got = kmeans_integer(docs, k=3, iters=4).select(
+        "vec_id", "cluster_id").collect()
     groups = {}
     for r in got:
-        groups.setdefault(r["centroid_id"], set()).add(r["vec_id"])
+        groups.setdefault(r["cluster_id"], set()).add(r["vec_id"])
     assert sorted(len(g) for g in groups.values()) == [20, 20, 20]
     for g in groups.values():           # blobs never split
         assert len({v // 20 for v in g}) == 1
     # determinism
-    c2 = kmeans_centroids(docs.repartition(5), k=3, iters=4)
-    assert sorted(map(tuple, (r["c_emb"] for r in cents.collect()))) == \
-        sorted(map(tuple, (r["c_emb"] for r in c2.collect())))
+    cents = kmeans_integer_fit(docs, k=3, iters=4)
+    c2 = kmeans_integer_fit(docs.repartition(5), k=3, iters=4)
+    assert sorted(map(tuple, (r["cvec"] for r in cents.collect()))) == \
+        sorted(map(tuple, (r["cvec"] for r in c2.collect())))
 
 
 def test_semantic_dedup_keeps_lowest_id_representative(spark):
-    from tidb_binlog_spark.functions.similarity import semantic_dedup
+    from tidb_binlog_spark.functions.similarity import semantic_dedup_exact
     docs = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.999, 0.001]),   # near-identical pair
          (3, [0.0, 1.0]),                         # unique direction
          (4, [1.0, 0.002])],                      # dup of 1 too
         "vec_id long, embedding array<double>")
     out = {r["vec_id"]: r["is_kept"]
-           for r in semantic_dedup(docs, k=2, iters=2,
-                                   threshold=0.999).collect()}
+           for r in semantic_dedup_exact(docs, k=2, iters=2,
+                                         thr_num=999,
+                                         thr_den=1000).collect()}
     assert out[1] and out[3]            # representatives survive
     assert not out[2] and not out[4]    # higher-id near-dups dropped
 
@@ -620,7 +596,7 @@ def test_pq_encode_reconstructs_codebook_samples_exactly(spark):
 
 def test_hash_embed_deterministic_and_count_scaled(spark):
     from tidb_binlog_spark.functions.scoring import hash_embed
-    from tidb_binlog_spark.functions.similarity import semantic_dedup
+    from tidb_binlog_spark.functions.similarity import semantic_dedup_exact
     import pyspark.sql.functions as F
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma"),
@@ -641,14 +617,16 @@ def test_hash_embed_deterministic_and_count_scaled(spark):
     for v in out.values():
         assert all(x == int(x) for x in v)
     # the embeddings feed the semantic-dedup stack directly (zero
-    # vectors gated first — cosine is undefined on them): the two
+    # vectors gated first — cosine is undefined on them; the counts
+    # are exact integers, so scale 1 quantizes losslessly): the two
     # identical docs collapse to the lower id
     emb = (hash_embed(docs)
            .filter(F.expr("exists(embedding, x -> x <> 0D)"))
            .select(F.col("doc_id").alias("vec_id"), "embedding"))
     kept = {r["vec_id"]: r["is_kept"]
-            for r in semantic_dedup(emb, k=2, iters=1,
-                                    threshold=0.999).collect()}
+            for r in semantic_dedup_exact(emb, k=2, iters=1, scale=1,
+                                          thr_num=999,
+                                          thr_den=1000).collect()}
     assert kept[1] and not kept[2]
 
 

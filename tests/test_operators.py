@@ -86,21 +86,24 @@ def test_checkpoint_pinned_by_pending_prewrite(spark):
 def test_allow_then_block(spark):
     ch = make_changes(spark, [(1, "s0", 10, "I", 1)])
     ch = ch.withColumn("db", F.lit("PROD")).withColumn("tbl", F.lit("users"))
-    kept = filters.filter_allow_block(ch, [("prod", "")], [("prod", "users")])
+    kept = ch.filter(filters.allow_block_predicate([("prod", "")],
+                                                   [("prod", "users")]))
     assert kept.count() == 0          # allowlisted then blocklisted
-    kept = filters.filter_allow_block(ch, [("prod", "")], [("other", "")])
+    kept = ch.filter(filters.allow_block_predicate([("prod", "")],
+                                                   [("other", "")]))
     assert kept.count() == 1          # case-insensitive allow match
 
 
 def test_regex_rule(spark):
     ch = make_changes(spark, [(1, "s0", 10, "I", 1)])
     ch = ch.withColumn("db", F.lit("test_ignore_7"))
-    assert filters.filter_allow_block(ch, None, [("~^test_ignore_.*", "")]).count() == 0
+    keep = filters.allow_block_predicate(None, [("~^test_ignore_.*", "")])
+    assert ch.filter(keep).count() == 0
 
 
 def test_event_kind_rule(spark):
     ch = make_changes(spark, [(1, "s0", 10, "D", 1), (2, "s0", 20, "I", 1)])
-    kept = filters.filter_event_kinds(ch, [("db0", "t", ["D"])])
+    kept = ch.filter(filters.event_kinds_predicate([("db0", "t", ["D"])]))
     assert rows(kept, "op") == [("I",)]
 
 
@@ -108,16 +111,20 @@ def test_event_kind_rule(spark):
 
 def test_wildcard_routing_first_rule_wins(spark):
     ch = make_changes(spark, [(1, "s0", 10, "I", 1)])
-    routed = router.route_tables(ch, [
+    db, tbl = router.route_columns([
         ("db?", "t", "dwh", "t1"),
         ("*", "*", "dwh", "fallback"),
-    ]).collect()[0]
+    ])
+    routed = ch.select(db.alias("target_db"),
+                       tbl.alias("target_tbl")).collect()[0]
     assert (routed["target_db"], routed["target_tbl"]) == ("dwh", "t1")
 
 
 def test_unrouted_keeps_names(spark):
     ch = make_changes(spark, [(1, "s0", 10, "I", 1)])
-    routed = router.route_tables(ch, [("nope", "*", "x", "y")]).collect()[0]
+    db, tbl = router.route_columns([("nope", "*", "x", "y")])
+    routed = ch.select(db.alias("target_db"),
+                       tbl.alias("target_tbl")).collect()[0]
     assert (routed["target_db"], routed["target_tbl"]) == ("db0", "t")
 
 
@@ -729,7 +736,8 @@ def test_partition_catalog_rebind_and_orphans(spark):
     assert out[3] == ("t1", "p1", "ok")
     assert out[4] == ("t1", "p2", "ok")
     assert out[5] == (None, None, "orphan")      # never bound
-    assert partitions.live_stream(ch, cat.dimension(spark)).count() == 2
+    live = partitions.resolve_partitions(ch, cat.dimension(spark))
+    assert live.filter(F.col("partition_status") == "ok").count() == 2
 
 
 def test_schema_ddl_drop_database_cascade(spark):

@@ -447,31 +447,6 @@ def test_rollup_is_expand_plus_single_aggregate(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_semantic_dedup_k_scales_with_corpus(spark):
-    """SemDeDup's sub-quadratic bound only holds when k scales with
-    n: a k too small for the corpus must be REFUSED (the per-cluster
-    self-join would be quadratic), and the derived default must keep
-    average cluster size at the target."""
-    import pytest
-    from tidb_binlog_spark.functions.similarity import semantic_dedup
-    emb = spark.range(300).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[(F.col("id") % 7 + j).cast("double")
-                  for j in range(4)]).alias("embedding"))
-    # explicit k far too small for n -> red
-    with pytest.raises(ValueError, match="quadratic"):
-        semantic_dedup(emb, k=2, iters=1, max_cluster_size=50)
-    # derived k targets the cluster size: n=300, target=50 -> k=6
-    out = semantic_dedup(emb, iters=1, target_cluster_size=50,
-                         max_cluster_size=50)
-    assert out.select("centroid_id").distinct().count() >= 2
-    assert out.count() == 300
-    # explicit opt-out still works for known-small corpora
-    small = semantic_dedup(emb.limit(40), k=2, iters=1,
-                           max_cluster_size=None)
-    assert small.count() == 40
-
-
 def test_semantic_dedup_exact_handles_mass_duplicates(spark):
     """VERDICT r7 item 2 + review finding: scale protection must hold
     on ACTUAL cluster sizes, not averages. A mass-duplicate corpus —

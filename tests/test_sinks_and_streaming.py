@@ -129,20 +129,6 @@ def test_streaming_multi_source_union_merge(spark, tmp_path):
     assert got == {1: 4.0}          # pk2 deleted, pk1 updated
 
 
-def test_windowed_counts_runs(spark, tmp_path):
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    make_changes(spark, [(1, "s0", 10_000_000, "I", 1),
-                         (2, "s0", 20_000_000, "U", 1)]) \
-        .coalesce(1).write.mode("append").parquet(src)
-    counts = pipeline.run_windowed_counts(spark, src)
-    q = (counts.writeStream.format("memory").queryName("wc")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["op"]: r["count"] for r in spark.sql("SELECT * FROM wc").collect()}
-    assert got == {"I": 1, "U": 1}
-
-
 def test_sql_generation_escapes_strings_and_identifiers(spark):
     # hostile data: quote-bearing string value and backticked identifiers
     ch = (make_changes(spark, [(1, "s0", 10, "I", 1)])
@@ -778,155 +764,6 @@ def test_sql_apply_stream_initial_commit_ts(spark, tmp_path):
     got = sorted(con.execute("SELECT pk FROM t").fetchall())
     con.close()
     assert got == [(3,), (4,)]
-
-
-def _write_doc_segment(spark, path, rows):
-    from tidb_binlog_spark.streaming.corpus_stream import DOC_SCHEMA
-    spark.createDataFrame(rows, DOC_SCHEMA).coalesce(1) \
-        .write.mode("append").parquet(path)
-
-
-def test_corpus_stream_gates_dedups_and_decontaminates(spark, tmp_path):
-    import datetime as dt
-    from tidb_binlog_spark.streaming.corpus_stream import run_curation_stream
-    src = str(tmp_path / "docs_in")
-    out = str(tmp_path / "docs_out")
-    ck = str(tmp_path / "ck")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    good = "the quick brown fox jumps over the lazy dog"
-    contaminated = "held out benchmark prompt text appears here verbatim"
-    # segment 1: a good doc, an exact duplicate, a too-short doc
-    _write_doc_segment(spark, src, [
-        (1, good, "en", "crawl_a", len(good), t0),
-        (2, good, "en", "crawl_b", len(good), t0),
-        (3, "too short", "en", "crawl_a", 9, t0),
-    ])
-    # segment 2: a contaminated doc and a distinct clean doc
-    clean2 = "an entirely different clean document with many tokens"
-    _write_doc_segment(spark, src, [
-        (4, contaminated, "en", "crawl_a", len(contaminated), t0),
-        (5, clean2, "en", "crawl_b", len(clean2), t0),
-    ])
-    bench = spark.createDataFrame(
-        [("held out benchmark",), ("benchmark prompt text",)], "sh string")
-    q = run_curation_stream(spark, src, ck, out, bench_shingles=bench)
-    q.awaitTermination(120)
-    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    # doc 1 xor 2 survives dedup (same content hash); 3 fails the
-    # token gate; 4 is decontaminated away; 5 survives
-    assert 5 in got and 3 not in got and 4 not in got
-    assert len(got & {1, 2}) == 1 and len(got) == 2
-
-
-def test_corpus_stream_source_quality_stats_windowed(spark, tmp_path):
-    import datetime as dt
-    from tidb_binlog_spark.streaming.corpus_stream import (
-        read_document_stream, source_quality_stats)
-    import time
-    src = str(tmp_path / "docs_in")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 30)
-    _write_doc_segment(spark, src, [
-        (1, "one two three four five six", "en", "crawl_a", 27, t0),
-        (2, "tiny", "en", "crawl_a", 4, t0),
-        (3, "a b c d e f g h i j", "en", "crawl_b", 19, t0),
-    ])
-    time.sleep(1.1)   # distinct mtime: file source processes oldest first
-    # a much-later segment advances the watermark past t0's window, so
-    # append mode finalizes it during the second micro-batch
-    late = t0 + dt.timedelta(minutes=10)
-    _write_doc_segment(spark, src, [
-        (9, "later segment keeps the clock moving", "en", "crawl_a",
-         36, late),
-    ])
-    stats = source_quality_stats(
-        read_document_stream(spark, src, max_files_per_trigger=1))
-    q = (stats.writeStream.format("memory").queryName("cs_stats")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = {r["source"]: r for r in spark.sql(
-        "SELECT * FROM cs_stats WHERE window_start < timestamp"
-        "'2024-01-01 12:05:00'").collect()}
-    assert rows["crawl_a"]["n_docs"] == 2
-    assert rows["crawl_a"]["n_too_short"] == 1
-    assert rows["crawl_b"]["total_tokens"] == 10
-
-
-def test_streaming_sessionization_closes_on_gap(spark, tmp_path):
-    import datetime as dt
-    import time
-    from tidb_binlog_spark.streaming.corpus_stream import (
-        EVENT_SCHEMA, read_event_stream, sessionize_stream)
-    src = str(tmp_path / "events_in")
-    t0 = dt.datetime(2024, 1, 1, 9, 0, 0)
-
-    def seg(rows):
-        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(src)
-
-    # user 7: two bursts 40 minutes apart -> two sessions under a
-    # 30-minute gap; user 8: one event. Event ids are NOT monotone in
-    # time (id 10 opens the session) — first_event_id must follow
-    # event TIME, not the smallest id
-    seg([(10, 7, "click", t0),
-         (2, 7, "view", t0 + dt.timedelta(minutes=5)),
-         (3, 8, "click", t0 + dt.timedelta(minutes=1))])
-    time.sleep(1.1)
-    seg([(4, 7, "click", t0 + dt.timedelta(minutes=45)),
-         # far-future row advances the watermark so earlier sessions close
-         (9, 99, "tick", t0 + dt.timedelta(hours=3))])
-    q = (sessionize_stream(
-            read_event_stream(spark, src, max_files_per_trigger=1))
-         .writeStream.format("memory").queryName("sess")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM sess WHERE user_id = 7").collect()
-    assert sorted(r["n_events"] for r in rows) == [1, 2]
-    first = min(rows, key=lambda r: r["session_start"])
-    assert first["n_event_types"] == 2 and first["first_event_id"] == 10
-    assert spark.sql(
-        "SELECT count(*) c FROM sess WHERE user_id = 8").first()["c"] == 1
-
-
-def test_corpus_stream_span_scrub_keeps_doc_drops_quote(spark, tmp_path):
-    import datetime as dt
-    from tidb_binlog_spark.streaming.corpus_stream import run_curation_stream
-    src = str(tmp_path / "docs_in")
-    out = str(tmp_path / "docs_out")
-    ck = str(tmp_path / "ck")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    # must exceed the 16-token window so the bench set produces
-    # window hashes at all
-    quote = " ".join(f"q{i}" for i in range(20))
-    article = ("reporting before the quote " + quote
-               + " analysis after the quote continues at length")
-    # double space: byte-for-byte preservation is only provable on
-    # text the tokenize+rejoin path would alter
-    clean = "an entirely separate clean  document with many long tokens"
-    _write_doc_segment(spark, src, [
-        (1, article, "en", "crawl_a", len(article), t0),
-        (2, clean, "en", "crawl_b", len(clean), t0),
-    ])
-    bench = spark.createDataFrame([(100, "intro " + quote + " outro")],
-                                  "doc_id long, text string")
-    q = run_curation_stream(spark, src, ck, out, bench_docs=bench,
-                            available_now=True)
-    q.awaitTermination(120)
-    got = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
-    # the article survives with the quote spans removed; untouched
-    # docs keep their text byte-for-byte
-    assert set(got) == {1, 2}
-    assert "q0" not in got[1]["text"] and "analysis" in got[1]["text"]
-    assert got[2]["text"] == clean
-    # derived metadata tracks the WRITTEN text on both paths
-    import hashlib
-    for d in (1, 2):
-        assert got[d]["content_hash"] == \
-            hashlib.md5(got[d]["text"].encode()).hexdigest()
-        assert got[d]["n_tokens"] == len(got[d]["text"].split())
 
 
 def test_ivm_stream_exact_across_batches(spark, tmp_path):
@@ -2833,3 +2670,73 @@ def test_reading_a_batch_of_files_lists_them_on_the_driver(spark, tmp_path):
     before = set(tracker.getJobIdsForGroup())
     spark.read.schema(pipeline.CHANGE_SCHEMA).parquet(*paths)
     assert set(tracker.getJobIdsForGroup()) == before
+
+
+def test_relay_log_bucket_is_exact_at_tso_scale(spark, tmp_path):
+    """ts_bucket is integer division: a double quotient rounds
+    449999999999999990 / 100000 up into bucket 4500000000000, one past
+    stop_ts's bucket, so the bounded replay pruned the row away."""
+    from tidb_binlog_spark.sinks import relay as relay_mod
+
+    ts = 449999999999999990
+    relay = relay_mod.RelayLog(str(tmp_path / "relay"))
+    relay.append(make_changes(spark, [(1, "s0", ts, "I", 1)]))
+    got = relay.read(spark, stop_ts=ts).collect()
+    assert [(r["commit_ts"], r["ts_bucket"]) for r in got] == \
+        [(ts, 4499999999999)]
+
+
+def _cache_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_failed_apply_releases_cached_frames(spark, tmp_path, monkeypatch):
+    """A batch whose apply raises must not leave its persisted frame in
+    the cache: run_apply_stream's batch and both relay replays release
+    it on the error path too."""
+    from tidb_binlog_spark.sinks import relay as relay_mod
+
+    def boom(*_a, **_k):
+        raise RuntimeError("apply failed")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(SnapshotTable, "apply_batch", boom)
+    monkeypatch.setattr(pipeline.SqlBatchApplier, "apply", boom)
+
+    src = str(tmp_path / "src")
+    _zone(spark, src, [(1, "s0", 10, "I", 1)])
+    q = pipeline.run_apply_stream(spark, src, str(tmp_path / "tbl"),
+                                  str(tmp_path / "ck"))
+    with pytest.raises(Exception, match="apply failed"):
+        q.awaitTermination(120)
+    assert _cache_is_empty(spark)
+
+    relay = relay_mod.RelayLog(str(tmp_path / "relay"))
+    relay.mark_inconsistent()
+    relay.append(make_changes(spark, [(1, "s0", 10, "I", 1)]))
+    with pytest.raises(RuntimeError, match="apply failed"):
+        relay_mod.feed_by_relay_if_needed(
+            spark, relay, SnapshotTable(spark, str(tmp_path / "tbl2")))
+    assert _cache_is_empty(spark)
+    with pytest.raises(RuntimeError, match="apply failed"):
+        pipeline.feed_sql_by_relay_if_needed(spark, relay,
+                                             str(tmp_path / "db"))
+    assert _cache_is_empty(spark)
+
+
+def test_multi_source_merge_raises_real_read_errors(spark, tmp_path):
+    """A zone that has shown nothing yet (missing or empty directory)
+    blocks the merge; a zone that cannot be read (a corrupt segment)
+    raises instead of blocking it silently."""
+    s0, s1 = str(tmp_path / "s0"), str(tmp_path / "s1")
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    _zone(spark, s0, [(1, "s0", 10, "I", 1)])
+    r = pipeline.multi_source_merge_round(spark, [s0, s1], t)   # missing
+    assert r["n_applied"] == 0 and r["watermark"] == -1
+    os.makedirs(s1)                                              # empty
+    r = pipeline.multi_source_merge_round(spark, [s0, s1], t)
+    assert r["n_applied"] == 0 and r["watermark"] == -1
+    with open(os.path.join(s1, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        pipeline.multi_source_merge_round(spark, [s0, s1], t)

@@ -73,15 +73,6 @@ def snapshot_diff(src: DataFrame, dst: DataFrame,
                      *[f"dst_{c}" for c in value_cols]))
 
 
-def table_checksum(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Single-row rollup of the bucket digests (order by bucket)."""
-    buckets = bucket_checksum(df, cols)
-    return buckets.agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.md5(F.concat_ws("", F.array_sort(F.collect_list(
-            F.concat(F.col("bucket"), F.col("digest")))))).alias("table_digest"))
-
-
 def diff_drilldown(src: DataFrame, dst: DataFrame,
                    key_cols: list[str],
                    value_cols: list[str],

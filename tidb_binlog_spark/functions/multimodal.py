@@ -3,7 +3,7 @@ processed by Arrow-batched pandas functions via mapInPandas.
 
 Design for image/audio/video at 100 TB:
 - the payload is an opaque BinaryType column (never parsed by Catalyst);
-- decode / feature-extract / resize / frame-sample run as mapInPandas
+- decode / feature-extract / frame-sample run as mapInPandas
   over Arrow batches — Python touches each batch once, vectorized;
 - partitioning is by payload size bucket so batches stay memory-bounded
   (a 4 KB thumbnail and a 4 GB video never share a task's batch budget).
@@ -138,87 +138,6 @@ def frame_sample_stub(docs: DataFrame, every_n_bytes: int = 1000) -> DataFrame:
     return as_binary_payload(docs).mapInPandas(sample, schema=schema)
 
 
-RESIZE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("src_width", T.LongType()),
-    T.StructField("src_height", T.LongType()),
-    T.StructField("dst_width", T.LongType()),
-    T.StructField("dst_height", T.LongType()),
-    T.StructField("resized_md5", T.StringType()),
-])
-
-
-def resize_stub(docs: DataFrame, max_side: int = 256) -> DataFrame:
-    """Image-resize plumbing: aspect-preserving downscale of each
-    asset's (fake) dimensions to ``max_side``, emitting the resized
-    payload's digest. A real pipeline swaps the body for
-    PIL.Image.resize; the Spark side — Arrow batches over opaque
-    binaries, 1 row in / 1 row out, deterministic output — is the
-    production shape. STUB: the 'resized payload' is the byte stream
-    strided by the scale factor, so the digest is deterministic and
-    scale-sensitive without an image codec in the container."""
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                n = len(raw)
-                w, h = n % 640 + 1, n % 480 + 1      # decode_stub's dims
-                scale = max(1.0, max(w, h) / max_side)
-                dw, dh = max(1, int(w / scale)), max(1, int(h / scale))
-                stride = max(1, round(scale))
-                digest = hashlib.md5(raw[::stride]).hexdigest()
-                rows.append((int(doc_id), w, h, dw, dh, digest))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "src_width", "src_height",
-                               "dst_width", "dst_height", "resized_md5"])
-
-    return as_binary_payload(docs).mapInPandas(resize, schema=RESIZE_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("n_samples", T.LongType()),
-    T.StructField("duration_ms", T.LongType()),
-    T.StructField("rms", T.DoubleType()),
-    T.StructField("peak", T.LongType()),
-    T.StructField("zero_crossings", T.LongType()),
-])
-
-
-def audio_features_stub(docs: DataFrame,
-                        sample_rate: int = 16_000) -> DataFrame:
-    """Audio feature extraction plumbing: treat the payload as signed
-    8-bit PCM and compute the standard gating features (RMS energy,
-    peak, zero-crossing count) vectorized with numpy over each Arrow
-    batch. A real pipeline decodes with soundfile/ffmpeg first; the
-    numpy math and the batch shape are exactly what production runs."""
-    def features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pcm = np.frombuffer(bytes(payload), dtype=np.int8) \
-                    .astype(np.float64)
-                n = len(pcm)
-                if n == 0:
-                    rows.append((int(doc_id), 0, 0, 0.0, 0, 0))
-                    continue
-                rows.append((
-                    int(doc_id), n, n * 1000 // sample_rate,
-                    float(np.sqrt(np.mean(pcm ** 2))),
-                    int(np.max(np.abs(pcm))),
-                    int(np.count_nonzero(np.diff(np.signbit(pcm)))),
-                ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "duration_ms",
-                               "rms", "peak", "zero_crossings"])
-
-    return as_binary_payload(docs).mapInPandas(
-        features, schema=AUDIO_FEATURES_SCHEMA)
-
-
 AUDIO_FRAME_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("window_no", T.LongType()),
@@ -231,10 +150,8 @@ AUDIO_FRAME_SCHEMA = T.StructType([
 
 def audio_frame_features_stub(docs: DataFrame,
                               window_bytes: int = 256) -> DataFrame:
-    """Audio FRAMING plumbing (per-window features; the whole-asset
-    gating features live in audio_features_stub above): fixed-size
-    sample windows
-    over the byte stream, one feature row per window (the
+    """Audio FRAMING plumbing: fixed-size sample windows over the byte
+    stream, one feature row per window (the
     librosa/torchaudio framing shape — 1 asset in, N frames out,
     numeric features per frame). A real pipeline swaps the body for an
     actual decoder + FFT; the Spark side — Arrow batches, numpy

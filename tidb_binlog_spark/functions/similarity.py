@@ -323,132 +323,6 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.3,
     return pairs
 
 
-def _sq_l2_expr(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-            f"0D, (acc, v) -> acc + v)")
-
-
-def kmeans_centroids(embeddings: DataFrame, k: int = 16, iters: int = 5,
-                     id_col: str = "vec_id",
-                     emb_col: str = "embedding") -> DataFrame:
-    """Lloyd's k-means over an embedding column — the trained coarse
-    quantizer for IVF (`ivf_assign`'s sampled centroids are the
-    untrained stand-in) and the clustering stage of SemDeDup-style
-    semantic dedup.
-
-    Deterministic: init = the k lowest-id vectors; ties in assignment
-    break toward the lowest centroid id; means are exact (sum/count
-    per dimension). Iteration is a bounded DRIVER loop — per round,
-    one broadcast of k centroids out, one (k x dims)-row aggregate
-    back; the corpus itself never moves (assignment is a map-side
-    crossJoin with k rows, the mean is one map-side-combinable
-    groupBy). At 100 TB each round costs one scan — iters stays
-    single-digit, exactly the standard Spark k-means shape.
-    """
-    spark = embeddings.sparkSession
-    cents = [r[emb_col] for r in
-             embeddings.select(id_col, emb_col)
-                       .orderBy(id_col).limit(k).collect()]
-
-    # the per-round centroid dimension goes through the Arrow local
-    # frame (localrel.local_df): the pickled-list form re-ran 32
-    # Python-worker tasks on EVERY materialization of every round's
-    # assignment job (r13, guide §4)
-    from ..localrel import local_df
-    for _ in range(iters):
-        cdf = local_df(
-            spark,
-            [(i, list(map(float, c))) for i, c in enumerate(cents)],
-            "centroid_id int, c_emb array<double>")
-        w = Window.partitionBy(id_col).orderBy("d2", "centroid_id")
-        assigned = (embeddings.select(id_col, emb_col)
-                    .crossJoin(F.broadcast(cdf))
-                    .withColumn("d2", F.expr(_sq_l2_expr(emb_col, "c_emb")))
-                    .withColumn("rk", F.row_number().over(w))
-                    .filter(F.col("rk") == 1))
-        # exact per-dimension means: (k x dims) tiny aggregate
-        means = (assigned
-                 .select("centroid_id",
-                         F.posexplode(emb_col).alias("pos", "v"))
-                 .groupBy("centroid_id", "pos").agg(F.avg("v").alias("m"))
-                 .groupBy("centroid_id")
-                 .agg(F.expr("transform(array_sort(collect_list("
-                             "struct(pos, m))), s -> s.m)").alias("c_emb"))
-                 .collect())
-        new = {r["centroid_id"]: r["c_emb"] for r in means}
-        # an emptied centroid keeps its previous position
-        cents = [new.get(i, cents[i]) for i in range(k)]
-
-    return local_df(
-        spark,
-        [(i, list(map(float, c))) for i, c in enumerate(cents)],
-        "centroid_id int, c_emb array<double>")
-
-
-def kmeans_assign(embeddings: DataFrame, centroids: DataFrame,
-                  id_col: str = "vec_id",
-                  emb_col: str = "embedding") -> DataFrame:
-    """Nearest-centroid assignment against a trained centroid set:
-    broadcast crossJoin + argmin — the corpus stays put."""
-    w = Window.partitionBy(id_col).orderBy("d2", "centroid_id")
-    return (embeddings
-            .crossJoin(F.broadcast(centroids))
-            .withColumn("d2", F.expr(_sq_l2_expr(emb_col, "c_emb")))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .drop("rk", "c_emb"))
-
-
-def semantic_dedup(embeddings: DataFrame, k: int | None = None,
-                   iters: int = 3,
-                   threshold: float = 0.95,
-                   id_col: str = "vec_id",
-                   emb_col: str = "embedding",
-                   target_cluster_size: int = 1_000,
-                   max_cluster_size: int | None = 10_000) -> DataFrame:
-    """SemDeDup-style semantic dedup: k-means-cluster the corpus, then
-    within each cluster drop every vector whose cosine to a LOWER-id
-    cluster member exceeds ``threshold`` (the keep-one-representative
-    greedy rule). Pairwise work is bounded per cluster — the classic
-    way to make semantic dedup sub-quadratic at corpus scale.
-
-    The bound only holds if K SCALES WITH THE CORPUS: a fixed k makes
-    average clusters O(n/k) and the per-cluster self-join quadratic.
-    So by default k is DERIVED, k = ceil(n / target_cluster_size)
-    (one count() scan — negligible next to the dedup itself), and an
-    explicitly-passed k is validated against ``max_cluster_size``
-    (expected AVERAGE cluster size; pass None to opt out for corpora
-    known to be small).
-
-    Returns (id, centroid_id, is_kept)."""
-    if k is None or max_cluster_size is not None:
-        n = embeddings.count()
-    if k is None:
-        k = max(1, -(-n // target_cluster_size))
-    if max_cluster_size is not None and n / k > max_cluster_size:
-        raise ValueError(
-            f"semantic_dedup: k={k} gives ~{n // k} vectors/cluster "
-            f"(> max_cluster_size={max_cluster_size}); the per-cluster "
-            f"self-join would be quadratic at this size — raise k, or "
-            f"pass max_cluster_size=None to override")
-    cents = kmeans_centroids(embeddings, k, iters, id_col, emb_col)
-    a = with_norm(
-        kmeans_assign(embeddings, cents, id_col, emb_col)
-        .select(id_col, emb_col, "centroid_id"), emb_col, "n")
-    x, y = a.alias("x"), a.alias("y")
-    dup_ids = (x.join(y, (F.col("x.centroid_id") == F.col("y.centroid_id"))
-                      & (F.col(f"x.{id_col}") > F.col(f"y.{id_col}")))
-               .withColumn("cosine", F.expr(cosine_prenorm_expr(
-                   f"x.{emb_col}", f"y.{emb_col}", "x.n", "y.n")))
-               .filter(F.col("cosine") >= threshold)
-               .select(F.col(f"x.{id_col}").alias(id_col)).distinct())
-    return (a.select(id_col, "centroid_id")
-            .join(dup_ids.withColumn("_dup", F.lit(True)), id_col, "left")
-            .select(id_col, "centroid_id",
-                    F.coalesce(~F.col("_dup"), F.lit(True))
-                     .alias("is_kept")))
-
-
 # --- product quantization ----------------------------------------------------
 # The memory-bounded ANN scale path (Jegou et al., PAMI'11): split each
 # d-dim vector into M subvectors, quantize each against a per-subspace
@@ -474,9 +348,8 @@ def pq_codebooks(embeddings: DataFrame, m: int = PQ_M,
     (subspace j, code c): the sampled vectors' j-th subvectors, code
     ids assigned by vec_id order. K is FIXED regardless of corpus size
     so the broadcast codebook and the per-row argmin cost never grow
-    with the data. (kmeans_centroids can refine these; the
-    encode/search machinery is identical — same trade as ivf_assign's
-    sampled coarse quantizer.)"""
+    with the data (the same trade as ivf_assign's sampled coarse
+    quantizer)."""
     sub = dims // m
     # orderBy().limit() compiles to TakeOrderedAndProject (per-partition
     # heap + driver merge of K rows) — the unpartitioned row_number
@@ -796,10 +669,7 @@ def kmeans_integer(vecs: DataFrame, k: int = 10, iters: int = 2,
     """Lloyd k-means over INTEGER vectors with floor-mean centroid
     updates — every quantity (distance, centroid component) is exact
     BIGINT algebra, so the whole clustering is engine-reproducible and
-    the DuckDB oracle can re-derive it independently (the float
-    ``kmeans_centroids`` above is the production variant; this is the
-    verification-grade twin that upgrades the k-means evidence from
-    pytest-only to hash-checked).
+    the DuckDB oracle can re-derive it independently.
 
     Deterministic contract (mirrored by ``oracle_sql.kmeans_int_ctes``):
     init = the k lowest-id vectors as centroids 0..k-1; assignment ties
@@ -923,9 +793,8 @@ def semantic_dedup_exact(embeddings: DataFrame, k: int | None = None,
     ``den^2 * dot^2 >= num^2 * |a|^2 * |b|^2`` with ``dot > 0`` — so no
     float division or sqrt ever runs and both engines agree exactly.
 
-    ``semantic_dedup`` (above) is the production float variant; this
-    twin trades float cosine for exact verifiability but carries
-    REAL scale protection in two layers:
+    Exact integer cosine makes it verifiable, and it carries REAL
+    scale protection in two layers:
 
     1. **Exact-duplicate collapse.** Identical quantized vectors are
        semantic duplicates BY DEFINITION (cosine = 1 when nonzero),

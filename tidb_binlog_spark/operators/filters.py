@@ -70,15 +70,13 @@ def allow_block_predicate(do_rules: Sequence[tuple[str, str]] | None,
     return keep
 
 
-def filter_allow_block(changes: DataFrame,
-                       do_rules: Sequence[tuple[str, str]] | None = None,
-                       ignore_rules: Sequence[tuple[str, str]] | None = None) -> DataFrame:
-    return changes.filter(allow_block_predicate(do_rules, ignore_rules))
-
-
 def event_kinds_predicate(rules: Sequence[tuple[str, str, Sequence[str]]],
                           case_sensitive: bool = False) -> Column:
-    """Keep predicate of the event-kind rules (see filter_event_kinds)."""
+    """Keep predicate of the event-kind rules: (db_pattern, tbl_pattern,
+    [ops to ignore]). Matching rows are dropped (the reference edits the
+    txn's Sequence arrays in place, drainer/syncer.go:596-673 — row-level
+    filtering is the DataFrame-native equivalent). ``case_sensitive``
+    switches the v2 rule matching mode (config.go:128)."""
     drop = F.lit(False)
     for db_pat, tbl_pat, ops in rules:
         m = _pattern_to_col(F.col("db"), db_pat, case_sensitive) & \
@@ -86,17 +84,6 @@ def event_kinds_predicate(rules: Sequence[tuple[str, str, Sequence[str]]],
             F.col("op").isin([o.upper() for o in ops])
         drop = drop | m
     return ~drop
-
-
-def filter_event_kinds(changes: DataFrame,
-                       rules: Sequence[tuple[str, str, Sequence[str]]],
-                       case_sensitive: bool = False) -> DataFrame:
-    """Event-kind rules: (db_pattern, tbl_pattern, [ops to ignore]).
-    Drops matching rows in place (the reference edits the txn's
-    Sequence arrays in place, drainer/syncer.go:596-673 — row-level
-    filtering is the DataFrame-native equivalent). ``case_sensitive``
-    switches the v2 rule matching mode (config.go:128)."""
-    return changes.filter(event_kinds_predicate(rules, case_sensitive))
 
 
 def drop_truncated_tables(changes: DataFrame,

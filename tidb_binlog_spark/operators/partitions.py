@@ -90,9 +90,3 @@ def resolve_partitions(changes: DataFrame, dim: DataFrame,
         F.when(F.col("logical_tbl").isNull(), F.lit("orphan"))
          .otherwise(F.lit("ok")))
 
-
-def live_stream(changes: DataFrame, dim: DataFrame,
-                id_col: str = "physical_id") -> DataFrame:
-    """Only the mutations that resolve to a live partition binding."""
-    return (resolve_partitions(changes, dim, id_col)
-            .filter(F.col("partition_status") == "ok"))

@@ -6,9 +6,8 @@ pump/storage/storage.go:1114-1258 then feeds the P payload into the C
 entity on pull. Unresolved prewrites go to the txn-status resolver
 (storage.go:431-558).
 
-Spark-first: in batch form this is an equi-join on start_ts (broadcast
-or sort-merge as Catalyst chooses); in streaming form a stream-stream
-join with watermark-bounded state (see streaming/pc_match_stream.py).
+Spark-first: an equi-join on start_ts (broadcast or sort-merge as
+Catalyst chooses), served by the ``cdc_pc_match`` registry query.
 """
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ from __future__ import annotations
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -46,11 +46,3 @@ def route_columns(rules: Sequence[tuple[str, str, str, str]],
         target_tbl = F.when(m, F.lit(to_tbl)).otherwise(target_tbl)
     return target_db, target_tbl
 
-
-def route_tables(changes: DataFrame,
-                 rules: Sequence[tuple[str, str, str, str]],
-                 db_col: str = "db", tbl_col: str = "tbl") -> DataFrame:
-    target_db, target_tbl = route_columns(rules, db_col, tbl_col)
-    return (changes
-            .withColumn("target_db", target_db)
-            .withColumn("target_tbl", target_tbl))

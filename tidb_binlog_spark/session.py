@@ -99,7 +99,9 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     The driver fixtures are micro-aligned (verified: DuckDB
     ``epoch_ns(ts) % 1000 == 0`` for every row), so both paths produce
     identical nanos and agree with the DuckDB oracles' ``epoch_ns``.
-    Use ``ts_nanos_to_timestamp`` when timestamp semantics are needed.
+    Where timestamp semantics are needed, convert with integer division
+    (``timestamp_micros(ts div 1000)``): a float ``/ 1000`` loses
+    nanosecond precision beyond 2^53.
     """
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -157,10 +159,3 @@ def _ts_ntz_to_nanos(df):
                 f.name, F.unix_micros(F.col(f.name).cast("timestamp")) * 1000)
     return df
 
-
-def ts_nanos_to_timestamp(col):
-    """BIGINT nanoseconds (see load_tables) -> TimestampType (micros).
-    Integer division — float /1000 loses nanosecond precision beyond
-    2^53 (realistic epoch-nanos exceed it)."""
-    from pyspark.sql import functions as F
-    return F.timestamp_micros(F.expr(f"{col} div 1000"))

@@ -10,61 +10,15 @@ trusts a stale schema after downstream DDL.
 Spark form: TableInfo objects feed ``generate_sql_wide`` on the
 DRIVER (schemas are per-table metadata, never per-row data), so the
 catalog is a small driver-side cache in front of a fetch callable.
-Tests introspect SQLite (PRAGMA); a production MySQL/TiDB deployment
-uses MYSQL_COLS_SQL / MYSQL_UNIQ_KEYS_SQL verbatim with a DB-API
-connection — nothing else changes.
+The sink here is SQLite, introspected with PRAGMA
+(``fetch_table_info_sqlite``); a MySQL/TiDB sink would plug in a fetch
+over the reference's information_schema queries
+(pkg/loader/util.go:43-51) — nothing else changes.
 """
 
 from __future__ import annotations
 
 from .sqlgen import TableInfo
-
-# Production fetch texts — the same information_schema queries the
-# reference issues (pkg/loader/util.go:43-51). `extra` flags generated
-# columns (VIRTUAL/STORED GENERATED), which are excluded from writes.
-# %s placeholders: MySQL DB-API drivers (pymysql, mysqlclient) use the
-# 'format' paramstyle.
-MYSQL_COLS_SQL = (
-    "SELECT column_name, extra FROM information_schema.columns "
-    "WHERE table_schema = %s AND table_name = %s "
-    "ORDER BY ordinal_position")
-MYSQL_UNIQ_KEYS_SQL = (
-    "SELECT non_unique, index_name, seq_in_index, column_name "
-    "FROM information_schema.statistics "
-    "WHERE table_schema = %s AND table_name = %s "
-    "ORDER BY seq_in_index ASC")
-
-
-def _query(conn, sql: str, params) -> list[tuple]:
-    """Run a parameterized query on a DB-API connection: the standard
-    path is cursor(); sqlite3's connection-level execute is accepted
-    for the tests' convenience."""
-    cur = conn.cursor() if hasattr(conn, "cursor") else None
-    if cur is not None:
-        try:
-            cur.execute(sql, params)
-            return list(cur.fetchall())
-        finally:
-            cur.close()
-    return list(conn.execute(sql, params))
-
-
-def fetch_table_info_mysql(conn, schema: str, table: str) -> TableInfo:
-    """getTableInfo for a MySQL/TiDB DB-API connection."""
-    cols, generated = [], []
-    for name, extra in _query(conn, MYSQL_COLS_SQL, (schema, table)):
-        cols.append(name)
-        if "GENERATED" in (extra or "").upper():
-            generated.append(name)
-    keys: dict[str, list[str]] = {}
-    for non_unique, index_name, _seq, col in _query(
-            conn, MYSQL_UNIQ_KEYS_SQL, (schema, table)):
-        if not non_unique:
-            keys.setdefault(index_name, []).append(col)
-    if not cols:
-        raise LookupError(f"table not exist: {schema}.{table}")
-    return _with_primary_first(cols, keys, generated)
-
 
 def fetch_table_info_sqlite(conn, _schema: str, table: str) -> TableInfo:
     """getTableInfo for SQLite (the test sink): PRAGMA table_info for

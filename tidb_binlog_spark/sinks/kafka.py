@@ -20,15 +20,15 @@ Reference contract (drainer/sync/kafka.go:38-278):
 Spark-first: the produce side is a DataFrame in the exact column
 contract Spark's Kafka sink consumes (key/value/topic/partition), so
 ``df.write.format("kafka")`` / ``writeStream`` need only broker
-options; the consume side is ``readStream.format("kafka")`` plus the
-existing parse_obinlog projection. This sandbox ships no Kafka broker
-or spark-sql-kafka package, so the frame/option construction is
-tested here and the send/poll calls stay thin pass-throughs.
+options; the consume side is ``readStream.format("kafka")`` plus
+``decode_kafka_batch``. The engine ships no broker connector (that
+needs the spark-sql-kafka package and a broker): it builds and
+decodes the frames, and a deployment adds the send/poll calls.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import obinlog_pb
@@ -147,61 +147,8 @@ def kafka_frame(changes: DataFrame, cluster_id: int = 0,
             .drop("_order"))
 
 
-def producer_options(bootstrap_servers: str,
-                     max_message_bytes: int | None = None) -> dict[str, str]:
-    """Spark Kafka sink options mirroring the producer config kafka.go
-    builds (acks=all WaitForAll, max message size)."""
-    opts = {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "kafka.acks": "all",
-    }
-    if max_message_bytes is not None:
-        opts["kafka.max.request.size"] = str(max_message_bytes)
-    return opts
-
-
-def consumer_options(bootstrap_servers: str, cluster_id: int = 0,
-                     topic: str | None = None,
-                     starting_offsets: str = "earliest") -> dict[str, str]:
-    opts = {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "subscribe": topic or default_topic(cluster_id),
-        "startingOffsets": starting_offsets,
-        # single-partition topic: one Spark task consumes in order
-        "maxOffsetsPerTrigger": "100000",
-    }
-    return opts
-
-
-def write_kafka(changes: DataFrame, bootstrap_servers: str,
-                cluster_id: int = 0, topic: str | None = None,
-                wide_info=None, wire: str = "protobuf") -> None:
-    """Batch produce (requires the spark-sql-kafka package + broker)."""
-    frame = kafka_frame(changes, cluster_id, topic, wide_info, wire)
-    writer = frame.write.format("kafka")
-    for k, v in producer_options(bootstrap_servers).items():
-        writer = writer.option(k, v)
-    writer.save()
-
-
-def read_kafka_stream(spark: SparkSession, bootstrap_servers: str,
-                      cluster_id: int = 0, topic: str | None = None,
-                      starting_offsets: str = "earliest",
-                      wire: str = "protobuf") -> DataFrame:
-    """Arbiter-style streaming consume -> normalized change rows.
-    The kafka source emits (key, value, topic, partition, offset,
-    timestamp, ...); offset is carried through as arrival_seq so the
-    commit_ts dedup downstream matches sink_payload_roundtrip."""
-    reader = spark.readStream.format("kafka")
-    for k, v in consumer_options(bootstrap_servers, cluster_id, topic,
-                                 starting_offsets).items():
-        reader = reader.option(k, v)
-    raw = reader.load()
-    return decode_kafka_batch(raw, wire=wire)
-
-
 def decode_kafka_batch(raw: DataFrame, wire: str = "protobuf") -> DataFrame:
-    """The decode projection shared by the stream reader and tests:
+    """The decode projection of a Kafka source frame:
     value bytes -> parsed rows, offset -> arrival_seq. The protobuf
     wire unpacks one row per MUTATION inside each per-txn Binlog
     (arbiter-side translate, pkg/loader/translate.go); the json wire

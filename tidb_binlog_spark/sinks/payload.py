@@ -16,8 +16,19 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# commit_ts width of one ts_bucket: the partition of a file dump and of
+# the relay log, and the bucket in a pb dump's file names
+TS_BUCKET_WIDTH = 100000
+
+
+def ts_bucket() -> Column:
+    """A row's ts_bucket, ``commit_ts div TS_BUCKET_WIDTH``, in exact
+    integer arithmetic: TSO values are past 2^53, where a double
+    quotient rounds and can file a row one bucket too high."""
+    return F.expr(f"commit_ts div {TS_BUCKET_WIDTH}")
 
 
 def obinlog_payload(changes: DataFrame,
@@ -155,12 +166,11 @@ def file_dump(changes: DataFrame, path: str, partitions: int | None = None,
         out = out.withColumn("record_crc", record_crc(changes, cols))
     if partitions is None:
         sc = changes.sparkSession.sparkContext
-        n_buckets = changes.selectExpr(
-            "count(distinct cast(commit_ts / 100000 as long)) AS n"
-        ).first()["n"]
+        n_buckets = changes.select(
+            F.count_distinct(ts_bucket()).alias("n")).first()["n"]
         partitions = max(1, min(int(n_buckets), sc.defaultParallelism * 4))
     (out
-     .withColumn("ts_bucket", (F.col("commit_ts") / 100000).cast("long"))
+     .withColumn("ts_bucket", ts_bucket())
      .repartition(partitions, "ts_bucket")
      .sortWithinPartitions("commit_ts", "seq")
      .write.mode("overwrite")
@@ -168,8 +178,7 @@ def file_dump(changes: DataFrame, path: str, partitions: int | None = None,
      .parquet(path))
 
 
-def gc_file_dump(path: str, safepoint_ts: int,
-                 bucket_width: int = 100000) -> list[str]:
+def gc_file_dump(path: str, safepoint_ts: int) -> list[str]:
     """Retention GC: delete ts_bucket partitions ENTIRELY below the
     safepoint — the pump's storage GC (pump/storage/storage.go GC
     deletes data with commit ts < gcTS; binlogctl drives the safepoint).
@@ -177,7 +186,7 @@ def gc_file_dump(path: str, safepoint_ts: int,
     like the reference's file-level GC). Returns the removed partition
     dirs."""
     import shutil as _shutil
-    keep_from = safepoint_ts // bucket_width
+    keep_from = safepoint_ts // TS_BUCKET_WIDTH
     removed = []
     if not os.path.isdir(path):
         return removed

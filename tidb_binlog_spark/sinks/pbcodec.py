@@ -32,6 +32,7 @@ import struct
 from typing import Iterator
 
 from ..functions.kvcodec import decode_datum, encode_datum
+from .payload import TS_BUCKET_WIDTH, ts_bucket
 
 MAGIC = 471532804
 
@@ -800,7 +801,7 @@ def write_pb_dump(changes, path: str, partitions: int | None = None,
                     continue
                 if f is None:
                     first_ct = int(pdf["commit_ts"].iloc[0])
-                    bucket = first_ct // 100000
+                    bucket = first_ct // TS_BUCKET_WIDTH
                     fn = os.path.join(
                         path, f"binlog-{bucket:010d}-{first_ct}.pb")
                     f = open(fn, "wb")
@@ -818,7 +819,7 @@ def write_pb_dump(changes, path: str, partitions: int | None = None,
 
     (payloads
      .repartition(partitions,
-                  (payloads["commit_ts"] / 100000).cast("long"))
+                  ts_bucket())
      .sortWithinPartitions("commit_ts")
      .mapInPandas(write_partition, "n long")
      .write.format("noop").mode("overwrite").save())
@@ -880,7 +881,7 @@ def write_pb_segments(changes, path: str, suffix: str = "",
                                 "first_ts": pd.Series([], dtype="int64"),
                                 "last_ts": pd.Series([], dtype="int64")})
             return
-        bucket = first_ct // 100000
+        bucket = first_ct // TS_BUCKET_WIDTH
         fn = os.path.join(
             path, f"binlog-{bucket:010d}-{first_ct}-{last_ct}{suffix}.pb")
         tmp = fn + ".tmp"
@@ -893,7 +894,7 @@ def write_pb_segments(changes, path: str, suffix: str = "",
 
     out = (payloads
            .repartition(partitions,
-                        (payloads["commit_ts"] / 100000).cast("long"))
+                        ts_bucket())
            .sortWithinPartitions("commit_ts")
            .mapInPandas(write_partition,
                         "file string, n long, first_ts long, last_ts long")

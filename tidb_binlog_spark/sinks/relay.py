@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .payload import read_file_dump
+from .payload import TS_BUCKET_WIDTH, read_file_dump, ts_bucket
 from .table_sink import SnapshotTable
 
 
@@ -70,7 +70,7 @@ class RelayLog:
         One shuffle of the batch buys one file per bucket per holding
         task (the write_pb_dump discipline)."""
         (batch
-         .withColumn("ts_bucket", (F.col("commit_ts") / 100000).cast("long"))
+         .withColumn("ts_bucket", ts_bucket())
          .repartition(F.col("ts_bucket"))
          .write.mode("append").partitionBy("ts_bucket")
          .parquet(os.path.join(self.root, "log")))
@@ -80,17 +80,18 @@ class RelayLog:
         """Replay scan. ``start_ts`` is exclusive (relay.go:131-132
         skips CommitTs <= checkpointTS), ``stop_ts`` inclusive. Bounds
         also derive ts_bucket predicates so the scan prunes WAL
-        DIRECTORIES, not just row groups (ts_bucket =
-        floor(commit_ts/100000); the bucket bounds below are valid for
-        the non-negative commit-ts domain)."""
+        DIRECTORIES, not just row groups (ts_bucket = commit_ts div
+        TS_BUCKET_WIDTH; the bucket bounds below are valid for the
+        non-negative commit-ts domain)."""
         df = read_file_dump(spark, os.path.join(self.root, "log"))
+        w = TS_BUCKET_WIDTH
         if start_ts is not None:
             if start_ts >= 0:
-                df = df.where(F.col("ts_bucket") >= start_ts // 100000)
+                df = df.where(F.col("ts_bucket") >= start_ts // w)
             df = df.where(F.col("commit_ts") > start_ts)
         if stop_ts is not None:
             if stop_ts >= 0:
-                df = df.where(F.col("ts_bucket") <= stop_ts // 100000)
+                df = df.where(F.col("ts_bucket") <= stop_ts // w)
             df = df.where(F.col("commit_ts") <= stop_ts)
         return df
 
@@ -109,13 +110,15 @@ def feed_by_relay_if_needed(spark: SparkSession, relay: RelayLog,
 
     ck = table.checkpoint()["commit_ts"]
     pending = relay.read(spark, start_ts=ck).persist()
-    n = pending.count()
-    if n:
-        appliable = (ordering.ordered_stream(pending)
-                     .filter(F.col("op") != "FAKE")
-                     .drop("ts_bucket"))
-        table.apply_batch(compaction.compact_last_image(appliable))
-    pending.unpersist()
+    try:
+        n = pending.count()
+        if n:
+            appliable = (ordering.ordered_stream(pending)
+                         .filter(F.col("op") != "FAKE")
+                         .drop("ts_bucket"))
+            table.apply_batch(compaction.compact_last_image(appliable))
+    finally:
+        pending.unpersist()
     relay.mark_consistent()
     return {"replayed": int(n),
             "checkpoint": table.checkpoint()["commit_ts"]}

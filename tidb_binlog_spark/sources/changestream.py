@@ -127,12 +127,3 @@ def wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumn("old_values",
                           F.when(F.col("op") == "U", old_image)))
 
-
-def read_change_log(spark: SparkSession, path: str) -> DataFrame:
-    """Read a materialized change log (parquet), the batch analog of
-    PullCommitBinlog(last) — reference pump/storage/storage.go:1114-1258.
-
-    Partition-pruning + predicate pushdown give us the `ts > last` scan
-    for free when the log is written partitioned by commit_ts range.
-    """
-    return spark.read.parquet(path)

@@ -6,9 +6,9 @@ commit binlog is appended to a segmented binlogger
 (pkg/binlogfile/binlogger.go:50: ``binlog-NNNN`` segment files,
 WriteTail appends CRC-framed records, rotation by size) whose replay
 cursor (pb.Pos) is checkpointed after the write, with file-level
-retention GC behind it. Until now this repo had only the batch ops
-(pbcodec.write_pb_dump / read_pb_dump, payload.gc_file_dump); this
-module is the sink's streaming LIFECYCLE:
+retention GC behind it. The batch ops (pbcodec.write_pb_dump /
+read_pb_dump, payload.gc_file_dump) do one dump; this module is the
+sink's streaming LIFECYCLE:
 
     readStream(landing zone) -> foreachBatch{
         resume filter -> order gate -> DDL/DML split ->
@@ -183,7 +183,6 @@ class FileDumpApplier:
             # them only to move the savepoint forward)
             mx = live.agg(F.max("commit_ts").alias("m")).first()["m"]
             if mx is None:
-                batch_df.unpersist()
                 return
             real = live.filter(F.col("op") != "FAKE")
             dml = real.filter(F.col("op") != "DDL")

@@ -4,7 +4,7 @@ Batch operators (operators/*) are reused verbatim inside foreachBatch —
 the standard Spark recipe for sinks needing transactional/MERGE
 semantics (SURVEY §3 lifecycle mapping):
 
-    readStream(change log) -> watermark -> foreachBatch{
+    readStream(change log) -> foreachBatch{
         order gate -> filter/route -> compact -> SnapshotTable.apply }
 
 Reference parity:
@@ -19,6 +19,7 @@ Reference parity:
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,15 +54,6 @@ def read_change_stream(spark: SparkSession, source_dir: str,
     return reader.parquet(source_dir)
 
 
-def with_event_time(changes: DataFrame, delay: str = "10 seconds") -> DataFrame:
-    """commit_ts (logical tso) -> event-time watermark. Late rows
-    beyond the delay are dropped by stateful ops — the disorder
-    quarantine of drainer/merge.go:318-329 in streaming form."""
-    return (changes
-            .withColumn("event_time", F.timestamp_micros(F.col("commit_ts")))
-            .withWatermark("event_time", delay))
-
-
 def run_apply_stream(spark: SparkSession, source_dir: str, table_root: str,
                      checkpoint_dir: str, available_now: bool = True,
                      relay_dir: str | None = None):
@@ -86,14 +78,16 @@ def run_apply_stream(spark: SparkSession, source_dir: str, table_root: str,
         # the main path both read it (single source scan + exact input
         # metrics)
         batch_df = batch_df.persist()
-        if relay is not None:
-            relay.append(batch_df)      # WAL before apply
-        ok = ordering.ordered_stream(batch_df)
-        compacted = compaction.compact_last_image(ok)
-        # D rows must reach the sink (they delete); SnapshotTable
-        # resolves cross-batch order by commit_ts.
-        table.apply_batch(compacted)
-        batch_df.unpersist()
+        try:
+            if relay is not None:
+                relay.append(batch_df)      # WAL before apply
+            ok = ordering.ordered_stream(batch_df)
+            compacted = compaction.compact_last_image(ok)
+            # D rows must reach the sink (they delete); SnapshotTable
+            # resolves cross-batch order by commit_ts.
+            table.apply_batch(compacted)
+        finally:
+            batch_df.unpersist()
 
     stream = read_change_stream(spark, source_dir)
     writer = (stream.writeStream
@@ -511,15 +505,17 @@ def feed_sql_by_relay_if_needed(spark: SparkSession, relay, db_dir: str,
                 "checkpoint": jdbc.load_checkpoint(db_dir)[0]}
     ck, _status = jdbc.load_checkpoint(db_dir)
     pending = relay.read(spark, start_ts=ck).drop("ts_bucket").persist()
-    n = pending.count()
-    if n:
-        applier = SqlBatchApplier(
-            db_dir, setup_sql=setup_sql, num_workers=num_workers,
-            window=sm.SafeModeWindow(),       # forced safe mode
-            sync_ddl=sync_ddl, catalog=catalog, cfg=cfg,
-            resume_ts=ck)
-        applier.apply(pending)
-    pending.unpersist()
+    try:
+        n = pending.count()
+        if n:
+            applier = SqlBatchApplier(
+                db_dir, setup_sql=setup_sql, num_workers=num_workers,
+                window=sm.SafeModeWindow(),       # forced safe mode
+                sync_ddl=sync_ddl, catalog=catalog, cfg=cfg,
+                resume_ts=ck)
+            applier.apply(pending)
+    finally:
+        pending.unpersist()
     relay.mark_consistent()
     return {"replayed": int(n),
             "checkpoint": jdbc.load_checkpoint(db_dir)[0]}
@@ -652,6 +648,10 @@ def run_sql_apply_stream(spark: SparkSession, source_dir: str, db_dir: str,
     return writer.start()
 
 
+# read errors of a pump landing zone that has no segment yet
+_NOTHING_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def multi_source_merge_round(spark: SparkSession, source_dirs: list[str],
                              table: SnapshotTable) -> dict:
     """One merge round over N pump landing zones with the drainer's
@@ -679,11 +679,15 @@ def multi_source_merge_round(spark: SparkSession, source_dirs: list[str],
     # nothing) must BLOCK the merge, exactly like a source whose head
     # item hasn't arrived (merge.go:268-297): its cursor is unknown, so
     # the watermark cannot pass the checkpoint.
+    # Only "no zone yet" and "empty zone" mean that; any other read
+    # error (a corrupt segment, say) is raised, not read as silence.
     frames, blocked = [], False
     for d in source_dirs:
         try:
             frames.append(spark.read.parquet(d))
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() not in _NOTHING_YET:
+                raise
             blocked = True
     if not frames:
         return {"watermark": int(ck), "n_applied": 0,
@@ -723,14 +727,3 @@ def multi_source_merge_round(spark: SparkSession, source_dirs: list[str],
             "n_sources": len(source_dirs),
             "checkpoint": table.checkpoint()["commit_ts"]}
 
-
-def run_windowed_counts(spark: SparkSession, source_dir: str,
-                        window: str = "1 minute",
-                        delay: str = "30 seconds"):
-    """Event-time windowed op counts — the streaming metrics surface
-    (reference exposes per-type Prometheus counters,
-    drainer/syncer.go:157-178). Returns a streaming DataFrame for a
-    memory/console sink."""
-    ch = with_event_time(read_change_stream(spark, source_dir), delay)
-    return (ch.groupBy(F.window("event_time", window), "op")
-              .count())
