@@ -44,6 +44,16 @@ def test_kafka_frame_contract(spark):
     assert decoded["type"] == ob.DML and decoded["tables"]
 
 
+def test_producer_consumer_options():
+    p = kafka.producer_options("b1:9092,b2:9092", max_message_bytes=1 << 30)
+    assert p["kafka.bootstrap.servers"] == "b1:9092,b2:9092"
+    assert p["kafka.acks"] == "all"                     # WaitForAll
+    assert p["kafka.max.request.size"] == str(1 << 30)
+    c = kafka.consumer_options("b:9092", cluster_id=7)
+    assert c["subscribe"] == "7_obinlog"
+    assert c["startingOffsets"] == "earliest"
+
+
 def test_produce_decode_roundtrip_without_broker_json_wire(spark):
     """JSON stand-in wire: kafka_frame -> (simulated broker echo:
     offset + value) -> decode_kafka_batch reconstructs the change rows

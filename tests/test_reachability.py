@@ -57,6 +57,8 @@ KEEP = {
     "read_pb_dump_ddl": "reparo DDL replay of a pb dump, reparo/",
     "AckWindow": "producer in-flight window, drainer/sync/kafka.go:186-278",
     "kafka_frame_sharded": "kafka frame per partition, drainer/sync/kafka.go",
+    "producer_options": "producer config, drainer/sync/kafka.go",
+    "consumer_options": "arbiter consumer config, arbiter/server.go",
     "write_bucketed": "per-PK co-location, pkg/loader/load.go:136-147",
     "read_bucketed": "per-PK co-location, pkg/loader/load.go:136-147",
     "synthesize_commits":

@@ -23,7 +23,9 @@ contract Spark's Kafka sink consumes (key/value/topic/partition), so
 options; the consume side is ``readStream.format("kafka")`` plus
 ``decode_kafka_batch``. The engine ships no broker connector (that
 needs the spark-sql-kafka package and a broker): it builds and
-decodes the frames, and a deployment adds the send/poll calls.
+decodes the frames and builds the broker options
+(``producer_options`` / ``consumer_options``), and a deployment adds
+the send/poll calls.
 """
 
 from __future__ import annotations
@@ -145,6 +147,32 @@ def kafka_frame(changes: DataFrame, cluster_id: int = 0,
     return (frame.repartition(1)
             .sortWithinPartitions("_order")
             .drop("_order"))
+
+
+def producer_options(bootstrap_servers: str,
+                     max_message_bytes: int | None = None) -> dict[str, str]:
+    """Spark Kafka sink options mirroring the producer config kafka.go
+    builds (acks=all WaitForAll, max message size)."""
+    opts = {
+        "kafka.bootstrap.servers": bootstrap_servers,
+        "kafka.acks": "all",
+    }
+    if max_message_bytes is not None:
+        opts["kafka.max.request.size"] = str(max_message_bytes)
+    return opts
+
+
+def consumer_options(bootstrap_servers: str, cluster_id: int = 0,
+                     topic: str | None = None,
+                     starting_offsets: str = "earliest") -> dict[str, str]:
+    """Spark Kafka source options for the arbiter-side consume."""
+    return {
+        "kafka.bootstrap.servers": bootstrap_servers,
+        "subscribe": topic or default_topic(cluster_id),
+        "startingOffsets": starting_offsets,
+        # single-partition topic: one Spark task consumes in order
+        "maxOffsetsPerTrigger": "100000",
+    }
 
 
 def decode_kafka_batch(raw: DataFrame, wire: str = "protobuf") -> DataFrame:
