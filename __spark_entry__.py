@@ -73,22 +73,39 @@ def _scratch_dir(name: str) -> str:
 # shared oracle SQL building blocks (DuckDB side of the shared semantics)
 # ---------------------------------------------------------------------------
 
-# classify_disorder + keep only appliable events (operators/ordering.py)
-_OK_CTE = """
-flagged AS (
-  SELECT c.*,
-    MAX(commit_ts) OVER (PARTITION BY source_id ORDER BY arrival_seq
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      AS prev_max_ts,
-    ROW_NUMBER() OVER (PARTITION BY commit_ts ORDER BY arrival_seq, source_id)
-      AS dup_rank
-  FROM changes c
+def _ok_cte(rel: str = "changes", suffix: str = "") -> str:
+    """``flagged{suffix}``: the rows of ``rel`` with classify_disorder's
+    ``order_status`` (operators/ordering.py: the order rule, by
+    transaction); ``ok{suffix}``: the appliable ones, with ``rel``'s
+    columns."""
+    return f"""
+flagged{suffix} AS (
+  SELECT * EXCLUDE (first_src, first_start, copy_rank, prev_max_ts),
+    CASE WHEN first_src IS DISTINCT FROM source_id
+              OR first_start IS DISTINCT FROM start_ts
+              OR copy_rank > 1 THEN 'duplicate'
+         WHEN commit_ts < prev_max_ts THEN 'disorder'
+         ELSE 'ok' END AS order_status
+  FROM (
+    SELECT c.*,
+      MAX(commit_ts) OVER (PARTITION BY source_id ORDER BY arrival_seq
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        AS prev_max_ts,
+      FIRST_VALUE(source_id) OVER w_ts AS first_src,
+      FIRST_VALUE(start_ts) OVER w_ts AS first_start,
+      ROW_NUMBER() OVER (PARTITION BY source_id, start_ts, commit_ts, seq
+                         ORDER BY arrival_seq) AS copy_rank
+    FROM {rel} c
+    WINDOW w_ts AS (PARTITION BY commit_ts ORDER BY arrival_seq, source_id))
 ),
-ok AS (
-  SELECT * FROM flagged
-  WHERE dup_rank = 1 AND (prev_max_ts IS NULL OR commit_ts > prev_max_ts)
+ok{suffix} AS (
+  SELECT * EXCLUDE (order_status) FROM flagged{suffix}
+  WHERE order_status = 'ok'
 )
 """
+
+
+_OK_CTE = _ok_cte()
 
 
 def _spark_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3128,11 +3145,11 @@ def q_cdc_relay_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     relay.append(ok)
     # max(commit_ts) over ``ok`` EQUALS max over the raw stream: among
     # the rows carrying the global max ts, the first by (arrival_seq,
-    # source_id) is dup_rank 1, and its per-source prefix max must be
-    # STRICTLY below the global max (a tie would make it a duplicate
-    # of an earlier row in its own dup partition) — so it can be
-    # neither duplicate nor disorder. The raw-stream aggregate prunes
-    # to one narrow column and skips the gate's windows entirely.
+    # source_id) belongs to the transaction that owns that ts and no
+    # earlier row repeats it, so it is no duplicate; no row of its
+    # source is larger than the global max, so it is no disorder. The
+    # raw-stream aggregate prunes to one narrow column and skips the
+    # gate's windows entirely.
     t = _spark_changes(spark, sf_dir) \
         .agg(F.max("commit_ts")).first()[0] * 3 // 5
     pending = relay.read(spark, start_ts=t).select(*cols)
@@ -4998,20 +5015,13 @@ def oracle_sql() -> dict[str, str]:
             FROM last WHERE rn = 1 AND op <> 'D'
         """,
         "cdc_order_audit": f"""
-            {CHANGES_CTE}, {_OK_CTE.replace("ok AS (", "ok_unused AS (")},
-            tagged AS (
-              SELECT *,
-                CASE WHEN dup_rank > 1 THEN 'duplicate'
-                     WHEN prev_max_ts IS NOT NULL AND commit_ts <= prev_max_ts
-                       THEN 'disorder'
-                     ELSE 'ok' END AS order_status
-              FROM flagged)
+            {CHANGES_CTE}, {_OK_CTE}
             SELECT source_id,
               COUNT(CASE WHEN order_status = 'ok' THEN 1 END) AS n_ok,
               COUNT(CASE WHEN order_status = 'disorder' THEN 1 END) AS n_disorder,
               COUNT(CASE WHEN order_status = 'duplicate' THEN 1 END) AS n_duplicate,
               MAX(commit_ts) AS source_max_ts
-            FROM tagged GROUP BY source_id
+            FROM flagged GROUP BY source_id
         """,
         "cdc_kway_merge": f"""
             {CHANGES_CTE}, {_OK_CTE},
@@ -7946,17 +7956,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT c.* REPLACE (c.arrival_seq + mx.mx + 1
                                   AS arrival_seq)
               FROM changes c, mx WHERE c.arrival_seq % 3 = 0),
-            f1 AS (
-              SELECT c.*,
-                MAX(commit_ts) OVER (PARTITION BY source_id
-                  ORDER BY arrival_seq ROWS BETWEEN UNBOUNDED
-                  PRECEDING AND 1 PRECEDING) AS prev_max_ts,
-                ROW_NUMBER() OVER (PARTITION BY commit_ts
-                  ORDER BY arrival_seq, source_id) AS dup_rank
-              FROM changes c),
-            ok1 AS (SELECT * FROM f1 WHERE dup_rank = 1
-                    AND (prev_max_ts IS NULL
-                         OR commit_ts > prev_max_ts)),
+            {_ok_cte("changes", "1")},
             l1 AS (SELECT * FROM (
                      SELECT *, ROW_NUMBER() OVER (
                        PARTITION BY db, tbl, pk
@@ -7971,17 +7971,7 @@ def oracle_sql() -> dict[str, str]:
                                  CAST(commit_ts AS VARCHAR))),
                        1, 12)) AS BIGINT)) AS BIGINT) AS h_once
                    FROM l1 GROUP BY db, tbl),
-            f2 AS (
-              SELECT c.*,
-                MAX(commit_ts) OVER (PARTITION BY source_id
-                  ORDER BY arrival_seq ROWS BETWEEN UNBOUNDED
-                  PRECEDING AND 1 PRECEDING) AS prev_max_ts,
-                ROW_NUMBER() OVER (PARTITION BY commit_ts
-                  ORDER BY arrival_seq, source_id) AS dup_rank
-              FROM rep c),
-            ok2 AS (SELECT * FROM f2 WHERE dup_rank = 1
-                    AND (prev_max_ts IS NULL
-                         OR commit_ts > prev_max_ts)),
+            {_ok_cte("rep", "2")},
             l2 AS (SELECT * FROM (
                      SELECT *, ROW_NUMBER() OVER (
                        PARTITION BY db, tbl, pk

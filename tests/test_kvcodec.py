@@ -236,11 +236,11 @@ def test_kv_decode_feeds_compaction_spine(spark):
         .withColumnRenamed("val", "val_d")
     # stitch transport metadata back on (a real pipeline carries it
     # beside the row bytes), then run the ordinary spine
-    meta = ch.select("arrival_seq", "source_id", "commit_ts", "op",
-                     "db", "tbl", "seq", "row_json")
+    meta = ch.select("arrival_seq", "source_id", "commit_ts", "start_ts",
+                     "op", "db", "tbl", "seq", "row_json")
     rebuilt = decoded.join(meta, "arrival_seq").select(
-        "arrival_seq", "source_id", "commit_ts", "op", "db", "tbl",
-        F.col("pk_d").alias("pk"), "seq", F.col("val_d").alias("val"),
+        "arrival_seq", "source_id", "commit_ts", "start_ts", "op", "db",
+        "tbl", F.col("pk_d").alias("pk"), "seq", F.col("val_d").alias("val"),
         "row_json")
     got = compaction.apply_snapshot(ordering.ordered_stream(rebuilt)) \
         .select("db", "tbl", "pk", "commit_ts", "op", "val")

@@ -10,7 +10,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from tests.conftest import make_changes
+from tests.conftest import make_changes, order_labels
 from tidb_binlog_spark.plans import config as cfgmod
 from tidb_binlog_spark.session import load_tables
 
@@ -166,7 +166,7 @@ def test_hierarchical_offsets_matches_brute_across_levels(spark):
 
 
 def test_classify_disorder_bucketed_matches_single_window(spark):
-    """Two-phase per-source running max == the single-window result,
+    """Two-phase per-source running max == the single-pass result,
     with the carry derived in the plan and with it supplied."""
     import random
     rng = random.Random(7)
@@ -182,20 +182,10 @@ def test_classify_disorder_bucketed_matches_single_window(spark):
     carry = ordmod.carry_from_maxima(
         ordmod.bucket_maxima(ch, arrival_bucket=32).collect())
     assert carry                        # 400 rows span 13 buckets
-    # oracle: the one-window form
-    from pyspark.sql import Window
-    w_arr = (Window.partitionBy("source_id").orderBy("arrival_seq")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    w_dup = Window.partitionBy("commit_ts").orderBy("arrival_seq", "source_id")
-    single = (ch.withColumn("prev", F.max("commit_ts").over(w_arr))
-              .withColumn("dr", F.row_number().over(w_dup))
-              .withColumn("order_status",
-                          F.when(F.col("dr") > 1, "duplicate")
-                           .when(F.col("prev").isNotNull()
-                                 & (F.col("commit_ts") <= F.col("prev")),
-                                 "disorder")
-                           .otherwise("ok")))
-    want = {r["arrival_seq"]: r["order_status"] for r in single.collect()}
+    # oracle: the rule as one pass in arrival order (each row its own
+    # transaction, start_ts = commit_ts - 1)
+    want = order_labels([(a, src, cts, cts - 1, 0)
+                         for a, src, cts, *_ in rows])
     # the in-plan carry, and the one a census computed beforehand
     for supplied in (None, carry):
         bucketed = ordmod.classify_disorder(ch, arrival_bucket=32,

@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import make_changes
+from tests.conftest import make_changes, order_labels
 from tidb_binlog_spark.operators import compaction, ordering
 from tidb_binlog_spark.sinks import payload, sqlgen
 from tidb_binlog_spark.sinks.table_sink import SnapshotTable
@@ -98,6 +98,19 @@ def test_streaming_apply_matches_batch_oracle(spark, tmp_path):
     assert got.keys() == oracle.keys()
     assert got[1] == ("U", 7.0)
     assert 2 not in got
+
+
+def test_streaming_apply_keeps_heartbeats_out_of_the_table(spark, tmp_path):
+    """A FAKE heartbeat passes the order gate but is no row of the
+    table: after I@10 and FAKE@99 the snapshot holds only pk 1."""
+    src = str(tmp_path / "src")
+    make_changes(spark, [(1, "s0", 10, "I", 1), (2, "s0", 99, "FAKE", 0)]) \
+        .coalesce(1).write.parquet(src)
+    table_root = str(tmp_path / "tbl")
+    pipeline.run_apply_stream(spark, src, table_root,
+                              str(tmp_path / "ckpt")).awaitTermination(120)
+    got = SnapshotTable(spark, table_root).read().collect()
+    assert [(r["pk"], r["op"]) for r in got] == [(1, "I")]
 
 
 def test_streaming_multi_source_union_merge(spark, tmp_path):
@@ -1763,20 +1776,16 @@ def test_sql_batch_applier_late_event_in_later_batch(spark, tmp_path):
 
 
 def _single_window_model(rows):
-    """The gate as one pass in arrival order: a row is a duplicate when
-    an earlier-arriving row has its commit_ts, disorder when its
-    source already showed a commit_ts >= its own; the ok rows apply
-    in commit_ts order. Returns {pk: val} after the last image."""
-    seen, src_max, ok = set(), {}, []
-    for a, src, cts, op, pk, val in sorted(rows):
-        dup = cts in seen
-        seen.add(cts)
-        late = src in src_max and cts <= src_max[src]
-        src_max[src] = max(src_max.get(src, cts), cts)
-        if not dup and not late:
-            ok.append((cts, op, pk, val))
+    """The gate as one pass in arrival order (conftest.order_labels:
+    the transaction rule, each row here its own transaction with
+    start_ts = commit_ts - 1); the ok rows apply in commit_ts order.
+    Returns {pk: val} after the last image."""
+    labels = order_labels([(a, src, cts, cts - 1, 0)
+                           for a, src, cts, *_ in rows])
     state = {}
-    for _cts, op, pk, val in sorted(ok):
+    for _cts, op, pk, val in sorted((cts, op, pk, val)
+                                    for a, _src, cts, op, pk, val in rows
+                                    if labels[a] == "ok"):
         if op == "D":
             state.pop(pk, None)
         else:
@@ -1930,17 +1939,13 @@ def test_sql_batch_applier_refuses_ddl_storm(spark, tmp_path, monkeypatch):
     assert jdbc.load_checkpoint(db_dir)[0] == 14
 
 
-@pytest.mark.xfail(strict=True, reason=(
-    "classify_disorder gates rows, not txns: it finds duplicates within "
-    "a commit_ts and compares with the source's prefix max by <=, so "
-    "rows 2..n of a txn are tagged duplicate or disorder and dropped"))
 @pytest.mark.parametrize("safe", [True, False], ids=["safe", "strict"])
 def test_sql_batch_applier_keeps_every_row_of_a_multi_row_txn(
         spark, tmp_path, safe):
     """A txn of three rows at commit_ts 10 (seq 0/1/2, pks 1/2/3) and a
-    later txn at 20 (pk 4): all four rows land downstream. While the
-    gate tags rows, only pks 1 and 4 land and the cursor moves to 20,
-    so the loss is permanent."""
+    later txn at 20 (pk 4): all four rows land downstream. A gate that
+    tags rows, not transactions, lands only pks 1 and 4 and moves the
+    cursor to 20, so the loss is permanent."""
     from tidb_binlog_spark.operators import safe_mode as sm
 
     batch = make_changes(spark, [(1, "s0", 10, "I", 1, 0),
@@ -2721,6 +2726,13 @@ def test_failed_apply_releases_cached_frames(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="apply failed"):
         pipeline.feed_sql_by_relay_if_needed(spark, relay,
                                              str(tmp_path / "db"))
+    assert _cache_is_empty(spark)
+
+    s0 = str(tmp_path / "merge_s0")
+    _zone(spark, s0, [(1, "s0", 10, "I", 1)])
+    with pytest.raises(RuntimeError, match="apply failed"):
+        pipeline.multi_source_merge_round(
+            spark, [s0], SnapshotTable(spark, str(tmp_path / "tbl3")))
     assert _cache_is_empty(spark)
 
 

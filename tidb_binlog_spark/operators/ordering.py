@@ -4,9 +4,10 @@ multi-source k-way merge with a min-watermark gate.
 Reference semantics:
 - the whole pipeline's invariant is globally ascending commit_ts
   (drainer/merge.go:236-335);
-- an item whose commit_ts <= the running max is *disorder*: counted and
-  logged, never applied out of order; an item with a commit_ts already
-  seen is a *duplicate*: skipped (drainer/merge.go:318-329);
+- a *duplicate* binlog (one transaction) is skipped; a *disorder* one
+  is counted and logged, never applied out of order
+  (drainer/merge.go:318-329). ``classify_disorder`` states this rule
+  once for every applier; the oracle's ``_ok_cte`` restates it in SQL;
 - the merger only emits up to min over sources of max(commit_ts)
   (every live source must have shown an item ≥ that ts) — the global
   low-watermark (drainer/merge.go:268-297); fake binlogs (heartbeats)
@@ -22,7 +23,7 @@ The per-source running max spans arrival buckets through a carry: the
 max commit_ts of each source's earlier buckets. ``classify_disorder``
 derives it in its own plan, or takes it precomputed from a caller that
 already aggregates the batch (``bucket_maxima`` -> ``carry_from_maxima``,
-the SQL applier's census), which keeps the gate to its two windows.
+the SQL applier's census), which keeps the gate to its two exchanges.
 """
 
 from __future__ import annotations
@@ -131,15 +132,30 @@ def carry_from_maxima(rows) -> dict:
     return carry
 
 
-def _carry_key(src, b):
-    return F.concat_ws("\x01", src, b.cast("string"))
+def _lookup(pairs: dict, key: Column) -> Column:
+    """``pairs[key]`` as a literal map lookup (NULL when absent)."""
+    return F.create_map(*[x for k, v in pairs.items()
+                          for x in (F.lit(k), F.lit(v).cast("long"))])[key]
 
 
 def classify_disorder(changes: DataFrame,
                       arrival_bucket: int = ARRIVAL_BUCKET,
-                      carry: dict | None = None) -> DataFrame:
-    """Tag each event, per source in arrival order, as ok / disorder /
-    duplicate (duplicate = commit_ts seen before globally).
+                      carry: dict | None = None,
+                      cursor: dict | None = None) -> DataFrame:
+    """Tag each row ok / disorder / duplicate by the one order rule.
+    The unit is the binlog, one transaction (drainer/merge.go:318-329):
+    the rows sharing (source_id, start_ts, commit_ts), kept in ``seq``
+    order (PAPER.md §1.1 items 1-2).
+
+    - duplicate: the row's transaction is not the first to arrive at
+      its commit_ts (first by arrival_seq, source_id), or an earlier
+      row repeats its (source_id, start_ts, commit_ts, seq): a
+      redelivery;
+    - disorder: otherwise, an earlier row of its source has a strictly
+      larger commit_ts, or the row is at or below its source's
+      ``cursor`` (the applied commit_ts a streaming caller stores
+      between batches);
+    - ok: every other row. Every row of an ok transaction is ok.
 
     The per-source running max is a TWO-PHASE max so one source's whole
     history never funnels through a single task (the reference's
@@ -148,25 +164,24 @@ def classify_disorder(changes: DataFrame,
          windows partitioned by (source, bucket), parallel;
       2. the running max of the earlier buckets' maxima (the carry).
     max(carry_in, within_bucket_prev) == the global per-source prefix
-    max, exactly. The duplicate check is windowed by commit_ts (already
-    key-partitioned, scales).
+    max, exactly. The two duplicate windows share one exchange on
+    commit_ts and one sort.
 
     ``carry`` is phase 2 computed beforehand: ``carry_from_maxima`` of
     this frame's ``bucket_maxima`` at the same ``arrival_bucket``. It is
     applied as a literal lookup, so the plan holds only the two
-    windows. Without it the plan derives the carry itself: the bucket
+    exchanges. Without it the plan derives the carry itself: the bucket
     maxima, a window over them per source and a broadcast join back.
     """
     w_in = (Window.partitionBy("source_id", "_b").orderBy("arrival_seq")
             .rowsBetween(Window.unboundedPreceding, -1))
-    # cursor pseudo-rows (arrival_seq < 0, injected by the streaming
-    # gate) carry per-source order state only — they must never win a
-    # commit_ts duplicate partition against a REAL row: a synthesized
-    # cursor value (e.g. min-parked-1) can coincide with another
-    # source's genuine commit_ts, and ranking the seed first would
-    # quarantine that row as a duplicate. Seeds rank among themselves.
-    w_dup = Window.partitionBy("commit_ts", F.col("arrival_seq") < 0) \
-        .orderBy("arrival_seq", "source_id")
+    # the rows of one commit_ts in (source, start_ts, seq) order: a
+    # redelivery follows its first copy. The owner, the transaction of
+    # the row first by (arrival_seq, source_id), is an aggregate over
+    # the whole partition, so its window reuses that sort
+    w_copy = (Window.partitionBy("commit_ts")
+              .orderBy("source_id", "start_ts", "seq", "arrival_seq"))
+    w_ts = Window.partitionBy("commit_ts")
     bucketed = changes.withColumn("_b", arrival_bucket_of(arrival_bucket))
     if carry is None:
         # the carry aggregate re-reads only 3 columns of the source
@@ -182,39 +197,44 @@ def classify_disorder(changes: DataFrame,
                     .select("source_id", "_b", "carry_in"))
         bucketed = bucketed.join(F.broadcast(carry_df), ["source_id", "_b"])
     elif carry:
-        lookup = F.create_map(*[
-            x for (src, cb), cmax in carry.items()
-            for x in (_carry_key(F.lit(src), F.lit(cb)),
-                      F.lit(cmax).cast("long"))])
-        bucketed = bucketed.withColumn(
-            "carry_in", lookup[_carry_key(F.col("source_id"), F.col("_b"))])
+        bucketed = bucketed.withColumn("carry_in", _lookup(
+            {f"{src}\x01{b}": m for (src, b), m in carry.items()},
+            F.concat_ws("\x01", "source_id", F.col("_b").cast("string"))))
     else:
         bucketed = bucketed.withColumn("carry_in", F.lit(None).cast("long"))
+    below_cursor = (F.col("commit_ts") <= _lookup(cursor, F.col("source_id"))
+                    if cursor else F.lit(False))
     return (
         bucketed
-        .withColumn("prev_in_bucket", F.max("commit_ts").over(w_in))
-        .withColumn("prev_max_ts",
-                    F.greatest("carry_in", "prev_in_bucket"))
-        .withColumn("dup_rank", F.row_number().over(w_dup))
+        .withColumn("_prev", F.greatest(
+            "carry_in", F.max("commit_ts").over(w_in)))
+        .withColumn("_prior", F.lag(F.struct(
+            "source_id", "start_ts", "seq")).over(w_copy))
+        .withColumn("_owner", F.min(F.struct(
+            "arrival_seq", "source_id", "start_ts")).over(w_ts))
         .withColumn(
             "order_status",
-            F.when(F.col("dup_rank") > 1, F.lit("duplicate"))
-             .when(F.col("prev_max_ts").isNotNull()
-                   & (F.col("commit_ts") <= F.col("prev_max_ts")),
+            F.when(~F.col("_owner.source_id").eqNullSafe(F.col("source_id"))
+                   | ~F.col("_owner.start_ts").eqNullSafe(F.col("start_ts"))
+                   | F.col("_prior").eqNullSafe(
+                       F.struct("source_id", "start_ts", "seq")),
+                   F.lit("duplicate"))
+             .when((F.col("commit_ts") < F.col("_prev")) | below_cursor,
                    F.lit("disorder"))
              .otherwise(F.lit("ok")))
-        .drop("prev_max_ts", "dup_rank", "prev_in_bucket", "carry_in", "_b")
+        .drop("_prev", "_prior", "_owner", "carry_in", "_b")
     )
 
 
 def ordered_stream(changes: DataFrame,
-                   carry: dict | None = None) -> DataFrame:
+                   carry: dict | None = None,
+                   cursor: dict | None = None) -> DataFrame:
     """The emit-able stream: duplicates skipped, disorder quarantined
     (routed to a metric/dead-letter stream, not applied out of order).
     Returns only rows that participate in the ordered apply.
-    ``carry`` as in classify_disorder.
+    ``carry`` and ``cursor`` as in classify_disorder.
     """
-    return (classify_disorder(changes, carry=carry)
+    return (classify_disorder(changes, carry=carry, cursor=cursor)
             .filter(F.col("order_status") == "ok"))
 
 

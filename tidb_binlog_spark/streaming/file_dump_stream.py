@@ -39,7 +39,9 @@ is a txn; pump segments never split one across files), so micro-batch
 boundaries are txn boundaries and the cursor (max commit-ts written)
 is exact. A txn straddling two segments would be half-dropped by the
 resume filter — the same contract the reference's Pos cursor assumes
-of its segment files.
+of its segment files. Within a batch the gate is
+``ordering.ordered_stream``, which keeps or drops each transaction
+whole (the rule every applier uses).
 
 Retention GC (``gc_pb_dump_segments``) drops whole segments whose
 LAST record ts is below the safepoint — the reference's file-level GC
@@ -164,20 +166,10 @@ class FileDumpApplier:
         try:
             # resume filter: strictly above the cursor — a re-delivered
             # batch (crash between segments and checkpoint) re-writes
-            # only what recovery just truncated
-            live = batch_df.filter(F.col("commit_ts") > self.resume_ts)
-            # TXN-granularity order gate: the dup/disorder unit is the
-            # BINLOG (one per commit_ts), not the exploded row — a
-            # redelivered txn drops whole, a multi-row txn stays whole
-            # (classify_disorder's commit_ts dup partition would keep
-            # only row 1 of each txn)
-            txns = (live.groupBy("source_id", "commit_ts")
-                    .agg(F.min("arrival_seq").alias("arrival_seq")))
-            ok_ts = (ordering.classify_disorder(txns)
-                     .filter(F.col("order_status") == "ok")
-                     .select("source_id", "commit_ts"))
-            live = live.join(ok_ts, ["source_id", "commit_ts"],
-                             "left_semi")
+            # only what recovery just truncated; then the order gate,
+            # which keeps or drops each transaction whole
+            live = ordering.ordered_stream(
+                batch_df.filter(F.col("commit_ts") > self.resume_ts))
             # FAKE heartbeats advance the cursor but are never written
             # (drainer filters fake binlogs before the sinks and uses
             # them only to move the savepoint forward)

@@ -16,14 +16,13 @@ three pieces of cross-batch state (all tiny or bounded):
   regresses (a newly seen lagging source blocks progress, it does not
   rewind it).
 
-- **per-source applied cursor** (drainer/pump.go:186-195): injected
-  as one arrival_seq = -1 pseudo-row per source so
-  ``classify_disorder``'s per-source prefix max continues seamlessly
-  from earlier batches — a late row invisible to a per-batch gate is
-  still quarantined. (A repeated commit_ts from the same source is
-  <= that source's prefix max, so the same gate drops duplicates;
-  production sources with cross-source ts collisions bound the
-  residual with dropDuplicatesWithinWatermark.)
+- **per-source applied cursor** (drainer/pump.go:186-195): handed to
+  ``classify_disorder`` as its ``cursor``, so a row at or below its
+  source's cursor is disorder — a late row invisible to a per-batch
+  gate is still quarantined, and so is a redelivery of an applied
+  transaction. Within the batch plus its pending zone the same gate
+  drops a redelivery, and a transaction that is not the first to
+  arrive at its commit_ts, as duplicates.
 
 - **PK liveness state** (aggregate view only): the applied last-image
   table (a SnapshotTable, tombstones included) is seeded into
@@ -64,29 +63,6 @@ from ..operators.incremental_agg import (coherent_changelog,
                                          regroup_partials,
                                          top_values_from_multiset,
                                          value_multiset)
-
-
-def classify_with_cursor(spark: SparkSession, batch_df: DataFrame,
-                         applied_max: dict) -> DataFrame:
-    """``classify_disorder`` with the stored per-source applied cursor
-    carried in as arrival_seq = -1 pseudo-rows (they extend the prefix
-    max across batches and are dropped from the output)."""
-    if not applied_max:
-        return ordering.classify_disorder(batch_df)
-    seed = (spark.createDataFrame(
-                [(s, int(m)) for s, m in applied_max.items()],
-                "source_id string, commit_ts long")
-            .withColumn("arrival_seq", F.lit(-1).cast("long")))
-    seeded = batch_df.unionByName(seed, allowMissingColumns=True)
-    return (ordering.classify_disorder(seeded)
-            .filter(F.col("arrival_seq") >= 0))
-
-
-def gate_with_cursor(spark: SparkSession, batch_df: DataFrame,
-                     applied_max: dict) -> DataFrame:
-    """The appliable subset of ``classify_with_cursor``."""
-    return (classify_with_cursor(spark, batch_df, applied_max)
-            .filter(F.col("order_status") == "ok"))
 
 
 def advance_cursors(df: DataFrame, cursors: dict) -> dict:
@@ -208,8 +184,8 @@ class _StreamView:
                 # (wm None must not erase the persisted watermark)
                 wm = ck["watermark"] if wm is None \
                     else max(wm, ck["watermark"])
-            classified = classify_with_cursor(
-                self.spark, combined, ck["applied_max"]).persist()
+            classified = ordering.classify_disorder(
+                combined, cursor=ck["applied_max"]).persist()
             ok = classified.filter(F.col("order_status") == "ok")
             # the reference COUNTS disorder and duplicates and never
             # applies them out of order (drainer/merge.go:318-329);
@@ -308,9 +284,8 @@ class _StreamView:
         pending = self._read_versioned("pending", ck["version"])
         if pending is None:
             return
-        ok = gate_with_cursor(self.spark, pending,
-                              ck["applied_max"]).filter(
-                                  F.col("op") != "FAKE")
+        ok = (ordering.ordered_stream(pending, cursor=ck["applied_max"])
+              .filter(F.col("op") != "FAKE"))
         new_version = ck["version"] + 1
         self._fold(self._state(), ok, new_version)
         pending.limit(0).write.mode("overwrite").parquet(

@@ -81,7 +81,10 @@ def run_apply_stream(spark: SparkSession, source_dir: str, table_root: str,
         try:
             if relay is not None:
                 relay.append(batch_df)      # WAL before apply
-            ok = ordering.ordered_stream(batch_df)
+            # FAKE heartbeats only move the order state; they are
+            # never rows of the table
+            ok = (ordering.ordered_stream(batch_df)
+                  .filter(F.col("op") != "FAKE"))
             compacted = compaction.compact_last_image(ok)
             # D rows must reach the sink (they delete); SnapshotTable
             # resolves cross-batch order by commit_ts.
@@ -714,13 +717,18 @@ def multi_source_merge_round(spark: SparkSession, source_dirs: list[str],
     fresh = (allf.filter((F.col("commit_ts") > ck)
                          & (F.col("commit_ts") <= watermark))
              .persist())
-    appliable = ordering.ordered_stream(fresh).filter(F.col("op") != "FAKE")
-    compacted = compaction.compact_last_image(appliable).persist()
-    n_applied = compacted.count()   # materializes once; apply reads cache
-    if n_applied:
-        table.apply_batch(compacted)
-    compacted.unpersist()
-    fresh.unpersist()
+    compacted = None
+    try:
+        appliable = (ordering.ordered_stream(fresh)
+                     .filter(F.col("op") != "FAKE"))
+        compacted = compaction.compact_last_image(appliable).persist()
+        n_applied = compacted.count()   # materializes once; apply reads cache
+        if n_applied:
+            table.apply_batch(compacted)
+    finally:
+        if compacted is not None:
+            compacted.unpersist()
+        fresh.unpersist()
     if watermark > ck:
         table.advance_checkpoint(watermark)
     return {"watermark": int(watermark), "n_applied": int(n_applied),
