@@ -747,8 +747,8 @@ def q_sink_kafka_obinlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     # throw away"; interleaved A/B at sf0.1: 2.40 -> 2.18 s min-of-3).
     # monotonically_increasing_id is append-order ONLY on a single
     # partition (it shifts by partition id in the high bits) — assert
-    # that contract on the PLAN (no job) so a switch to
-    # kafka_frame_sharded cannot silently produce partition-shifted,
+    # that contract on the PLAN (no job) so a frame that ever grows a
+    # wider partitioning cannot silently produce partition-shifted,
     # non-contiguous offsets (r14, ADVICE).
     _assert_single_partition_plan(frame)
     echoed = frame.withColumn("offset", F.monotonically_increasing_id())

@@ -36,8 +36,8 @@ def test_kafka_frame_contract(spark):
     assert all(r["partition"] == 0 for r in rows)       # manual partition 0
     assert all(r["topic"] == "42_obinlog" for r in rows)
     assert all(isinstance(r["value"], (bytes, bytearray)) for r in rows)
-    # default wire: one message PER TRANSACTION (30 events, 30 distinct
-    # commit_ts -> 30 messages), each value a decodable protobuf Binlog
+    # one message PER TRANSACTION (30 events, 30 distinct commit_ts ->
+    # 30 messages), each value a decodable protobuf Binlog
     from tidb_binlog_spark.sinks import obinlog_pb as ob
     assert len(rows) == 30
     decoded = ob.decode_secondary_binlog(bytes(rows[0]["value"]))
@@ -54,25 +54,8 @@ def test_producer_consumer_options():
     assert c["startingOffsets"] == "earliest"
 
 
-def test_produce_decode_roundtrip_without_broker_json_wire(spark):
-    """JSON stand-in wire: kafka_frame -> (simulated broker echo:
-    offset + value) -> decode_kafka_batch reconstructs the change rows
-    exactly (per-event messages carry seq)."""
-    from pyspark.sql import Window
-    ch = _ch(spark)
-    frame = kafka.kafka_frame(ch, wire="json")
-    # what the broker hands back: assigned offsets + the value bytes
-    w = Window.partitionBy("partition").orderBy(F.col("value"))
-    echoed = frame.withColumn(
-        "offset", F.row_number().over(w).cast("long"))
-    decoded = kafka.decode_kafka_batch(echoed, wire="json")
-    got = decoded.select("commit_ts", "op", "db", "tbl", "pk", "seq")
-    want = ch.select("commit_ts", "op", "db", "tbl", "pk", "seq")
-    assert got.exceptAll(want).union(want.exceptAll(got)).count() == 0
-
-
 def test_produce_decode_roundtrip_protobuf_wire(spark):
-    """Default (protobuf) wire: the value bytes are real secondary-
+    """The protobuf wire: the value bytes are real secondary-
     binlog Binlogs; the arbiter-side decode recovers every mutation's
     typed row and old image, with the broker offset carried through as
     arrival_seq."""
@@ -151,41 +134,9 @@ def test_ack_window_oversize_single_message_still_sends():
     assert w.try_send(1, now=1.0) == 1
 
 
-def test_kafka_frame_sharded_per_table_order(spark):
-    """Sharded frame: every (db, tbl) maps to exactly ONE partition,
-    messages within a partition are commit_ts-ascending, and the
-    decode over all partitions recovers every mutation exactly once
-    (a txn spanning shards splits into one Binlog per shard)."""
-    from pyspark.sql import Window
-    from tidb_binlog_spark.sinks import obinlog_pb as ob
-    ch = _ch(spark)
-    frame = kafka.kafka_frame_sharded(ch, n_partitions=4, cluster_id=9)
-    rows = frame.collect()
-    assert {r["topic"] for r in rows} == {"9_obinlog"}
-    assert {r["partition"] for r in rows} <= set(range(4))
-    # decode every message; check table->partition is a function
-    table_parts: dict[tuple, set] = {}
-    per_part_ts: dict[int, list] = {}
-    n_mutations = 0
-    for r in rows:
-        b = ob.decode_secondary_binlog(bytes(r["value"]))
-        per_part_ts.setdefault(r["partition"], []).append(b["commit_ts"])
-        for t in b["tables"]:
-            table_parts.setdefault(
-                (t["schema_name"], t["table_name"]),
-                set()).add(r["partition"])
-            n_mutations += len(t["mutations"])
-    assert all(len(ps) == 1 for ps in table_parts.values())
-    assert n_mutations == 30                # nothing lost or doubled
-    # NOTE: collect() order within a partition is the frame's task
-    # order (sortWithinPartitions) — assert ascending per partition
-    for p, ts in per_part_ts.items():
-        assert ts == sorted(ts), (p, ts)
-
-
 def test_single_partition_plan_assertion_walks_narrow_nodes_only(spark):
     """The append-order offset guard accepts Repartition(1) only below
-    narrow nodes: the frames kafka_frame hands it pass, while an
+    narrow nodes: the frame kafka_frame hands it passes, while an
     aggregate, a global sort or a wider repartition above (or instead
     of) Repartition(1) is rejected."""
     import pytest
@@ -193,26 +144,16 @@ def test_single_partition_plan_assertion_walks_narrow_nodes_only(spark):
     import __spark_entry__ as m
     ch = _ch(spark)
     m._assert_single_partition_plan(kafka.kafka_frame(ch, cluster_id=42))
-    m._assert_single_partition_plan(kafka.kafka_frame(ch, wire="json"))
     one = ch.repartition(1)
     m._assert_single_partition_plan(
         one.sortWithinPartitions("commit_ts").filter(F.col("pk") > 0)
            .select("commit_ts", "op"))
     for bad in (one.groupBy("op").agg(F.count(F.lit(1)).alias("n")),
                 one.orderBy("commit_ts"),
-                kafka.kafka_frame_sharded(ch, n_partitions=4),
+                ch.repartition(4, "pk"),
                 ch):
         with pytest.raises(AssertionError, match="single-partition"):
             m._assert_single_partition_plan(bad)
-
-
-def test_kafka_frame_rejects_bad_wire_and_wide_protobuf(spark):
-    import pytest
-    ch = _ch(spark)
-    with pytest.raises(ValueError, match="unknown wire"):
-        kafka.kafka_frame(ch, wire="proto")
-    with pytest.raises(ValueError, match="wide_info"):
-        kafka.kafka_frame(ch, wide_info=object())
 
 
 def test_arbiter_path_end_to_end_wire_to_sqlite(spark, tmp_path):

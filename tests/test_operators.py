@@ -656,22 +656,6 @@ def test_loopback_mark_write_then_filter_roundtrip(spark, tmp_path):
     assert [r["commit_ts"] for r in kept.collect()] == [20]
 
 
-def test_file_dump_gc_retention(spark, tmp_path):
-    from tidb_binlog_spark.sinks import payload
-
-    ch = make_changes(spark, [(i, "s0", i * 100000, "I", i)
-                              for i in range(1, 8)])
-    path = str(tmp_path / "dump")
-    payload.file_dump(ch, path)
-    removed = payload.gc_file_dump(path, safepoint_ts=400000)
-    assert removed == ["ts_bucket=1", "ts_bucket=2", "ts_bucket=3"]
-    left = sorted(r["commit_ts"] for r in
-                  payload.read_file_dump(spark, path).collect())
-    assert left == [400000, 500000, 600000, 700000]
-    # idempotent / no-op below an already-collected safepoint
-    assert payload.gc_file_dump(path, safepoint_ts=100000) == []
-
-
 def test_txn_resolver_decision_rules(spark):
     """Every branch of pump/storage/storage.go:431-558: committed (sane
     and insane commit ts), rollback, valid lock, unknown-young,

@@ -48,19 +48,12 @@ KEEP = {
     "load_config": "drainer.toml analog a caller loads",
     "set_secret_key": "key install a caller makes (encrypt)",
     # tidb-binlog components that only tests drive
-    "multi_source_merge_round": "drainer merge, drainer/merge.go:268-297",
     "run_file_dump_stream": "pb file sink, drainer/sync/pb.go:38-120",
-    "file_dump": "file dump, drainer/sync/pb.go:38-120",
-    "gc_file_dump": "pump storage GC, pump/storage/storage.go GC",
-    "crc_mismatches": "record CRC audit, pump/storage/vlog.go",
     "parse_obinlog_wide": "arbiter-side wide decode, arbiter/server.go",
     "read_pb_dump_ddl": "reparo DDL replay of a pb dump, reparo/",
     "AckWindow": "producer in-flight window, drainer/sync/kafka.go:186-278",
-    "kafka_frame_sharded": "kafka frame per partition, drainer/sync/kafka.go",
     "producer_options": "producer config, drainer/sync/kafka.go",
     "consumer_options": "arbiter consumer config, arbiter/server.go",
-    "write_bucketed": "per-PK co-location, pkg/loader/load.go:136-147",
-    "read_bucketed": "per-PK co-location, pkg/loader/load.go:136-147",
     "synthesize_commits":
         "txn-status resolver, pump/storage/storage.go:400-429",
     "rolled_back": "sorter rollback drop, pump/storage/sorter.go:196-214",

@@ -287,22 +287,6 @@ def test_spread_noop_on_multi_split_input(spark):
     assert "Exchange" in _plan(spread(narrow))
 
 
-def test_file_dump_writer_count_scales_with_buckets(spark, tmp_path):
-    """file_dump's default writer count follows the ts_bucket count —
-    never a single funnel task (VERDICT r3 payload.py:138)."""
-    import glob
-    from tidb_binlog_spark.sinks import payload
-    rows = [(i, "s0", b * 100000 + i, "I", i % 5, 0, 1.0)
-            for b in range(4) for i in range(20)]
-    ch = make_changes(spark, rows)
-    path = str(tmp_path / "dump")
-    payload.file_dump(ch, path)
-    buckets = glob.glob(f"{path}/ts_bucket=*")
-    assert len(buckets) == 4
-    # at least one data file per bucket dir, written by parallel tasks
-    assert all(glob.glob(f"{b}/*.parquet") for b in buckets)
-
-
 def _assert_windows_partitioned(plan: str) -> None:
     """Every Window node must carry a partition spec. The plan prints
     'Window [funcs], [part], [order]'; an ORDER-less partitioned
@@ -369,44 +353,6 @@ def test_asof_and_range_join_plans_are_equi_join_shaped(spark):
         assert "CartesianProduct" not in plan, q
         assert "BroadcastNestedLoopJoin" not in plan, q
         _assert_windows_partitioned(plan)
-
-
-def test_bucketed_tables_join_and_aggregate_without_exchange(spark, tmp_path):
-    """Change log + snapshot persisted bucketed on the PK: the per-PK
-    join AND the per-PK aggregate plan with NO Exchange on either side
-    (the at-rest analog of the loader's causality-group co-location),
-    and results equal the unbucketed plans."""
-    from tidb_binlog_spark.sinks.bucketed import read_bucketed, write_bucketed
-    ch = spark.range(0, 2000).selectExpr(
-        "id % 500 AS pk", "id AS arrival_seq", "id * 10 AS commit_ts",
-        "CAST(id % 7 AS DOUBLE) AS val")
-    snap = spark.range(0, 500).selectExpr("id AS pk", "id * 1.5 AS cur")
-    for name, df in (("b_changes", ch), ("b_snap", snap)):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        write_bucketed(df, name, ["pk"], n_buckets=8,
-                       path=str(tmp_path / name))
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the shuffle-join path: at fixture size Catalyst would
-        # broadcast, hiding exactly the Exchange bucketing removes
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        left = read_bucketed(spark, "b_changes")
-        right = read_bucketed(spark, "b_snap")
-        joined = left.join(right, "pk")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan and "Bucketed: true" in plan
-        agg = left.groupBy("pk").count()
-        aplan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in aplan, aplan
-        assert joined.count() == 2000
-        assert (joined.selectExpr("sum(val * cur) AS s").collect()[0]["s"]
-                == ch.join(snap, "pk")
-                     .selectExpr("sum(val * cur) AS s").collect()[0]["s"])
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS b_changes")
-        spark.sql("DROP TABLE IF EXISTS b_snap")
 
 
 def test_incremental_agg_single_group_exchange(spark):

@@ -55,6 +55,61 @@ def test_delete_tombstone_blocks_resurrection(spark, tmp_path):
     assert t.read().count() == 0
 
 
+def _count_exists(monkeypatch):
+    calls = []
+    real = os.path.exists
+
+    def counting(path):
+        calls.append(path)
+        return real(path)
+    monkeypatch.setattr(os.path, "exists", counting)
+    return calls
+
+
+def test_snapshot_gc_lists_versions_instead_of_probing(spark, tmp_path,
+                                                       monkeypatch):
+    """At version 50,000 one apply_batch makes O(1) existence probes,
+    not one per older version, and still removes a stale low-version
+    dir (a crash's leftover) below the kept pair."""
+    root = tmp_path / "tbl"
+    t = SnapshotTable(spark, str(root))
+    t.apply_batch(make_changes(spark, [(1, "s0", 10, "I", 1)]))
+    os.rename(root / "v1", root / "v50000")
+    with open(root / "checkpoint.json", "w") as f:
+        f.write('{"version": 50000, "commit_ts": 10}')
+    os.makedirs(root / "v3")
+    calls = _count_exists(monkeypatch)
+    t.apply_batch(make_changes(spark, [(2, "s0", 20, "I", 2)]))
+    assert len(calls) < 20, len(calls)
+    assert sorted(p.name for p in root.iterdir() if p.is_dir()) \
+        == ["v50000", "v50001"]
+    assert sorted(r["pk"] for r in t.read().collect()) == [1, 2]
+
+
+def test_view_gc_lists_versions_instead_of_probing(spark, tmp_path,
+                                                   monkeypatch):
+    """The streaming view's GC: at version 50,000 one apply_batch makes
+    O(1) existence probes across its state prefixes, and the stale
+    dirs below the kept pair go."""
+    from tidb_binlog_spark.streaming.ivm import MaterializedAggregate
+    root = tmp_path / "state"
+    os.makedirs(root)
+    with open(root / "view_checkpoint.json", "w") as f:
+        f.write('{"version": 50000, "seen_max": {}, "applied_max": {}, '
+                '"watermark": null, "last_batch_id": null}')
+    for stale in ("pending_v3", "agg_v7", "pkstate_v49999"):
+        os.makedirs(root / stale)
+    view = MaterializedAggregate(spark, str(root))
+    calls = _count_exists(monkeypatch)
+    view.apply_batch(make_changes(spark, [(1, "s0", 10, "I", 1, 0, 2.0)]))
+    assert len(calls) < 50, len(calls)
+    assert sorted(p.name for p in root.iterdir() if p.is_dir()) \
+        == ["agg_v50001", "aux_v50001", "deadletter", "pending_v50001",
+            "pkstate_v50001"]
+    assert {(r["n_rows"], r["sum_val"])
+            for r in view.read().collect()} == {(1, 2.0)}
+
+
 def test_sql_generation_shapes(spark):
     ch = make_changes(spark, [(1, "s0", 10, "I", 1, 0, 2.5),
                               (2, "s0", 20, "U", 1, 0, 3.5),
@@ -66,9 +121,10 @@ def test_sql_generation_shapes(spark):
 
 
 def test_file_dump_replay_prunes_ts_range(spark, tmp_path):
+    from tidb_binlog_spark.sinks.relay import RelayLog
     ch = make_changes(spark, [(i, "s0", i * 100000, "I", i) for i in range(1, 8)])
-    path = str(tmp_path / "dump")
-    payload.file_dump(ch, path)
+    RelayLog(str(tmp_path / "relay")).append(ch)
+    path = str(tmp_path / "relay" / "log")
     got = payload.read_file_dump(spark, path, start_ts=200000, stop_ts=500000)
     assert sorted(r["commit_ts"] for r in got.collect()) == [200000, 300000, 400000, 500000]
 
@@ -225,64 +281,6 @@ def _zone(spark, path, rows):
     make_changes(spark, rows).coalesce(1).write.mode("append").parquet(path)
 
 
-def test_multi_source_merge_gates_at_idle_source(spark, tmp_path):
-    """3 sources, one idle (heartbeats only): emission must stop at the
-    idle source's heartbeat ts; feeding it more heartbeats unblocks."""
-    s0, s1, s2 = (str(tmp_path / f"s{i}") for i in range(3))
-    t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    _zone(spark, s0, [(1, "s0", 10, "I", 1), (2, "s0", 40, "I", 2)])
-    _zone(spark, s1, [(3, "s1", 20, "I", 3), (4, "s1", 50, "I", 4)])
-    # s2 idle: heartbeat at ts 30 only
-    _zone(spark, s2, [(5, "s2", 30, "FAKE", 99)])
-
-    r1 = pipeline.multi_source_merge_round(spark, [s0, s1, s2], t)
-    # watermark = min(40, 50, 30) = 30: only ts 10 and 20 applied
-    assert r1["watermark"] == 30
-    assert sorted(x["commit_ts"] for x in t.read().collect()) == [10, 20]
-    assert t.checkpoint()["commit_ts"] == 30   # heartbeat advanced it
-
-    # the idle source heartbeats forward -> the gate re-mins and opens
-    # up to the next-slowest source (s0's max, 40)
-    _zone(spark, s2, [(6, "s2", 60, "FAKE", 99)])
-    r2 = pipeline.multi_source_merge_round(spark, [s0, s1, s2], t)
-    assert r2["watermark"] == 40
-    assert sorted(x["commit_ts"] for x in t.read().collect()) == [10, 20, 40]
-    assert t.checkpoint()["commit_ts"] == 40
-
-    # s0 catches up past s1 -> the remaining gate is s1's max (50)
-    _zone(spark, s0, [(7, "s0", 70, "I", 7)])
-    r3 = pipeline.multi_source_merge_round(spark, [s0, s1, s2], t)
-    assert r3["watermark"] == 50
-    assert sorted(x["commit_ts"] for x in t.read().collect()) == [10, 20, 40, 50]
-    assert t.checkpoint()["commit_ts"] == 50
-
-
-def test_multi_source_merge_source_add_remove(spark, tmp_path):
-    """The source list is re-evaluated every round: removing a stalled pump
-    lifts its gate; adding one re-mins (pause-world -> re-min)."""
-    s0, s1, s2 = (str(tmp_path / f"s{i}") for i in range(3))
-    t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    _zone(spark, s0, [(1, "s0", 10, "I", 1), (2, "s0", 100, "I", 2)])
-    _zone(spark, s1, [(3, "s1", 15, "I", 3)])   # stalls at 15
-
-    r1 = pipeline.multi_source_merge_round(spark, [s0, s1], t)
-    assert r1["watermark"] == 15
-    assert sorted(x["commit_ts"] for x in t.read().collect()) == [10, 15]
-
-    # s1 goes offline (drainer pauses merge, drops the source, resumes)
-    r2 = pipeline.multi_source_merge_round(spark, [s0], t)
-    assert r2["watermark"] == 100
-    assert sorted(x["commit_ts"] for x in t.read().collect()) == [10, 15, 100]
-
-    # a new pump joins with an older max -> gate re-mins below, nothing
-    # regresses, nothing below the checkpoint is re-applied
-    _zone(spark, s2, [(4, "s2", 60, "I", 5)])
-    r3 = pipeline.multi_source_merge_round(spark, [s0, s2], t)
-    assert r3["watermark"] == 60    # gate re-mins to the new source
-    assert r3["n_applied"] == 0     # nothing below the ck re-applies
-    assert t.checkpoint()["commit_ts"] == 100   # and the ck never regresses
-
-
 # -- auto safe-mode window (drainer/syncer.go:180-197) -----------------------
 
 def test_safe_mode_window_crash_restart_converges(spark, tmp_path):
@@ -380,25 +378,25 @@ def test_sink_catalog_fetch_and_refresh(tmp_path):
         pass
 
 
-def test_node_registry_states_and_source_list(spark, tmp_path):
+def test_node_registry_states_and_source_list(tmp_path):
     from tidb_binlog_spark import registry as reg_mod
-    from tidb_binlog_spark.sinks.table_sink import SnapshotTable
 
     reg = reg_mod.NodeRegistry(os.path.join(tmp_path, "nodes.json"))
+
+    def online_dirs():
+        return [n["source_dir"] for n in reg.nodes_by_kind(reg_mod.PUMP)
+                if n["state"] == reg_mod.ONLINE]
+
     zones = {}
     for i in range(3):
-        zone = os.path.join(tmp_path, f"pump{i}")
-        make_changes(spark, [
-            (i * 10 + j, f"src{i}", (i * 10 + j) * 10 + 10, "I", i * 10 + j)
-            for j in range(3)]).write.parquet(zone)
-        zones[f"p{i}"] = zone
-        reg.register(f"p{i}", reg_mod.PUMP, source_dir=zone)
-    assert len(reg.online_source_dirs()) == 3
+        zones[f"p{i}"] = os.path.join(tmp_path, f"pump{i}")
+        reg.register(f"p{i}", reg_mod.PUMP, source_dir=zones[f"p{i}"])
+    assert len(online_dirs()) == 3
 
     # pause-pump: pausing still shows in queries but leaves the merge
     reg.apply_action("p1", "pause")
     assert reg.nodes_by_kind(reg_mod.PUMP)[1]["state"] == reg_mod.PAUSING
-    assert len(reg.online_source_dirs()) == 2
+    assert len(online_dirs()) == 2
     reg.complete_shutdown("p1")
     assert reg.nodes_by_kind(reg_mod.PUMP)[1]["state"] == reg_mod.PAUSED
 
@@ -411,15 +409,12 @@ def test_node_registry_states_and_source_list(spark, tmp_path):
             for n in reg.nodes_by_kind(reg_mod.PUMP, show_offline=True)] \
         == ["p0", "p1", "p2"]
 
-    # the merge round consumes exactly the online zones
-    table = SnapshotTable(spark, os.path.join(tmp_path, "table"))
-    stats = pipeline.multi_source_merge_round(
-        spark, reg.online_source_dirs(), table)
-    assert stats["n_sources"] == 1
+    # the merge's source list is exactly the online zones
+    assert online_dirs() == [zones["p0"]]
 
     # paused pump restarts -> back in the list
     reg.register("p1", reg_mod.PUMP, source_dir=zones["p1"])
-    assert len(reg.online_source_dirs()) == 2
+    assert len(online_dirs()) == 2
 
     # illegal inputs rejected like binlogctl
     for bad in (("p0", "resume"),):
@@ -671,23 +666,6 @@ def test_sql_apply_stream_skips_fake_heartbeats(spark, tmp_path):
     assert jdbc.load_checkpoint(str(tmp_path / "db"))[0] == 99
 
 
-def test_merge_round_blocks_on_empty_registered_zone(spark, tmp_path):
-    """Regression: a registered pump with no segments yet must gate the
-    watermark at the checkpoint instead of crashing the round."""
-    s0, s1 = str(tmp_path / "s0"), str(tmp_path / "s1")
-    _zone(spark, s0, [(1, "s0", 10, "I", 1)])
-    os.makedirs(s1)                     # registered, nothing produced
-    t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    stats = pipeline.multi_source_merge_round(spark, [s0, s1], t)
-    assert stats["n_applied"] == 0
-    assert stats["checkpoint"] == -1    # gate held at the checkpoint
-    # the silent variant: a zone directory with data for only one of
-    # two EXPECTED sources — cover via two dirs where one has data
-    _zone(spark, s1, [(2, "s1", 5, "I", 2)])
-    stats2 = pipeline.multi_source_merge_round(spark, [s0, s1], t)
-    assert stats2["watermark"] == 5     # min over both live sources
-
-
 def test_obinlog_wide_roundtrip(spark):
     """Full-shape secondary-binlog message: encode -> decode recovers
     the map row model exactly (values, old_values on updates only,
@@ -714,28 +692,6 @@ def test_obinlog_wide_roundtrip(spark):
     assert dict(got[30]["values"]) == {"pk": "1", "val": "b", "k": None}
     assert got[20]["unique_keys"][0]["name"] == "PRIMARY"
     assert list(got[20]["unique_keys"][0]["columns"]) == ["pk"]
-
-
-def test_file_dump_record_crc_detects_corruption(spark, tmp_path):
-    """vlog-style record CRC (pump/storage/log.go:49): dump with
-    checksums, tamper one record, recovery check flags exactly it."""
-    from tidb_binlog_spark.sinks import payload as pl
-
-    ch = spark.createDataFrame(
-        [(i, i * 10, 0, "I", float(i)) for i in range(20)],
-        "arrival_seq long, commit_ts long, seq int, op string, val double")
-    path = str(tmp_path / "dump")
-    cols = ("arrival_seq", "commit_ts", "seq", "op", "val")
-    pl.file_dump(ch, path, with_crc=True, crc_cols=cols)
-
-    back = pl.read_file_dump(spark, path)
-    assert pl.crc_mismatches(back, cols).count() == 0
-
-    tampered = back.withColumn(
-        "val", F.when(F.col("arrival_seq") == 7, F.col("val") + 1.0)
-                .otherwise(F.col("val")))
-    bad = pl.crc_mismatches(tampered, cols).collect()
-    assert [r["arrival_seq"] for r in bad] == [7]
 
 
 def test_sql_apply_stream_initial_commit_ts(spark, tmp_path):
@@ -1068,6 +1024,48 @@ def test_ivm_dynamic_source_offline_unblocks_watermark(spark, tmp_path):
     assert view._checkpoint()["watermark"] == 50
     assert {(r["n_rows"], r["sum_val"])
             for r in view.read().collect()} == {(2, 10.0)}
+
+
+def test_ivm_dynamic_source_join_blocks_until_first_row(spark, tmp_path):
+    """Registry-driven source list: a pump registered mid-stream joins
+    the min. The watermark holds at its stored value (never
+    regressing, even when the new pump's first row lies below it)
+    until the new pump's cursor passes it; then the rows parked
+    meanwhile apply."""
+    from tidb_binlog_spark.registry import NodeRegistry
+    from tidb_binlog_spark.streaming.ivm import MaterializedAggregate
+    reg = NodeRegistry(str(tmp_path / "reg.json"))
+    reg.register("s0", "pump")
+    live = lambda: [n["node_id"] for n in reg.nodes_by_kind("pump")
+                    if n["state"] == "online"]
+    view = MaterializedAggregate(spark, str(tmp_path / "state"),
+                                 sources=live)
+
+    def agg():
+        return {(r["n_rows"], r["sum_val"]) for r in view.read().collect()}
+
+    view.apply_batch(make_changes(
+        spark, [(1, "s0", 10, "I", 1, 0, 2.0),
+                (2, "s0", 20, "I", 2, 0, 4.0)]), 0)
+    assert view._checkpoint()["watermark"] == 20
+    assert agg() == {(2, 6.0)}
+    # s2 registers and has shown nothing: s0's ts-60 insert parks
+    reg.register("s2", "pump")
+    view.apply_batch(make_changes(
+        spark, [(3, "s0", 60, "I", 3, 0, 8.0)]), 1)
+    assert view._checkpoint()["watermark"] == 20
+    assert agg() == {(2, 6.0)}
+    # s2's first row lies below the stored watermark: it applies, the
+    # watermark does not move back, and the ts-60 insert stays parked
+    view.apply_batch(make_changes(
+        spark, [(4, "s2", 15, "I", 4, 0, 1.0)]), 2)
+    assert view._checkpoint()["watermark"] == 20
+    assert agg() == {(3, 7.0)}
+    # s2's heartbeat passes ts 60: the parked insert applies
+    view.apply_batch(make_changes(
+        spark, [(5, "s2", 65, "FAKE", 0, 0, 0.0)]), 3)
+    assert view._checkpoint()["watermark"] == 60
+    assert agg() == {(4, 15.0)}
 
 
 def test_ivm_stream_read_joined_dimension(spark, tmp_path):
@@ -2727,28 +2725,3 @@ def test_failed_apply_releases_cached_frames(spark, tmp_path, monkeypatch):
         pipeline.feed_sql_by_relay_if_needed(spark, relay,
                                              str(tmp_path / "db"))
     assert _cache_is_empty(spark)
-
-    s0 = str(tmp_path / "merge_s0")
-    _zone(spark, s0, [(1, "s0", 10, "I", 1)])
-    with pytest.raises(RuntimeError, match="apply failed"):
-        pipeline.multi_source_merge_round(
-            spark, [s0], SnapshotTable(spark, str(tmp_path / "tbl3")))
-    assert _cache_is_empty(spark)
-
-
-def test_multi_source_merge_raises_real_read_errors(spark, tmp_path):
-    """A zone that has shown nothing yet (missing or empty directory)
-    blocks the merge; a zone that cannot be read (a corrupt segment)
-    raises instead of blocking it silently."""
-    s0, s1 = str(tmp_path / "s0"), str(tmp_path / "s1")
-    t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    _zone(spark, s0, [(1, "s0", 10, "I", 1)])
-    r = pipeline.multi_source_merge_round(spark, [s0, s1], t)   # missing
-    assert r["n_applied"] == 0 and r["watermark"] == -1
-    os.makedirs(s1)                                              # empty
-    r = pipeline.multi_source_merge_round(spark, [s0, s1], t)
-    assert r["n_applied"] == 0 and r["watermark"] == -1
-    with open(os.path.join(s1, "part-0.parquet"), "wb") as f:
-        f.write(b"not a parquet file")
-    with pytest.raises(Exception):
-        pipeline.multi_source_merge_round(spark, [s0, s1], t)

@@ -70,7 +70,7 @@ def scd2_apply_increment(history: DataFrame, new_ok_changes: DataFrame,
     change's ts for the same key. Cost per batch: one key-grouped
     min over the batch + one key join against the history — the
     history itself is never re-shuffled beyond that join (co-located
-    for free when stored bucketed by the key, sinks/bucketed.py).
+    for free when stored bucketed by the key).
     """
     firsts = new_ok_changes.groupBy(*keys).agg(
         F.min(ts_col).alias("_first_new_ts"))

@@ -12,9 +12,10 @@ binlogctl's UpdateNodeState can force any of the five states directly
 (nodes.go:75-80); ApplyAction sends pause/close to the node itself.
 The registry is what the drainer's collector watches to build its
 pump source list (drainer/collector.go:150-259): only online nodes
-contribute landing zones to the multi-source merge, and a paused or
-offline pump leaving the list is exactly the "pause-world -> re-min"
-reconfiguration of merge.go:153-335.
+join the min-watermark merge (a callable ``sources`` list of a
+streaming view, streaming/ivm.py, reads ``nodes_by_kind`` every
+batch), and a paused or offline pump leaving the list is exactly the
+"pause-world -> re-min" reconfiguration of merge.go:153-335.
 
 Spark-fit: membership is driver-side control metadata (a handful of
 rows), never per-row data — a JSON file with atomic replace is the
@@ -136,10 +137,3 @@ class NodeRegistry:
                 continue
             out.append(n)
         return sorted(out, key=lambda n: n["node_id"])
-
-    def online_source_dirs(self, kind: str = PUMP) -> list[str]:
-        """The collector's live source list: landing zones of ONLINE
-        nodes only — feed this to multi_source_merge_round every round
-        so pause/offline reconfigure the merge between batches."""
-        return [n["source_dir"] for n in self.nodes_by_kind(kind)
-                if n["state"] == ONLINE and n["source_dir"]]

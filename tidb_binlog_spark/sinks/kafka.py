@@ -8,9 +8,7 @@ Reference contract (drainer/sync/kafka.go:38-278):
 - the value is the MARSHALLED SECONDARY-BINLOG PROTOBUF
   (drainer/translator/kafka.go:38-150 builds the tipb message;
   sinks/obinlog_pb encodes the same public slave_binlog proto) —
-  one message per transaction. ``wire="json"`` keeps the flat JSON
-  stand-in (one message per change event, carries seq) for
-  engine-neutral fixtures;
+  one message per transaction;
 - the producer bounds its in-flight window and errors on unacked
   messages (kafka.go:186-278) — modeled by :class:`AckWindow`;
 - the arbiter consumes from a saved offset and deduplicates re-reads
@@ -34,7 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import obinlog_pb
-from . import payload as payload_mod
 
 
 def default_topic(cluster_id: int) -> str:
@@ -56,52 +53,13 @@ def with_row_image(changes: DataFrame) -> DataFrame:
     return changes.withColumn("k", row_image_k())
 
 
-def kafka_frame_sharded(changes: DataFrame, n_partitions: int,
-                        cluster_id: int = 0,
-                        topic: str | None = None) -> DataFrame:
-    """The 100 TB relaxation of the single-partition contract: one
-    Kafka partition per (db, tbl) hash shard, each partition's
-    messages commit_ts-ordered within its own producing task.
-    Consumers get per-TABLE total order (what the arbiter's apply
-    actually needs — row causality never crosses tables without a
-    shared key, and cross-table atomicity is already relaxed by the
-    reference's own at-least-once batching) while the producer
-    scales to ``n_partitions`` writers instead of one. A commit
-    whose tables span shards becomes one Binlog per (txn, shard),
-    each carrying only that shard's Table list.
-
-    Deliberately NOT the default: the reference's product contract
-    is GLOBAL total order on partition 0 (``kafka_frame``). Use this
-    when the topic is provisioned with n_partitions and consumers
-    track progress per table."""
-    topic = topic or default_topic(cluster_id)
-    base = with_row_image(changes).withColumn(
-        "_shard",
-        F.pmod(F.xxhash64("db", "tbl"), F.lit(n_partitions))
-         .cast("int"))
-    msgs = obinlog_pb.secondary_binlog_payloads(
-        base, carry_group=("_shard",))
-    frame = msgs.select(
-        F.lit(None).cast("binary").alias("key"),
-        F.col("payload").alias("value"),
-        F.lit(topic).alias("topic"),
-        F.col("_shard").alias("partition"),
-        F.col("commit_ts").alias("_order"))
-    return (frame.repartition(n_partitions, "partition")
-            .sortWithinPartitions("partition", "_order")
-            .drop("_order"))
-
-
 def kafka_frame(changes: DataFrame, cluster_id: int = 0,
-                topic: str | None = None,
-                wide_info=None, wire: str = "protobuf") -> DataFrame:
+                topic: str | None = None) -> DataFrame:
     """Change events -> the Spark Kafka sink's column contract:
     (key BINARY, value BINARY, topic STRING, partition INT).
 
-    ``wire="protobuf"`` (default, the reference's actual format):
     value is one marshalled secondary-binlog Binlog PER TRANSACTION
     (drainer/translator/kafka.go:38-150 via sinks/obinlog_pb).
-    ``wire="json"`` keeps the flat per-event JSON stand-in.
 
     key is NULL and partition is the constant 0, mirroring the manual
     partitioner. A single target partition is NOT by itself a
@@ -111,32 +69,12 @@ def kafka_frame(changes: DataFrame, cluster_id: int = 0,
     reference's single sequential producer goroutine
     (kafka.go:153-187). At 100 TB this is a deliberate single-writer
     bottleneck the REFERENCE also has (total order is the product
-    contract); shard-by-table topics would relax it."""
-    if wire not in ("protobuf", "json"):
-        # a typo must never silently pick a different wire format —
-        # the mismatch would only surface at the consumer's decode
-        raise ValueError(f"unknown wire {wire!r}: use 'protobuf' or 'json'")
-    if wire == "protobuf" and wide_info is not None:
-        # the protobuf message derives its ColumnInfo from the typed
-        # row model, not a TableInfo — accepting-and-ignoring would
-        # silently drop the caller's wide payload shape
-        raise ValueError("wide_info applies to wire='json' only "
-                         "(the protobuf wire carries the typed row "
-                         "image itself)")
+    contract)."""
     topic = topic or default_topic(cluster_id)
-    if wire == "protobuf":
-        msgs = obinlog_pb.secondary_binlog_payloads(
-            with_row_image(changes))
-        value = F.col("payload")            # already protobuf bytes
-    elif wide_info is not None:
-        msgs = payload_mod.obinlog_payload_wide(changes, wide_info)
-        value = F.encode(F.col("payload"), "UTF-8")
-    else:
-        msgs = payload_mod.obinlog_payload(changes)
-        value = F.encode(F.col("payload"), "UTF-8")
+    msgs = obinlog_pb.secondary_binlog_payloads(with_row_image(changes))
     frame = msgs.select(
         F.lit(None).cast("binary").alias("key"),
-        value.alias("value"),
+        F.col("payload").alias("value"),    # already protobuf bytes
         F.lit(topic).alias("topic"),
         F.lit(0).cast("int").alias("partition"),
         F.col("commit_ts").alias("_order"))
@@ -175,23 +113,14 @@ def consumer_options(bootstrap_servers: str, cluster_id: int = 0,
     }
 
 
-def decode_kafka_batch(raw: DataFrame, wire: str = "protobuf") -> DataFrame:
-    """The decode projection of a Kafka source frame:
-    value bytes -> parsed rows, offset -> arrival_seq. The protobuf
-    wire unpacks one row per MUTATION inside each per-txn Binlog
-    (arbiter-side translate, pkg/loader/translate.go); the json wire
-    is one row per message."""
-    if wire not in ("protobuf", "json"):
-        raise ValueError(f"wire must be 'protobuf' or 'json', got {wire!r}")
-    if wire == "protobuf":
-        return obinlog_pb.parse_secondary_binlog_stream(
-            raw.select(F.col("offset").alias("arrival_seq"),
-                       F.col("value").alias("payload")),
-            carry=("arrival_seq",))
-    msgs = raw.select(
-        F.col("offset").alias("arrival_seq"),
-        F.decode(F.col("value"), "UTF-8").alias("payload"))
-    return payload_mod.parse_obinlog(msgs, carry=("arrival_seq",))
+def decode_kafka_batch(raw: DataFrame) -> DataFrame:
+    """The decode projection of a Kafka source frame: value bytes ->
+    one row per MUTATION inside each per-txn Binlog (arbiter-side
+    translate, pkg/loader/translate.go), offset -> arrival_seq."""
+    return obinlog_pb.parse_secondary_binlog_stream(
+        raw.select(F.col("offset").alias("arrival_seq"),
+                   F.col("value").alias("payload")),
+        carry=("arrival_seq",))
 
 
 class KafkaAckTimeout(RuntimeError):

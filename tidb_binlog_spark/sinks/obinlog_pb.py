@@ -222,7 +222,7 @@ def _uv(n: int) -> bytes:
     return _UV1[n] if n < 128 else _uvarint(n)
 
 
-def _assemble_secondary(pdf, col_infos, uk, carry_group=()):
+def _assemble_secondary(pdf, col_infos, uk):
     """One (commit_ts)-sorted pandas batch -> one marshalled secondary
     Binlog per commit. Byte-identical to composing
     encode_obinlog_column/encode_row/encode_mutation/encode_table/
@@ -243,8 +243,6 @@ def _assemble_secondary(pdf, col_infos, uk, carry_group=()):
     uk_block = b"".join(_field_bytes(5, k) for k in uk)
     tbl_hdr: dict[tuple, bytes] = {}
 
-    carry_vals = tuple(pdf[c].iloc[0] for c in carry_group) \
-        if len(pdf) else ()
     pdf = pdf.sort_values(["commit_ts", "seq", "arrival_seq"])
     rows: list[tuple] = []
     cur_ct = None
@@ -282,7 +280,7 @@ def _assemble_secondary(pdf, col_infos, uk, carry_group=()):
         payload = (_field_varint(1, DML)
                    + _field_varint(2, int(cur_ct))
                    + b"\x1a" + _uv(len(dml)) + bytes(dml))
-        rows.append((int(cur_ct), payload, *carry_vals))
+        rows.append((int(cur_ct), payload))
 
     for r in pdf.itertuples():
         if r.commit_ts != cur_ct:
@@ -299,12 +297,10 @@ def _assemble_secondary(pdf, col_infos, uk, carry_group=()):
             m += b"\x1a" + _uv(len(change)) + change
         tables.setdefault((r.db, r.tbl), []).append(m)
     flush()
-    return pd.DataFrame(rows, columns=["commit_ts", "payload",
-                                       *carry_group])
+    return pd.DataFrame(rows, columns=["commit_ts", "payload"])
 
 
-def secondary_binlog_payloads(changes, n_buckets: int | None = None,
-                              carry_group: tuple[str, ...] = ()
+def secondary_binlog_payloads(changes, n_buckets: int | None = None
                               ) -> "DataFrame":  # noqa: F821
     """Change events -> (commit_ts, payload BINARY): one secondary
     Binlog per commit, mutations grouped per (db, tbl) into Table
@@ -316,32 +312,24 @@ def secondary_binlog_payloads(changes, n_buckets: int | None = None,
     applyInPandas groups are hash(commit_ts) % n_buckets (default
     4 x parallelism — even load at any ts density) and the per-commit
     split is ONE in-batch sort + linear scan — thousands of txns per
-    Arrow exchange.
-
-    ``carry_group`` columns join the GROUP key and are replicated
-    onto the output rows — the sharded Kafka frame uses it to marshal
-    one Binlog per (txn, shard)."""
+    Arrow exchange."""
     import pandas as pd
 
     col_infos = [encode_column_info(n, t, pk) for n, t, pk in _COLSPEC]
     uk = [encode_key("PRIMARY", ["pk"])]
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _assemble_secondary(pdf, col_infos, uk, carry_group)
+        return _assemble_secondary(pdf, col_infos, uk)
 
     from pyspark.sql import functions as F
     if n_buckets is None:
         n_buckets = changes.sparkSession.sparkContext \
             .defaultParallelism * 4
-    in_types = {f.name: f.dataType.simpleString()
-                for f in changes.schema.fields}
-    carry_schema = "".join(f", {c} {in_types[c]}" for c in carry_group)
     bucketed = changes.withColumn(
         "_tsb", F.pmod(F.hash("commit_ts"), F.lit(n_buckets)))
-    return (bucketed.groupBy("_tsb", *carry_group)
+    return (bucketed.groupBy("_tsb")
             .applyInPandas(assemble,
-                           schema="commit_ts long, payload binary"
-                                  + carry_schema))
+                           schema="commit_ts long, payload binary"))
 
 
 def parse_secondary_binlog_stream(payloads,

@@ -1,10 +1,12 @@
-"""Outbound payload projection — the "secondary binlog" message built
-for Kafka consumers, and the self-describing file-dump record.
+"""Outbound payload projection — the JSON forms of the "secondary
+binlog" message built for Kafka consumers — and the ts-bucketed
+parquet layout the relay log is read back through.
 
 Reference:
 - obinlog (Kafka) message: one per txn, column metadata + row images,
-  drainer/translator/kafka.go:38-336, sink drainer/sync/kafka.go;
-- pb file record: drainer/translator/pb.go:242-307 + proto/pb_binlog.proto.
+  drainer/translator/kafka.go:38-336, sink drainer/sync/kafka.go. The
+  Kafka sink's wire form is the protobuf message (sinks/kafka.py);
+  the pb file dump is sinks/pbcodec.py.
 
 Spark-first: to_json over a typed struct (JVM projection). The obinlog
 total-order contract (single Kafka partition, kafka.go:280-334) maps to
@@ -14,13 +16,11 @@ narrow projection.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# commit_ts width of one ts_bucket: the partition of a file dump and of
-# the relay log, and the bucket in a pb dump's file names
+# commit_ts width of one ts_bucket: the partition of the relay log and
+# the bucket in a pb dump's file names
 TS_BUCKET_WIDTH = 100000
 
 
@@ -121,82 +121,6 @@ def parse_obinlog(messages: DataFrame, payload_col: str = "payload",
         F.col("_m.table_name").alias("tbl"),
         F.col("_m.pk").alias("pk"),
         F.col("_m.seq").alias("seq"))
-
-
-def record_crc(changes: DataFrame, cols: tuple[str, ...]) -> F.Column:
-    """Per-record integrity checksum over a canonical serialization of
-    ``cols`` (name-sorted JSON) — the analog of the vlog's per-record
-    CRC (pump/storage/log.go:49 guards every encoded record; a mismatch
-    on the recovery scan marks the record corrupt). Spark's crc32 is
-    CRC-32/ISO-HDLC rather than the reference's Castagnoli polynomial —
-    same detection guarantees, different constant."""
-    ordered = [F.col(c).cast("string").alias(c) for c in sorted(cols)]
-    return F.crc32(F.encode(F.to_json(F.struct(*ordered)), "UTF-8"))
-
-
-def crc_mismatches(df: DataFrame, cols: tuple[str, ...],
-                   crc_col: str = "record_crc") -> DataFrame:
-    """Rows whose stored record CRC no longer matches their content —
-    the recovery-scan corruption check (vlog.go scan rejects records
-    with bad magic/CRC)."""
-    # null-safe: a NULL stored CRC (legacy/merged-schema rows, or
-    # corruption of the CRC field itself) must FLAG, not pass silently
-    return (df.withColumn("_crc_now", record_crc(df, cols))
-              .filter(~F.col(crc_col).eqNullSafe(F.col("_crc_now")))
-              .drop("_crc_now"))
-
-
-def file_dump(changes: DataFrame, path: str, partitions: int | None = None,
-              with_crc: bool = False,
-              crc_cols: tuple[str, ...] = ()) -> None:
-    """File-archive sink: the pb-dump equivalent, as parquet partitioned
-    by commit-ts range so reparo-style replay (`WHERE commit_ts BETWEEN`)
-    prunes files. Retention GC = deleting old ts_bucket partitions.
-    ``with_crc`` stamps each record with ``record_crc`` over
-    ``crc_cols`` (defaults to every column) for vlog-style end-to-end
-    integrity on top of parquet's page checksums.
-
-    ``partitions`` defaults to the ts_bucket count (bounded by 4x the
-    cluster parallelism): the dump's writer count SCALES WITH THE DATA
-    — a 100 TB day never funnels through one task. Pass an explicit
-    value only for single-file test fixtures."""
-    out = changes
-    if with_crc:
-        cols = crc_cols or tuple(changes.columns)
-        out = out.withColumn("record_crc", record_crc(changes, cols))
-    if partitions is None:
-        sc = changes.sparkSession.sparkContext
-        n_buckets = changes.select(
-            F.count_distinct(ts_bucket()).alias("n")).first()["n"]
-        partitions = max(1, min(int(n_buckets), sc.defaultParallelism * 4))
-    (out
-     .withColumn("ts_bucket", ts_bucket())
-     .repartition(partitions, "ts_bucket")
-     .sortWithinPartitions("commit_ts", "seq")
-     .write.mode("overwrite")
-     .partitionBy("ts_bucket")
-     .parquet(path))
-
-
-def gc_file_dump(path: str, safepoint_ts: int) -> list[str]:
-    """Retention GC: delete ts_bucket partitions ENTIRELY below the
-    safepoint — the pump's storage GC (pump/storage/storage.go GC
-    deletes data with commit ts < gcTS; binlogctl drives the safepoint).
-    A bucket containing the safepoint is kept whole (coarse-grained,
-    like the reference's file-level GC). Returns the removed partition
-    dirs."""
-    import shutil as _shutil
-    keep_from = safepoint_ts // TS_BUCKET_WIDTH
-    removed = []
-    if not os.path.isdir(path):
-        return removed
-    for d in sorted(os.listdir(path)):
-        if not d.startswith("ts_bucket="):
-            continue
-        if int(d.split("=", 1)[1]) < keep_from:
-            _shutil.rmtree(os.path.join(path, d))
-            removed.append(d)
-    return removed
 
 
 def read_file_dump(spark, path: str, start_ts: int | None = None,

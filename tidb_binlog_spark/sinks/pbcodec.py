@@ -767,9 +767,9 @@ def ddl_payloads(ddls) -> "DataFrame":  # noqa: F821
 def write_pb_dump(changes, path: str, partitions: int | None = None,
                   ddls=None) -> None:
     """Frame + append binlog records into <path>/binlog-<part>.pb files,
-    bucketed by commit-ts range like the parquet dump (each task writes
-    one file; on a cluster ``path`` is shared storage). Records within
-    a file are commit_ts-ascending."""
+    bucketed by commit-ts range (each task writes one file; on a
+    cluster ``path`` is shared storage). Records within a file are
+    commit_ts-ascending."""
     if partitions is None:
         # hash-partition ts buckets into the session's shuffle
         # parallelism: non-empty partitions (= files) still track the

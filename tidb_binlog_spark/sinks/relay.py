@@ -11,11 +11,12 @@ MODE (relay.go:83 ``ld.SetSafeMode(true)``), and only then does
 normal streaming resume.
 
 Spark form: the relay log is a ts-bucketed parquet landing zone
-(payload.file_dump — partition-pruned replay scans for free), the
-consistency flag is a marker file next to it, and safe-mode re-apply
-is SnapshotTable.apply_batch's idempotent MERGE (re-applying rows at
-or below the stored image's commit_ts is a no-op by construction —
-the same convergence REPLACE/DELETE+REPLACE gives the SQL path).
+(partitioned by payload.ts_bucket — partition-pruned replay scans for
+free), the consistency flag is a marker file next to it, and safe-mode
+re-apply is SnapshotTable.apply_batch's idempotent MERGE (re-applying
+rows at or below the stored image's commit_ts is a no-op by
+construction — the same convergence REPLACE/DELETE+REPLACE gives the
+SQL path).
 """
 
 from __future__ import annotations
@@ -106,17 +107,16 @@ def feed_by_relay_if_needed(spark: SparkSession, relay: RelayLog,
     if relay.is_consistent():
         return {"replayed": 0, "checkpoint": table.checkpoint()["commit_ts"]}
 
-    from ..operators import compaction, ordering
+    from ..operators import ordering
 
     ck = table.checkpoint()["commit_ts"]
     pending = relay.read(spark, start_ts=ck).persist()
     try:
         n = pending.count()
         if n:
-            appliable = (ordering.ordered_stream(pending)
-                         .filter(F.col("op") != "FAKE")
-                         .drop("ts_bucket"))
-            table.apply_batch(compaction.compact_last_image(appliable))
+            table.apply_batch(ordering.ordered_stream(pending)
+                              .filter(F.col("op") != "FAKE")
+                              .drop("ts_bucket"))
     finally:
         pending.unpersist()
     relay.mark_consistent()

@@ -138,9 +138,10 @@ class SnapshotTable:
         batch_max = int(m) if m is not None else int(ck["commit_ts"])
         batch_max = max(batch_max, int(ck["commit_ts"]))
         self._save_checkpoint(new_version, batch_max)
-        # retain only the previous version for readers mid-swap
-        for v in range(1, new_version - 1):
-            old = os.path.join(self.root, f"v{v}")
-            if os.path.exists(old):
-                shutil.rmtree(old)
+        # retain only the previous version for readers mid-swap; one
+        # listing finds every older dir, a crash's leftover included
+        for name in os.listdir(self.root):
+            v = name[1:]
+            if name[:1] == "v" and v.isdigit() and int(v) < new_version - 1:
+                shutil.rmtree(os.path.join(self.root, name))
         return {"version": new_version, "commit_ts": int(batch_max)}

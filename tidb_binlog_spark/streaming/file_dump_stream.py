@@ -7,8 +7,8 @@ commit binlog is appended to a segmented binlogger
 WriteTail appends CRC-framed records, rotation by size) whose replay
 cursor (pb.Pos) is checkpointed after the write, with file-level
 retention GC behind it. The batch ops (pbcodec.write_pb_dump /
-read_pb_dump, payload.gc_file_dump) do one dump; this module is the
-sink's streaming LIFECYCLE:
+read_pb_dump) do one dump; this module is the sink's streaming
+LIFECYCLE:
 
     readStream(landing zone) -> foreachBatch{
         resume filter -> order gate -> DDL/DML split ->

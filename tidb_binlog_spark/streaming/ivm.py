@@ -40,7 +40,7 @@ split yields the exact whole-history answer.
 
 Scale: per batch the work is O(batch + pending) — one PK-state join
 keyed on the PK (co-located for free when the state is stored
-bucketed, sinks/bucketed.py) and one group-keyed partial aggregate;
+bucketed by the PK) and one group-keyed partial aggregate;
 aggregate state is #groups rows, never #rows; the pending zone is
 bounded by source skew (how far the fastest source runs ahead of the
 slowest), the same bound the reference's merger queues have.
@@ -134,11 +134,17 @@ class _StreamView:
             return None
         return self.spark.read.parquet(path)
 
-    def _gc(self, prefix: str, keep_version: int) -> None:
-        for v in range(1, keep_version - 1):
-            stale = self._vdir(prefix, v)
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
+    def _gc(self, keep_version: int) -> None:
+        """Remove every versioned dir older than the kept pair
+        (``keep_version`` and the one before it, for readers
+        mid-swap). One listing of the root finds them all, a crash's
+        leftover included."""
+        prefixes = (self._STATE, "pending", "aux", "pkstate")
+        for name in os.listdir(self.root):
+            prefix, sep, v = name.rpartition("_v")
+            if (sep and prefix in prefixes and v.isdigit()
+                    and int(v) < keep_version - 1):
+                shutil.rmtree(os.path.join(self.root, name))
 
     # -- subclass hooks -----------------------------------------------------
     def _fold(self, prior: DataFrame | None, emit: DataFrame,
@@ -267,10 +273,7 @@ class _StreamView:
                 "audit": stats,
                 "last_batch_id": batch_id,
             })
-            self._gc("pending", new_version)
-            self._gc(self._STATE, new_version)
-            self._gc("aux", new_version)
-            self._gc("pkstate", new_version)
+            self._gc(new_version)
         finally:
             combined.unpersist()
             if classified is not None:
@@ -298,10 +301,7 @@ class _StreamView:
             "audit": ck.get("audit", {}),
             "last_batch_id": ck.get("last_batch_id"),
         })
-        self._gc("pending", new_version)
-        self._gc(self._STATE, new_version)
-        self._gc("aux", new_version)
-        self._gc("pkstate", new_version)
+        self._gc(new_version)
 
 
 class MaterializedAggregate(_StreamView):
@@ -555,8 +555,7 @@ class MaterializedSCD2(_StreamView):
                 self._vdir("pending", new_version))
         ck["version"] = new_version
         self._save_checkpoint(ck)
-        self._gc("pending", new_version)
-        self._gc(self._STATE, new_version)
+        self._gc(new_version)
 
 
 def _run_view_stream(view: _StreamView, source_dir: str,

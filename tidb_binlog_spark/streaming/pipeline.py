@@ -5,7 +5,8 @@ the standard Spark recipe for sinks needing transactional/MERGE
 semantics (SURVEY §3 lifecycle mapping):
 
     readStream(change log) -> foreachBatch{
-        order gate -> filter/route -> compact -> SnapshotTable.apply }
+        order gate -> filter/route -> SnapshotTable.apply
+                                      (last image per key) }
 
 Reference parity:
 - PullCommitBinlog from a saved cursor  = file/kafka source + Spark
@@ -19,7 +20,6 @@ Reference parity:
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -85,10 +85,10 @@ def run_apply_stream(spark: SparkSession, source_dir: str, table_root: str,
             # never rows of the table
             ok = (ordering.ordered_stream(batch_df)
                   .filter(F.col("op") != "FAKE"))
-            compacted = compaction.compact_last_image(ok)
-            # D rows must reach the sink (they delete); SnapshotTable
-            # resolves cross-batch order by commit_ts.
-            table.apply_batch(compacted)
+            # D rows must reach the sink (they delete). The apply's own
+            # window keeps the last image per key over the stored rows
+            # and the batch, so the batch needs no compaction of its own.
+            table.apply_batch(ok)
         finally:
             batch_df.unpersist()
 
@@ -649,89 +649,3 @@ def run_sql_apply_stream(spark: SparkSession, source_dir: str, db_dir: str,
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-# read errors of a pump landing zone that has no segment yet
-_NOTHING_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-
-
-def multi_source_merge_round(spark: SparkSession, source_dirs: list[str],
-                             table: SnapshotTable) -> dict:
-    """One merge round over N pump landing zones with the drainer's
-    min-watermark gate (drainer/merge.go:268-297, collector.go:150-259):
-
-    - every CURRENT source contributes its max commit_ts (fake/FAKE
-      heartbeat rows count — an idle source advances the merge,
-      pump/server.go:467-526); the gate is the min over sources;
-    - only events with checkpoint < commit_ts <= watermark are applied,
-      in order, dedup/disorder-audited; later events stay parked in
-      their landing zone for a later round (no copy — the cursor just
-      does not pass them);
-    - the checkpoint then advances to the watermark (everything at or
-      below it is applied — heartbeat-only rounds still make progress).
-
-    The source LIST is an argument, re-evaluated every round — adding
-    or removing a pump between rounds is the reference's pause-world ->
-    re-min reconfiguration (merge.go:153-335). Returns round stats.
-    """
-    from functools import reduce
-
-    ck = table.checkpoint()["commit_ts"]
-
-    # A registered source with no segments yet (pump came up, produced
-    # nothing) must BLOCK the merge, exactly like a source whose head
-    # item hasn't arrived (merge.go:268-297): its cursor is unknown, so
-    # the watermark cannot pass the checkpoint.
-    # Only "no zone yet" and "empty zone" mean that; any other read
-    # error (a corrupt segment, say) is raised, not read as silence.
-    frames, blocked = [], False
-    for d in source_dirs:
-        try:
-            frames.append(spark.read.parquet(d))
-        except AnalysisException as e:
-            if e.getCondition() not in _NOTHING_YET:
-                raise
-            blocked = True
-    if not frames:
-        return {"watermark": int(ck), "n_applied": 0,
-                "n_sources": len(source_dirs),
-                "checkpoint": table.checkpoint()["commit_ts"]}
-    allf = reduce(lambda a, b: a.unionByName(b), frames)
-
-    # per-source cursors over the full zone (max is monotone, so
-    # already-applied rows cannot lower it); min over CURRENT sources.
-    # The columnar (source_id, commit_ts) aggregate is the only
-    # full-history pass; the data pass below reads just the fresh
-    # suffix, persisted once for the gate's multiple reads.
-    wm_row = (allf.groupBy("source_id")
-              .agg(F.max("commit_ts").alias("source_max"))
-              .agg(F.min("source_max").alias("wm"),
-                   F.count(F.lit(1)).alias("n_live")).collect()[0])
-    watermark = wm_row["wm"] if wm_row["wm"] is not None else ck
-    if blocked or wm_row["n_live"] < len(source_dirs):
-        watermark = ck      # some source has shown nothing yet: block
-    # NOTE the gate may legitimately re-min BELOW the checkpoint when a
-    # lagging source joins — emission is still bounded by (> ck), and
-    # advance_checkpoint never regresses.
-
-    fresh = (allf.filter((F.col("commit_ts") > ck)
-                         & (F.col("commit_ts") <= watermark))
-             .persist())
-    compacted = None
-    try:
-        appliable = (ordering.ordered_stream(fresh)
-                     .filter(F.col("op") != "FAKE"))
-        compacted = compaction.compact_last_image(appliable).persist()
-        n_applied = compacted.count()   # materializes once; apply reads cache
-        if n_applied:
-            table.apply_batch(compacted)
-    finally:
-        if compacted is not None:
-            compacted.unpersist()
-        fresh.unpersist()
-    if watermark > ck:
-        table.advance_checkpoint(watermark)
-    return {"watermark": int(watermark), "n_applied": int(n_applied),
-            "n_sources": len(source_dirs),
-            "checkpoint": table.checkpoint()["commit_ts"]}
-

@@ -8,10 +8,13 @@ rows sorted, values canonicalized). Exit code 1 on any mismatch.
 Usage: python tools/check_correctness.py [--json out.json] [sf_dir] [query ...]
 
 ``--json`` writes a CORRECTNESS_r{N}-shaped ledger (one record per
-query: rows_match/schema_match/hash_match/spark_rows/oracle_rows/err;
-rows-only queries record oracle_rows=None) — the committed
-LEDGER_r{N}.json artifact that carries recorded local evidence for
-queries outside the driver's 50-slot window.
+query: rows_match/schema_match/hash_match/spark_rows/oracle_rows/
+spark_hash/oracle_hash/err; rows-only queries record oracle_rows and
+oracle_hash None, a side that errored records its hash None) — the
+committed LEDGER_r{N}.json artifact that carries recorded local
+evidence for queries outside the driver's 50-slot window. With the
+hashes in it, the ledgers of two commits diff to show whether a
+change left every result equal.
 """
 
 from __future__ import annotations
@@ -93,13 +96,16 @@ def main() -> int:
             failures.append(name)
             ledger[name] = {"rows_match": False, "schema_match": False,
                             "hash_match": False, "spark_rows": None,
-                            "oracle_rows": None, "err": f"spark: {e}"}
+                            "oracle_rows": None, "spark_hash": None,
+                            "oracle_hash": None, "err": f"spark: {e}"}
             print(f"FAIL  {name}: spark error: {e}")
             continue
+        sn, scols, shash = frame_hash(sdf)
         if name not in oracles:
             ledger[name] = {"rows_match": None, "schema_match": None,
-                            "hash_match": None, "spark_rows": len(sdf),
-                            "oracle_rows": None, "err": None}
+                            "hash_match": None, "spark_rows": sn,
+                            "oracle_rows": None, "spark_hash": shash,
+                            "oracle_hash": None, "err": None}
             print(f"weak  {name}: rows={len(sdf)} (no oracle, rows-only)")
             continue
         try:
@@ -107,17 +113,19 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             ledger[name] = {"rows_match": False, "schema_match": False,
-                            "hash_match": False, "spark_rows": len(sdf),
-                            "oracle_rows": None, "err": f"duckdb: {e}"}
+                            "hash_match": False, "spark_rows": sn,
+                            "oracle_rows": None, "spark_hash": shash,
+                            "oracle_hash": None, "err": f"duckdb: {e}"}
             print(f"FAIL  {name}: duckdb error: {e}")
             continue
-        sn, scols, shash = frame_hash(sdf)
         on, ocols, ohash = frame_hash(odf)
         ok = (sn, scols, shash) == (on, ocols, ohash)
         ledger[name] = {"rows_match": sn == on,
                         "schema_match": scols == ocols,
                         "hash_match": shash == ohash,
-                        "spark_rows": sn, "oracle_rows": on, "err": None}
+                        "spark_rows": sn, "oracle_rows": on,
+                        "spark_hash": shash, "oracle_hash": ohash,
+                        "err": None}
         status = "ok  " if ok else "FAIL"
         print(f"{status}  {name}: rows {sn}/{on} cols={scols == ocols} "
               f"hash={'match' if shash == ohash else 'MISMATCH'} "
