@@ -27,7 +27,7 @@ def test_crc32c_known_vectors():
 
 def test_frame_roundtrip_and_corruption():
     payloads = [b"abc", b"", b"x" * 1000]
-    data = b"".join(pb.frame_record(p) for p in payloads)
+    data = pb.frame_records(payloads)
     assert list(pb.iter_records(data)) == payloads
     # flip one payload byte -> CRC mismatch
     bad = bytearray(data)
@@ -157,6 +157,28 @@ def test_pb_dump_with_ddl_records(spark, tmp_path):
     assert got[200005] == "use `shop`; ALTER TABLE t ADD COLUMN c INT;"
 
 
+def test_pb_dump_files_are_named_segments(spark, tmp_path):
+    """The batch dump publishes segments: no tmp file is left, every
+    file name parses as binlog-<bucket>-<first>-<last>.pb, and the
+    name's first and last ts are the file's first and last record ts."""
+    ch = _changes(spark).withColumn("k", F.lit("x"))
+    ddls = spark.createDataFrame(
+        [(150005, "shop", "CREATE TABLE t (id INT)")],
+        "commit_ts long, db string, ddl_sql string")
+    path = str(tmp_path / "pbdump")
+    pb.write_pb_dump(ch, path, ddls=ddls)
+    assert glob.glob(f"{path}/*.tmp") == []
+    files = sorted(glob.glob(f"{path}/*"))
+    assert len(files) >= 2
+    for fn in files:
+        bucket, first, last = pb._parse_segment_name(fn)
+        with open(fn, "rb") as f:
+            ts = [pb.decode_binlog(p)["commit_ts"]
+                  for p in pb.scan_records(f.read())]
+        assert (first, last) == (ts[0], ts[-1])
+        assert bucket == first // pb.TS_BUCKET_WIDTH
+
+
 def test_assemble_payloads_matches_generic_encoders():
     """The memoized fast assembly (_assemble_payloads) is byte-for-byte
     the composition of encode_column/encode_event/encode_binlog over
@@ -284,7 +306,7 @@ def test_scan_records_parity_and_error_text():
          pb.encode_column("val", 5, "double", i * 1.5, "double"),
          pb.encode_column("k", 15, "varchar", f"k{i}", "string")])])
         for i in range(50)]
-    blob = b"".join(pb.frame_record(p) for p in payloads)
+    blob = pb.frame_records(payloads)
     assert pb.scan_records(blob) == list(pb.iter_records(blob))
     assert pb.scan_records(b"") == []
     # corrupt a middle record's payload: identical ValueError text
@@ -397,7 +419,7 @@ def test_scan_records_reports_first_corruption_in_offset_order():
          pb.encode_column("val", 5, "double", i * 1.5, "double"),
          pb.encode_column("k", 15, "varchar", f"k{i}", "string")])])
         for i in range(50)]
-    blob = bytearray(b"".join(pb.frame_record(p) for p in payloads))
+    blob = bytearray(pb.frame_records(payloads))
     off_crc = sum(16 + len(p) for p in payloads[:10])
     off_magic = sum(16 + len(p) for p in payloads[:30])
     blob[off_crc + 14] ^= 0xFF      # payload byte -> CRC mismatch
@@ -425,7 +447,7 @@ def test_scan_records_names_the_offset_of_a_torn_record():
         "d", "t", pb.INSERT,
         [pb.encode_column("pk", 8, "bigint", i, "long")])])
         for i in range(2)]
-    blob = b"".join(pb.frame_record(p) for p in payloads)
+    blob = pb.frame_records(payloads)
     second = 16 + len(payloads[0])
     cuts = {5: 0, second - 8: 0, second - 1: 0, second + 5: second,
             second + 13: second, len(blob) - 1: second}

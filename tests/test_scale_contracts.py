@@ -108,14 +108,17 @@ def test_streaming_metrics_listener(spark, tmp_path):
                                   str(tmp_path / "ck"))
     q.awaitTermination(120)
     import time
+
+    def total_rows():
+        return sum(b["num_input_rows"] or 0 for b in collector.batches)
     for _ in range(60):                      # listener events are async
-        if collector.total_rows >= 2:
+        if total_rows() >= 2:
             break
         time.sleep(0.5)
     spark.streams.removeListener(collector)
     # progress can be reported more than once per batch (e.g. a final
     # summary event) — require the input rows to have been observed.
-    assert collector.total_rows >= 2
+    assert total_rows() >= 2
     assert any(b["num_input_rows"] == 2 for b in collector.batches)
 
 

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import make_changes, order_labels
 from tidb_binlog_spark.operators import compaction, ordering
-from tidb_binlog_spark.sinks import payload, sqlgen
+from tidb_binlog_spark.sinks import sqlgen
 from tidb_binlog_spark.sinks.table_sink import SnapshotTable
 from tidb_binlog_spark.streaming import pipeline
 
@@ -104,10 +104,39 @@ def test_view_gc_lists_versions_instead_of_probing(spark, tmp_path,
     view.apply_batch(make_changes(spark, [(1, "s0", 10, "I", 1, 0, 2.0)]))
     assert len(calls) < 50, len(calls)
     assert sorted(p.name for p in root.iterdir() if p.is_dir()) \
-        == ["agg_v50001", "aux_v50001", "deadletter", "pending_v50001",
-            "pkstate_v50001"]
+        == ["agg_v50001", "aux_v50001", "pending_v50001", "pkstate_v50001"]
     assert {(r["n_rows"], r["sum_val"])
             for r in view.read().collect()} == {(1, 2.0)}
+
+
+def test_view_writes_dead_letters_only_for_dead_rows(spark, tmp_path,
+                                                     monkeypatch):
+    """Three clean batches leave no deadletter dir. A batch holding a
+    redelivered row writes its partition, and a crash replay of that
+    batch (its checkpoint never committed) overwrites it."""
+    from tidb_binlog_spark.streaming.ivm import MaterializedAggregate
+    root = tmp_path / "state"
+    view = MaterializedAggregate(spark, str(root))
+    for bid in range(3):
+        view.apply_batch(make_changes(
+            spark, [(bid, "s0", 10 * (bid + 1), "I", bid)]), bid)
+    assert not (root / "deadletter").exists()
+    assert view.dead_letter() is None
+
+    dup = make_changes(spark, [(3, "s0", 40, "I", 3), (4, "s0", 40, "I", 3)])
+
+    def crash(_ck):
+        raise RuntimeError("crash before the checkpoint")
+    monkeypatch.setattr(view, "_commit", crash)
+    with pytest.raises(RuntimeError):
+        view.apply_batch(dup, 3)
+    monkeypatch.undo()
+    view.apply_batch(dup, 3)
+    assert [p.name for p in (root / "deadletter").iterdir()
+            if p.is_dir()] == ["batch=3"]
+    assert [(r["arrival_seq"], r["order_status"])
+            for r in view.dead_letter().collect()] == [(4, "duplicate")]
+    assert view._checkpoint()["audit"] == {"duplicate": 1}
 
 
 def test_sql_generation_shapes(spark):
@@ -123,9 +152,9 @@ def test_sql_generation_shapes(spark):
 def test_file_dump_replay_prunes_ts_range(spark, tmp_path):
     from tidb_binlog_spark.sinks.relay import RelayLog
     ch = make_changes(spark, [(i, "s0", i * 100000, "I", i) for i in range(1, 8)])
-    RelayLog(str(tmp_path / "relay")).append(ch)
-    path = str(tmp_path / "relay" / "log")
-    got = payload.read_file_dump(spark, path, start_ts=200000, stop_ts=500000)
+    relay = RelayLog(str(tmp_path / "relay"))
+    relay.append(ch)
+    got = relay.read(spark, start_ts=100000, stop_ts=500000)
     assert sorted(r["commit_ts"] for r in got.collect()) == [200000, 300000, 400000, 500000]
 
 
@@ -1361,55 +1390,6 @@ def test_ivm_read_joined_as_of_dimension_version(spark, tmp_path):
     assert tiers_at(1500) == {"silver": (2, 7.0)}
 
 
-def test_ivm_view_emits_composable_changelog(spark, tmp_path):
-    """emit_changelog=True: the maintained view writes its OWN change
-    stream (per-group old/new images per fold). Folding the changelog
-    in version order over an empty state must reproduce the view —
-    the downstream-sync contract — and a crash-replayed batch must
-    not duplicate changelog rows."""
-    from tidb_binlog_spark.streaming.ivm import MaterializedAggregate
-    view = MaterializedAggregate(spark, str(tmp_path / "state"),
-                                 emit_changelog=True)
-    view.apply_batch(make_changes(
-        spark, [(1, "s0", 10, "I", 1, 0, 2.0),
-                (2, "s0", 20, "I", 2, 0, 3.0)]), 0)
-    view.apply_batch(make_changes(
-        spark, [(3, "s0", 30, "U", 1, 0, 7.0)]), 1)
-    view.apply_batch(make_changes(
-        spark, [(4, "s0", 40, "D", 1, 0, 0.0),
-                (5, "s0", 50, "D", 2, 0, 0.0)]), 2)
-    view.apply_batch(make_changes(
-        spark, [(4, "s0", 40, "D", 1, 0, 0.0),
-                (5, "s0", 50, "D", 2, 0, 0.0)]), 2)   # crash replay
-    cl = view.read_changelog()
-    rows = sorted(((r["version"], r["op"], r["old_n_rows"],
-                    r["old_sum_val"], r["new_n_rows"],
-                    r["new_sum_val"]) for r in cl.collect()))
-    # v1: group appears (2 rows, 5.0); v2: update (10.0);
-    # v3: group emptied (D) — and the replayed batch added nothing
-    assert rows == [(1, "I", None, None, 2, 5.0),
-                    (2, "U", 2, 5.0, 2, 10.0),
-                    (3, "D", 2, 10.0, None, None)]
-    # composing the changelog reproduces the view at every version:
-    # final state here is empty
-    assert view.read().count() == 0
-    state = {}
-    for v, op, _, _, nn, ns in rows:
-        if op == "D":
-            state.pop("g", None)
-        else:
-            state["g"] = (nn, ns)
-    assert state == {}
-
-
-def test_ivm_changelog_off_by_default(spark, tmp_path):
-    from tidb_binlog_spark.streaming.ivm import MaterializedAggregate
-    view = MaterializedAggregate(spark, str(tmp_path / "state"))
-    view.apply_batch(make_changes(
-        spark, [(1, "s0", 10, "I", 1, 0, 2.0)]), 0)
-    assert view.read_changelog() is None
-
-
 def _mixed_stream_rows(spark, rows):
     """(arrival_seq, commit_ts, op, pk, val, row_json) -> CHANGE_SCHEMA
     rows; op='DDL' carries the DDL text in row_json."""
@@ -2533,51 +2513,6 @@ def test_sql_apply_stream_chaos_crash_ddl_uk_relay(spark, tmp_path):
                   for pk, s in sim.items())
     assert got == want
     assert jdbc.load_checkpoint(db_dir)[0] == max(e[1] for e in events)
-
-
-def test_streaming_windowed_counts_match_batch_topk(spark, tmp_path):
-    """The q_events_windowed_topk shape, stream-fed: tumbling-window
-    per-type counts maintained by Structured Streaming across
-    micro-batches equal the batch aggregate on the same rows, so the
-    downstream rank stage gives the identical top-k report."""
-    import os
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-    src = str(tmp_path / "wtk_src")
-    os.makedirs(src)
-    schema = "event_id long, ts long, event_type string"
-    W = 1000
-    rows = [(i, (i * 37) % 3000, ["a", "b", "c"][i % 3])
-            for i in range(90)]
-    for lo, hi in ((0, 30), (30, 60), (60, 90)):
-        (spark.createDataFrame(rows[lo:hi], schema)
-         .coalesce(1).write.mode("append").parquet(src))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    counts = (stream
-              .withColumn("window_start",
-                          F.col("ts") - F.pmod(F.col("ts"), F.lit(W)))
-              .groupBy("window_start", "event_type").count())
-    q = (counts.writeStream.format("memory").queryName("wtk_counts")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    def topk(df):
-        w = (Window.partitionBy("window_start")
-             .orderBy(F.desc("count"), F.asc("event_type")))
-        return sorted((r["window_start"], r["rank"], r["event_type"],
-                       r["count"])
-                      for r in df.withColumn(
-                          "rank", F.row_number().over(w))
-                      .filter(F.col("rank") <= 2).collect())
-
-    streamed = topk(spark.sql("SELECT * FROM wtk_counts"))
-    batch = topk(spark.createDataFrame(rows, schema)
-                 .withColumn("window_start",
-                             F.col("ts") - F.pmod(F.col("ts"), F.lit(W)))
-                 .groupBy("window_start", "event_type").count())
-    assert streamed == batch and len(streamed) > 0
 
 
 def test_batch_path_binds_values_exactly(spark, tmp_path):

@@ -114,17 +114,6 @@ class NodeRegistry:
         self._save(data)
         return n
 
-    def advance_commit_ts(self, node_id: str, max_commit_ts: int) -> None:
-        """Heartbeat: the pump publishes its max commit ts (the
-        collector's per-source cursor seed)."""
-        data = self._load()
-        n = data["nodes"].get(node_id)
-        if n is None:
-            raise LookupError(f"node not exist: {node_id}")
-        n["max_commit_ts"] = max(n.get("max_commit_ts", 0), max_commit_ts)
-        n["update_ts"] = time.time()
-        self._save(data)
-
     # -- queries -----------------------------------------------------
     def nodes_by_kind(self, kind: str, show_offline: bool = False) -> list[dict]:
         """binlogctl QueryNodesByKind (nodes.go:38-56): offline nodes

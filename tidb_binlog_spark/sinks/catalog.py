@@ -83,10 +83,6 @@ class SinkCatalog:
     def evict(self, schema: str, table: str) -> None:
         self._cache.pop((schema, table), None)
 
-    def refresh(self, schema: str, table: str) -> TableInfo:
-        self.evict(schema, table)
-        return self.table_info(schema, table)
-
     def refresh_hook(self, schema: str, table: str):
         """An on_refresh callable for jdbc.RetryPolicy bound to one
         table: evicts the cached info so the next statement build sees

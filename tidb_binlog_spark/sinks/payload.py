@@ -1,6 +1,6 @@
 """Outbound payload projection — the JSON forms of the "secondary
-binlog" message built for Kafka consumers — and the ts-bucketed
-parquet layout the relay log is read back through.
+binlog" message built for Kafka consumers — and the commit-ts bucket
+that partitions the relay log and names pb dump segments.
 
 Reference:
 - obinlog (Kafka) message: one per txn, column metadata + row images,
@@ -121,16 +121,3 @@ def parse_obinlog(messages: DataFrame, payload_col: str = "payload",
         F.col("_m.table_name").alias("tbl"),
         F.col("_m.pk").alias("pk"),
         F.col("_m.seq").alias("seq"))
-
-
-def read_file_dump(spark, path: str, start_ts: int | None = None,
-                   stop_ts: int | None = None) -> DataFrame:
-    """Reparo-equivalent replay scan: partition-pruned ts range read
-    (reparo/read.go:28-120 binary-searches files by first commit-ts —
-    partition pruning is the Spark-native equivalent)."""
-    df = spark.read.parquet(path)
-    if start_ts is not None:
-        df = df.where(F.col("commit_ts") >= start_ts)
-    if stop_ts is not None:
-        df = df.where(F.col("commit_ts") <= stop_ts)
-    return df

@@ -255,11 +255,13 @@ def decode_binlog(buf: bytes) -> dict:
 # file framing (pkg/binlogfile)
 # ---------------------------------------------------------------------------
 
-def frame_record(payload: bytes) -> bytes:
-    return (struct.pack("<I", MAGIC)
-            + struct.pack("<Q", len(payload))
-            + payload
-            + struct.pack("<I", crc32c(payload)))
+def frame_records(payloads: list[bytes]) -> bytes:
+    """The payloads, each in its record frame, concatenated; the CRCs
+    are computed in one crc32c_batch pass."""
+    return b"".join(
+        struct.pack("<I", MAGIC) + struct.pack("<Q", len(p)) + p
+        + struct.pack("<I", crc)
+        for p, crc in zip(payloads, crc32c_batch(payloads)))
 
 
 def iter_records(data: bytes) -> Iterator[bytes]:
@@ -764,23 +766,42 @@ def ddl_payloads(ddls) -> "DataFrame":  # noqa: F821
                                 schema="commit_ts long, payload binary")
 
 
-def write_pb_dump(changes, path: str, partitions: int | None = None,
+def _parse_segment_name(fn: str) -> tuple[int, int, int]:
+    """binlog-<bucket>-<first>-<last>[<suffix>].pb -> ints.
+    Raises on names not written by write_pb_dump."""
+    stem = os.path.basename(fn)
+    if not stem.startswith("binlog-") or not stem.endswith(".pb"):
+        raise ValueError(stem)
+    parts = stem[len("binlog-"):-len(".pb")].split("-")
+    return int(parts[0]), int(parts[1]), int(parts[2])
+
+
+def write_pb_dump(changes, path: str, suffix: str = "",
                   ddls=None) -> None:
-    """Frame + append binlog records into <path>/binlog-<part>.pb files,
-    bucketed by commit-ts range (each task writes one file; on a
-    cluster ``path`` is shared storage). Records within a file are
-    commit_ts-ascending."""
-    if partitions is None:
-        # hash-partition ts buckets into the session's shuffle
-        # parallelism: non-empty partitions (= files) still track the
-        # DISTINCT bucket count — an empty partition writes nothing —
-        # without the extra count(distinct) job the r9 form ran to
-        # size the shuffle exactly (two buckets sharing a partition
-        # merge into one file, which the exact sizing also allowed
-        # via hash collisions; the read path filters on record
-        # content, not file assignment).
-        partitions = int(changes.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32"))
+    """Frame binlog records into ts-bucketed segment files under
+    ``path`` (on a cluster, shared storage): one file per non-empty
+    task, records commit_ts-ascending within it. The batch dump and
+    the streaming file sink (streaming/file_dump_stream) both write
+    through here.
+
+    - file names carry the first AND last record commit-ts —
+      ``binlog-<bucket>-<first>-<last><suffix>.pb`` — so crash
+      recovery (truncate segments past the checkpoint) and retention
+      GC (drop segments wholly below the safepoint) are name-driven,
+      the role the reference's segment index + pb.Pos cursor play
+      (pkg/binlogfile/binlogger.go:50, drainer/sync/pb.go:38-120);
+    - each task streams its records to a tmp file and publishes it
+      with an atomic rename, so a reader scanning ``*.pb`` never sees
+      a torn segment and a re-delivered micro-batch overwrites its
+      own files idempotently.
+    """
+    # hash-partition ts buckets into the session's shuffle
+    # parallelism: non-empty partitions (= files) track the distinct
+    # bucket count — an empty partition writes nothing — and two
+    # buckets sharing a partition merge into one file (the read path
+    # filters on record content, not file assignment)
+    partitions = int(changes.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions", "32"))
     payloads = binlog_payloads(changes)
     if ddls is not None:
         payloads = payloads.unionByName(ddl_payloads(ddls))
@@ -790,9 +811,9 @@ def write_pb_dump(changes, path: str, partitions: int | None = None,
 
     def write_partition(batches: Iterator[pd.DataFrame]
                         ) -> Iterator[pd.DataFrame]:
-        # Arrow-batched writer (r11): records arrive sorted within the
-        # partition (sortWithinPartitions below), so batches stream to
-        # the file in order — no pickled-Row iterator, no in-task sort.
+        # records arrive sorted within the partition
+        # (sortWithinPartitions below), so Arrow batches stream to the
+        # tmp file in order; the name waits for the last record's ts
         f = None
         n_out = 0
         try:
@@ -801,105 +822,27 @@ def write_pb_dump(changes, path: str, partitions: int | None = None,
                     continue
                 if f is None:
                     first_ct = int(pdf["commit_ts"].iloc[0])
-                    bucket = first_ct // TS_BUCKET_WIDTH
-                    fn = os.path.join(
-                        path, f"binlog-{bucket:010d}-{first_ct}.pb")
-                    f = open(fn, "wb")
-                recs = [bytes(p) for p in pdf["payload"]]
-                crcs = crc32c_batch(recs)   # vectorized across records
-                f.write(b"".join(
-                    struct.pack("<I", MAGIC) + struct.pack("<Q", len(p))
-                    + p + struct.pack("<I", crc)
-                    for p, crc in zip(recs, crcs)))
-                n_out += len(recs)
+                    tmp = os.path.join(
+                        path, f"binlog-{first_ct}{suffix}.pb.tmp")
+                    f = open(tmp, "wb")
+                last_ct = int(pdf["commit_ts"].iloc[-1])
+                f.write(frame_records([bytes(p) for p in pdf["payload"]]))
+                n_out += len(pdf)
         finally:
             if f is not None:
                 f.close()
+        if f is not None:
+            bucket = first_ct // TS_BUCKET_WIDTH
+            os.replace(tmp, os.path.join(
+                path,
+                f"binlog-{bucket:010d}-{first_ct}-{last_ct}{suffix}.pb"))
         yield pd.DataFrame({"n": [n_out]})
 
     (payloads
-     .repartition(partitions,
-                  ts_bucket())
+     .repartition(partitions, ts_bucket())
      .sortWithinPartitions("commit_ts")
      .mapInPandas(write_partition, "n long")
      .write.format("noop").mode("overwrite").save())
-
-
-def write_pb_segments(changes, path: str, suffix: str = "",
-                      partitions: int | None = None,
-                      ddls=None) -> list[dict]:
-    """Segmented variant of :func:`write_pb_dump` for the STREAMING
-    file sink (streaming/file_dump_stream): same record framing and
-    ts-bucketed layout, plus
-
-    - file names carry the first AND last record commit-ts —
-      ``binlog-<bucket>-<first>-<last><suffix>.pb`` — so crash
-      recovery (truncate segments past the checkpoint) and retention
-      GC (drop segments wholly below the safepoint) are name-driven,
-      the role the reference's segment index + pb.Pos cursor play
-      (pkg/binlogfile/binlogger.go:50, drainer/sync/pb.go:38-120);
-    - each file lands via tmp + atomic rename, so a reader scanning
-      ``*.pb`` never sees a torn segment and a re-delivered
-      micro-batch overwrites its own files idempotently.
-
-    Returns the written segments as [{"file", "n", "first_ts",
-    "last_ts"}] — one entry per non-empty partition, driver-bounded.
-    """
-    if partitions is None:
-        partitions = int(changes.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32"))
-    payloads = binlog_payloads(changes)
-    if ddls is not None:
-        payloads = payloads.unionByName(ddl_payloads(ddls))
-    os.makedirs(path, exist_ok=True)
-
-    import pandas as pd
-
-    def write_partition(batches: Iterator[pd.DataFrame]
-                        ) -> Iterator[pd.DataFrame]:
-        # buffer the partition's framed bytes, then name the file by
-        # (bucket, first_ts, last_ts) and publish with atomic rename
-        chunks: list[bytes] = []
-        first_ct = last_ct = None
-        n_out = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if first_ct is None:
-                first_ct = int(pdf["commit_ts"].iloc[0])
-            last_ct = int(pdf["commit_ts"].iloc[-1])
-            recs = [bytes(p) for p in pdf["payload"]]
-            crcs = crc32c_batch(recs)
-            chunks.append(b"".join(
-                struct.pack("<I", MAGIC) + struct.pack("<Q", len(p))
-                + p + struct.pack("<I", crc)
-                for p, crc in zip(recs, crcs)))
-            n_out += len(recs)
-        if first_ct is None:
-            yield pd.DataFrame({"file": pd.Series([], dtype=object),
-                                "n": pd.Series([], dtype="int64"),
-                                "first_ts": pd.Series([], dtype="int64"),
-                                "last_ts": pd.Series([], dtype="int64")})
-            return
-        bucket = first_ct // TS_BUCKET_WIDTH
-        fn = os.path.join(
-            path, f"binlog-{bucket:010d}-{first_ct}-{last_ct}{suffix}.pb")
-        tmp = fn + ".tmp"
-        with open(tmp, "wb") as f:
-            for c in chunks:
-                f.write(c)
-        os.replace(tmp, fn)
-        yield pd.DataFrame({"file": [os.path.basename(fn)], "n": [n_out],
-                            "first_ts": [first_ct], "last_ts": [last_ct]})
-
-    out = (payloads
-           .repartition(partitions,
-                        ts_bucket())
-           .sortWithinPartitions("commit_ts")
-           .mapInPandas(write_partition,
-                        "file string, n long, first_ts long, last_ts long")
-           .collect())
-    return [r.asDict() for r in out]
 
 
 _OP_OF_TP = {INSERT: "I", UPDATE: "U", DELETE: "D"}

@@ -11,8 +11,9 @@ MODE (relay.go:83 ``ld.SetSafeMode(true)``), and only then does
 normal streaming resume.
 
 Spark form: the relay log is a ts-bucketed parquet landing zone
-(partitioned by payload.ts_bucket — partition-pruned replay scans for
-free), the consistency flag is a marker file next to it, and safe-mode
+(partitioned by payload.ts_bucket; ``RelayLog.read`` is its one
+reader, and its replay scans prune partitions for free), the
+consistency flag is a marker file next to it, and safe-mode
 re-apply is SnapshotTable.apply_batch's idempotent MERGE (re-applying
 rows at or below the stored image's commit_ts is a no-op by
 construction — the same convergence REPLACE/DELETE+REPLACE gives the
@@ -26,7 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .payload import TS_BUCKET_WIDTH, read_file_dump, ts_bucket
+from .payload import TS_BUCKET_WIDTH, ts_bucket
 from .table_sink import SnapshotTable
 
 
@@ -84,7 +85,7 @@ class RelayLog:
         DIRECTORIES, not just row groups (ts_bucket = commit_ts div
         TS_BUCKET_WIDTH; the bucket bounds below are valid for the
         non-negative commit-ts domain)."""
-        df = read_file_dump(spark, os.path.join(self.root, "log"))
+        df = spark.read.parquet(os.path.join(self.root, "log"))
         w = TS_BUCKET_WIDTH
         if start_ts is not None:
             if start_ts >= 0:

@@ -21,8 +21,10 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators import compaction
 
 
 def _parquet_footer_max(path: str, col: str):
@@ -46,44 +48,74 @@ def _parquet_footer_max(path: str, col: str):
     return best
 
 
-class SnapshotTable:
+def read_json(path: str, default: dict) -> dict:
+    """The JSON object at ``path``, or ``default`` when there is none."""
+    if not os.path.exists(path):
+        return default
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_json(path: str, obj: dict) -> None:
+    """Write ``obj`` via tmp + rename (atomic on POSIX): a reader sees
+    the old checkpoint or the new one, never a torn file."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+class VersionedStore:
+    """Version directories under ``root`` made visible by one JSON
+    checkpoint — the atomic-rename analog of a sink transaction,
+    shared by SnapshotTable and the streaming views (streaming/ivm).
+    A version's data lands first; the checkpoint naming it replaces
+    the old one last, so a crash in between leaves the old version
+    visible and the rewrite converges."""
+
+    _CKPT = "checkpoint.json"
+    _PREFIXES: tuple[str, ...] = ("",)   # dirs <prefix>_v<N>, or v<N>
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root
+
+    def _ckpt_path(self) -> str:
+        return os.path.join(self.root, self._CKPT)
+
+    def _load(self, default: dict) -> dict:
+        return read_json(self._ckpt_path(), default)
+
+    def _commit(self, ck: dict) -> None:
+        write_json(self._ckpt_path(), ck)
+
+    def _vdir(self, prefix: str, version: int) -> str:
+        name = f"{prefix}_v{version}" if prefix else f"v{version}"
+        return os.path.join(self.root, name)
+
+    def _gc(self, keep_version: int) -> None:
+        """Remove every version dir older than the kept pair
+        (``keep_version`` and the one before it, for readers
+        mid-swap). One listing of the root finds them all, a crash's
+        leftover included."""
+        for name in os.listdir(self.root):
+            stem = name.rstrip("0123456789")
+            if (stem != name and stem.endswith("v")
+                    and stem[:-1].rstrip("_") in self._PREFIXES
+                    and int(name[len(stem):]) < keep_version - 1):
+                shutil.rmtree(os.path.join(self.root, name))
+
+
+class SnapshotTable(VersionedStore):
     """A versioned parquet table with last-writer-wins apply.
 
     Directory layout: <root>/v<N>/ (data), <root>/checkpoint.json
     ({version, commit_ts}). Readers use the checkpoint to pick the
-    version — the atomic-rename analog of a sink transaction.
+    version.
     """
 
-    def __init__(self, spark: SparkSession, root: str,
-                 key_cols: tuple[str, ...] = ("db", "tbl", "pk")):
-        self.spark = spark
-        self.root = root
-        self.key_cols = list(key_cols)
-
-    # -- checkpoint ---------------------------------------------------------
-    def _ckpt_path(self) -> str:
-        return os.path.join(self.root, "checkpoint.json")
-
     def checkpoint(self) -> dict:
-        if not os.path.exists(self._ckpt_path()):
-            return {"version": 0, "commit_ts": -1}
-        with open(self._ckpt_path()) as f:
-            return json.load(f)
-
-    def _save_checkpoint(self, version: int, commit_ts: int) -> None:
-        tmp = self._ckpt_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "commit_ts": commit_ts}, f)
-        os.replace(tmp, self._ckpt_path())  # atomic on POSIX
-
-    def advance_checkpoint(self, commit_ts: int) -> None:
-        """Heartbeat-only progress: move the savepoint cursor forward
-        without writing data (fake-binlog semantics,
-        drainer/syncer.go:199-272 — the checkpoint advances over idle
-        periods once everything below is applied). Never regresses."""
-        ck = self.checkpoint()
-        if int(commit_ts) > int(ck["commit_ts"]):
-            self._save_checkpoint(ck["version"], int(commit_ts))
+        return self._load({"version": 0, "commit_ts": -1})
 
     # -- read/apply ---------------------------------------------------------
     def _read_full(self) -> DataFrame | None:
@@ -91,7 +123,7 @@ class SnapshotTable:
         ck = self.checkpoint()
         if ck["version"] == 0:
             return None
-        return self.spark.read.parquet(os.path.join(self.root, f"v{ck['version']}"))
+        return self.spark.read.parquet(self._vdir("", ck["version"]))
 
     def read(self) -> DataFrame | None:
         """Visible snapshot: tombstones filtered out."""
@@ -101,26 +133,21 @@ class SnapshotTable:
         return full.filter(F.col("op") != "D")
 
     def apply_batch(self, batch: DataFrame) -> dict:
-        """MERGE a compacted change batch: later commit_ts wins against
-        the current state. Deletes are KEPT as tombstones (filtered out
-        by read()) — dropping them outright would let a later batch
+        """MERGE a change batch: later commit_ts wins against the
+        current state (compaction.compact_last_image over stored and
+        batch rows). Deletes are KEPT as tombstones (filtered out by
+        read()) — dropping them outright would let a later batch
         carrying an *older* change for the deleted key resurrect it.
         Re-applying the same batch is a no-op — idempotent by
         construction, so checkpoint replay is safe."""
         ck = self.checkpoint()
         current = self._read_full()
         if current is not None:
-            unioned = current.unionByName(batch, allowMissingColumns=True)
-        else:
-            unioned = batch
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            F.desc("commit_ts"), F.desc("seq"), F.desc("arrival_seq"))
-        merged = (unioned
-                  .withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") == 1).drop("_rn"))
+            batch = current.unionByName(batch, allowMissingColumns=True)
+        merged = compaction.compact_last_image(batch)
 
         new_version = ck["version"] + 1
-        out = os.path.join(self.root, f"v{new_version}")
+        out = self._vdir("", new_version)
         merged.write.mode("overwrite").parquet(out)
         # the savepoint ts comes from the WRITTEN snapshot (no second
         # pass over the batch lineage — a separate max-ts action would
@@ -137,11 +164,6 @@ class SnapshotTable:
                  .agg(F.max("commit_ts").alias("m")).collect()[0]["m"])
         batch_max = int(m) if m is not None else int(ck["commit_ts"])
         batch_max = max(batch_max, int(ck["commit_ts"]))
-        self._save_checkpoint(new_version, batch_max)
-        # retain only the previous version for readers mid-swap; one
-        # listing finds every older dir, a crash's leftover included
-        for name in os.listdir(self.root):
-            v = name[1:]
-            if name[:1] == "v" and v.isdigit() and int(v) < new_version - 1:
-                shutil.rmtree(os.path.join(self.root, name))
+        self._commit({"version": new_version, "commit_ts": batch_max})
+        self._gc(new_version)
         return {"version": new_version, "commit_ts": int(batch_max)}

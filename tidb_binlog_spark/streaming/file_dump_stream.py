@@ -6,14 +6,15 @@ commit binlog is appended to a segmented binlogger
 (pkg/binlogfile/binlogger.go:50: ``binlog-NNNN`` segment files,
 WriteTail appends CRC-framed records, rotation by size) whose replay
 cursor (pb.Pos) is checkpointed after the write, with file-level
-retention GC behind it. The batch ops (pbcodec.write_pb_dump /
-read_pb_dump) do one dump; this module is the sink's streaming
-LIFECYCLE:
+retention GC behind it. pbcodec.write_pb_dump writes the segments
+(named by bucket and first/last record ts, published by atomic
+rename) and pbcodec.read_pb_dump reads them back; this module is the
+sink's streaming LIFECYCLE:
 
     readStream(landing zone) -> foreachBatch{
         resume filter -> order gate -> DDL/DML split ->
-        write CRC-framed segments (atomic rename) ->
-        atomic ts checkpoint }
+        write_pb_dump(suffix=-b<batch_id>) ->
+        atomic ts checkpoint (table_sink.write_json) }
 
 Exactly-once contract (mirrors the mysql path's downstream-checkpoint
 recipe, streaming/pipeline.run_sql_apply_stream):
@@ -43,20 +44,24 @@ of its segment files. Within a batch the gate is
 ``ordering.ordered_stream``, which keeps or drops each transaction
 whole (the rule every applier uses).
 
-Retention GC (``gc_pb_dump_segments``) drops whole segments whose
-LAST record ts is below the safepoint — the reference's file-level GC
-granularity (pump/storage GC deletes data below gcTS; a segment
-containing the safepoint is kept whole).
+Retention GC (``gc_pb_dump_segments``, run by whoever owns the
+safepoint) drops whole segments whose LAST record ts is below the
+safepoint — the reference's file-level GC granularity (pump/storage GC
+deletes data below gcTS; a segment containing the safepoint is kept
+whole).
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sinks.pbcodec import _parse_segment_name, write_pb_dump
+from ..sinks.table_sink import read_json, write_json
+from .pipeline import start_change_stream
 
 CKPT_FILE = "_ckpt.json"
 STATUS_NORMAL = "normal"      # graceful shutdown
@@ -65,32 +70,16 @@ STATUS_RUNNING = "running"    # mid-run; on restart => crash recovery
 
 def load_dump_checkpoint(path: str) -> tuple[int, str]:
     """(commit_ts cursor, status). A fresh dir is (-1, normal)."""
-    fn = os.path.join(path, CKPT_FILE)
-    if not os.path.exists(fn):
-        return -1, STATUS_NORMAL
-    with open(fn) as f:
-        d = json.load(f)
+    d = read_json(os.path.join(path, CKPT_FILE),
+                  {"commit_ts": -1, "status": STATUS_NORMAL})
     return int(d["commit_ts"]), d["status"]
 
 
 def save_dump_checkpoint(path: str, commit_ts: int,
                          status: str = STATUS_RUNNING) -> None:
-    """Atomic cursor write (tmp + rename): the dump's pb.Pos analog."""
-    fn = os.path.join(path, CKPT_FILE)
-    tmp = fn + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"commit_ts": int(commit_ts), "status": status}, f)
-    os.replace(tmp, fn)
-
-
-def _parse_segment_name(fn: str) -> tuple[int, int, int]:
-    """binlog-<bucket>-<first>-<last>[<suffix>].pb -> ints.
-    Raises on names not written by write_pb_segments."""
-    stem = os.path.basename(fn)
-    if not stem.startswith("binlog-") or not stem.endswith(".pb"):
-        raise ValueError(stem)
-    parts = stem[len("binlog-"):-len(".pb")].split("-")
-    return int(parts[0]), int(parts[1]), int(parts[2])
+    """Atomic cursor write: the dump's pb.Pos analog."""
+    write_json(os.path.join(path, CKPT_FILE),
+               {"commit_ts": int(commit_ts), "status": status})
 
 
 def recover_pb_dump(path: str) -> list[str]:
@@ -133,14 +122,6 @@ def gc_pb_dump_segments(path: str, safepoint_ts: int) -> list[str]:
     return removed
 
 
-def mark_dump_graceful(path: str) -> None:
-    """Graceful-shutdown marker: call after awaitTermination. The
-    cursor keeps its value; only the status flips, so the next start
-    skips the recovery scan (checkpoint Save(..., consistent=true))."""
-    ck, _status = load_dump_checkpoint(path)
-    save_dump_checkpoint(path, ck, STATUS_NORMAL)
-
-
 class FileDumpApplier:
     """The foreachBatch body of :func:`run_file_dump_stream`, factored
     out (exactly like pipeline.SqlBatchApplier) so tests and the
@@ -160,7 +141,7 @@ class FileDumpApplier:
 
     def apply(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..operators import ordering
-        from ..sinks import kafka, pbcodec
+        from ..sinks import kafka
 
         batch_df = batch_df.persist()
         try:
@@ -182,9 +163,8 @@ class FileDumpApplier:
                    .select("commit_ts", "db",
                            F.col("row_json").alias("ddl_sql"))
                    if "row_json" in real.columns else None)
-            pbcodec.write_pb_segments(
-                kafka.with_row_image(dml), self.path,
-                suffix=f"-b{batch_id}", ddls=ddl)
+            write_pb_dump(kafka.with_row_image(dml), self.path,
+                          suffix=f"-b{batch_id}", ddls=ddl)
             self.resume_ts = int(mx)
             save_dump_checkpoint(self.path, self.resume_ts,
                                  STATUS_RUNNING)
@@ -192,37 +172,24 @@ class FileDumpApplier:
             batch_df.unpersist()
 
     def mark_graceful(self) -> None:
-        mark_dump_graceful(self.path)
+        """Graceful-shutdown marker: call after awaitTermination. The
+        cursor keeps its value; only the status flips, so the next
+        start skips the recovery scan (checkpoint Save(...,
+        consistent=true))."""
+        ck, _status = load_dump_checkpoint(self.path)
+        save_dump_checkpoint(self.path, ck, STATUS_NORMAL)
 
 
 def run_file_dump_stream(spark: SparkSession, source_dir: str,
                          dump_dir: str, checkpoint_dir: str,
                          available_now: bool = True,
-                         max_files_per_trigger: int | None = None,
-                         retention_safepoint_ts: int | None = None):
+                         max_files_per_trigger: int | None = None):
     """The file-archive replication path as one streaming query
     (drainer/sync/pb.go as a Structured Streaming sink). Returns
     (StreamingQuery, FileDumpApplier) — the caller awaits termination
     then calls ``applier.mark_graceful()``; a crashed run recovers on
-    the next construction (orphan truncation + resume filter).
-
-    ``retention_safepoint_ts``: when set, retention GC runs after
-    each micro-batch (binlogctl-driven gcTS), dropping segments
-    wholly below the safepoint."""
-    from .pipeline import read_change_stream
-
+    the next construction (orphan truncation + resume filter)."""
     applier = FileDumpApplier(dump_dir)
-
-    def on_batch(df: DataFrame, bid: int) -> None:
-        applier.apply(df, bid)
-        if retention_safepoint_ts is not None:
-            gc_pb_dump_segments(dump_dir, retention_safepoint_ts)
-
-    stream = read_change_stream(spark, source_dir,
-                                max_files_per_trigger=max_files_per_trigger)
-    writer = (stream.writeStream
-              .foreachBatch(on_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), applier
+    return start_change_stream(spark, source_dir, applier.apply,
+                               checkpoint_dir, available_now,
+                               max_files_per_trigger), applier

@@ -25,18 +25,19 @@ three pieces of cross-batch state (all tiny or bounded):
   arrive at its commit_ts, as duplicates.
 
 - **PK liveness state** (aggregate view only): the applied last-image
-  table (a SnapshotTable, tombstones included) is seeded into
+  rows (compaction.compact_last_image, tombstones included), kept as
+  the view-versioned ``pkstate`` directory, are seeded into
   ``coherent_changelog`` as arrival_seq = -1 rows — a live row seeds
   op 'I', a tombstone seeds op 'D' — so the first change of a PK in a
   batch sees its true prior version through the same lag window the
   batch operator uses.
 
-State writes are versioned directories with an atomically-renamed
-JSON checkpoint (the SnapshotTable recipe); Spark's streaming
-checkpoint replaying a batch re-applies it into the same
-version-advance, so crash recovery is idempotent. Aggregate state
-stays DECIMAL(38,6): decimal addition is associative, so any batch
-split yields the exact whole-history answer.
+State writes are versioned directories committed by one atomically
+replaced JSON checkpoint (sinks/table_sink.VersionedStore, the store
+SnapshotTable uses); Spark's streaming checkpoint replaying a batch
+re-applies it into the same version-advance, so crash recovery is
+idempotent. Aggregate state stays DECIMAL(38,6): decimal addition is
+associative, so any batch split yields the exact whole-history answer.
 
 Scale: per batch the work is O(batch + pending) — one PK-state join
 keyed on the PK (co-located for free when the state is stored
@@ -48,9 +49,7 @@ slowest), the same bound the reference's merger queues have.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,8 +60,9 @@ from ..operators.incremental_agg import (coherent_changelog,
                                          maintain_group_aggregates,
                                          quantiles_from_multiset,
                                          regroup_partials,
-                                         top_values_from_multiset,
                                          value_multiset)
+from ..sinks.table_sink import VersionedStore
+from .pipeline import start_change_stream
 
 
 def advance_cursors(df: DataFrame, cursors: dict) -> dict:
@@ -78,17 +78,17 @@ def advance_cursors(df: DataFrame, cursors: dict) -> dict:
     return out
 
 
-class _StreamView:
-    """Shared cross-batch machinery: checkpoint JSON, pending zone,
-    watermark gate, applied cursors, versioned state directories.
-    Subclasses fold the gated+watermarked rows into their own state."""
+class _StreamView(VersionedStore):
+    """Shared cross-batch machinery: pending zone, watermark gate,
+    applied cursors, over a VersionedStore. Subclasses fold the
+    gated+watermarked rows into their own state."""
 
+    _CKPT = "view_checkpoint.json"
     _STATE = "state"          # subclass state dir prefix
 
     def __init__(self, spark: SparkSession, root: str,
                  sources: tuple[str, ...] | None = None):
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         # the reference's merger knows its pump list from the etcd
         # registry and BLOCKS until every source has shown an item
         # (drainer/merge.go:268-297, collector.go:150-259). With
@@ -108,43 +108,15 @@ class _StreamView:
         s = self.sources
         return tuple(s()) if callable(s) else s
 
-    def _ckpt_path(self) -> str:
-        return os.path.join(self.root, "view_checkpoint.json")
-
     def _checkpoint(self) -> dict:
-        if not os.path.exists(self._ckpt_path()):
-            return {"version": 0, "seen_max": {}, "applied_max": {},
-                    "watermark": None, "last_batch_id": None}
-        with open(self._ckpt_path()) as f:
-            return json.load(f)
-
-    def _save_checkpoint(self, ck: dict) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        tmp = self._ckpt_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ck, f)
-        os.replace(tmp, self._ckpt_path())
-
-    def _vdir(self, prefix: str, version: int) -> str:
-        return os.path.join(self.root, f"{prefix}_v{version}")
+        return self._load({"version": 0, "seen_max": {}, "applied_max": {},
+                           "watermark": None, "last_batch_id": None})
 
     def _read_versioned(self, prefix: str, version: int) -> DataFrame | None:
         path = self._vdir(prefix, version)
         if version == 0 or not os.path.exists(path):
             return None
         return self.spark.read.parquet(path)
-
-    def _gc(self, keep_version: int) -> None:
-        """Remove every versioned dir older than the kept pair
-        (``keep_version`` and the one before it, for readers
-        mid-swap). One listing of the root finds them all, a crash's
-        leftover included."""
-        prefixes = (self._STATE, "pending", "aux", "pkstate")
-        for name in os.listdir(self.root):
-            prefix, sep, v = name.rpartition("_v")
-            if (sep and prefix in prefixes and v.isdigit()
-                    and int(v) < keep_version - 1):
-                shutil.rmtree(os.path.join(self.root, name))
 
     # -- subclass hooks -----------------------------------------------------
     def _fold(self, prior: DataFrame | None, emit: DataFrame,
@@ -197,15 +169,16 @@ class _StreamView:
             # applies them out of order (drainer/merge.go:318-329);
             # here they land in a dead-letter zone with their verdict
             dead = classified.filter(F.col("order_status") != "ok")
-            # partitioned by batch id and OVERWRITTEN, so a crash
-            # replay rewrites the same partition instead of appending
-            # duplicates
-            dead.write.mode("overwrite").parquet(
-                os.path.join(self.root, "deadletter",
-                             f"batch={batch_id}"))
             dead_counts = {r["order_status"]: r["n"] for r in
                            dead.groupBy("order_status")
                            .agg(F.count(F.lit(1)).alias("n")).collect()}
+            if dead_counts:
+                # partitioned by batch id and OVERWRITTEN, so a crash
+                # replay rewrites the same partition instead of
+                # appending duplicates; a clean batch writes none
+                dead.write.mode("overwrite").parquet(
+                    os.path.join(self.root, "deadletter",
+                                 f"batch={batch_id}"))
             if wm is None:
                 # nothing can apply yet, but the verdicts stand:
                 # quarantined rows die now (they were dead-lettered
@@ -265,7 +238,7 @@ class _StreamView:
                     m = min(m, park_min[s] - 1)
                 cur = new_applied.get(s)
                 new_applied[s] = m if cur is None else max(int(cur), m)
-            self._save_checkpoint({
+            self._commit({
                 "version": new_version,
                 "seen_max": seen,
                 "applied_max": new_applied,
@@ -293,7 +266,7 @@ class _StreamView:
         self._fold(self._state(), ok, new_version)
         pending.limit(0).write.mode("overwrite").parquet(
             self._vdir("pending", new_version))
-        self._save_checkpoint({
+        self._commit({
             "version": new_version,
             "seen_max": ck["seen_max"],
             "applied_max": advance_cursors(ok, ck["applied_max"]),
@@ -308,21 +281,13 @@ class MaterializedAggregate(_StreamView):
     """Exactly-maintained COUNT/SUM per group over a CDC stream."""
 
     _STATE = "agg"
+    _PREFIXES = ("agg", "pending", "aux", "pkstate")
 
     def __init__(self, spark: SparkSession, root: str,
                  group_keys: tuple[str, ...] = ("db", "tbl"),
-                 pk_keys: tuple[str, ...] = ("db", "tbl", "pk"),
-                 sources: tuple[str, ...] | None = None,
-                 emit_changelog: bool = False):
+                 sources: tuple[str, ...] | None = None):
         super().__init__(spark, root, sources=sources)
         self.group_keys = list(group_keys)
-        self.pk_keys = list(pk_keys)
-        # opt-in: the maintained view emits ITS OWN change stream
-        # (per-group old/new images per fold) so a downstream sync —
-        # another drainer, a cache, a serving store — consumes the
-        # view incrementally instead of re-reading it. The warehouse
-        # analog of the reference emitting obinlog for its appliers.
-        self.emit_changelog = emit_changelog
 
     def read(self) -> DataFrame | None:
         """The maintained view: (group_keys..., n_rows, sum_val);
@@ -350,12 +315,6 @@ class MaterializedAggregate(_StreamView):
         aux = self._aux()
         return None if aux is None else \
             quantiles_from_multiset(aux, self.group_keys, quantiles)
-
-    def read_top_values(self, n: int = 3) -> DataFrame | None:
-        """Per-group heavy hitters off the maintained multiset."""
-        aux = self._aux()
-        return None if aux is None else \
-            top_values_from_multiset(aux, self.group_keys, n)
 
     def read_joined(self, dim_last: DataFrame,
                     dim_group_cols: list[str]) -> DataFrame | None:
@@ -390,8 +349,6 @@ class MaterializedAggregate(_StreamView):
                                | (F.col("sum_dec") != 0))
         merged.write.mode("overwrite").parquet(
             self._vdir(self._STATE, version))
-        if self.emit_changelog:
-            self._emit_changelog(prior, version)
         # the value multiset (serving MIN/MAX, exact quantiles, heavy
         # hitters) folds additively alongside the sums
         aux_partial = value_multiset(cl, self.group_keys)
@@ -411,17 +368,9 @@ class MaterializedAggregate(_StreamView):
         # re-image the replay's inserts into no-op updates)
         prior_pk = self._read_versioned("pkstate",
                                         self._checkpoint()["version"])
-        batch_last = compaction.compact_last_image(emit)
-        if prior_pk is None:
-            new_pk = batch_last
-        else:
-            from pyspark.sql import Window
-            w = Window.partitionBy(*self.pk_keys).orderBy(
-                F.desc("commit_ts"), F.desc("seq"), F.desc("arrival_seq"))
-            new_pk = (prior_pk.unionByName(batch_last,
-                                           allowMissingColumns=True)
-                      .withColumn("_rn", F.row_number().over(w))
-                      .filter(F.col("_rn") == 1).drop("_rn"))
+        new_pk = compaction.compact_last_image(
+            emit if prior_pk is None
+            else prior_pk.unionByName(emit, allowMissingColumns=True))
         # tombstones below the min applied cursor can never matter:
         # the order gate quarantines anything older, and any future
         # emitted change is newer and wins regardless — pruning them
@@ -434,56 +383,6 @@ class MaterializedAggregate(_StreamView):
         new_pk.write.mode("overwrite").parquet(
             self._vdir("pkstate", version))
 
-    def _emit_changelog(self, prior: DataFrame | None,
-                        version: int) -> None:
-        """Per-group (old, new) images for this fold, written to
-        ``changelog/version=N`` (overwrite per version — a crash
-        replay of the same fold rewrites the identical partition, so
-        the changelog stays exactly-once with the view). op follows
-        the CDC convention: I (group appeared), U (values moved),
-        D (group emptied). Cost: one join of two #groups-sized
-        frames — never touches fact rows."""
-        new = self.spark.read.parquet(self._vdir(self._STATE, version))
-        oldc = [F.col(f"old.{c}") for c in ("n_rows", "sum_dec")]
-        newc = [F.col(f"new.{c}") for c in ("n_rows", "sum_dec")]
-        if prior is None:
-            delta = new.select(
-                *self.group_keys, F.lit("I").alias("op"),
-                F.lit(None).cast("long").alias("old_n_rows"),
-                F.lit(None).cast("double").alias("old_sum_val"),
-                F.col("n_rows").alias("new_n_rows"),
-                F.col("sum_dec").cast("double").alias("new_sum_val"))
-        else:
-            j = prior.alias("old").join(new.alias("new"),
-                                        self.group_keys, "full_outer")
-            delta = (j.select(
-                *self.group_keys,
-                F.when(oldc[0].isNull(), F.lit("I"))
-                 .when(newc[0].isNull(), F.lit("D"))
-                 .otherwise(F.lit("U")).alias("op"),
-                oldc[0].alias("old_n_rows"),
-                oldc[1].cast("double").alias("old_sum_val"),
-                newc[0].alias("new_n_rows"),
-                newc[1].cast("double").alias("new_sum_val"))
-                .filter((F.col("old_n_rows").isNull()
-                         != F.col("new_n_rows").isNull())
-                        | ~F.col("old_n_rows").eqNullSafe(
-                            F.col("new_n_rows"))
-                        | ~F.col("old_sum_val").eqNullSafe(
-                            F.col("new_sum_val"))))
-        delta.write.mode("overwrite").parquet(
-            os.path.join(self.root, "changelog", f"version={version}"))
-
-    def read_changelog(self) -> DataFrame | None:
-        """The view's own CDC stream: (group_keys..., op, old/new
-        images, version) across every fold — consume it downstream
-        exactly like any change feed (``WHERE version > last_seen``
-        is the incremental read)."""
-        path = os.path.join(self.root, "changelog")
-        if not os.path.exists(path):
-            return None
-        return self.spark.read.parquet(path)
-
     def _changelog(self, emit: DataFrame) -> DataFrame:
         """coherent_changelog with PK liveness seeded from state:
         live rows seed op 'I', tombstones seed op 'D', both at
@@ -493,7 +392,7 @@ class MaterializedAggregate(_StreamView):
         if state is None:
             return coherent_changelog(emit)
         seed = (state.select(
-                    *self.pk_keys,
+                    *compaction.KEY,
                     F.col("val"),
                     F.when(F.col("op") == "D", F.lit("D"))
                      .otherwise(F.lit("I")).alias("op"))
@@ -515,6 +414,7 @@ class MaterializedSCD2(_StreamView):
     its applied history)."""
 
     _STATE = "hist"
+    _PREFIXES = ("hist", "pending")
     _COLS = ["db", "tbl", "pk", "val", "valid_from", "valid_to",
              "is_current"]
 
@@ -554,22 +454,8 @@ class MaterializedSCD2(_StreamView):
             pending.write.mode("overwrite").parquet(
                 self._vdir("pending", new_version))
         ck["version"] = new_version
-        self._save_checkpoint(ck)
+        self._commit(ck)
         self._gc(new_version)
-
-
-def _run_view_stream(view: _StreamView, source_dir: str,
-                     checkpoint_dir: str, available_now: bool,
-                     max_files_per_trigger: int | None):
-    from .pipeline import read_change_stream
-    stream = read_change_stream(view.spark, source_dir,
-                                max_files_per_trigger=max_files_per_trigger)
-    writer = (stream.writeStream
-              .foreachBatch(view.apply_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_ivm_stream(spark: SparkSession, source_dir: str, state_root: str,
@@ -583,8 +469,9 @@ def run_ivm_stream(spark: SparkSession, source_dir: str, state_root: str,
     (``.flush()`` first if every source is known complete)."""
     view = MaterializedAggregate(spark, state_root, group_keys=group_keys,
                                  sources=sources)
-    return _run_view_stream(view, source_dir, checkpoint_dir,
-                            available_now, max_files_per_trigger)
+    return start_change_stream(spark, source_dir, view.apply_batch,
+                               checkpoint_dir, available_now,
+                               max_files_per_trigger)
 
 
 def run_scd2_stream(spark: SparkSession, source_dir: str, state_root: str,
@@ -593,5 +480,6 @@ def run_scd2_stream(spark: SparkSession, source_dir: str, state_root: str,
                     sources: tuple[str, ...] | None = None):
     """SCD2 history maintenance as one streaming query."""
     view = MaterializedSCD2(spark, state_root, sources=sources)
-    return _run_view_stream(view, source_dir, checkpoint_dir,
-                            available_now, max_files_per_trigger)
+    return start_change_stream(spark, source_dir, view.apply_batch,
+                               checkpoint_dir, available_now,
+                               max_files_per_trigger)

@@ -39,10 +39,6 @@ class ProgressCollector(StreamingQueryListener):
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass
 
-    @property
-    def total_rows(self) -> int:
-        return sum(b["num_input_rows"] or 0 for b in self.batches)
-
 
 def attach(spark: SparkSession) -> ProgressCollector:
     collector = ProgressCollector()

@@ -54,6 +54,25 @@ def read_change_stream(spark: SparkSession, source_dir: str,
     return reader.parquet(source_dir)
 
 
+def start_change_stream(spark: SparkSession, source_dir: str, on_batch,
+                        checkpoint_dir: str, available_now: bool = True,
+                        max_files_per_trigger: int | None = None):
+    """Start one streaming query over a change landing zone:
+    ``on_batch(df, batch_id)`` runs each micro-batch (foreachBatch),
+    Spark's checkpoint at ``checkpoint_dir`` records the consumed
+    files, and ``available_now`` drains what has landed, then stops.
+    Every streaming sink of the package starts through here. Returns
+    the StreamingQuery."""
+    writer = (read_change_stream(spark, source_dir,
+                                 max_files_per_trigger=max_files_per_trigger)
+              .writeStream
+              .foreachBatch(on_batch)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def run_apply_stream(spark: SparkSession, source_dir: str, table_root: str,
                      checkpoint_dir: str, available_now: bool = True,
                      relay_dir: str | None = None):
@@ -92,13 +111,8 @@ def run_apply_stream(spark: SparkSession, source_dir: str, table_root: str,
         finally:
             batch_df.unpersist()
 
-    stream = read_change_stream(spark, source_dir)
-    writer = (stream.writeStream
-              .foreachBatch(apply_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_change_stream(spark, source_dir, apply_batch,
+                               checkpoint_dir, available_now)
 
 
 class _WalWrite:
@@ -641,11 +655,7 @@ def run_sql_apply_stream(spark: SparkSession, source_dir: str, db_dir: str,
     # rows forever. MAX-upsert never lowers an existing one.
     jdbc.save_checkpoint(db_dir, resume_ts)
 
-    stream = read_change_stream(spark, source_dir,
-                                max_files_per_trigger=max_files_per_trigger)
-    writer = (stream.writeStream
-              .foreachBatch(lambda df, _bid: applier.apply(df))
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_change_stream(spark, source_dir,
+                               lambda df, _bid: applier.apply(df),
+                               checkpoint_dir, available_now,
+                               max_files_per_trigger)

@@ -6,7 +6,8 @@ Read-only commands over a change log / snapshot table:
   status <sf_dir|change_log>   per-source watermarks + heartbeat progress
   checkpoint <table_root>      snapshot table version + commit-ts cursor
   view-status <view_root>      maintained-view cursors/watermark/audit
-  replay <dump_dir> <start_ts> <stop_ts>   count replayable events in range
+  replay <relay_dir> <start_ts> <stop_ts>  count relay-log events with
+                                           start_ts <= commit_ts <= stop_ts
 
 Node operations over a registry file (binlogctl/nodes.go command
 surface — pumps/drainers/pause-*/offline-*/update-*):
@@ -91,7 +92,6 @@ def main() -> int:
         return 0
 
     if cmd == "checkpoint":
-        from tidb_binlog_spark.sinks.table_sink import SnapshotTable
         ck_path = os.path.join(target, "checkpoint.json")
         if not os.path.exists(ck_path):
             print(json.dumps({"error": "no checkpoint", "root": target}))
@@ -154,9 +154,10 @@ def main() -> int:
         return 0
 
     if cmd == "replay":
-        from tidb_binlog_spark.sinks.payload import read_file_dump
+        from tidb_binlog_spark.sinks.relay import RelayLog
         start_ts, stop_ts = int(sys.argv[3]), int(sys.argv[4])
-        n = read_file_dump(spark, target, start_ts, stop_ts).count()
+        # RelayLog.read's start bound is exclusive; replay's is inclusive
+        n = RelayLog(target).read(spark, start_ts - 1, stop_ts).count()
         print(json.dumps({"dump": target, "start_ts": start_ts,
                           "stop_ts": stop_ts, "replayable_events": n}))
         return 0

@@ -110,14 +110,14 @@ def _install_kill(stream: str, kill: str) -> None:
 
         RelayLog.append = append_then_die
     else:
-        save = _StreamView._save_checkpoint
+        save = _StreamView._commit
 
         def die_before_save(self, ck):
             if calls >= k:
                 os._exit(137)
             save(self, ck)
 
-        _StreamView._save_checkpoint = die_before_save
+        _StreamView._commit = die_before_save
 
 
 def _child(work: str, phase: int, kill: str | None) -> int:
